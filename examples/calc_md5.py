@@ -37,7 +37,8 @@ def main() -> None:
     customers = etl.query_df("SELECT * FROM customer")
     hashed = customers.withColumn("hash_value", md5_row_hash(*customers.columns))
 
-    # write-back through the Uploader (STAGE = atomic swap on commit)
+    # write the hashed table, then correct it through a COMMIT Uploader
+    # (each rewrite is written once to a sibling dir, swapped in by rename)
     path = f"{out_dir}/customer_hashed"
     hashed.write.mode("overwrite").parquet(path)
     # U4-style targeted correction through the Uploader (the reference

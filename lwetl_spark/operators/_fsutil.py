@@ -1,4 +1,5 @@
-"""Shared filesystem probe for persisted-index layouts.
+"""Shared filesystem helpers: the existence probe for persisted-index
+layouts and the rename commit for whole-table rewrites.
 
 Every optional index artifact (params sidecar, docbuckets sidecar,
 state snapshot) used to be probed with `try: read except Exception:
@@ -13,6 +14,14 @@ with its own stack trace.
 
 from __future__ import annotations
 
+import uuid
+
+
+def _hadoop(spark, path: str):
+    """(FileSystem, Path) for `path` under the session's Hadoop conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
 
 def path_exists(spark, path: str) -> bool:
     """Existence probe via the Hadoop FileSystem API — works on any FS
@@ -23,9 +32,7 @@ def path_exists(spark, path: str) -> bool:
     read only if the JVM gateway is unavailable (non-classic
     sessions)."""
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = _hadoop(spark, path)
         return bool(fs.exists(hpath))
     except Exception:
         try:
@@ -33,3 +40,28 @@ def path_exists(spark, path: str) -> bool:
             return True
         except Exception:
             return False
+
+
+def remove_path(spark, path: str) -> None:
+    """Recursive delete via the Hadoop FileSystem API; a missing path is
+    not an error."""
+    fs, hpath = _hadoop(spark, path)
+    fs.delete(hpath, True)
+
+
+def swap_in(spark, new_path: str, path: str) -> None:
+    """Commit a fully written `new_path` as `path` by two renames: the
+    live `path` moves aside to `<path>.old-<uuid>`, `new_path` takes its
+    name, then the old directory is deleted.  Readers see either the old
+    table or the new one, never a half-written directory; if the second
+    rename fails the old table is moved back before raising."""
+    fs, dst = _hadoop(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    new = hpath(new_path)
+    old = hpath(f"{path.rstrip('/')}.old-{uuid.uuid4().hex}")
+    if fs.exists(dst) and not fs.rename(dst, old):
+        raise OSError(f"cannot move {path} aside for the commit")
+    if not fs.rename(new, dst):
+        fs.rename(old, dst)
+        raise OSError(f"cannot rename {new_path} to {path}")
+    fs.delete(old, True)

@@ -10,7 +10,11 @@ Spark re-design: a "database" is a directory of parquet tables.  Per
 table the whole row-at-a-time loop collapses to:
 - new:    src ⟕anti trg on pk → append        (reference :260-299)
 - update: merge (replace matched, append new)  (reference :296-315)
-- sync:   update + delete trg-keys ∖ src-keys  (reference :362-391)
+- sync:   the same merge, also dropping target rows whose key the
+          source lacks                         (reference :362-391)
+update and sync are ONE `Uploader.merge` call: one plan, written once
+and committed by rename, with the inserted/updated/deleted counts
+observed on the write itself.
 FK topo ordering is plan-level engine logic (Kahn), only meaningful when
 the target enforces FKs (foreign JDBC sinks) — parquet doesn't, but the
 plan order is still produced for parity and for JDBC targets.
@@ -159,31 +163,12 @@ def db_copy(
             st["skipped"] = plan.counts[t][0]
             stats[t] = st
             continue
-        trg = up.target()
         if mode in ("empty", "new"):
-            fresh = src.join(trg.select(pk).distinct(), on=pk, how="left_anti")
+            fresh = src.join(up.target().select(pk).distinct(), on=pk, how="left_anti")
             st["inserted"] = fresh.count()
             if st["inserted"]:
                 up.insert_df(fresh)
         else:  # update / sync
-            stale_path = None
-            if mode == "sync":
-                # stale keys = pre-merge target keys ∖ source keys.  The
-                # merge below overwrites the target files, which would
-                # invalidate this plan's lineage — materialize to a temp
-                # parquet first (the no-Delta equivalent of a MERGE's
-                # snapshot isolation).
-                stale = trg.select(pk).exceptAll(src.select(pk).distinct()).distinct()
-                stale_path = trg_path + ".stale_keys"
-                stale.write.mode("overwrite").parquet(stale_path)
-            res = up.merge(src, key=pk)
-            st.update(res)
-            if stale_path is not None:
-                stale_keys = spark.read.parquet(stale_path)
-                if stale_keys.count() > 0:
-                    st["deleted"] = up.delete(keys_df=stale_keys, key=pk)
-                import shutil
-
-                shutil.rmtree(stale_path, ignore_errors=True)
+            st.update(up.merge(src, key=pk, delete_missing=(mode == "sync")))
         stats[t] = st
     return stats

@@ -15,21 +15,35 @@ The dict-in/DataFrame-under surface survives; commit modes become the
 | commit   | COMMIT  | real write |
 | pipe     | SCRIPT  | emit INSERT statements (K5) |
 
-Update/delete/merge on parquet are implemented as join+coalesce /
-anti-join rewrites (SURVEY U4/U5): read target, transform, overwrite —
-the classic pre-Delta pattern.  On a real deployment the same calls map
-1:1 onto Delta MERGE/DELETE; the import is gated so the engine runs
-without the Delta jars.
+Update/delete/merge on parquet are whole-table rewrites (SURVEY U4/U5),
+each ONE Spark plan written ONCE:
+- the rewritten table is a single frame — a conditional projection
+  (update), a filter or a key-tagging left join (delete), or the kept
+  target rows plus the source rows (merge);
+- the affected-row counts come from `Observation`s on that frame, so
+  the write job itself reports them — no separate `count()` job;
+- under COMMIT the frame is written to a sibling `<table>.new-<uuid>`
+  directory and swapped in by rename (`_fsutil.swap_in`): the live table
+  is never read and written by the same job, and a failed write leaves
+  it untouched.
+On a real deployment the same calls map 1:1 onto Delta MERGE/DELETE;
+the import is gated so the engine runs without the Delta jars.
 """
 
 from __future__ import annotations
 
 import enum
 import os
+import uuid
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+from lwetl_spark.operators._fsutil import remove_path, swap_in
+
+#: marker column of `_tag_keys`; true on rows whose key the other side has
+_HIT = "__lwetl_key_hit"
 
 
 class SqlExpression:
@@ -133,11 +147,8 @@ class Uploader:
         matched rows get the new values (None → NULL like the reference's
         explicit-None semantics, :594-595)."""
         trg = self.target()
-        cond = None
-        for k, v in where.items():
-            c = F.col(k).isNull() if v is None else (F.col(k) == F.lit(v))
-            cond = c if cond is None else (cond & c)
-        n = trg.filter(cond).count()
+        cond = _where(where)
+        obs = Observation()
         cols = []
         for f in trg.schema.fields:
             if f.name in set_values:
@@ -151,45 +162,68 @@ class Uploader:
                 cols.append(F.when(cond, new).otherwise(F.col(f.name)).alias(f.name))
             else:
                 cols.append(F.col(f.name))
-        self._write(trg.select(*cols), mode="overwrite")
-        return n
+        self._write(trg.observe(obs, _count(cond)).select(*cols), mode="overwrite")
+        return obs.get["n"]
 
     # -- U5: delete -------------------------------------------------------
     def delete(self, where: dict | None = None, keys_df: DataFrame | None = None, key: str | None = None) -> int:
         """DELETE FROM t WHERE ... (U5; lwetl/uploader.py:610-636).  Either
         a where-dict, or (keys_df, key) replicating db-copy's batched
-        `IN (?,...)` delete (db_copy/main.py:365-391) as an anti-join."""
+        `IN (?,...)` delete (db_copy/main.py:365-391) as a left join that
+        tags the rows to drop.  Returns the number of rows deleted."""
         trg = self.target()
+        obs = Observation()
         if keys_df is not None and key is not None:
-            remaining = trg.join(keys_df.select(key).distinct(), on=key, how="left_anti")
+            hit = F.col(_HIT).isNotNull()
+            tagged = _tag_keys(trg, keys_df, key).observe(obs, _count(hit))
+            remaining = tagged.filter(~hit).select(*trg.columns)
         elif where:
-            cond = None
-            for k, v in where.items():
-                c = F.col(k).isNull() if v is None else (F.col(k) == F.lit(v))
-                cond = c if cond is None else (cond & c)
-            remaining = trg.filter(~cond | cond.isNull())
+            cond = _where(where)
+            remaining = trg.observe(obs, _count(cond)).filter(~cond | cond.isNull())
         else:
             raise ValueError("delete needs a where-dict or keys_df+key")
-        before = trg.count()
-        after_df = remaining
-        n_after = after_df.count()
-        self._write(after_df, mode="overwrite")
-        return before - n_after
+        self._write(remaining, mode="overwrite")
+        return obs.get["n"]
 
     # -- merge (db-copy update mode) --------------------------------------
-    def merge(self, src: DataFrame, key: str) -> dict[str, int]:
+    def merge(self, src: DataFrame, key: str, delete_missing: bool = False) -> dict[str, int]:
         """Upsert (U4+U1 composite, db-copy 'update' mode
         db_copy/main.py:296-315): target rows matched on `key` are
-        replaced by source rows, unmatched source rows appended.
-        Join+union rewrite — maps 1:1 to Delta MERGE when available."""
+        replaced by source rows, unmatched source rows appended.  With
+        `delete_missing` (db-copy 'sync', :362-391) target rows whose
+        non-null key the source lacks are deleted too, and the result
+        carries a `deleted` count.
+
+        One frame, one write: the target rows to keep (key absent from
+        the source; under `delete_missing` only the null-key ones), plus
+        the source rows.  Each side is tagged by a left join to the other
+        side's distinct keys, and the counts are observed on the tagged
+        sides during the write.  Null keys never match, so null-key
+        target rows survive and null-key source rows count as inserted.
+        Maps 1:1 to Delta MERGE when available."""
         trg = self.target()
         src = src.select(*[c for c in trg.columns if c in src.columns])
-        kept = trg.join(src.select(key).distinct(), on=key, how="left_anti")
-        merged = kept.unionByName(src, allowMissingColumns=True)
-        inserted = src.join(trg.select(key).distinct(), on=key, how="left_anti").count()
-        updated = src.count() - inserted
+        hit = F.col(_HIT).isNotNull()
+        trg_obs, src_obs = Observation(), Observation()
+        old = _tag_keys(trg, src, key).observe(
+            trg_obs, _count(~hit & F.col(key).isNotNull(), "deleted")
+        )
+        new = _tag_keys(src, trg, key).observe(
+            src_obs, _count(~hit, "inserted"), _count(hit, "updated")
+        )
+        kept = old.filter(F.col(key).isNull() if delete_missing else ~hit)
+        # source rows first: the writer always writes a file for partition
+        # 0, and after a sync the kept side is usually empty
+        merged = (
+            new.select(*src.columns)
+            .unionByName(kept.select(*trg.columns), allowMissingColumns=True)
+            .select(*trg.columns)
+        )
         self._write(merged, mode="overwrite")
-        return {"inserted": inserted, "updated": updated}
+        counts = src_obs.get
+        if delete_missing:
+            counts["deleted"] = trg_obs.get["deleted"]
+        return counts
 
     # -- commit machinery --------------------------------------------------
     def commit(self) -> int:
@@ -242,26 +276,31 @@ class Uploader:
         return self.table_path.rstrip("/") + ".staging"
 
     def _write(self, df: DataFrame, mode: str) -> int:
+        """Run the policy's one action over `df`; any `Observation` on
+        `df` is filled by it (readable once this returns)."""
         if self.policy is WritePolicy.PLAN:
             return df.count()
         if self.policy is WritePolicy.SCRIPT:
             from lwetl_spark.sinks.formatter import to_sql_inserts
 
+            # the statements stream through toLocalIterator, which does
+            # not report observed metrics — count first so it does
+            df.count()
             self._scripts.extend(to_sql_inserts(df, self.table_name))
             return len(self._scripts)
         if self.policy is WritePolicy.STAGE:
             df.write.mode("overwrite").parquet(self.staging_path)
             return self.spark.read.parquet(self.staging_path).count()
-        # COMMIT: overwrite needs a read-break (can't overwrite a path
-        # currently being read) → stage then atomic-ish swap
         if mode == "overwrite":
-            tmp = self.table_path.rstrip("/") + ".tmp_overwrite"
-            df.write.mode("overwrite").parquet(tmp)
-            out = self.spark.read.parquet(tmp)
-            out.write.mode("overwrite").parquet(self.table_path)
-            n = self.spark.read.parquet(self.table_path).count()
-            _rm_tree(tmp)
-            return n
+            # write once into a sibling, then commit by rename; the name
+            # must not end in .parquet or db-copy would list it as a table
+            new = f"{self.table_path.rstrip('/')}.new-{uuid.uuid4().hex}"
+            try:
+                df.write.parquet(new)
+                swap_in(self.spark, new, self.table_path)
+            finally:
+                remove_path(self.spark, new)
+            return 0
         df.write.mode(mode).parquet(self.table_path)
         return 0
 
@@ -270,7 +309,23 @@ class Uploader:
         return list(self._scripts)
 
 
-def _rm_tree(path: str) -> None:
-    import shutil
+def _where(where: dict) -> Column:
+    """AND of `k = v` terms; a None value means `k IS NULL`."""
+    cond = None
+    for k, v in where.items():
+        c = F.col(k).isNull() if v is None else (F.col(k) == F.lit(v))
+        cond = c if cond is None else (cond & c)
+    return cond
 
-    shutil.rmtree(path, ignore_errors=True)
+
+def _count(cond: Column, name: str = "n") -> Column:
+    """Observed metric: the number of rows on which `cond` is true."""
+    return F.count(F.when(cond, 1)).alias(name)
+
+
+def _tag_keys(df: DataFrame, other: DataFrame, key: str) -> DataFrame:
+    """`df` left-joined to the distinct keys of `other`: `_HIT` is true
+    on rows whose key `other` has, null otherwise (null keys never
+    match).  The using-join moves `key` first; callers re-select."""
+    keys = other.select(key).distinct().withColumn(_HIT, F.lit(True))
+    return df.join(keys, on=key, how="left")

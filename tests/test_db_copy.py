@@ -156,3 +156,119 @@ def test_plan_copy_counts_single_action(spark, tmp_path):
     assert n_count[0] == 0 and n_collect[0] == 1, (n_count, n_collect)
     assert plan.counts == {"a": (7, 2), "b": (3, 0), "c": (0, 0)}
     assert plan.empty_source == ["c"]
+
+
+def _kv_tables(spark, tmp_path, src_rows, trg_rows):
+    src = str(tmp_path / "src")
+    trg = str(tmp_path / "trg")
+    for d, rows in ((src, src_rows), (trg, trg_rows)):
+        spark.createDataFrame(rows, "k int, v string").write.parquet(
+            os.path.join(d, "t.parquet")
+        )
+    return src, trg
+
+
+def _rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+
+def test_db_copy_sync_keeps_duplicate_target_keys(spark, tmp_path):
+    """A key the target holds twice is still a key the source has: sync
+    replaces both rows with the source row and deletes only key 3."""
+    from lwetl_spark.plans.db_copy import db_copy
+
+    src, trg = _kv_tables(
+        spark, tmp_path, [(1, "a"), (2, "b")], [(1, "o"), (1, "o2"), (3, "g")]
+    )
+    stats = db_copy(spark, src, trg, pks={"t": "k"}, mode="sync", activate=True)
+    assert stats["t"] == {"inserted": 1, "updated": 1, "deleted": 1, "skipped": 0}
+    assert _rows(spark, os.path.join(trg, "t.parquet")) == [(1, "a"), (2, "b")]
+
+
+def test_db_copy_sync_null_keys(spark, tmp_path):
+    """Null keys never match: a null-key target row survives a sync and a
+    null-key source row counts as inserted."""
+    from lwetl_spark.plans.db_copy import db_copy
+
+    src, trg = _kv_tables(
+        spark, tmp_path, [(1, "a"), (None, "s")], [(1, "o"), (None, "t"), (3, "g")]
+    )
+    stats = db_copy(spark, src, trg, pks={"t": "k"}, mode="sync", activate=True)
+    assert stats["t"] == {"inserted": 1, "updated": 1, "deleted": 1, "skipped": 0}
+    assert _rows(spark, os.path.join(trg, "t.parquet")) == [
+        (1, "a"), (None, "s"), (None, "t")
+    ]
+
+
+def test_db_copy_sync_rollback_stages_the_sync(spark, tmp_path):
+    """activate=False stages exactly the table activate=True commits and
+    leaves the live target untouched."""
+    import shutil
+
+    from lwetl_spark.plans.db_copy import db_copy
+
+    src, trg = _kv_tables(spark, tmp_path, [(1, "new"), (2, "b")], [(1, "old"), (3, "gone")])
+    live = os.path.join(trg, "t.parquet")
+    before = _rows(spark, live)
+    committed_dir = str(tmp_path / "committed")
+    shutil.copytree(trg, committed_dir)
+
+    staged_stats = db_copy(spark, src, trg, pks={"t": "k"}, mode="sync")
+    committed_stats = db_copy(
+        spark, src, committed_dir, pks={"t": "k"}, mode="sync", activate=True
+    )
+    assert staged_stats == committed_stats
+    assert _rows(spark, live) == before == [(1, "old"), (3, "gone")]
+    assert _rows(spark, live + ".staging") == [(1, "new"), (2, "b")]
+    assert _rows(spark, os.path.join(committed_dir, "t.parquet")) == [(1, "new"), (2, "b")]
+
+
+def test_plan_copy_ignores_rewrite_siblings(spark, tmp_path):
+    """A leftover `<table>.parquet.new-*` directory is not a table."""
+    from lwetl_spark.plans.db_copy import plan_copy
+
+    src, trg = _kv_tables(spark, tmp_path, [(1, "a")], [(1, "o")])
+    spark.range(3).write.parquet(os.path.join(trg, "t.parquet.new-x"))
+    plan = plan_copy(spark, src, trg)
+    assert plan.common == ["t"] and plan.missing_in_source == []
+    assert plan.counts == {"t": (1, 1)}
+
+
+#: Spark jobs of the src_trg sync, as measured: plan_copy's reads and
+#: count, the region copy, and the nation merge (its reads, key and
+#: broadcast stages, and the one write)
+JOBS_PIN = 14
+
+
+def test_db_copy_sync_work_pin(spark, src_trg):
+    """The sync runs a bounded number of Spark jobs and writes the synced
+    table exactly once, so a re-split of the merge plan fails here."""
+    from lwetl_spark.plans.db_copy import db_copy
+
+    src, trg = src_trg
+    nation = os.path.join(trg, "nation.parquet")
+    written = []
+    writer = type(spark.range(1).write)
+    orig = writer.parquet
+
+    def spy(self, path, *a, **kw):
+        written.append(path)
+        return orig(self, path, *a, **kw)
+
+    sc = spark.sparkContext
+    group = "test_db_copy_sync_work_pin"
+    writer.parquet = spy
+    sc.setJobGroup(group, "db-copy sync")
+    try:
+        stats = db_copy(
+            spark, src, trg, pks={"nation": "n_nationkey"}, mode="sync", activate=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        writer.parquet = orig
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert stats["nation"] == {"inserted": 15, "updated": 10, "deleted": 0, "skipped": 0}
+    nation_writes = [p for p in written if p.startswith(nation)]
+    assert len(nation_writes) == 1 and ".new-" in nation_writes[0], written
+    assert len(jobs) <= JOBS_PIN, sorted(jobs)

@@ -158,6 +158,65 @@ def test_uploader_merge(spark, table_dir):
     assert trg.filter("n_nationkey = 3").collect()[0]["n_name"] == "UPDATED"
 
 
+def test_uploader_merge_delete_missing(spark, table_dir):
+    """merge(delete_missing=True) is db-copy's sync: target keys the
+    source lacks are deleted and counted."""
+    from lwetl_spark.sinks.uploader import Uploader, WritePolicy
+
+    up = Uploader(spark, table_dir, policy=WritePolicy.COMMIT)
+    src = spark.createDataFrame(
+        [(3, "UPDATED", 9), (999, "NEW", 1)],
+        "n_nationkey int, n_name string, n_regionkey int",
+    )
+    res = up.merge(src, key="n_nationkey", delete_missing=True)
+    assert res == {"inserted": 1, "updated": 1, "deleted": 24}
+    assert sorted(map(tuple, up.target().collect())) == [(3, "UPDATED", 9), (999, "NEW", 1)]
+
+
+@pytest.mark.parametrize("policy", ["plan", "script"])
+def test_uploader_dry_policies_count_without_writing(spark, table_dir, policy):
+    """PLAN and SCRIPT report the counts of a rewrite from one count()
+    over the observed frame and leave the table as it was."""
+    from lwetl_spark.sinks.uploader import Uploader, WritePolicy
+
+    up = Uploader(spark, table_dir, policy=WritePolicy(policy))
+    assert up.update({"n_name": "X"}, where={"n_regionkey": 0}) == 5
+    assert up.delete(where={"n_regionkey": 1}) == 5
+    src = spark.createDataFrame(
+        [(3, "U", 9), (999, "N", 1)], "n_nationkey int, n_name string, n_regionkey int"
+    )
+    assert up.merge(src, key="n_nationkey") == {"inserted": 1, "updated": 1}
+    assert up.target().filter("n_name = 'X' OR n_nationkey = 999").count() == 0
+
+
+def test_uploader_failed_rewrite_keeps_old_table(spark, table_dir):
+    """A rewrite that fails inside its write job leaves the old table
+    readable with its old checksum and no sibling directory behind."""
+    from pyspark.sql import functions as F
+
+    from lwetl_spark.operators.cardinality import table_checksum
+    from lwetl_spark.sinks.uploader import SqlExpression, Uploader, WritePolicy
+
+    up = Uploader(spark, table_dir, policy=WritePolicy.COMMIT)
+    before = tuple(table_checksum(up.target()).collect()[0])
+    bad = up.target().withColumn(
+        "n_name",
+        F.when(F.col("n_nationkey") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("n_name")),
+    )
+    attempts = [
+        lambda: up.update(
+            {"n_name": SqlExpression("raise_error('boom')")}, where={"n_nationkey": 3}
+        ),
+        lambda: up.merge(bad, key="n_nationkey"),
+        lambda: up.merge(bad, key="n_nationkey", delete_missing=True),
+    ]
+    for attempt in attempts:
+        with pytest.raises(Exception, match="boom"):
+            attempt()
+        assert tuple(table_checksum(up.target()).collect()[0]) == before
+        assert os.listdir(os.path.dirname(table_dir)) == ["nation.parquet"]
+
+
 def test_add_pk_column(spark):
     from lwetl_spark.sinks.uploader import add_pk_column
 
