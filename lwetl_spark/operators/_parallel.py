@@ -21,11 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: r12 (guide §2.6): overlap independent maintenance legs.  Checked at
-#: call time so an A/B harness can monkeypatch it to reproduce the
-#: sequential (pre-r12) execution order without a code change.
-OVERLAP_MAINTENANCE = True
-
 
 def overlap_legs(background, foreground):
     """Run two INDEPENDENT maintenance legs as concurrent Spark job
@@ -37,17 +32,12 @@ def overlap_legs(background, foreground):
     caller's thread; returns ``foreground()``'s result after BOTH legs
     complete.  Callers must guarantee independence: the legs read only
     frames that are already checkpoint-materialized and write disjoint
-    paths, so execution order cannot change any result (the sequential
-    fallback when ``OVERLAP_MAINTENANCE`` is false runs background
-    first — the pre-r12 order — and is behavior-identical).
+    paths, so execution order cannot change any result.
 
     Failure semantics: the background leg is always joined; its
     exception propagates unless the foreground leg also raised (then
     the foreground's wins, as in sequential execution).
     """
-    if not OVERLAP_MAINTENANCE:
-        background()
-        return foreground()
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -68,13 +58,11 @@ def overlap_all(*legs) -> None:
     threads, the last on the caller's thread, and join every leg before
     returning.  Same independence contract (legs read only
     already-materialized frames / disjoint tables and write disjoint
-    paths, so execution order cannot change any result).  When
-    ``OVERLAP_MAINTENANCE`` is false, runs the legs sequentially in
-    declaration order — callers declare them in the pre-r12 order, so
-    the fallback is behavior-identical.  The first helper-leg exception
-    propagates unless the caller's leg also raised (then the caller's
-    wins, as in sequential execution)."""
-    if not OVERLAP_MAINTENANCE or len(legs) <= 1:
+    paths, so execution order cannot change any result).  A single leg
+    runs inline.  The first helper-leg exception propagates unless the
+    caller's leg also raised (then the caller's wins, as in sequential
+    execution)."""
+    if len(legs) <= 1:
         for leg in legs:
             leg()
         return

@@ -38,6 +38,27 @@ Spark-first split, by format structure:
   zero-shuffle, bytes never leave their input partitions;
 - format sniffing is a JVM CASE over hex prefixes.
 
+Every payload op's Arrow pass is one of three private helpers, one per
+payload shape; an op supplies only its per-payload function:
+
+- `_synth(docs, id_col, one, spread)` — fixture generators:
+  (doc_id, payload) with payload = one(doc_id);
+- `_per_payload(df, one, schema)` — one row per payload: doc_id plus
+  the tuple one(payload), column names taken from ``schema``;
+- `_payload_rows(df, rows, schema)` — any number of rows per payload:
+  rows(doc_id, payload) yields whole ``schema`` tuples.
+
+Their contract: one zero-shuffle Arrow pass (payload bytes never leave
+their input partition; a fixture may spread its id column first);
+worker closures pickled BY VALUE (the helper's closure sees only its
+arguments and a local pandas import, and every per-payload function is
+nested in its op, so workers never import lwetl_spark); unparseable
+input — junk, empty, or a NULL payload — answers with the op's
+sentinel row (or no row), never a task failure.
+The few ops whose pass carries extra columns keep their own loop
+(`sniff_decode_html`, `http_response_parts`, `png_thumbnails`, and the
+text-driven or rec_idx-carrying fixtures).
+
 The module also ships deterministic generators (stdlib struct/zlib
 only) that build REAL containers: decodable PNGs (valid zlib IDAT,
 correct CRCs), ENTROPY-CODED baseline JPEGs (r8 — in-file Huffman
@@ -83,6 +104,69 @@ def _gen_input(docs: DataFrame, id_col: str, spread: bool = True) -> DataFrame:
     and keep their map-only single-exchange-free plan."""
     ids = docs.select(F.col(id_col).alias("doc_id"))
     return _spread(ids) if spread else ids
+
+
+# ---------------------------------------------------------------- #
+# the Arrow pass, one helper per payload shape (module docstring)   #
+# ---------------------------------------------------------------- #
+
+def _field_names(schema: str) -> list[str]:
+    """Field names of a flat DDL schema string."""
+    return [f.split()[0] for f in schema.split(",")]
+
+
+def _synth(docs: DataFrame, id_col: str, one,
+           spread: bool = True) -> DataFrame:
+    """One Arrow pass generating (doc_id, payload binary) with payload
+    = one(id) for every id of ``docs``; ``spread`` is `_gen_input`'s
+    decode-weight gate (only the id column may shuffle, payloads never
+    do)."""
+
+    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf["doc_id"].astype("int64")
+            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
+
+    return _gen_input(docs, id_col, spread).mapInPandas(
+        gen, "doc_id long, payload binary")
+
+
+def _per_payload(df: DataFrame, one, schema: str) -> DataFrame:
+    """One zero-shuffle Arrow pass, one row per payload: (doc_id,
+    payload) → doc_id + one(payload), a tuple of the fields after
+    doc_id in ``schema``.  NULL payloads reach ``one`` as None; ``one``
+    answers unparseable input with its op's sentinel tuple."""
+    cols = _field_names(schema)[1:]
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            out = pd.DataFrame([one(b) for b in pdf["payload"]],
+                               columns=cols)
+            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
+            yield out
+
+    return df.mapInPandas(run, schema)
+
+
+def _payload_rows(df: DataFrame, rows, schema: str) -> DataFrame:
+    """One zero-shuffle Arrow pass, any number of rows per payload:
+    rows(doc_id, payload) yields whole ``schema`` tuples, doc_id
+    first.  NULL payloads reach ``rows`` as b""."""
+    cols = _field_names(schema)
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            recs = [r for i, b in zip(pdf["doc_id"], pdf["payload"])
+                    for r in rows(int(i), b"" if b is None else bytes(b))]
+            yield pd.DataFrame(recs, columns=cols)
+
+    return df.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------- #
@@ -2153,32 +2237,17 @@ def warc_records(df: DataFrame) -> DataFrame:
     pass; record bodies never leave their input partition."""
     walk = _make_warc_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        got = walk(b)
+        if not got["records"]:
+            yield (doc_id, -1, None, None, None, None, False)
+            return
+        for j, r in enumerate(got["records"]):
+            yield (doc_id, j, r["rec_type"], r["target_uri"],
+                   r["content_length"], r["byte_sum"],
+                   got["valid"])
 
-        def rows(doc_id: int, b: bytes):
-            got = walk(b)
-            if not got["records"]:
-                yield (doc_id, -1, None, None, None, None, False)
-                return
-            for j, r in enumerate(got["records"]):
-                yield (doc_id, j, r["rec_type"], r["target_uri"],
-                       r["content_length"], r["byte_sum"],
-                       got["valid"])
-
-        cols = ["doc_id", "rec_idx", "rec_type", "target_uri",
-                "content_length", "byte_sum", "valid"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id),
-                          bytes(payload) if payload is not None
-                          else b"")
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(run, schema=WARC_SCHEMA)
+    return _payload_rows(df, rows, WARC_SCHEMA)
 
 
 def synth_warc_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2191,46 +2260,37 @@ def synth_warc_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     shard."""
     _gen = warc_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        recs = []
+        for j in range(2 + i % 4):
+            t = ("warcinfo", "request", "response")[(i + j) % 3]
+            uri = (None if t == "warcinfo"
+                   else "http://site%d.example/page%d"
+                   % ((i + j) % 50, j))
+            payload = bytes((i + 11 * j + 3 * k) % 256
+                            for k in range(20 + (i + 7 * j) % 40))
+            recs.append((t, uri, payload))
+        if i % 23 == 0:
+            # corrupt record 1's version line (payload bytes step
+            # by 3 mod 256, so "WARC/1.0" can only be a real
+            # record start)
+            b = _gen(recs)
+            k2 = b.index(b"WARC/1.0", 1)
+            bb = bytearray(b)
+            bb[k2] = 0x58  # 'X'
+            return bytes(bb)
+        # r10: odd ids ship compressed — lossless, same oracle.
+        # i%4==1 → .warc.gz (per-record gzip members, the classic
+        # Common Crawl layout); i%4==3 → .warc.zst (r11:
+        # per-record zstd frames, the newer CC framing, with the
+        # skippable-frame prefix real shards park a dictionary in)
+        b = _gen(recs, gz=(i % 4 == 1), zst=(i % 4 == 3))
+        if i % 4 == 3:
+            b = (b"\x50\x2a\x4d\x18"
+                 + (8).to_bytes(4, "little") + b"CCDICT00" + b)
+        return b
 
-        def one(i: int) -> bytes:
-            recs = []
-            for j in range(2 + i % 4):
-                t = ("warcinfo", "request", "response")[(i + j) % 3]
-                uri = (None if t == "warcinfo"
-                       else "http://site%d.example/page%d"
-                       % ((i + j) % 50, j))
-                payload = bytes((i + 11 * j + 3 * k) % 256
-                                for k in range(20 + (i + 7 * j) % 40))
-                recs.append((t, uri, payload))
-            if i % 23 == 0:
-                # corrupt record 1's version line (payload bytes step
-                # by 3 mod 256, so "WARC/1.0" can only be a real
-                # record start)
-                b = _gen(recs)
-                k2 = b.index(b"WARC/1.0", 1)
-                bb = bytearray(b)
-                bb[k2] = 0x58  # 'X'
-                return bytes(bb)
-            # r10: odd ids ship compressed — lossless, same oracle.
-            # i%4==1 → .warc.gz (per-record gzip members, the classic
-            # Common Crawl layout); i%4==3 → .warc.zst (r11:
-            # per-record zstd frames, the newer CC framing, with the
-            # skippable-frame prefix real shards park a dictionary in)
-            b = _gen(recs, gz=(i % 4 == 1), zst=(i % 4 == 3))
-            if i % 4 == 3:
-                b = (b"\x50\x2a\x4d\x18"
-                     + (8).to_bytes(4, "little") + b"CCDICT00" + b)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def warc_payloads(df: DataFrame) -> DataFrame:
@@ -2240,65 +2300,50 @@ def warc_payloads(df: DataFrame) -> DataFrame:
     (doc_id, rec_idx, rec_type, target_uri, payload) rows — the feed a
     crawl ingest consumes (response bodies → HTML strip → campaign).
     Gzipped shards (.warc.gz per-record members, r10) and zstd shards
-    (.warc.zst per-record frames, r11) inflate transparently.  One
-    zero-shuffle Arrow pass."""
+    (.warc.zst per-record frames, r11) inflate transparently."""
     walk = _make_warc_walker()
     gz = _make_gunzip_members()
     zs = _make_zstd_tools()[1]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        b, _gz_ok = gz(b)  # partial members still yield their
+        # records; census-level validity lives in warc_records
+        # re-walk with body slicing (the walker proves ranges via
+        # byte sums; here we carry the bytes themselves)
+        if _gz_ok:
+            b, _gz_ok = zs(b)
+        pos = 0
+        j = 0
+        while pos < len(b):
+            end = b.find(b"\r\n\r\n", pos)
+            if end < 0:
+                return
+            head = b[pos:end]
+            lines = head.split(b"\r\n")
+            if not lines or not lines[0].startswith(b"WARC/"):
+                return
+            fields = {}
+            for ln in lines[1:]:
+                k, _, v = ln.partition(b": ")
+                fields[k.decode("ascii", "replace").lower()] = (
+                    v.decode("utf-8", "replace"))
+            try:
+                clen = int(fields.get("content-length", ""))
+            except ValueError:
+                return
+            body_s = end + 4
+            body_e = body_s + clen
+            if (body_e + 4 > len(b)
+                    or b[body_e : body_e + 4] != b"\r\n\r\n"):
+                return
+            yield (doc_id, j, fields.get("warc-type"),
+                   fields.get("warc-target-uri"),
+                   b[body_s:body_e])
+            j += 1
+            pos = body_e + 4
 
-        def rows(doc_id: int, b: bytes):
-            b, _gz_ok = gz(b)  # partial members still yield their
-            # records; census-level validity lives in warc_records
-            # re-walk with body slicing (the walker proves ranges via
-            # byte sums; here we carry the bytes themselves)
-            if _gz_ok:
-                b, _gz_ok = zs(b)
-            pos = 0
-            j = 0
-            while pos < len(b):
-                end = b.find(b"\r\n\r\n", pos)
-                if end < 0:
-                    return
-                head = b[pos:end]
-                lines = head.split(b"\r\n")
-                if not lines or not lines[0].startswith(b"WARC/"):
-                    return
-                fields = {}
-                for ln in lines[1:]:
-                    k, _, v = ln.partition(b": ")
-                    fields[k.decode("ascii", "replace").lower()] = (
-                        v.decode("utf-8", "replace"))
-                try:
-                    clen = int(fields.get("content-length", ""))
-                except ValueError:
-                    return
-                body_s = end + 4
-                body_e = body_s + clen
-                if (body_e + 4 > len(b)
-                        or b[body_e : body_e + 4] != b"\r\n\r\n"):
-                    return
-                yield (doc_id, j, fields.get("warc-type"),
-                       fields.get("warc-target-uri"),
-                       b[body_s:body_e])
-                j += 1
-                pos = body_e + 4
-
-        cols = ["doc_id", "rec_idx", "rec_type", "target_uri", "payload"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id),
-                          bytes(payload) if payload is not None
-                          else b"")
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(
-        run,
+    return _payload_rows(
+        df, rows,
         "doc_id long, rec_idx long, rec_type string, target_uri string,"
         " payload binary",
     )
@@ -2643,40 +2688,31 @@ def synth_charset_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     non-ASCII is latin-1-coincident ('é' = 0xE9 — the fallback leg
     decodes it char-exact)."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        n = i % 100
+        leg = i % 5
+        if leg == 0:
+            meta, body, codec = ('<meta charset="utf-8">',
+                                 "café %d naïve" % n, "utf-8")
+        elif leg == 1:
+            meta = ('<meta http-equiv="Content-Type" content='
+                    '"text/html; charset=windows-1252">')
+            body, codec = "€ price %d ÿes" % n, "cp1252"
+        elif leg == 2:
+            meta, body, codec = ('<meta charset="gbk">',
+                                 "数据 %d 页" % n, "gbk")
+        elif leg == 3:
+            meta, body, codec = "", "omega Ω %d" % n, "utf-8"
+        else:
+            meta, body, codec = "", "café %d" % n, "cp1252"
+        html = ("<html><head>%s<title>t%d</title></head>"
+                "<body><p>%s</p></body></html>"
+                % (meta, i % 9, body)).encode(codec)
+        if leg == 0 and i % 2 == 0:
+            html = b"\xef\xbb\xbf" + html
+        return html
 
-        def one(i: int) -> bytes:
-            n = i % 100
-            leg = i % 5
-            if leg == 0:
-                meta, body, codec = ('<meta charset="utf-8">',
-                                     "café %d naïve" % n, "utf-8")
-            elif leg == 1:
-                meta = ('<meta http-equiv="Content-Type" content='
-                        '"text/html; charset=windows-1252">')
-                body, codec = "€ price %d ÿes" % n, "cp1252"
-            elif leg == 2:
-                meta, body, codec = ('<meta charset="gbk">',
-                                     "数据 %d 页" % n, "gbk")
-            elif leg == 3:
-                meta, body, codec = "", "omega Ω %d" % n, "utf-8"
-            else:
-                meta, body, codec = "", "café %d" % n, "cp1252"
-            html = ("<html><head>%s<title>t%d</title></head>"
-                    "<body><p>%s</p></body></html>"
-                    % (meta, i % 9, body)).encode(codec)
-            if leg == 0 and i % 2 == 0:
-                html = b"\xef\xbb\xbf" + html
-            return html
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_http_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2787,79 +2823,71 @@ def synth_warc_imgtext_demo(docs: DataFrame,
     _jenc = jpeg_baseline_bytes
     _, png_encode = _make_png_codec()  # product captured, not factory
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        def class_bytes(k: int) -> bytes:
-            w, h = 10 + k % 30, 10 + (3 * k) % 25
-            if k % 2 == 0:
-                px = np.fromfunction(
-                    lambda r, c: (k * 29 + 7 * r + 13 * c
-                                  + (r * c * (k % 7 + 1)) % 64) % 256,
-                    (h, w), dtype=np.int64).astype(np.uint8)
-                return png_encode(px)
-            nb = ((w + 7) // 8) * ((h + 7) // 8)
-            coeffs = [((13 * k + 29 * b) % 112 - 56,
-                       (7 * k + 5 * b) % 13) for b in range(nb)]
-            return _jenc(w, h, coeffs)
+    def class_bytes(k: int) -> bytes:
+        w, h = 10 + k % 30, 10 + (3 * k) % 25
+        if k % 2 == 0:
+            px = np.fromfunction(
+                lambda r, c: (k * 29 + 7 * r + 13 * c
+                              + (r * c * (k % 7 + 1)) % 64) % 256,
+                (h, w), dtype=np.int64).astype(np.uint8)
+            return png_encode(px)
+        nb = ((w + 7) // 8) * ((h + 7) // 8)
+        coeffs = [((13 * k + 29 * b) % 112 - 56,
+                   (7 * k + 5 * b) % 13) for b in range(nb)]
+        return _jenc(w, h, coeffs)
 
-        def broken(img: bytes) -> bytes:
-            bb = bytearray(img)
-            if img[:8] == b"\x89PNG\r\n\x1a\n":
-                p = img.find(b"IDAT") + 8
-                bb[p] ^= 0xFF  # adler32 fails the inflate
-            else:
-                bb = bb[:-2]  # EOI gone: census valid=false
-            return bytes(bb)
+    def broken(img: bytes) -> bytes:
+        bb = bytearray(img)
+        if img[:8] == b"\x89PNG\r\n\x1a\n":
+            p = img.find(b"IDAT") + 8
+            bb[p] ^= 0xFF  # adler32 fails the inflate
+        else:
+            bb = bb[:-2]  # EOI gone: census valid=false
+        return bytes(bb)
 
-        def one(i: int) -> bytes:
-            tags = []
-            recs = [("warcinfo", None, b"software: lwetl_spark")]
-            for j in range(1 + i % 3):
-                k = (i + 17 * j) % 40
-                url = "http://images.example/im%d.png" % k
-                tags.append('<img src="%s" alt="Img caption %d €tok%d"/>'
-                            % (url, k, k % 7))
-                img = class_bytes(k)
-                body = broken(img) if (i % 13 == 0 and j == 0) else img
-                recs.append(("response", url, body))
-                if k % 5 == 3:
-                    murl = "http://cdn.example/mim%d.png" % k
-                    tags.append('<img src="%s" alt="Mirror caption %d"/>'
-                                % (murl, k))
-                    recs.append(("response", murl, img))
-            # charset legs (r11): captions carry '€' and the page
-            # encoding rotates by shard — windows-1252 via http-equiv,
-            # gb18030 via <meta charset> (both encode €), plain utf-8 —
-            # so a hard-UTF-8 reader mojibakes the caption strings the
-            # oracle checks char-exact.  Caption TEXT stays a pure
-            # function of the image class; only the bytes rotate.
-            leg = i % 3
-            if leg == 1:
-                meta = ('<meta http-equiv="Content-Type" content='
-                        '"text/html; charset=windows-1252">')
-                codec = "cp1252"
-            elif leg == 2:  # gb18030, the gbk superset that still
-                meta = '<meta charset="gb18030">'  # encodes '€'
-                codec = "gb18030"
-            else:
-                meta, codec = "", "utf-8"
-            html = ("<html><head>%s<title>g</title></head><body>%s"
-                    "</body></html>" % (meta, "".join(tags)))
-            recs.insert(1, ("response",
-                            "http://site%d.example/p%d" % (i % 50, i),
-                            html.encode(codec)))
-            # r10: alternating shards ship gzipped (.warc.gz)
-            return _warc(recs, gz=((i // 4) % 2 == 0))
+    def one(i: int) -> bytes:
+        tags = []
+        recs = [("warcinfo", None, b"software: lwetl_spark")]
+        for j in range(1 + i % 3):
+            k = (i + 17 * j) % 40
+            url = "http://images.example/im%d.png" % k
+            tags.append('<img src="%s" alt="Img caption %d €tok%d"/>'
+                        % (url, k, k % 7))
+            img = class_bytes(k)
+            body = broken(img) if (i % 13 == 0 and j == 0) else img
+            recs.append(("response", url, body))
+            if k % 5 == 3:
+                murl = "http://cdn.example/mim%d.png" % k
+                tags.append('<img src="%s" alt="Mirror caption %d"/>'
+                            % (murl, k))
+                recs.append(("response", murl, img))
+        # charset legs (r11): captions carry '€' and the page
+        # encoding rotates by shard — windows-1252 via http-equiv,
+        # gb18030 via <meta charset> (both encode €), plain utf-8 —
+        # so a hard-UTF-8 reader mojibakes the caption strings the
+        # oracle checks char-exact.  Caption TEXT stays a pure
+        # function of the image class; only the bytes rotate.
+        leg = i % 3
+        if leg == 1:
+            meta = ('<meta http-equiv="Content-Type" content='
+                    '"text/html; charset=windows-1252">')
+            codec = "cp1252"
+        elif leg == 2:  # gb18030, the gbk superset that still
+            meta = '<meta charset="gb18030">'  # encodes '€'
+            codec = "gb18030"
+        else:
+            meta, codec = "", "utf-8"
+        html = ("<html><head>%s<title>g</title></head><body>%s"
+                "</body></html>" % (meta, "".join(tags)))
+        recs.insert(1, ("response",
+                        "http://site%d.example/p%d" % (i % 50, i),
+                        html.encode(codec)))
+        # r10: alternating shards ship gzipped (.warc.gz)
+        return _warc(recs, gz=((i // 4) % 2 == 0))
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_gif_gen():
@@ -2996,32 +3024,20 @@ def gif_meta(df: DataFrame) -> DataFrame:
     color-table and LZW sub-block skipping by declared lengths).
     Same contract as the other censuses: non-GIF payloads yield
     (version NULL, valid=false); corruption yields the partial census
-    with valid=false.  One zero-shuffle Arrow pass.  Pixel decode
+    with valid=false.  Pixel decode
     lives in gif_pixel_stats (r9: full GIF-LZW + palette +
     de-interlace); the census stays the cheap structural gate."""
     walk = _make_gif_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 5 + (False, False)
+        return (r["version"], r["width"], r["height"],
+                r["n_frames"], r["duration_ms"], r["animated"],
+                r["valid"])
 
-        cols = ["version", "width", "height", "n_frames",
-                "duration_ms", "animated", "valid"]
-
-        def one(b: bytes):
-            r = walk(b)
-            if r is None:
-                return (None,) * 5 + (False, False)
-            return (r["version"], r["width"], r["height"],
-                    r["n_frames"], r["duration_ms"], r["animated"],
-                    r["valid"])
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=GIF_META_SCHEMA)
+    return _per_payload(df, one, GIF_META_SCHEMA)
 
 
 def synth_gif_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3032,22 +3048,13 @@ def synth_gif_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     valid=false while keeping the frames counted before the cut)."""
     _gen = gif_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        nf = 1 + i % 6
+        b = _gen(10 + i % 50, 10 + i % 30, nf,
+                 delay_cs=(4 + i % 25) if nf > 1 else 0)
+        return b[:-3] if i % 31 == 0 else b
 
-        def one(i: int) -> bytes:
-            nf = 1 + i % 6
-            b = _gen(10 + i % 50, 10 + i % 30, nf,
-                     delay_cs=(4 + i % 25) if nf > 1 else 0)
-            return b[:-3] if i % 31 == 0 else b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_gif_lzw_gen():
@@ -3323,40 +3330,26 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
     SCALE.md)."""
     dec = _make_gif_pixel_decoder()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def stats(b: bytes):
+        r = dec(b)
+        if r is None:
+            return (None,) * 7
+        tot = cnt = 0
+        mn, mx = 255, 0
+        for fr in r["frames"]:
+            px = fr.astype("int64")
+            if not px.size:  # belt-and-braces: the decoder
+                continue  # rejects 0-area frames (ADVICE r9)
+            tot += int(px.sum())
+            cnt += int(px.size)
+            mn = min(mn, int(px.min()))
+            mx = max(mx, int(px.max()))
+        if cnt == 0:
+            return (None,) * 7
+        return (r["width"], r["height"], r["n_frames"], cnt, tot,
+                mn, mx)
 
-        def stats(b: bytes):
-            r = dec(b)
-            if r is None:
-                return None
-            tot = cnt = 0
-            mn, mx = 255, 0
-            for fr in r["frames"]:
-                px = fr.astype("int64")
-                if not px.size:  # belt-and-braces: the decoder
-                    continue  # rejects 0-area frames (ADVICE r9)
-                tot += int(px.sum())
-                cnt += int(px.size)
-                mn = min(mn, int(px.min()))
-                mx = max(mx, int(px.max()))
-            if cnt == 0:
-                return None
-            return (r["width"], r["height"], r["n_frames"], cnt, tot,
-                    mn, mx)
-
-        cols = ["width", "height", "n_frames", "n_px", "sum_px",
-                "min_px", "max_px"]
-        for pdf in batches:
-            parsed = [stats(b) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 7 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=GIF_PIXEL_SCHEMA)
+    return _per_payload(df, stats, GIF_PIXEL_SCHEMA)
 
 
 def synth_gif_px_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3369,21 +3362,12 @@ def synth_gif_px_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     frame's code stream mid-image (pixel shortfall → NULL stats)."""
     _gen = gif_lzw_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        return _gen(4 + i % 9, 4 + i % 7, i % 256, 5 + i % 12,
+                    1 + i % 4, interlaced=(i % 5 == 0),
+                    trunc_last=(i % 31 == 0))
 
-        def one(i: int) -> bytes:
-            return _gen(4 + i % 9, 4 + i % 7, i % 256, 5 + i % 12,
-                        1 + i % 4, interlaced=(i % 5 == 0),
-                        trunc_last=(i % 31 == 0))
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_bmp_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3391,31 +3375,22 @@ def synth_bmp_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     16+(id%100) × 16+(id%60) at 24 bpp, every 4th id stored TOP-DOWN
     (negative height, the orientation real screen-capture BMPs use)."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def _bmp(w: int, h: int) -> bytes:
+        # nested by-value copy of bmp_bytes + signed-height form
+        row = ((w * 3 + 3) // 4) * 4
+        data = bytes(row * abs(h))
+        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
+                          len(data), 2835, 2835, 0, 0)
+        hdr = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
+        return hdr + dib + data
 
-        def _bmp(w: int, h: int) -> bytes:
-            # nested by-value copy of bmp_bytes + signed-height form
-            row = ((w * 3 + 3) // 4) * 4
-            data = bytes(row * abs(h))
-            dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              len(data), 2835, 2835, 0, 0)
-            hdr = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-            return hdr + dib + data
+    def one(i: int) -> bytes:
+        w, h = 16 + i % 100, 16 + i % 60
+        return _bmp(w, -h if i % 4 == 0 else h)
 
-        def one(i: int) -> bytes:
-            w, h = 16 + i % 100, 16 + i % 60
-            return _bmp(w, -h if i % 4 == 0 else h)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_png_color_gen():
@@ -3533,24 +3508,15 @@ def synth_png_palette_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     IDAT zlib stream (NULL stats)."""
     _gen = png_palette_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(4 + i % 10, 4 + i % 8, i % 256, 16 + i % 17)
+        if i % 29 == 0:
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            b = _gen(4 + i % 10, 4 + i % 8, i % 256, 16 + i % 17)
-            if i % 29 == 0:
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_png_adam7_gen():
@@ -3615,24 +3581,15 @@ def synth_png_adam7_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     stream (NULL stats)."""
     _gen = png_adam7_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(4 + i % 13, 4 + i % 7, i % 256)
+        if i % 29 == 0:
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            b = _gen(4 + i % 13, 4 + i % 7, i % 256)
-            if i % 29 == 0:
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_png_color_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3643,24 +3600,15 @@ def synth_png_color_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     IDAT zlib stream (adler32 fails the inflate → NULL stats)."""
     _gen = png_color_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(4 + i % 12, 4 + i % 6, i % 256)
+        if i % 29 == 0:
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            b = _gen(4 + i % 12, 4 + i % 6, i % 256)
-            if i % 29 == 0:
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_png16_gen():
@@ -3739,25 +3687,16 @@ def synth_png16_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     IDAT zlib stream (NULL stats)."""
     _gen = png16_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(4 + i % 11, 4 + i % 6, i % 256,
+                 1 if i % 2 == 1 else 3)
+        if i % 29 == 0:
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            b = _gen(4 + i % 11, 4 + i % 6, i % 256,
-                     1 if i % 2 == 1 else 3)
-            if i % 29 == 0:
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_png_sub_gen():
@@ -3833,26 +3772,17 @@ def synth_png_sub_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     stats)."""
     _gen = png_sub_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        d = (1, 2, 4)[i % 3]
+        n_pal = (5 + i % 11) if (i % 2 == 1 and d == 4) else 0
+        b = _gen(5 + i % 12, 4 + i % 7, i % 256, d, n_pal)
+        if i % 29 == 0:
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            d = (1, 2, 4)[i % 3]
-            n_pal = (5 + i % 11) if (i % 2 == 1 and d == 4) else 0
-            b = _gen(5 + i % 12, 4 + i % 7, i % 256, d, n_pal)
-            if i % 29 == 0:
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def png_pixel_stats(df: DataFrame) -> DataFrame:
@@ -3869,30 +3799,17 @@ def png_pixel_stats(df: DataFrame) -> DataFrame:
     does the per-scanline arithmetic (shared codec: _make_png_codec)."""
     png_decode, _ = _make_png_codec()
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def pixels(b: bytes):
+        out = png_decode(b)
+        if out is None:
+            return (None,) * 6
+        px = out.astype("int64")
+        return (
+            int(px.shape[1]), int(px.shape[0]), int(px.size),
+            int(px.sum()), int(px.min()), int(px.max()),
+        )
 
-        def pixels(b: bytes):
-            out = png_decode(b)
-            if out is None:
-                return None
-            px = out.astype("int64")
-            return (
-                int(px.shape[1]), int(px.shape[0]), int(px.size),
-                int(px.sum()), int(px.min()), int(px.max()),
-            )
-
-        cols = ["width", "height", "n_px", "sum_px", "min_px", "max_px"]
-        for pdf in batches:
-            parsed = [pixels(b) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 6 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(decode, schema=PNG_PIXEL_SCHEMA)
+    return _per_payload(df, pixels, PNG_PIXEL_SCHEMA)
 
 
 def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
@@ -3911,29 +3828,16 @@ def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
     png_pixel_stats, measured FLAT in SCALE.md."""
     dec = _make_jpeg_decoder()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def stats(b: bytes):
+        px = dec(b)
+        if px is None:
+            return (None,) * 6
+        return (
+            int(px.shape[1]), int(px.shape[0]), int(px.size),
+            int(px.sum()), int(px.min()), int(px.max()),
+        )
 
-        def stats(b: bytes):
-            px = dec(b)
-            if px is None:
-                return None
-            return (
-                int(px.shape[1]), int(px.shape[0]), int(px.size),
-                int(px.sum()), int(px.min()), int(px.max()),
-            )
-
-        cols = ["width", "height", "n_px", "sum_px", "min_px", "max_px"]
-        for pdf in batches:
-            parsed = [stats(b) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 6 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=PNG_PIXEL_SCHEMA)
+    return _per_payload(df, stats, PNG_PIXEL_SCHEMA)
 
 
 WAV_PCM_SCHEMA = (
@@ -3956,63 +3860,49 @@ def wav_pcm_stats(df: DataFrame, clip_at: int = 32767) -> DataFrame:
     samples is an honest NULL.  Non-WAV payloads yield NULLs; one
     Arrow pass."""
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        thr = clip_at
+    def stats(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            return (None,) * 4
+        bits = None
+        pos = 12
+        data = None
+        while pos + 8 <= len(b):
+            tag = b[pos : pos + 4]
+            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
+            if tag == b"fmt " and pos + 24 <= len(b):
+                bits = struct.unpack("<H", b[pos + 22 : pos + 24])[0]
+            elif tag == b"data":
+                data = b[pos + 8 : pos + 8 + size]
+            pos += 8 + size + (size & 1)
+        if bits not in (8, 16, 24, 32) or data is None \
+                or len(data) % (bits // 8):
+            return (None,) * 4
+        if bits == 8:  # unsigned, offset 128 per spec
+            s = np.frombuffer(data, np.uint8).astype(np.int64) - 128
+            t = max(clip_at >> 8, 1)
+        elif bits == 16:
+            s = np.frombuffer(data, dtype="<i2").astype(np.int64)
+            t = clip_at
+        elif bits == 32:
+            s = np.frombuffer(data, dtype="<i4").astype(np.int64)
+            t = clip_at << 16
+        else:  # 24-bit packed LE, two's complement
+            a3 = np.frombuffer(data, np.uint8).astype(
+                np.int64).reshape(-1, 3)
+            s = a3[:, 0] | (a3[:, 1] << 8) | (a3[:, 2] << 16)
+            s -= (s >> 23) * (1 << 24)  # sign-extend bit 23
+            t = clip_at << 8
+        if not len(s):
+            return (0, 0, 0, 0)
+        a = np.abs(s)
+        return (len(s), int(a.max()), int(a.sum()), int((a >= t).sum()))
 
-        def stats(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            bits = None
-            pos = 12
-            data = None
-            while pos + 8 <= len(b):
-                tag = b[pos : pos + 4]
-                size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                if tag == b"fmt " and pos + 24 <= len(b):
-                    bits = struct.unpack("<H", b[pos + 22 : pos + 24])[0]
-                elif tag == b"data":
-                    data = b[pos + 8 : pos + 8 + size]
-                pos += 8 + size + (size & 1)
-            if bits not in (8, 16, 24, 32) or data is None \
-                    or len(data) % (bits // 8):
-                return None
-            if bits == 8:  # unsigned, offset 128 per spec
-                s = np.frombuffer(data, np.uint8).astype(np.int64) - 128
-                t = max(thr >> 8, 1)
-            elif bits == 16:
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                t = thr
-            elif bits == 32:
-                s = np.frombuffer(data, dtype="<i4").astype(np.int64)
-                t = thr << 16
-            else:  # 24-bit packed LE, two's complement
-                a3 = np.frombuffer(data, np.uint8).astype(
-                    np.int64).reshape(-1, 3)
-                s = a3[:, 0] | (a3[:, 1] << 8) | (a3[:, 2] << 16)
-                s -= (s >> 23) * (1 << 24)  # sign-extend bit 23
-                t = thr << 8
-            if not len(s):
-                return (0, 0, 0, 0)
-            a = np.abs(s)
-            return (len(s), int(a.max()), int(a.sum()), int((a >= t).sum()))
-
-        cols = ["n_samples", "peak", "sum_abs", "n_clipped"]
-        for pdf in batches:
-            parsed = [stats(b) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 4 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(decode, schema=WAV_PCM_SCHEMA)
+    return _per_payload(df, stats, WAV_PCM_SCHEMA)
 
 
 def synth_wav_depth_demo(docs: DataFrame,
@@ -4027,41 +3917,32 @@ def synth_wav_depth_demo(docs: DataFrame,
     samples, an honest NULL (at 8 bits every byte IS a sample, so
     that leg only exists where it can lie)."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        bits = (8, 16, 24, 32)[i % 4]
+        n = 40 + i % 20
+        v16 = [(i * 31 + j * 17) % 65536 - 32768 for j in range(n)]
+        if bits == 8:
+            data = bytes(((v >> 8) + 128) & 0xFF for v in v16)
+        elif bits == 16:
+            data = b"".join(struct.pack("<h", v) for v in v16)
+        elif bits == 24:
+            data = b"".join(
+                ((v << 8) & 0xFFFFFF).to_bytes(3, "little")
+                for v in v16)
+        else:
+            data = b"".join(struct.pack("<i", v << 16) for v in v16)
+        if i % 29 == 0 and bits != 8:
+            data += b"\x00"  # stray byte: sample count lies
+        fmt = struct.pack("<HHIIHH", 1, 1, 16000,
+                          16000 * bits // 8, bits // 8, bits)
+        body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
+                + b"data" + struct.pack("<I", len(data)) + data)
+        return (b"RIFF" + struct.pack("<I", 4 + len(body))
+                + b"WAVE" + body)
 
-        def one(i: int) -> bytes:
-            bits = (8, 16, 24, 32)[i % 4]
-            n = 40 + i % 20
-            v16 = [(i * 31 + j * 17) % 65536 - 32768 for j in range(n)]
-            if bits == 8:
-                data = bytes(((v >> 8) + 128) & 0xFF for v in v16)
-            elif bits == 16:
-                data = b"".join(struct.pack("<h", v) for v in v16)
-            elif bits == 24:
-                data = b"".join(
-                    ((v << 8) & 0xFFFFFF).to_bytes(3, "little")
-                    for v in v16)
-            else:
-                data = b"".join(struct.pack("<i", v << 16) for v in v16)
-            if i % 29 == 0 and bits != 8:
-                data += b"\x00"  # stray byte: sample count lies
-            fmt = struct.pack("<HHIIHH", 1, 1, 16000,
-                              16000 * bits // 8, bits // 8, bits)
-            body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data)
-            return (b"RIFF" + struct.pack("<I", 4 + len(body))
-                    + b"WAVE" + body)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_pixel_media_demo(
@@ -4080,62 +3961,53 @@ def synth_pixel_media_demo(
 
     One Arrow pass; generators nested (pickled by value)."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
-
-        def _png_pat(w: int, h: int, seed: int) -> bytes:
-            def chunk(tag: bytes, data: bytes) -> bytes:
-                return (
-                    struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-                )
-
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            lines = []
-            for r in range(h):
-                raw = bytes((seed + 7 * r + 13 * c) % 256 for c in range(w))
-                if r % 2 == 0:
-                    lines.append(b"\x00" + raw)
-                else:
-                    prev = 0
-                    filt = bytearray()
-                    for x in raw:
-                        filt.append((x - prev) & 0xFF)
-                        prev = x
-                    lines.append(b"\x01" + bytes(filt))
+    def _png_pat(w: int, h: int, seed: int) -> bytes:
+        def chunk(tag: bytes, data: bytes) -> bytes:
             return (
-                b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b"")
+                struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
             )
 
-        def _wav_pcm(samples: list[int]) -> bytes:
-            data = struct.pack(f"<{len(samples)}h", *samples)
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-            body = (
-                b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + struct.pack("<I", len(body)) + body
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        lines = []
+        for r in range(h):
+            raw = bytes((seed + 7 * r + 13 * c) % 256 for c in range(w))
+            if r % 2 == 0:
+                lines.append(b"\x00" + raw)
+            else:
+                prev = 0
+                filt = bytearray()
+                for x in raw:
+                    filt.append((x - prev) & 0xFF)
+                    prev = x
+                lines.append(b"\x01" + bytes(filt))
+        return (
+            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(b"".join(lines)))
+            + chunk(b"IEND", b"")
+        )
 
-        def one(i: int) -> bytes:
-            if i % 2 == 0:
-                return _png_pat(2 + i % 16, 1 + i % 8, i % 256)
-            n = 40 + i % 20
-            return _wav_pcm(
-                [((i * 31 + j * 17) % 65536) - 32768 for j in range(n)]
-            )
+    def _wav_pcm(samples: list[int]) -> bytes:
+        data = struct.pack(f"<{len(samples)}h", *samples)
+        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+        body = (
+            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
+    def one(i: int) -> bytes:
+        if i % 2 == 0:
+            return _png_pat(2 + i % 16, 1 + i % 8, i % 256)
+        n = 40 + i % 20
+        return _wav_pcm(
+            [((i * 31 + j * 17) % 65536) - 32768 for j in range(n)]
+        )
 
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_media_demo(
@@ -4166,87 +4038,78 @@ def synth_media_demo(
     _mp4 = mp4_bytes  # closure cellvars → cloudpickle ships them by value
     _jpegfx = jpeg_fixture_bytes  # (factory qualnames force by-value)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # nested copies of the module-level generators: a closure
-        # referencing module-level functions pickles BY REFERENCE and
-        # dies on workers that cannot import lwetl_spark (the
-        # driver-owned-session contract); nested fns ship by value
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
-
-        def _png(w: int, h: int) -> bytes:
-            def chunk(tag: bytes, data: bytes) -> bytes:
-                return (
-                    struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-                )
-
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
+    # nested copies of the module-level generators: a closure
+    # referencing module-level functions pickles BY REFERENCE and
+    # dies on workers that cannot import lwetl_spark (a session
+    # started outside the repo); nested fns ship by value
+    def _png(w: int, h: int) -> bytes:
+        def chunk(tag: bytes, data: bytes) -> bytes:
             return (
-                b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
+                struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
             )
 
-        def _wav(rate: int, ch: int, n: int) -> bytes:
-            bits = 16
-            data = bytes(n * ch * (bits // 8))
-            fmt = struct.pack(
-                "<HHIIHH", 1, ch, rate, rate * ch * bits // 8,
-                ch * bits // 8, bits,
-            )
-            body = (
-                b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + struct.pack("<I", len(body)) + body
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
+        return (
+            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
+        )
 
-        def one(i: int) -> bytes:
-            m = i % 5
-            if m == 0:
-                return _png(1 + i % 64, 1 + i % 32)
-            if m == 1:
-                # r8: REAL entropy-coded baseline JPEG (decodable
-                # pixels: block b has dc (i+17b)%112-56, ac (i+5b)%13)
-                return _jpegfx(16 + i % 32, 16 + i % 16, i)
-            if m == 2:
-                return _wav(8000 + 1000 * (i % 8), 1 + i % 2, 64 + i % 50)
-            if m == 3:
-                audio = i % 7 != 0
-                # r8: a REAL sample table + mdat frames (frame j has
-                # 50+(i+13j)%40 bytes, byte k = (i+31j+7k)%256,
-                # keyframe every 4th) — x_mp4_frames value-checks the
-                # recovered byte ranges against this arithmetic
-                nf = 8 + i % 9
-                frames = [
-                    bytes(
-                        (i + 31 * j + 7 * k) % 256
-                        for k in range(50 + (i + 13 * j) % 40)
-                    )
-                    for j in range(nf)
-                ]
-                return _mp4(
-                    500 + i % 4000,
-                    width=160 + 16 * (i % 28),
-                    height=90 + 9 * (i % 20),
-                    v_codec=b"avc1" if i % 2 == 0 else b"hev1",
-                    sample_rate=8000 + 1000 * (i % 8) if audio else None,
-                    channels=1 + i % 2,
-                    n_samples=400 + i % 600,
-                    brand=(b"isom", b"mp42", b"iso5")[i % 3],
-                    frames=frames,
+    def _wav(rate: int, ch: int, n: int) -> bytes:
+        bits = 16
+        data = bytes(n * ch * (bits // 8))
+        fmt = struct.pack(
+            "<HHIIHH", 1, ch, rate, rate * ch * bits // 8,
+            ch * bits // 8, bits,
+        )
+        body = (
+            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+
+    def one(i: int) -> bytes:
+        m = i % 5
+        if m == 0:
+            return _png(1 + i % 64, 1 + i % 32)
+        if m == 1:
+            # r8: REAL entropy-coded baseline JPEG (decodable
+            # pixels: block b has dc (i+17b)%112-56, ac (i+5b)%13)
+            return _jpegfx(16 + i % 32, 16 + i % 16, i)
+        if m == 2:
+            return _wav(8000 + 1000 * (i % 8), 1 + i % 2, 64 + i % 50)
+        if m == 3:
+            audio = i % 7 != 0
+            # r8: a REAL sample table + mdat frames (frame j has
+            # 50+(i+13j)%40 bytes, byte k = (i+31j+7k)%256,
+            # keyframe every 4th) — x_mp4_frames value-checks the
+            # recovered byte ranges against this arithmetic
+            nf = 8 + i % 9
+            frames = [
+                bytes(
+                    (i + 31 * j + 7 * k) % 256
+                    for k in range(50 + (i + 13 * j) % 40)
                 )
-            return bytes(16)
+                for j in range(nf)
+            ]
+            return _mp4(
+                500 + i % 4000,
+                width=160 + 16 * (i % 28),
+                height=90 + 9 * (i % 20),
+                v_codec=b"avc1" if i % 2 == 0 else b"hev1",
+                sample_rate=8000 + 1000 * (i % 8) if audio else None,
+                channels=1 + i % 2,
+                n_samples=400 + i % 600,
+                brand=(b"isom", b"mp42", b"iso5")[i % 3],
+                frames=frames,
+            )
+        return bytes(16)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 # ---------------------------------------------------------------- #
@@ -4359,31 +4222,17 @@ def heif_meta(df: DataFrame) -> DataFrame:
     primary extent is the FIRST ispe (thumbnails/auxiliary images
     follow it in real files).  Non-HEIF payloads yield NULLs; a box
     size lying past its parent keeps the properties parsed before
-    the lie with valid=false.  One zero-shuffle Arrow pass."""
+    the lie with valid=false."""
     walk = _make_heif_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def census(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 4 + (False,)
+        w, h = r["ispes"][0] if r["ispes"] else (None, None)
+        return (r["brand"], len(r["ispes"]), w, h, r["valid"])
 
-        def census(b: bytes):
-            r = walk(b)
-            if r is None:
-                return None
-            w, h = r["ispes"][0] if r["ispes"] else (None, None)
-            return (r["brand"], len(r["ispes"]), w, h, r["valid"])
-
-        cols = ["brand", "n_ispe", "width", "height", "valid"]
-        for pdf in batches:
-            parsed = [census(x) for x in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 4 + (False,)
-                 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=HEIF_META_SCHEMA)
+    return _per_payload(df, census, HEIF_META_SCHEMA)
 
 
 def synth_heif_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4394,32 +4243,23 @@ def synth_heif_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     past ipco: earlier extents survive, valid=false."""
     _gen = heif_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        dims = [(256 + i % 512, 192 + i % 384)]
+        for k in range(i % 3):
+            dims.append((16 + (i + k) % 64, 16 + (i + 2 * k) % 48))
+        b = _gen("heic" if i % 2 == 0 else "avif", dims)
+        if i % 17 == 0:
+            # inflate the LAST ispe box size past its parent
+            p = b.rfind(b"ispe") - 4
+            bb = bytearray(b)
+            (sz,) = struct.unpack(">I", bb[p : p + 4])
+            bb[p : p + 4] = struct.pack(">I", sz + 1000)
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            dims = [(256 + i % 512, 192 + i % 384)]
-            for k in range(i % 3):
-                dims.append((16 + (i + k) % 64, 16 + (i + 2 * k) % 48))
-            b = _gen("heic" if i % 2 == 0 else "avif", dims)
-            if i % 17 == 0:
-                # inflate the LAST ispe box size past its parent
-                p = b.rfind(b"ispe") - 4
-                bb = bytearray(b)
-                (sz,) = struct.unpack(">I", bb[p : p + 4])
-                bb[p : p + 4] = struct.pack(">I", sz + 1000)
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def sniff_format(payload: Column | str) -> Column:
@@ -4536,208 +4376,197 @@ def media_meta(df: DataFrame) -> DataFrame:
     tiff_walk = _make_tiff_walker()
     avi_walk = _make_avi_walker()
 
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def png(b: bytes):
+        if len(b) < 33 or b[:8] != b"\x89PNG\r\n\x1a\n":
+            return None
+        w, h = struct.unpack(">II", b[16:24])
+        valid = b.endswith(b"IEND\xaeB`\x82")
+        return ("png", w, h, None, None, None, None, valid)
 
-        def png(b: bytes):
-            if len(b) < 33 or b[:8] != b"\x89PNG\r\n\x1a\n":
-                return None
-            w, h = struct.unpack(">II", b[16:24])
-            valid = b.endswith(b"IEND\xaeB`\x82")
-            return ("png", w, h, None, None, None, None, valid)
+    def jpeg(b: bytes):
+        if len(b) < 4 or b[:3] != b"\xff\xd8\xff":
+            return None
+        w = h = None
+        pos = 2
+        while pos + 4 <= len(b) and b[pos] == 0xFF:
+            marker = b[pos + 1]
+            if marker == 0xD9:  # EOI
+                break
+            if 0xD0 <= marker <= 0xD8 or marker == 0x01:
+                pos += 2
+                continue
+            seg_len = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
+            if marker in (0xC0, 0xC1, 0xC2, 0xC3) and pos + 9 <= len(b):
+                h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
+            if marker == 0xDA:  # SOS: entropy-coded data follows —
+                break  # not segment-structured; stop the walk (r8)
+            pos += 2 + seg_len
+        valid = b.endswith(b"\xff\xd9") and w is not None
+        return ("jpeg", w, h, None, None, None, None, valid)
 
-        def jpeg(b: bytes):
-            if len(b) < 4 or b[:3] != b"\xff\xd8\xff":
-                return None
-            w = h = None
-            pos = 2
-            while pos + 4 <= len(b) and b[pos] == 0xFF:
-                marker = b[pos + 1]
-                if marker == 0xD9:  # EOI
-                    break
-                if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-                    pos += 2
-                    continue
-                seg_len = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-                if marker in (0xC0, 0xC1, 0xC2, 0xC3) and pos + 9 <= len(b):
-                    h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-                if marker == 0xDA:  # SOS: entropy-coded data follows —
-                    break  # not segment-structured; stop the walk (r8)
-                pos += 2 + seg_len
-            valid = b.endswith(b"\xff\xd9") and w is not None
-            return ("jpeg", w, h, None, None, None, None, valid)
+    def wav(b: bytes):
+        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            return None
+        riff_size = struct.unpack("<I", b[4:8])[0]
+        ch = rate = bits = data_size = None
+        pos = 12
+        while pos + 8 <= len(b):
+            tag = b[pos : pos + 4]
+            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
+            if tag == b"fmt " and pos + 24 <= len(b):
+                _, ch, rate, _, _, bits = struct.unpack(
+                    "<HHIIHH", b[pos + 8 : pos + 24]
+                )
+            elif tag == b"data":
+                data_size = size
+            pos += 8 + size + (size & 1)
+        if not (ch and rate and bits and data_size is not None):
+            return None
+        if bits < 8 or bits % 8:
+            # sub-byte sample widths (IMA/ADPCM-style) exist in real
+            # crawls; bits//8 == 0 would ZeroDivisionError inside the
+            # Arrow batch (ADVICE r7) — report the container as wav
+            # but geometry unknown/invalid, mirroring wav_pcm_stats'
+            # bits != 16 early-out: one bad file never kills a task
+            return ("wav", None, None, ch, rate, None, None, False)
+        n = data_size // (ch * (bits // 8))
+        valid = riff_size == len(b) - 8
+        return ("wav", None, None, ch, rate, n, 1000 * n // rate, valid)
 
-        def wav(b: bytes):
-            if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            riff_size = struct.unpack("<I", b[4:8])[0]
-            ch = rate = bits = data_size = None
-            pos = 12
-            while pos + 8 <= len(b):
-                tag = b[pos : pos + 4]
-                size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                if tag == b"fmt " and pos + 24 <= len(b):
-                    _, ch, rate, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif tag == b"data":
-                    data_size = size
-                pos += 8 + size + (size & 1)
-            if not (ch and rate and bits and data_size is not None):
-                return None
-            if bits < 8 or bits % 8:
-                # sub-byte sample widths (IMA/ADPCM-style) exist in real
-                # crawls; bits//8 == 0 would ZeroDivisionError inside the
-                # Arrow batch (ADVICE r7) — report the container as wav
-                # but geometry unknown/invalid, mirroring wav_pcm_stats'
-                # bits != 16 early-out: one bad file never kills a task
-                return ("wav", None, None, ch, rate, None, None, False)
-            n = data_size // (ch * (bits // 8))
-            valid = riff_size == len(b) - 8
-            return ("wav", None, None, ch, rate, n, 1000 * n // rate, valid)
+    def mp4(b: bytes):
+        got = mp4_walk(b)
+        if got is None:
+            return None
+        return (
+            "mp4", got["width"], got["height"], got["channels"],
+            got["sample_rate"], got["n_samples"], got["duration_ms"],
+            got["valid"],
+        )
 
-        def mp4(b: bytes):
-            got = mp4_walk(b)
-            if got is None:
-                return None
-            return (
-                "mp4", got["width"], got["height"], got["channels"],
-                got["sample_rate"], got["n_samples"], got["duration_ms"],
-                got["valid"],
-            )
+    def mkv(b: bytes):
+        """Matroska/WebM EBML census (r9) — fmt follows DocType."""
+        got = mkv_walk(b)
+        if got is None:
+            return None
+        return (
+            "webm" if got["doctype"] == "webm" else "mkv",
+            got["width"], got["height"], got["channels"],
+            got["sample_rate"], None, got["duration_ms"],
+            got["valid"],
+        )
 
-        def mkv(b: bytes):
-            """Matroska/WebM EBML census (r9) — fmt follows DocType."""
-            got = mkv_walk(b)
-            if got is None:
-                return None
-            return (
-                "webm" if got["doctype"] == "webm" else "mkv",
-                got["width"], got["height"], got["channels"],
-                got["sample_rate"], None, got["duration_ms"],
-                got["valid"],
-            )
+    def gif(b: bytes):
+        """GIF census (r9) — frames ride the n_samples slot."""
+        got = gif_walk(b)
+        if got is None:
+            return None
+        return (
+            "gif", got["width"], got["height"], None, None,
+            got["n_frames"], got["duration_ms"], got["valid"],
+        )
 
-        def gif(b: bytes):
-            """GIF census (r9) — frames ride the n_samples slot."""
-            got = gif_walk(b)
-            if got is None:
-                return None
-            return (
-                "gif", got["width"], got["height"], None, None,
-                got["n_frames"], got["duration_ms"], got["valid"],
-            )
+    def bmp(b: bytes):
+        """BMP census (r9): fixed-offset BITMAPINFOHEADER; height
+        is signed (negative = top-down), dims reported absolute."""
+        if len(b) < 54 or b[:2] != b"BM":
+            return None
+        wv = int.from_bytes(b[18:22], "little", signed=True)
+        hv = int.from_bytes(b[22:26], "little", signed=True)
+        declared = int.from_bytes(b[2:6], "little")
+        return ("bmp", abs(wv), abs(hv), None, None, None, None,
+                declared == len(b) and wv > 0 and hv != 0)
 
-        def bmp(b: bytes):
-            """BMP census (r9): fixed-offset BITMAPINFOHEADER; height
-            is signed (negative = top-down), dims reported absolute."""
-            if len(b) < 54 or b[:2] != b"BM":
-                return None
-            wv = int.from_bytes(b[18:22], "little", signed=True)
-            hv = int.from_bytes(b[22:26], "little", signed=True)
-            declared = int.from_bytes(b[2:6], "little")
-            return ("bmp", abs(wv), abs(hv), None, None, None, None,
-                    declared == len(b) and wv > 0 and hv != 0)
+    def webp(b: bytes):
+        """RIFF/WEBP chunk walk (r8): dims from whichever bitstream
+        variant leads — 'VP8 ' lossy keyframe header (start code
+        0x9D012A, 14-bit LE dims), 'VP8L' lossless (0x2F + packed
+        14+14-bit dims-1), 'VP8X' extended (24-bit canvas dims-1)."""
+        if len(b) < 16 or b[:4] != b"RIFF" or b[8:12] != b"WEBP":
+            return None
+        riff_size = struct.unpack("<I", b[4:8])[0]
+        w = h = None
+        pos = 12
+        while pos + 8 <= len(b):
+            tag = b[pos : pos + 4]
+            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
+            p = b[pos + 8 : pos + 8 + size]
+            if tag == b"VP8 " and len(p) >= 10 and p[3:6] == b"\x9d\x01\x2a":
+                w = struct.unpack("<H", p[6:8])[0] & 0x3FFF
+                h = struct.unpack("<H", p[8:10])[0] & 0x3FFF
+                break
+            if tag == b"VP8L" and len(p) >= 5 and p[0] == 0x2F:
+                bits = struct.unpack("<I", p[1:5])[0]
+                w = (bits & 0x3FFF) + 1
+                h = ((bits >> 14) & 0x3FFF) + 1
+                break
+            if tag == b"VP8X" and len(p) >= 10:
+                w = int.from_bytes(p[4:7], "little") + 1
+                h = int.from_bytes(p[7:10], "little") + 1
+                break
+            pos += 8 + size + (size & 1)
+        valid = riff_size == len(b) - 8 and w is not None
+        return ("webp", w, h, None, None, None, None, valid)
 
-        def webp(b: bytes):
-            """RIFF/WEBP chunk walk (r8): dims from whichever bitstream
-            variant leads — 'VP8 ' lossy keyframe header (start code
-            0x9D012A, 14-bit LE dims), 'VP8L' lossless (0x2F + packed
-            14+14-bit dims-1), 'VP8X' extended (24-bit canvas dims-1)."""
-            if len(b) < 16 or b[:4] != b"RIFF" or b[8:12] != b"WEBP":
-                return None
-            riff_size = struct.unpack("<I", b[4:8])[0]
-            w = h = None
-            pos = 12
-            while pos + 8 <= len(b):
-                tag = b[pos : pos + 4]
-                size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                p = b[pos + 8 : pos + 8 + size]
-                if tag == b"VP8 " and len(p) >= 10 and p[3:6] == b"\x9d\x01\x2a":
-                    w = struct.unpack("<H", p[6:8])[0] & 0x3FFF
-                    h = struct.unpack("<H", p[8:10])[0] & 0x3FFF
-                    break
-                if tag == b"VP8L" and len(p) >= 5 and p[0] == 0x2F:
-                    bits = struct.unpack("<I", p[1:5])[0]
-                    w = (bits & 0x3FFF) + 1
-                    h = ((bits >> 14) & 0x3FFF) + 1
-                    break
-                if tag == b"VP8X" and len(p) >= 10:
-                    w = int.from_bytes(p[4:7], "little") + 1
-                    h = int.from_bytes(p[7:10], "little") + 1
-                    break
-                pos += 8 + size + (size & 1)
-            valid = riff_size == len(b) - 8 and w is not None
-            return ("webp", w, h, None, None, None, None, valid)
+    def flac(b: bytes):
+        """FLAC census route (r9): STREAMINFO geometry."""
+        if b[:4] != b"fLaC":
+            return None
+        r = flac_walk(b)
+        if r is None:
+            return ("flac", None, None, None, None, None, None,
+                    False)
+        return ("flac", None, None, r["channels"],
+                r["sample_rate"], r["total_samples"],
+                r["duration_ms"], r["valid"])
 
-        def flac(b: bytes):
-            """FLAC census route (r9): STREAMINFO geometry."""
-            if b[:4] != b"fLaC":
-                return None
-            r = flac_walk(b)
-            if r is None:
-                return ("flac", None, None, None, None, None, None,
-                        False)
-            return ("flac", None, None, r["channels"],
-                    r["sample_rate"], r["total_samples"],
-                    r["duration_ms"], r["valid"])
+    def ogg(b: bytes):
+        """Ogg census route (r9): page walk + codec id header."""
+        if b[:4] != b"OggS":
+            return None
+        r = ogg_walk(b)
+        if r is None:
+            return ("ogg", None, None, None, None, None, None,
+                    False)
+        return ("ogg", None, None, r["channels"],
+                r["sample_rate"], None, r["duration_ms"],
+                r["valid"])
 
-        def ogg(b: bytes):
-            """Ogg census route (r9): page walk + codec id header."""
-            if b[:4] != b"OggS":
-                return None
-            r = ogg_walk(b)
-            if r is None:
-                return ("ogg", None, None, None, None, None, None,
-                        False)
-            return ("ogg", None, None, r["channels"],
-                    r["sample_rate"], None, r["duration_ms"],
-                    r["valid"])
+    def tif(b: bytes):
+        """TIFF census route (r9): first-page geometry from the
+        IFD chain (II and MM byte orders both occur)."""
+        if b[:4] not in (b"II\x2a\x00", b"MM\x00\x2a"):
+            return None
+        r = tiff_walk(b)
+        if r is None or not r["pages"]:
+            return ("tiff", None, None, None, None, None, None,
+                    False)
+        p0 = r["pages"][0]
+        return ("tiff", p0["width"], p0["height"], None, None,
+                None, None, r["valid"])
 
-        def tif(b: bytes):
-            """TIFF census route (r9): first-page geometry from the
-            IFD chain (II and MM byte orders both occur)."""
-            if b[:4] not in (b"II\x2a\x00", b"MM\x00\x2a"):
-                return None
-            r = tiff_walk(b)
-            if r is None or not r["pages"]:
-                return ("tiff", None, None, None, None, None, None,
-                        False)
-            p0 = r["pages"][0]
-            return ("tiff", p0["width"], p0["height"], None, None,
-                    None, None, r["valid"])
+    def avi(b: bytes):
+        """AVI census route (r9): avih geometry + duration."""
+        if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+            return None
+        r = avi_walk(b)
+        if r is None:
+            return ("avi", None, None, None, None, None, None,
+                    False)
+        return ("avi", r["width"], r["height"], None, None, None,
+                r["duration_ms"], r["valid"])
 
-        def avi(b: bytes):
-            """AVI census route (r9): avih geometry + duration."""
-            if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-                return None
-            r = avi_walk(b)
-            if r is None:
-                return ("avi", None, None, None, None, None, None,
-                        False)
-            return ("avi", r["width"], r["height"], None, None, None,
-                    r["duration_ms"], r["valid"])
+    def one(b: bytes):
+        b = bytes(b) if b is not None else b""
+        for p in (png, jpeg, wav, webp, mp4, mkv, gif, bmp, flac,
+                  ogg, tif, avi):
+            got = p(b)
+            if got is not None:
+                return got
+        return ("unknown", None, None, None, None, None, None, False)
 
-        def one(b: bytes):
-            b = bytes(b) if b is not None else b""
-            for p in (png, jpeg, wav, webp, mp4, mkv, gif, bmp, flac,
-                      ogg, tif, avi):
-                got = p(b)
-                if got is not None:
-                    return got
-            return ("unknown", None, None, None, None, None, None, False)
-
-        cols = ["fmt", "width", "height", "channels", "sample_rate",
-                "n_samples", "duration_ms", "valid"]
-        for pdf in batches:
-            parsed = [one(b) for b in pdf["payload"]]
-            out = pd.DataFrame(parsed, columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(parse, schema=MEDIA_META_SCHEMA)
+    return _per_payload(df, one, MEDIA_META_SCHEMA)
 
 
 MP4_META_SCHEMA = (
@@ -4766,28 +4595,16 @@ def mp4_meta(df: DataFrame) -> DataFrame:
     payloads yield (brand NULL, valid=false)."""
     mp4_walk = _make_mp4_walker()
 
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    cols = _field_names(MP4_META_SCHEMA)[1:]
 
-        cols = ["brand", "n_tracks", "v_codec", "a_codec", "width",
-                "height", "channels", "sample_rate", "n_samples",
-                "duration_ms", "valid"]
+    def one(b: bytes):
+        got = mp4_walk(bytes(b) if b is not None else b"")
+        if got is None:
+            return (None, 0, None, None, None, None, None, None,
+                    None, None, False)
+        return tuple(got[c] for c in cols)
 
-        def one(b: bytes):
-            got = mp4_walk(bytes(b) if b is not None else b"")
-            if got is None:
-                return (None, 0, None, None, None, None, None, None,
-                        None, None, False)
-            return tuple(got[c] for c in cols)
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(parse, schema=MP4_META_SCHEMA)
+    return _per_payload(df, one, MP4_META_SCHEMA)
 
 
 EXIF_META_SCHEMA = (
@@ -4811,84 +4628,72 @@ def exif_meta(df: DataFrame) -> DataFrame:
     did, mislabels every rotated portrait shot).
 
     Corrupt/absent APP1 → NULL EXIF fields with valid=false; the SOF
-    dims still report when parseable.  One zero-shuffle Arrow pass."""
+    dims still report when parseable."""
 
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def tiff(t: bytes):
-            """(byte_order, orientation, datetime) or None."""
-            if len(t) < 14 or t[:2] not in (b"II", b"MM"):
+    def tiff(t: bytes):
+        """(byte_order, orientation, datetime) or None."""
+        if len(t) < 14 or t[:2] not in (b"II", b"MM"):
+            return None
+        e = "<" if t[:2] == b"II" else ">"
+        if struct.unpack(e + "H", t[2:4])[0] != 42:
+            return None
+        (ifd0,) = struct.unpack(e + "I", t[4:8])
+        if ifd0 + 2 > len(t):
+            return None
+        (n,) = struct.unpack(e + "H", t[ifd0 : ifd0 + 2])
+        orientation = taken = None
+        for k in range(n):
+            o = ifd0 + 2 + 12 * k
+            if o + 12 > len(t):
                 return None
-            e = "<" if t[:2] == b"II" else ">"
-            if struct.unpack(e + "H", t[2:4])[0] != 42:
-                return None
-            (ifd0,) = struct.unpack(e + "I", t[4:8])
-            if ifd0 + 2 > len(t):
-                return None
-            (n,) = struct.unpack(e + "H", t[ifd0 : ifd0 + 2])
-            orientation = taken = None
-            for k in range(n):
-                o = ifd0 + 2 + 12 * k
-                if o + 12 > len(t):
-                    return None
-                tag, typ, cnt = struct.unpack(e + "HHI", t[o : o + 8])
-                if tag == 0x0112 and typ == 3 and cnt == 1:
-                    (orientation,) = struct.unpack(e + "H", t[o + 8 : o + 10])
-                elif tag == 0x0132 and typ == 2:
-                    if cnt <= 4:
-                        raw = t[o + 8 : o + 8 + cnt]
-                    else:
-                        (off,) = struct.unpack(e + "I", t[o + 8 : o + 12])
-                        if off + cnt > len(t):
-                            return None
-                        raw = t[off : off + cnt]
-                    taken = raw.rstrip(b"\x00").decode("ascii", "replace")
-            return (t[:2].decode("ascii"), orientation, taken)
+            tag, typ, cnt = struct.unpack(e + "HHI", t[o : o + 8])
+            if tag == 0x0112 and typ == 3 and cnt == 1:
+                (orientation,) = struct.unpack(e + "H", t[o + 8 : o + 10])
+            elif tag == 0x0132 and typ == 2:
+                if cnt <= 4:
+                    raw = t[o + 8 : o + 8 + cnt]
+                else:
+                    (off,) = struct.unpack(e + "I", t[o + 8 : o + 12])
+                    if off + cnt > len(t):
+                        return None
+                    raw = t[off : off + cnt]
+                taken = raw.rstrip(b"\x00").decode("ascii", "replace")
+        return (t[:2].decode("ascii"), orientation, taken)
 
-        def one(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if len(b) < 4 or b[:3] != b"\xff\xd8\xff":
-                return (None, None, None, None, None, None, None, False)
-            w = h = None
-            exif = None
-            pos = 2
-            while pos + 4 <= len(b) and b[pos] == 0xFF:
-                m = b[pos + 1]
-                if m == 0xD9:
-                    break
-                if 0xD0 <= m <= 0xD8 or m == 0x01:
-                    pos += 2
-                    continue
-                ln = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-                if m == 0xE1 and b[pos + 4 : pos + 10] == b"Exif\x00\x00":
-                    exif = tiff(b[pos + 10 : pos + 2 + ln])
-                if m in (0xC0, 0xC1, 0xC2, 0xC3) and pos + 9 <= len(b):
-                    h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-                if m == 0xDA:
-                    break
-                pos += 2 + ln
-            if exif is None or exif[1] is None:
-                return (None, None, None, w, h, w, h, False)
-            bo, orient, taken = exif
-            swap = orient >= 5
-            return (
-                bo, orient, taken, w, h,
-                (h if swap else w), (w if swap else h), True,
-            )
+    def one(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if len(b) < 4 or b[:3] != b"\xff\xd8\xff":
+            return (None, None, None, None, None, None, None, False)
+        w = h = None
+        exif = None
+        pos = 2
+        while pos + 4 <= len(b) and b[pos] == 0xFF:
+            m = b[pos + 1]
+            if m == 0xD9:
+                break
+            if 0xD0 <= m <= 0xD8 or m == 0x01:
+                pos += 2
+                continue
+            ln = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
+            if m == 0xE1 and b[pos + 4 : pos + 10] == b"Exif\x00\x00":
+                exif = tiff(b[pos + 10 : pos + 2 + ln])
+            if m in (0xC0, 0xC1, 0xC2, 0xC3) and pos + 9 <= len(b):
+                h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
+            if m == 0xDA:
+                break
+            pos += 2 + ln
+        if exif is None or exif[1] is None:
+            return (None, None, None, w, h, w, h, False)
+        bo, orient, taken = exif
+        swap = orient >= 5
+        return (
+            bo, orient, taken, w, h,
+            (h if swap else w), (w if swap else h), True,
+        )
 
-        cols = ["byte_order", "orientation", "taken_at", "width",
-                "height", "norm_width", "norm_height", "valid"]
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(parse, schema=EXIF_META_SCHEMA)
+    return _per_payload(df, one, EXIF_META_SCHEMA)
 
 
 def _make_mp4_sample_walker():
@@ -5381,39 +5186,20 @@ def mkv_frame_index(df: DataFrame) -> DataFrame:
     bytes never leave their input partition."""
     walker = _make_mkv_block_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        got = walker(b)
+        if got is None:
+            return
+        ts = got["timescale"]
+        first = got["frames"][0][1] if got["frames"] else 0
+        for j, (pts, off, size, key) in enumerate(got["frames"]):
+            payload = bytes(b[off : off + size])
+            yield (
+                doc_id, j, pts * ts // 1_000_000, size, off - first,
+                key, sum(payload),
+            )
 
-        def rows(doc_id: int, b: bytes):
-            got = walker(b)
-            if got is None:
-                return
-            ts = got["timescale"]
-            first = got["frames"][0][1] if got["frames"] else 0
-            for j, (pts, off, size, key) in enumerate(got["frames"]):
-                payload = bytes(b[off : off + size])
-                yield (
-                    doc_id, j, pts * ts // 1_000_000, size, off - first,
-                    key, sum(payload),
-                )
-
-        cols = ["doc_id", "frame_idx", "pts_ms", "size", "rel_offset",
-                "is_key", "byte_sum"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id),
-                          bytes(payload) if payload is not None
-                          else b"")
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(
-        run,
-        "doc_id long, frame_idx long, pts_ms long, size long,"
-        " rel_offset long, is_key boolean, byte_sum long",
-    )
+    return _payload_rows(df, rows, MP4_FRAME_SCHEMA)
 
 
 def synth_mkv_frames_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5424,28 +5210,19 @@ def synth_mkv_frames_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     verbatim, so the two container walks share one oracle model."""
     _gen = mkv_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        nf = 8 + i % 9
+        frames = [
+            bytes((i + 31 * j + 7 * k) % 256
+                  for k in range(50 + (i + 13 * j) % 40))
+            for j in range(nf)
+        ]
+        return _gen(
+            500 + i % 4000, 64 + 16 * (i % 8), 48 + 16 * (i % 4),
+            frames=frames, key_every=4,
+        )
 
-        def one(i: int) -> bytes:
-            nf = 8 + i % 9
-            frames = [
-                bytes((i + 31 * j + 7 * k) % 256
-                      for k in range(50 + (i + 13 * j) % 40))
-                for j in range(nf)
-            ]
-            return _gen(
-                500 + i % 4000, 64 + 16 * (i % 8), 48 + 16 * (i % 4),
-                frames=frames, key_every=4,
-            )
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 MKV_META_SCHEMA = (
@@ -5466,28 +5243,15 @@ def mkv_meta(df: DataFrame) -> DataFrame:
     payload bytes never leave their input partition."""
     walk = _make_mkv_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 9 + (False,)
+        return (r["doctype"], r["duration_ms"], r["n_tracks"],
+                r["v_codec"], r["a_codec"], r["width"], r["height"],
+                r["channels"], r["sample_rate"], r["valid"])
 
-        cols = ["doctype", "duration_ms", "n_tracks", "v_codec",
-                "a_codec", "width", "height", "channels", "sample_rate",
-                "valid"]
-
-        def one(b: bytes):
-            r = walk(b)
-            if r is None:
-                return (None,) * 9 + (False,)
-            return (r["doctype"], r["duration_ms"], r["n_tracks"],
-                    r["v_codec"], r["a_codec"], r["width"], r["height"],
-                    r["channels"], r["sample_rate"], r["valid"])
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=MKV_META_SCHEMA)
+    return _per_payload(df, one, MKV_META_SCHEMA)
 
 
 def synth_mkv_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5503,40 +5267,31 @@ def synth_mkv_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     contract)."""
     _gen = mkv_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def one(i: int) -> bytes:
-            v_codec = (b"V_VP9", b"V_VP8", b"V_AV1")[i % 3]
-            kw: dict = {}
-            if i % 2 == 1:
-                kw = dict(
-                    a_codec=(b"A_OPUS" if i % 5 < 3 else b"A_VORBIS"),
-                    channels=1 + (i % 4) // 2,
-                    sample_rate=16000 * (1 + i % 3),
-                )
-            b = _gen(
-                500 * (1 + i % 40), 64 + 16 * (i % 8), 48 + 16 * (i % 4),
-                v_codec=v_codec,
-                doctype=(b"webm" if i % 2 == 0 else b"matroska"),
-                **kw,
+    def one(i: int) -> bytes:
+        v_codec = (b"V_VP9", b"V_VP8", b"V_AV1")[i % 3]
+        kw: dict = {}
+        if i % 2 == 1:
+            kw = dict(
+                a_codec=(b"A_OPUS" if i % 5 < 3 else b"A_VORBIS"),
+                channels=1 + (i % 4) // 2,
+                sample_rate=16000 * (1 + i % 3),
             )
-            if i % 19 == 0:
-                # the trailing Void is the last 18 bytes (0xEC + size
-                # 0x90 + 16 zeros); inflate its size varint so the
-                # element claims more bytes than its Segment holds
-                bb = bytearray(b)
-                bb[-17] = 0x9F  # claims 31 > 16 available
-                return bytes(bb)
-            return b
+        b = _gen(
+            500 * (1 + i % 40), 64 + 16 * (i % 8), 48 + 16 * (i % 4),
+            v_codec=v_codec,
+            doctype=(b"webm" if i % 2 == 0 else b"matroska"),
+            **kw,
+        )
+        if i % 19 == 0:
+            # the trailing Void is the last 18 bytes (0xEC + size
+            # 0x90 + 16 zeros); inflate its size varint so the
+            # element claims more bytes than its Segment holds
+            bb = bytearray(b)
+            bb[-17] = 0x9F  # claims 31 > 16 available
+            return bytes(bb)
+        return b
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 MP4_FRAME_SCHEMA = (
@@ -5567,39 +5322,24 @@ def mp4_frame_index(df: DataFrame) -> DataFrame:
     """
     walker = _make_mp4_sample_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        idx = walker(b)
+        if idx is None:
+            return
+        ts = idx["timescale"]
+        base_off = idx["offsets"][0] if idx["offsets"] else 0
+        for j, (p, sz, off) in enumerate(
+            zip(idx["pts"], idx["sizes"], idx["offsets"])
+        ):
+            if off + sz > len(b):
+                return  # malformed table: never a task failure
+            frame = b[off : off + sz]
+            yield (
+                doc_id, j, 1000 * p // ts, sz, off - base_off,
+                (j + 1) in idx["keys"], sum(frame),
+            )
 
-        def rows(doc_id: int, b: bytes):
-            idx = walker(b)
-            if idx is None:
-                return
-            ts = idx["timescale"]
-            base_off = idx["offsets"][0] if idx["offsets"] else 0
-            for j, (p, sz, off) in enumerate(
-                zip(idx["pts"], idx["sizes"], idx["offsets"])
-            ):
-                if off + sz > len(b):
-                    return  # malformed table: never a task failure
-                frame = b[off : off + sz]
-                yield (
-                    doc_id, j, 1000 * p // ts, sz, off - base_off,
-                    (j + 1) in idx["keys"], sum(frame),
-                )
-
-        cols = ["doc_id", "frame_idx", "pts_ms", "size", "rel_offset",
-                "is_key", "byte_sum"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id),
-                          bytes(payload) if payload is not None
-                          else b"")
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(run, schema=MP4_FRAME_SCHEMA)
+    return _payload_rows(df, rows, MP4_FRAME_SCHEMA)
 
 
 def synth_webp_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5611,29 +5351,20 @@ def synth_webp_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     factory-made and ships by value (see _make_mp4_gen)."""
     _webp = webp_bytes  # closure cellvar → cloudpickle ships it by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        v = ("vp8", "vp8l", "vp8x")[i % 3]
+        b = _webp(4 + i % 200, 4 + i % 100, v)
+        if i % 11 == 0:  # corrupt leg: the RIFF size lies
+            bb = bytearray(b)
+            bb[4:8] = struct.pack(
+                "<I", struct.unpack("<I", b[4:8])[0] + 2
+            )
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            v = ("vp8", "vp8l", "vp8x")[i % 3]
-            b = _webp(4 + i % 200, 4 + i % 100, v)
-            if i % 11 == 0:  # corrupt leg: the RIFF size lies
-                bb = bytearray(b)
-                bb[4:8] = struct.pack(
-                    "<I", struct.unpack("<I", b[4:8])[0] + 2
-                )
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def video_fingerprint(df: DataFrame) -> DataFrame:
@@ -5680,31 +5411,22 @@ def synth_video_dup_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     never produce colliding fingerprints."""
     _mp4 = mp4_bytes
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        s = i % 32
+        frames = [
+            bytes((s + 31 * j + 7 * k) % 256
+                  for k in range(40 + (s + 13 * j) % 32))
+            for j in range(6 + s % 5)
+        ]
+        return _mp4(
+            1000 + i % 900,                 # container varies with id
+            width=16 + 16 * (i % 10),
+            height=16 + 9 * (i % 10),
+            brand=(b"isom", b"mp42")[i % 2],
+            frames=frames,
+        )
 
-        def one(i: int) -> bytes:
-            s = i % 32
-            frames = [
-                bytes((s + 31 * j + 7 * k) % 256
-                      for k in range(40 + (s + 13 * j) % 32))
-                for j in range(6 + s % 5)
-            ]
-            return _mp4(
-                1000 + i % 900,                 # container varies with id
-                width=16 + 16 * (i % 10),
-                height=16 + 9 * (i % 10),
-                brand=(b"isom", b"mp42")[i % 2],
-                frames=frames,
-            )
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_video_dup_xc_demo(
@@ -5721,37 +5443,28 @@ def synth_video_dup_xc_demo(
     _mp4 = mp4_bytes
     _mkv = mkv_bytes
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def one(i: int) -> bytes:
-            s = i % 32
-            frames = [
-                bytes((s + 31 * j + 7 * k) % 256
-                      for k in range(40 + (s + 13 * j) % 32))
-                for j in range(6 + s % 5)
-            ]
-            if i % 2 == 0:
-                return _mp4(
-                    1000 + i % 900,
-                    width=16 + 16 * (i % 10),
-                    height=16 + 9 * (i % 10),
-                    brand=(b"isom", b"mp42")[(i // 2) % 2],
-                    frames=frames,
-                )
-            return _mkv(
-                1000 + i % 900, 16 + 16 * (i % 10), 16 + 9 * (i % 10),
-                v_codec=(b"V_VP9", b"V_AV1")[(i // 2) % 2],
+    def one(i: int) -> bytes:
+        s = i % 32
+        frames = [
+            bytes((s + 31 * j + 7 * k) % 256
+                  for k in range(40 + (s + 13 * j) % 32))
+            for j in range(6 + s % 5)
+        ]
+        if i % 2 == 0:
+            return _mp4(
+                1000 + i % 900,
+                width=16 + 16 * (i % 10),
+                height=16 + 9 * (i % 10),
+                brand=(b"isom", b"mp42")[(i // 2) % 2],
                 frames=frames,
             )
+        return _mkv(
+            1000 + i % 900, 16 + 16 * (i % 10), 16 + 9 * (i % 10),
+            v_codec=(b"V_VP9", b"V_AV1")[(i // 2) % 2],
+            frames=frames,
+        )
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 IMAGE_DHASH_SCHEMA = (
@@ -5775,92 +5488,80 @@ def image_captions(df: DataFrame) -> DataFrame:
     the marker walk.  One row per textual item in file order;
     undecodable chunks (bad zlib, bad UTF-8) are skipped while the
     rest of the file's items survive; non-image or caption-free
-    payloads yield a single sentinel row (item_idx -1).  One
-    zero-shuffle Arrow pass."""
+    payloads yield a single sentinel row (item_idx -1)."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
-
-        def png_items(b: bytes):
-            pos = 8
-            while pos + 8 <= len(b):
-                (ln,) = struct.unpack(">I", b[pos : pos + 4])
-                tag = b[pos + 4 : pos + 8]
-                data = b[pos + 8 : pos + 8 + ln]
-                if tag == b"tEXt":
-                    k, _, v = data.partition(b"\x00")
-                    yield ("png_text", k.decode("latin-1"),
-                           v.decode("latin-1"))
-                elif tag == b"zTXt":
-                    k, _, rest = data.partition(b"\x00")
-                    if rest[:1] == b"\x00":  # method 0 = zlib
+    def png_items(b: bytes):
+        pos = 8
+        while pos + 8 <= len(b):
+            (ln,) = struct.unpack(">I", b[pos : pos + 4])
+            tag = b[pos + 4 : pos + 8]
+            data = b[pos + 8 : pos + 8 + ln]
+            if tag == b"tEXt":
+                k, _, v = data.partition(b"\x00")
+                yield ("png_text", k.decode("latin-1"),
+                       v.decode("latin-1"))
+            elif tag == b"zTXt":
+                k, _, rest = data.partition(b"\x00")
+                if rest[:1] == b"\x00":  # method 0 = zlib
+                    try:
+                        yield ("png_ztxt", k.decode("latin-1"),
+                               zlib.decompress(rest[1:])
+                               .decode("latin-1"))
+                    except zlib.error:
+                        pass  # bad stream: skip this chunk only
+            elif tag == b"iTXt":
+                k, _, rest = data.partition(b"\x00")
+                if len(rest) >= 2:
+                    comp, meth = rest[0], rest[1]
+                    _lang, _, rest2 = rest[2:].partition(b"\x00")
+                    _tr, _, txt = rest2.partition(b"\x00")
+                    if comp == 1 and meth == 0:
                         try:
-                            yield ("png_ztxt", k.decode("latin-1"),
-                                   zlib.decompress(rest[1:])
-                                   .decode("latin-1"))
+                            txt = zlib.decompress(txt)
                         except zlib.error:
-                            pass  # bad stream: skip this chunk only
-                elif tag == b"iTXt":
-                    k, _, rest = data.partition(b"\x00")
-                    if len(rest) >= 2:
-                        comp, meth = rest[0], rest[1]
-                        _lang, _, rest2 = rest[2:].partition(b"\x00")
-                        _tr, _, txt = rest2.partition(b"\x00")
-                        if comp == 1 and meth == 0:
-                            try:
-                                txt = zlib.decompress(txt)
-                            except zlib.error:
-                                txt = None
-                        elif comp != 0:
                             txt = None
-                        if txt is not None:
-                            try:
-                                yield ("png_itxt", k.decode("latin-1"),
-                                       txt.decode("utf-8"))
-                            except UnicodeDecodeError:
-                                pass
-                elif tag == b"IEND":
-                    return
-                pos += 12 + ln
+                    elif comp != 0:
+                        txt = None
+                    if txt is not None:
+                        try:
+                            yield ("png_itxt", k.decode("latin-1"),
+                                   txt.decode("utf-8"))
+                        except UnicodeDecodeError:
+                            pass
+            elif tag == b"IEND":
+                return
+            pos += 12 + ln
 
-        def jpeg_items(b: bytes):
-            pos = 2
-            while pos + 4 <= len(b):
-                if b[pos] != 0xFF:
-                    return
-                marker = b[pos + 1]
-                if marker == 0xDA:  # SOS: entropy data follows
-                    return
-                (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-                if marker == 0xFE:  # COM
-                    yield ("jpeg_com", "comment",
-                           b[pos + 4 : pos + 2 + ln]
-                           .decode("latin-1"))
-                pos += 2 + ln
+    def jpeg_items(b: bytes):
+        pos = 2
+        while pos + 4 <= len(b):
+            if b[pos] != 0xFF:
+                return
+            marker = b[pos + 1]
+            if marker == 0xDA:  # SOS: entropy data follows
+                return
+            (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
+            if marker == 0xFE:  # COM
+                yield ("jpeg_com", "comment",
+                       b[pos + 4 : pos + 2 + ln]
+                       .decode("latin-1"))
+            pos += 2 + ln
 
-        def rows(i: int, b: bytes):
-            b = bytes(b) if b is not None else b""
-            items = []
-            if b[:8] == b"\x89PNG\r\n\x1a\n":
-                items = list(png_items(b))
-            elif b[:3] == b"\xff\xd8\xff":
-                items = list(jpeg_items(b))
-            if not items:
-                return [(i, -1, "none", "none", "none")]
-            return [(i, j, s, k, t)
-                    for j, (s, k, t) in enumerate(items)]
+    def rows(i: int, b: bytes):
+        items = []
+        if b[:8] == b"\x89PNG\r\n\x1a\n":
+            items = list(png_items(b))
+        elif b[:3] == b"\xff\xd8\xff":
+            items = list(jpeg_items(b))
+        if not items:
+            return [(i, -1, "none", "none", "none")]
+        return [(i, j, s, k, t)
+                for j, (s, k, t) in enumerate(items)]
 
-        cols = ["doc_id", "item_idx", "source", "key", "text"]
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                recs.extend(rows(int(i), b))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=IMAGE_CAPTION_SCHEMA)
+    return _payload_rows(df, rows, IMAGE_CAPTION_SCHEMA)
 
 
 def synth_image_caption_demo(docs: DataFrame,
@@ -5875,60 +5576,51 @@ def synth_image_caption_demo(docs: DataFrame,
     captions survive."""
     _jenc = jpeg_baseline_bytes  # factory product → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    def chunk(tag: bytes, data: bytes) -> bytes:
+        return (struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I",
+                              zlib.crc32(tag + data) & 0xFFFFFFFF))
 
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(">I",
-                                  zlib.crc32(tag + data) & 0xFFFFFFFF))
+    def _pngbase(w: int, h: int) -> bytes:
+        # nested by-value copy of png_bytes (module-level defs
+        # pickle by reference and die on import-less workers)
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", zlib.compress(raw))
+                + chunk(b"IEND", b""))
 
-        def _pngbase(w: int, h: int) -> bytes:
-            # nested by-value copy of png_bytes (module-level defs
-            # pickle by reference and die on import-less workers)
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(raw))
-                    + chunk(b"IEND", b""))
+    def one(i: int) -> bytes:
+        if i % 2 == 1:
+            base = _jenc(16, 16, [(0, 0)] * 4)
+            com = ("Jpeg comment %d" % i).encode("latin-1")
+            seg = (b"\xff\xfe" + struct.pack(">H", len(com) + 2)
+                   + com)
+            return base[:2] + seg + base[2:]
+        base = _pngbase(8, 8)
+        zdata = ("Compressed desc %d" % i).encode("latin-1")
+        z = zlib.compress(zdata)
+        if i % 23 == 0:
+            z = z[:-3]  # adler tail gone: chunk skipped
+        itxt = ("Unicode caption %d é" % i).encode("utf-8")
+        if i % 4 == 0:
+            body = b"Comment\x00\x01\x00en\x00\x00" \
+                + zlib.compress(itxt)
+        else:
+            body = b"Comment\x00\x00\x00en\x00\x00" + itxt
+        chunks = (
+            chunk(b"tEXt", b"Title\x00"
+                  + ("Img title %d" % i).encode("latin-1"))
+            + chunk(b"zTXt", b"Description\x00\x00" + z)
+            + chunk(b"iTXt", body)
+        )
+        ihdr_end = 33  # signature(8) + IHDR chunk(25)
+        return base[:ihdr_end] + chunks + base[ihdr_end:]
 
-        def one(i: int) -> bytes:
-            if i % 2 == 1:
-                base = _jenc(16, 16, [(0, 0)] * 4)
-                com = ("Jpeg comment %d" % i).encode("latin-1")
-                seg = (b"\xff\xfe" + struct.pack(">H", len(com) + 2)
-                       + com)
-                return base[:2] + seg + base[2:]
-            base = _pngbase(8, 8)
-            zdata = ("Compressed desc %d" % i).encode("latin-1")
-            z = zlib.compress(zdata)
-            if i % 23 == 0:
-                z = z[:-3]  # adler tail gone: chunk skipped
-            itxt = ("Unicode caption %d é" % i).encode("utf-8")
-            if i % 4 == 0:
-                body = b"Comment\x00\x01\x00en\x00\x00" \
-                    + zlib.compress(itxt)
-            else:
-                body = b"Comment\x00\x00\x00en\x00\x00" + itxt
-            chunks = (
-                chunk(b"tEXt", b"Title\x00"
-                      + ("Img title %d" % i).encode("latin-1"))
-                + chunk(b"zTXt", b"Description\x00\x00" + z)
-                + chunk(b"iTXt", body)
-            )
-            ihdr_end = 33  # signature(8) + IHDR chunk(25)
-            return base[:ihdr_end] + chunks + base[ihdr_end:]
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def image_dhash(df: DataFrame) -> DataFrame:
@@ -5956,63 +5648,54 @@ def image_dhash(df: DataFrame) -> DataFrame:
     gdec = _make_gif_pixel_decoder()
     twalk = _make_tiff_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        def one(b: bytes):
-            b = bytes(b) if b is not None else b""
+    def one(b: bytes):
+        b = bytes(b) if b is not None else b""
+        px = None
+        if b[:8] == b"\x89PNG\r\n\x1a\n":
+            px = png_decode(b)
+        elif b[:3] == b"\xff\xd8\xff":
+            px = jdec(b)
+        elif b[:6] in (b"GIF87a", b"GIF89a"):
+            g = gdec(b)
+            px = g["frames"][0] if g else None
+        elif b[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
+            t = twalk(b)
             px = None
-            if b[:8] == b"\x89PNG\r\n\x1a\n":
-                px = png_decode(b)
-            elif b[:3] == b"\xff\xd8\xff":
-                px = jdec(b)
-            elif b[:6] in (b"GIF87a", b"GIF89a"):
-                g = gdec(b)
-                px = g["frames"][0] if g else None
-            elif b[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-                t = twalk(b)
-                px = None
-                if t and t["pages"] and t["valid"]:
-                    p0 = t["pages"][0]
-                    soff, slen = p0.get("strip_off"), p0.get("strip_len")
-                    w0, h0 = p0["width"], p0["height"]
-                    if (p0["compression"] == 1 and p0["bits"] == 8
-                            and soff is not None and slen is not None
-                            and slen == (w0 or 0) * (h0 or 0)
-                            and soff + slen <= len(b)):
-                        px = np.frombuffer(
-                            b[soff : soff + slen], dtype=np.uint8
-                        ).reshape(h0, w0)
-            if px is not None and px.ndim == 3:
-                # any color/alpha decode reduces to integer Rec.601
-                # luma (cast first: PNG arrays are uint8)
-                px = px.astype(np.int64)
-                if px.shape[2] >= 3:
-                    px = (299 * px[:, :, 0] + 587 * px[:, :, 1]
-                          + 114 * px[:, :, 2]) // 1000
-                else:  # gray+alpha: the gray channel
-                    px = px[:, :, 0]
-            if px is None or px.shape[0] < 1 or px.shape[1] < 2:
-                return (None, None, None, False)
-            h, w = int(px.shape[0]), int(px.shape[1])
-            rows = (np.arange(8) * h) // 8
-            cols = (np.arange(9) * w) // 9
-            g = np.asarray(px, dtype=np.int64)[np.ix_(rows, cols)]
-            bits = (g[:, :8] > g[:, 1:]).astype(np.uint64)
-            idx = (np.arange(8)[:, None] * 8
-                   + np.arange(8)[None, :]).astype(np.uint64)
-            val = int((bits << idx).sum())
-            return (w, h, "%016x" % val, True)
+            if t and t["pages"] and t["valid"]:
+                p0 = t["pages"][0]
+                soff, slen = p0.get("strip_off"), p0.get("strip_len")
+                w0, h0 = p0["width"], p0["height"]
+                if (p0["compression"] == 1 and p0["bits"] == 8
+                        and soff is not None and slen is not None
+                        and slen == (w0 or 0) * (h0 or 0)
+                        and soff + slen <= len(b)):
+                    px = np.frombuffer(
+                        b[soff : soff + slen], dtype=np.uint8
+                    ).reshape(h0, w0)
+        if px is not None and px.ndim == 3:
+            # any color/alpha decode reduces to integer Rec.601
+            # luma (cast first: PNG arrays are uint8)
+            px = px.astype(np.int64)
+            if px.shape[2] >= 3:
+                px = (299 * px[:, :, 0] + 587 * px[:, :, 1]
+                      + 114 * px[:, :, 2]) // 1000
+            else:  # gray+alpha: the gray channel
+                px = px[:, :, 0]
+        if px is None or px.shape[0] < 1 or px.shape[1] < 2:
+            return (None, None, None, False)
+        h, w = int(px.shape[0]), int(px.shape[1])
+        rows = (np.arange(8) * h) // 8
+        cols = (np.arange(9) * w) // 9
+        g = np.asarray(px, dtype=np.int64)[np.ix_(rows, cols)]
+        bits = (g[:, :8] > g[:, 1:]).astype(np.uint64)
+        idx = (np.arange(8)[:, None] * 8
+               + np.arange(8)[None, :]).astype(np.uint64)
+        val = int((bits << idx).sum())
+        return (w, h, "%016x" % val, True)
 
-        cols_ = ["width", "height", "dhash", "ok"]
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols_)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=IMAGE_DHASH_SCHEMA)
+    return _per_payload(df, one, IMAGE_DHASH_SCHEMA)
 
 
 def dhash_bands(df: DataFrame, id_col: str = "doc_id",
@@ -6127,32 +5810,24 @@ def synth_dhash_neardup_demo(docs: DataFrame,
     wider radius."""
     _, png_encode = _make_png_codec()  # product captured, not factory
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        def one(i: int) -> bytes:
-            k, t = i % 10, (i % t_mod) // 10
-            flips = {(7 * k + 13 * t + 17 * j) % 64 for j in range(t)}
-            px = np.zeros((16, 18), dtype=np.uint8)
-            for r in range(8):
-                g = [128]
-                for c in range(8):
-                    bit = int(((11 * k + 3 * r + 5 * c) % 7) < 3)
-                    bit ^= (r * 8 + c) in flips
-                    g.append(g[-1] - 10 if bit else g[-1] + 10)
-                row = np.repeat(np.asarray(g, dtype=np.uint8), 2)
-                px[2 * r] = row
-                px[2 * r + 1] = row
-            return png_encode(px)
+    def one(i: int) -> bytes:
+        k, t = i % 10, (i % t_mod) // 10
+        flips = {(7 * k + 13 * t + 17 * j) % 64 for j in range(t)}
+        px = np.zeros((16, 18), dtype=np.uint8)
+        for r in range(8):
+            g = [128]
+            for c in range(8):
+                bit = int(((11 * k + 3 * r + 5 * c) % 7) < 3)
+                bit ^= (r * 8 + c) in flips
+                g.append(g[-1] - 10 if bit else g[-1] + 10)
+            row = np.repeat(np.asarray(g, dtype=np.uint8), 2)
+            px[2 * r] = row
+            px[2 * r + 1] = row
+        return png_encode(px)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_image_dup_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6165,54 +5840,45 @@ def synth_image_dup_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     TOLERATED by the chunk walk, so it wouldn't corrupt) →
     ok=false."""
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    def _png_pat(w: int, h: int, seed: int) -> bytes:
+        # nested by-value copy of png_bytes_pattern (module-level
+        # defs pickle by reference and die on import-less workers)
+        def chunk(tag: bytes, data: bytes) -> bytes:
+            return (struct.pack(">I", len(data)) + tag + data
+                    + struct.pack(
+                        ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
-        def _png_pat(w: int, h: int, seed: int) -> bytes:
-            # nested by-value copy of png_bytes_pattern (module-level
-            # defs pickle by reference and die on import-less workers)
-            def chunk(tag: bytes, data: bytes) -> bytes:
-                return (struct.pack(">I", len(data)) + tag + data
-                        + struct.pack(
-                            ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        lines = []
+        for r in range(h):
+            raw = bytes((seed + 7 * r + 13 * c) % 256
+                        for c in range(w))
+            if r % 2 == 0:
+                lines.append(b"\x00" + raw)
+            else:
+                prev = 0
+                filt = bytearray()
+                for v in raw:
+                    filt.append((v - prev) & 0xFF)
+                    prev = v
+                lines.append(b"\x01" + bytes(filt))
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
+                + chunk(b"IEND", b""))
 
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            lines = []
-            for r in range(h):
-                raw = bytes((seed + 7 * r + 13 * c) % 256
-                            for c in range(w))
-                if r % 2 == 0:
-                    lines.append(b"\x00" + raw)
-                else:
-                    prev = 0
-                    filt = bytearray()
-                    for v in raw:
-                        filt.append((v - prev) & 0xFF)
-                        prev = v
-                    lines.append(b"\x01" + bytes(filt))
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                    + chunk(b"IEND", b""))
+    def one(i: int) -> bytes:
+        s = i % 32
+        b = _png_pat(8 + 4 * (s % 5), 8 + 4 * (s % 3), s)
+        if i % 23 == 0:  # corrupt leg: break the zlib stream
+            bb = bytearray(b)
+            bb[b.index(b"IDAT") + 8] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            s = i % 32
-            b = _png_pat(8 + 4 * (s % 5), 8 + 4 * (s % 3), s)
-            if i % 23 == 0:  # corrupt leg: break the zlib stream
-                bb = bytearray(b)
-                bb[b.index(b"IDAT") + 8] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 GUNZIP_SCHEMA = "doc_id long, text string, n_chars long, ok boolean"
@@ -6228,31 +5894,20 @@ def gunzip_text(df: DataFrame) -> DataFrame:
     zero-shuffle Arrow pass; decompressed text stays on its input
     partition."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import zlib
+    import zlib
 
-        import pandas as pd
+    def one(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if len(b) < 18 or b[:2] != b"\x1f\x8b":
+            return (None, None, False)
+        try:
+            raw = zlib.decompress(b, 16 + zlib.MAX_WBITS)
+            text = raw.decode("utf-8")
+        except (zlib.error, UnicodeDecodeError):
+            return (None, None, False)
+        return (text, len(text), True)
 
-        def one(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if len(b) < 18 or b[:2] != b"\x1f\x8b":
-                return (None, None, False)
-            try:
-                raw = zlib.decompress(b, 16 + zlib.MAX_WBITS)
-                text = raw.decode("utf-8")
-            except (zlib.error, UnicodeDecodeError):
-                return (None, None, False)
-            return (text, len(text), True)
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]],
-                columns=["text", "n_chars", "ok"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=GUNZIP_SCHEMA)
+    return _per_payload(df, one, GUNZIP_SCHEMA)
 
 
 def synth_gzip_demo(docs: DataFrame, id_col: str = "doc_id",
@@ -6429,53 +6084,40 @@ def wav_downsample(
     so the division is nonnegative — which keeps the SQL oracle exact
     (x_wav_resample recomputes every filtered amplitude).
     ``fir=False`` keeps the raw r8 decimator.  Undecodable payloads
-    yield (resampled NULL, ok=false); one zero-shuffle Arrow pass."""
+    yield (resampled NULL, ok=false)."""
     wav_decode, wav_encode = _make_wav_codec()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        k = factor
-        use_fir = fir
+    def one(b: bytes):
+        got = wav_decode(b)
+        if got is None:
+            return (None, None, None, False)
+        rate, ch, s = got
+        if len(s) % ch:
+            return (None, None, None, False)
+        frames = s.reshape(-1, ch)
+        if fir and len(frames):
+            x = frames.astype(np.int64)
+            n = len(x)
+            idx = np.arange(n)
 
-        def one(b: bytes):
-            got = wav_decode(b)
-            if got is None:
-                return (None, None, None, False)
-            rate, ch, s = got
-            if len(s) % ch:
-                return (None, None, None, False)
-            frames = s.reshape(-1, ch)
-            if use_fir and len(frames):
-                x = frames.astype(np.int64)
-                n = len(x)
-                idx = np.arange(n)
+            def at(d: int):
+                return x[np.clip(idx + d, 0, n - 1)]
 
-                def at(d: int):
-                    return x[np.clip(idx + d, 0, n - 1)]
+            S = at(-2) + 4 * at(-1) + 6 * x + 4 * at(1) + at(2)
+            # floor(S/16) via nonnegative division (S ≥ -2^19):
+            # identical in numpy and SQL, no negative-division
+            # dialect ambiguity
+            frames = ((S + 524288) // 16 - 32768).astype(np.int16)
+        frames = frames[::factor]
+        out_rate = max(rate // factor, 1)
+        return (
+            out_rate, len(frames),
+            wav_encode(out_rate, ch, frames.reshape(-1)), True,
+        )
 
-                S = at(-2) + 4 * at(-1) + 6 * x + 4 * at(1) + at(2)
-                # floor(S/16) via nonnegative division (S ≥ -2^19):
-                # identical in numpy and SQL, no negative-division
-                # dialect ambiguity
-                frames = ((S + 524288) // 16 - 32768).astype(np.int16)
-            frames = frames[::k]
-            out_rate = max(rate // k, 1)
-            return (
-                out_rate, len(frames),
-                wav_encode(out_rate, ch, frames.reshape(-1)), True,
-            )
-
-        cols = ["sample_rate", "n_samples", "resampled", "ok"]
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=WAV_RESAMPLE_SCHEMA)
+    return _per_payload(df, one, WAV_RESAMPLE_SCHEMA)
 
 
 def _make_mp3_gen():
@@ -6574,101 +6216,84 @@ def mp3_meta(df: DataFrame) -> DataFrame:
     lying tag shows up as tag_frames ≠ n_frames instead of a wrong
     duration.  valid requires the walk to consume the payload
     exactly; a mid-stream corrupt header stops the walk with
-    valid=false and the census so far.  Non-MP3 payloads yield NULLs;
-    one zero-shuffle Arrow pass."""
+    valid=false and the census so far.  Non-MP3 payloads yield NULLs."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128,
+                160, 192, 224, 256, 320]
+    RATES = [44100, 48000, 32000]
 
-        BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                    160, 192, 224, 256, 320]
-        RATES = [44100, 48000, 32000]
-
-        def census(b: bytes):
-            b = bytes(b) if b is not None else b""
-            pos = 0
-            has_id3 = False
-            if b[:3] == b"ID3" and len(b) >= 10:
-                has_id3 = True
-                n = ((b[6] & 0x7F) << 21) | ((b[7] & 0x7F) << 14) | (
-                    (b[8] & 0x7F) << 7) | (b[9] & 0x7F)
-                pos = 10 + n
-            if pos + 4 > len(b):
-                return None
-            first = struct.unpack(">I", b[pos : pos + 4])[0]
-            if (first >> 21) != 0x7FF or ((first >> 19) & 3) != 0b11 \
-                    or ((first >> 17) & 3) != 0b01:
-                return None  # not an MPEG-1 Layer III sync
-            sr_idx = (first >> 10) & 3
-            if ((first >> 12) & 0xF) in (0, 15) or sr_idx == 3:
-                return None  # free-format/bad indices: no census
-            sr = RATES[sr_idx]
-            n_frames = 0
-            br_sum = 0
-            vbr = False
-            tag_frames = None
-            ok = True
-            while pos + 4 <= len(b):
-                h = struct.unpack(">I", b[pos : pos + 4])[0]
-                if (h >> 21) != 0x7FF or ((h >> 19) & 3) != 0b11 \
-                        or ((h >> 17) & 3) != 0b01:
-                    ok = False
-                    break
-                bi = (h >> 12) & 0xF
-                if bi in (0, 15) or ((h >> 10) & 3) != sr_idx:
-                    ok = False  # free-format frame or samplerate
-                    break  # switch mid-stream: a structural lie
-                pad = (h >> 9) & 1
-                flen = (144 * BITRATES[bi] * 1000) // sr + pad
-                if pos + flen > len(b):
-                    ok = False
-                    break
-                if n_frames == 0:
-                    # Xing/Info sit after the side info (MPEG-1:
-                    # 17 bytes mono, 32 otherwise); VBRI at fixed 36
-                    si = 17 if ((h >> 6) & 3) == 3 else 32
-                    tp = pos + 4 + si
-                    t4 = b[tp : tp + 4]
-                    if t4 in (b"Xing", b"Info") and tp + 8 <= len(b):
-                        (flags,) = struct.unpack(
-                            ">I", b[tp + 4 : tp + 8])
-                        if flags & 0x1 and tp + 12 <= len(b):
-                            (tag_frames,) = struct.unpack(
-                                ">I", b[tp + 8 : tp + 12])
-                        vbr = t4 == b"Xing"
-                    elif b[pos + 36 : pos + 40] == b"VBRI" \
-                            and pos + 54 <= len(b):
-                        (tag_frames,) = struct.unpack(
-                            ">I", b[pos + 50 : pos + 54])
-                        vbr = True
-                br_sum += BITRATES[bi]
-                n_frames += 1
-                pos += flen
-            ok = ok and pos == len(b) and n_frames > 0
+    def census(b: bytes):
+        b = bytes(b) if b is not None else b""
+        pos = 0
+        has_id3 = False
+        if b[:3] == b"ID3" and len(b) >= 10:
+            has_id3 = True
+            n = ((b[6] & 0x7F) << 21) | ((b[7] & 0x7F) << 14) | (
+                (b[8] & 0x7F) << 7) | (b[9] & 0x7F)
+            pos = 10 + n
+        if pos + 4 > len(b):
+            return (None,) * 7 + (False,)
+        first = struct.unpack(">I", b[pos : pos + 4])[0]
+        if (first >> 21) != 0x7FF or ((first >> 19) & 3) != 0b11 \
+                or ((first >> 17) & 3) != 0b01:
+            return (None,) * 7 + (False,)  # not an MPEG-1 Layer III sync
+        sr_idx = (first >> 10) & 3
+        if ((first >> 12) & 0xF) in (0, 15) or sr_idx == 3:
+            return (None,) * 7 + (False,)  # free-format/bad indices: no census
+        sr = RATES[sr_idx]
+        n_frames = 0
+        br_sum = 0
+        vbr = False
+        tag_frames = None
+        ok = True
+        while pos + 4 <= len(b):
+            h = struct.unpack(">I", b[pos : pos + 4])[0]
+            if (h >> 21) != 0x7FF or ((h >> 19) & 3) != 0b11 \
+                    or ((h >> 17) & 3) != 0b01:
+                ok = False
+                break
+            bi = (h >> 12) & 0xF
+            if bi in (0, 15) or ((h >> 10) & 3) != sr_idx:
+                ok = False  # free-format frame or samplerate
+                break  # switch mid-stream: a structural lie
+            pad = (h >> 9) & 1
+            flen = (144 * BITRATES[bi] * 1000) // sr + pad
+            if pos + flen > len(b):
+                ok = False
+                break
             if n_frames == 0:
-                return None
-            return (
-                br_sum // n_frames, sr, n_frames,
-                1000 * 1152 * n_frames // sr, has_id3, vbr,
-                tag_frames, ok,
-            )
+                # Xing/Info sit after the side info (MPEG-1:
+                # 17 bytes mono, 32 otherwise); VBRI at fixed 36
+                si = 17 if ((h >> 6) & 3) == 3 else 32
+                tp = pos + 4 + si
+                t4 = b[tp : tp + 4]
+                if t4 in (b"Xing", b"Info") and tp + 8 <= len(b):
+                    (flags,) = struct.unpack(
+                        ">I", b[tp + 4 : tp + 8])
+                    if flags & 0x1 and tp + 12 <= len(b):
+                        (tag_frames,) = struct.unpack(
+                            ">I", b[tp + 8 : tp + 12])
+                    vbr = t4 == b"Xing"
+                elif b[pos + 36 : pos + 40] == b"VBRI" \
+                        and pos + 54 <= len(b):
+                    (tag_frames,) = struct.unpack(
+                        ">I", b[pos + 50 : pos + 54])
+                    vbr = True
+            br_sum += BITRATES[bi]
+            n_frames += 1
+            pos += flen
+        ok = ok and pos == len(b) and n_frames > 0
+        if n_frames == 0:
+            return (None,) * 7 + (False,)
+        return (
+            br_sum // n_frames, sr, n_frames,
+            1000 * 1152 * n_frames // sr, has_id3, vbr,
+            tag_frames, ok,
+        )
 
-        cols = ["bitrate_kbps", "sample_rate", "n_frames",
-                "duration_ms", "has_id3", "vbr", "tag_frames",
-                "valid"]
-        for pdf in batches:
-            parsed = [census(x) for x in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 7 + (False,)
-                 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=MP3_META_SCHEMA)
+    return _per_payload(df, census, MP3_META_SCHEMA)
 
 
 def synth_mp3_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6683,32 +6308,23 @@ def synth_mp3_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     tag_frames."""
     _mp3 = mp3_bytes
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        id3 = bytes(20 + i % 50) if i % 2 == 0 else b""
+        nf = 5 + i % 20
+        lie = 5 if i % 29 == 0 else 0
+        if i % 5 == 2:
+            tag = "VBRI" if i % 10 == 7 else "Xing"
+            b = _mp3.vbr([1 + (i + 3 * f) % 14 for f in range(nf)],
+                         i % 3, tag=tag, tag_frames=nf + lie,
+                         id3_payload=id3)
+        elif i % 5 == 4:
+            b = _mp3.vbr([1 + i % 14] * nf, i % 3, tag="Info",
+                         tag_frames=nf + lie, id3_payload=id3)
+        else:
+            b = _mp3(1 + i % 14, i % 3, nf, id3_payload=id3)
+        return b[:-7] if i % 17 == 0 else b
 
-        def one(i: int) -> bytes:
-            id3 = bytes(20 + i % 50) if i % 2 == 0 else b""
-            nf = 5 + i % 20
-            lie = 5 if i % 29 == 0 else 0
-            if i % 5 == 2:
-                tag = "VBRI" if i % 10 == 7 else "Xing"
-                b = _mp3.vbr([1 + (i + 3 * f) % 14 for f in range(nf)],
-                             i % 3, tag=tag, tag_frames=nf + lie,
-                             id3_payload=id3)
-            elif i % 5 == 4:
-                b = _mp3.vbr([1 + i % 14] * nf, i % 3, tag="Info",
-                             tag_frames=nf + lie, id3_payload=id3)
-            else:
-                b = _mp3(1 + i % 14, i % 3, nf, id3_payload=id3)
-            return b[:-7] if i % 17 == 0 else b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_aac_gen():
@@ -6772,68 +6388,53 @@ def aac_meta(df: DataFrame) -> DataFrame:
     first header.  A profile/rate/channel switch mid-stream is a
     structural lie, a frame overrunning the payload a truncation:
     both stop the walk with valid=false and the census so far.
-    Non-ADTS payloads yield NULLs; one zero-shuffle Arrow pass."""
+    Non-ADTS payloads yield NULLs."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000,
+             22050, 16000, 12000, 11025, 8000, 7350)
 
-        RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000,
-                 22050, 16000, 12000, 11025, 8000, 7350)
-
-        def census(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if len(b) < 7 or b[0] != 0xFF or (b[1] & 0xF6) != 0xF0:
-                return None
-            sr_idx = (b[2] >> 2) & 0xF
-            if sr_idx >= 13:
-                return None
-            profile = (b[2] >> 6) & 3
-            ch = ((b[2] & 1) << 2) | ((b[3] >> 6) & 3)
-            crc = not (b[1] & 1)
-            mpeg2 = bool(b[1] & 0x08)
-            pos = 0
-            n = 0
-            samples = 0
-            ok = True
-            while pos + 7 <= len(b):
-                h = b[pos : pos + 7]
-                if h[0] != 0xFF or (h[1] & 0xF6) != 0xF0:
-                    ok = False
-                    break
-                if (((h[2] >> 2) & 0xF) != sr_idx
-                        or ((h[2] >> 6) & 3) != profile
-                        or ((((h[2] & 1) << 2)
-                             | ((h[3] >> 6) & 3))) != ch):
-                    ok = False  # mid-stream parameter switch
-                    break
-                flen = ((h[3] & 3) << 11) | (h[4] << 3) | (h[5] >> 5)
-                hdr = 9 if not (h[1] & 1) else 7
-                if flen < hdr or pos + flen > len(b):
-                    ok = False
-                    break
-                rdb = (h[6] & 3) + 1
-                samples += 1024 * rdb
-                n += 1
-                pos = pos + flen
-            if pos != len(b):
+    def census(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if len(b) < 7 or b[0] != 0xFF or (b[1] & 0xF6) != 0xF0:
+            return (None,) * 7 + (False,)
+        sr_idx = (b[2] >> 2) & 0xF
+        if sr_idx >= 13:
+            return (None,) * 7 + (False,)
+        profile = (b[2] >> 6) & 3
+        ch = ((b[2] & 1) << 2) | ((b[3] >> 6) & 3)
+        crc = not (b[1] & 1)
+        mpeg2 = bool(b[1] & 0x08)
+        pos = 0
+        n = 0
+        samples = 0
+        ok = True
+        while pos + 7 <= len(b):
+            h = b[pos : pos + 7]
+            if h[0] != 0xFF or (h[1] & 0xF6) != 0xF0:
                 ok = False
-            sr = RATES[sr_idx]
-            return (profile, sr, ch, n, 1000 * samples // sr,
-                    crc, mpeg2, ok)
+                break
+            if (((h[2] >> 2) & 0xF) != sr_idx
+                    or ((h[2] >> 6) & 3) != profile
+                    or ((((h[2] & 1) << 2)
+                         | ((h[3] >> 6) & 3))) != ch):
+                ok = False  # mid-stream parameter switch
+                break
+            flen = ((h[3] & 3) << 11) | (h[4] << 3) | (h[5] >> 5)
+            hdr = 9 if not (h[1] & 1) else 7
+            if flen < hdr or pos + flen > len(b):
+                ok = False
+                break
+            rdb = (h[6] & 3) + 1
+            samples += 1024 * rdb
+            n += 1
+            pos = pos + flen
+        if pos != len(b):
+            ok = False
+        sr = RATES[sr_idx]
+        return (profile, sr, ch, n, 1000 * samples // sr,
+                crc, mpeg2, ok)
 
-        cols = ["profile", "sample_rate", "channels", "n_frames",
-                "duration_ms", "crc", "mpeg2", "valid"]
-        for pdf in batches:
-            parsed = [census(x) for x in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 7 + (False,)
-                 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=AAC_META_SCHEMA)
+    return _per_payload(df, census, AAC_META_SCHEMA)
 
 
 def synth_aac_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6846,25 +6447,16 @@ def synth_aac_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ADTS at all (NULL row)."""
     _gen = aac_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        if i % 31 == 0:
+            return b"RIFFnot aac"
+        nf = 5 + i % 40
+        b = _gen(i % 3, i % 13, 1 + i % 3,
+                 [13 + (7 * i + f) % 29 for f in range(nf)],
+                 crc=(i % 4 == 0), mpeg2=(i % 5 == 3))
+        return b[:-5] if i % 23 == 0 else b
 
-        def one(i: int) -> bytes:
-            if i % 31 == 0:
-                return b"RIFFnot aac"
-            nf = 5 + i % 40
-            b = _gen(i % 3, i % 13, 1 + i % 3,
-                     [13 + (7 * i + f) % 29 for f in range(nf)],
-                     crc=(i % 4 == 0), mpeg2=(i % 5 == 3))
-            return b[:-5] if i % 23 == 0 else b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 ID3_TAGS_SCHEMA = (
@@ -6891,101 +6483,85 @@ def id3_tags(df: DataFrame) -> DataFrame:
     excluding its own 4 size bytes).  valid requires every frame to
     fit inside the tag (zero padding terminates the walk, per spec);
     a frame size past the tag end keeps the frames parsed before the
-    lie.  Non-ID3 payloads yield NULLs; one zero-shuffle Arrow
-    pass."""
+    lie.  Non-ID3 payloads yield NULLs."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    ENC = {0: "latin-1", 1: "utf-16", 2: "utf-16-be", 3: "utf-8"}
 
-        ENC = {0: "latin-1", 1: "utf-16", 2: "utf-16-be", 3: "utf-8"}
+    def census(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if b[:3] != b"ID3" or len(b) < 10:
+            return (None,) * 6 + (False,)
+        ver = b[3]
+        if ver not in (3, 4):
+            return (None,) * 6 + (False,)
+        hflags = b[5]
+        tag_sz = ((b[6] & 0x7F) << 21) | ((b[7] & 0x7F) << 14) \
+            | ((b[8] & 0x7F) << 7) | (b[9] & 0x7F)
+        body = b[10 : min(10 + tag_sz, len(b))]
+        if ver == 3 and hflags & 0x80:
+            # v2.3 unsynchronisation is applied to the WHOLE tag
+            # after rendering: frame sizes refer to the restored
+            # bytes, so de-unsync once up front.
+            body = body.replace(b"\xff\x00", b"\xff")
+        if hflags & 0x40:  # extended header precedes the frames
+            if len(body) < 4:
+                return ("2.%d" % ver, 0, None, None, None, None,
+                        False)
+            if ver == 4:  # syncsafe, includes the whole ext header
+                esz = ((body[0] & 0x7F) << 21) \
+                    | ((body[1] & 0x7F) << 14) \
+                    | ((body[2] & 0x7F) << 7) | (body[3] & 0x7F)
+            else:  # v2.3: BE32, excludes its own 4 size bytes
+                esz = struct.unpack(">I", body[:4])[0] + 4
+            if esz < 4 or esz > len(body):
+                return ("2.%d" % ver, 0, None, None, None, None,
+                        False)
+            body = body[esz:]
+        end = len(body)
+        pos = 0
+        frames = {}
+        n = 0
+        ok = True
+        while pos + 10 <= end:
+            fid = body[pos : pos + 4]
+            if fid[0] == 0:  # zero padding: tag ends, per spec
+                break
+            if ver == 4:  # syncsafe frame size (stored bytes)
+                fsz = ((body[pos + 4] & 0x7F) << 21) \
+                    | ((body[pos + 5] & 0x7F) << 14) \
+                    | ((body[pos + 6] & 0x7F) << 7) \
+                    | (body[pos + 7] & 0x7F)
+            else:  # v2.3: plain big-endian
+                (fsz,) = struct.unpack(">I", body[pos + 4 : pos + 8])
+            body_s = pos + 10
+            if body_s + fsz > end:
+                ok = False  # frame overruns the tag: keep the
+                break  # frames parsed before the lie
+            n += 1
+            if fid[:1] == b"T" and fsz >= 1:
+                raw = body[body_s : body_s + fsz]
+                if ver == 4 and (hflags & 0x80
+                                 or body[pos + 9] & 0x02):
+                    # v2.4 unsync is per frame; the stored size
+                    # already walked the file, restore the body
+                    raw = raw.replace(b"\xff\x00", b"\xff")
+                enc = raw[0]
+                raw = raw[1:]
+                try:
+                    txt = raw.decode(ENC.get(enc, "latin-1"))
+                except UnicodeDecodeError:
+                    txt = raw.decode("latin-1", "replace")
+                frames[fid.decode("ascii", "replace")] = \
+                    txt.rstrip("\x00")
+            pos = body_s + fsz
+        year_s = frames.get("TDRC" if ver == 4 else "TYER", "")
+        year = int(year_s[:4]) if year_s[:4].isdigit() else None
+        return ("2.%d" % ver, n, frames.get("TIT2"),
+                frames.get("TPE1"), frames.get("TALB"), year, ok)
 
-        def census(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if b[:3] != b"ID3" or len(b) < 10:
-                return None
-            ver = b[3]
-            if ver not in (3, 4):
-                return None
-            hflags = b[5]
-            tag_sz = ((b[6] & 0x7F) << 21) | ((b[7] & 0x7F) << 14) \
-                | ((b[8] & 0x7F) << 7) | (b[9] & 0x7F)
-            body = b[10 : min(10 + tag_sz, len(b))]
-            if ver == 3 and hflags & 0x80:
-                # v2.3 unsynchronisation is applied to the WHOLE tag
-                # after rendering: frame sizes refer to the restored
-                # bytes, so de-unsync once up front.
-                body = body.replace(b"\xff\x00", b"\xff")
-            if hflags & 0x40:  # extended header precedes the frames
-                if len(body) < 4:
-                    return ("2.%d" % ver, 0, None, None, None, None,
-                            False)
-                if ver == 4:  # syncsafe, includes the whole ext header
-                    esz = ((body[0] & 0x7F) << 21) \
-                        | ((body[1] & 0x7F) << 14) \
-                        | ((body[2] & 0x7F) << 7) | (body[3] & 0x7F)
-                else:  # v2.3: BE32, excludes its own 4 size bytes
-                    esz = struct.unpack(">I", body[:4])[0] + 4
-                if esz < 4 or esz > len(body):
-                    return ("2.%d" % ver, 0, None, None, None, None,
-                            False)
-                body = body[esz:]
-            end = len(body)
-            pos = 0
-            frames = {}
-            n = 0
-            ok = True
-            while pos + 10 <= end:
-                fid = body[pos : pos + 4]
-                if fid[0] == 0:  # zero padding: tag ends, per spec
-                    break
-                if ver == 4:  # syncsafe frame size (stored bytes)
-                    fsz = ((body[pos + 4] & 0x7F) << 21) \
-                        | ((body[pos + 5] & 0x7F) << 14) \
-                        | ((body[pos + 6] & 0x7F) << 7) \
-                        | (body[pos + 7] & 0x7F)
-                else:  # v2.3: plain big-endian
-                    (fsz,) = struct.unpack(">I", body[pos + 4 : pos + 8])
-                body_s = pos + 10
-                if body_s + fsz > end:
-                    ok = False  # frame overruns the tag: keep the
-                    break  # frames parsed before the lie
-                n += 1
-                if fid[:1] == b"T" and fsz >= 1:
-                    raw = body[body_s : body_s + fsz]
-                    if ver == 4 and (hflags & 0x80
-                                     or body[pos + 9] & 0x02):
-                        # v2.4 unsync is per frame; the stored size
-                        # already walked the file, restore the body
-                        raw = raw.replace(b"\xff\x00", b"\xff")
-                    enc = raw[0]
-                    raw = raw[1:]
-                    try:
-                        txt = raw.decode(ENC.get(enc, "latin-1"))
-                    except UnicodeDecodeError:
-                        txt = raw.decode("latin-1", "replace")
-                    frames[fid.decode("ascii", "replace")] = \
-                        txt.rstrip("\x00")
-                pos = body_s + fsz
-            year_s = frames.get("TDRC" if ver == 4 else "TYER", "")
-            year = int(year_s[:4]) if year_s[:4].isdigit() else None
-            return ("2.%d" % ver, n, frames.get("TIT2"),
-                    frames.get("TPE1"), frames.get("TALB"), year, ok)
-
-        cols = ["version", "n_frames", "title", "artist", "album",
-                "year", "valid"]
-        for pdf in batches:
-            parsed = [census(x) for x in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 6 + (False,)
-                 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=ID3_TAGS_SCHEMA)
+    return _per_payload(df, census, ID3_TAGS_SCHEMA)
 
 
 def synth_id3_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -7001,52 +6577,43 @@ def synth_id3_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     valid=false."""
     _mp3 = mp3_bytes
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def frame(ver: int, fid: bytes, body: bytes,
+              lie: bool = False) -> bytes:
+        fsz = len(body) + (10_000 if lie else 0)
+        if ver == 4:
+            sz = bytes([(fsz >> 21) & 0x7F, (fsz >> 14) & 0x7F,
+                        (fsz >> 7) & 0x7F, fsz & 0x7F])
+        else:
+            sz = struct.pack(">I", fsz)
+        return fid + sz + b"\x00\x00" + body
 
-        def frame(ver: int, fid: bytes, body: bytes,
-                  lie: bool = False) -> bytes:
-            fsz = len(body) + (10_000 if lie else 0)
-            if ver == 4:
-                sz = bytes([(fsz >> 21) & 0x7F, (fsz >> 14) & 0x7F,
-                            (fsz >> 7) & 0x7F, fsz & 0x7F])
-            else:
-                sz = struct.pack(">I", fsz)
-            return fid + sz + b"\x00\x00" + body
+    def text_frame(ver: int, i: int, fid: bytes, txt: str,
+                   lie: bool = False) -> bytes:
+        enc = (0, 1, 3 if ver == 4 else 2)[i % 3]
+        codec = {0: "latin-1", 1: "utf-16",
+                 2: "utf-16-be", 3: "utf-8"}[enc]
+        return frame(ver, fid, bytes([enc]) + txt.encode(codec),
+                     lie=lie)
 
-        def text_frame(ver: int, i: int, fid: bytes, txt: str,
-                       lie: bool = False) -> bytes:
-            enc = (0, 1, 3 if ver == 4 else 2)[i % 3]
-            codec = {0: "latin-1", 1: "utf-16",
-                     2: "utf-16-be", 3: "utf-8"}[enc]
-            return frame(ver, fid, bytes([enc]) + txt.encode(codec),
-                         lie=lie)
+    def one(i: int) -> bytes:
+        ver = 4 if i % 2 == 0 else 3
+        fs = [
+            text_frame(ver, i, b"TIT2", "Track %d" % i),
+            text_frame(ver, i, b"TPE1", "Artist %d" % (i % 25)),
+            text_frame(ver, i, b"TALB", "Album %d" % (i % 12)),
+            frame(ver, b"PRIV", b"owner\x00" + bytes(6)),
+            text_frame(ver, i, b"TDRC" if ver == 4 else b"TYER",
+                       "%d" % (1990 + i % 35), lie=(i % 19 == 0)),
+        ]
+        payload = b"".join(fs) + bytes(8)  # trailing padding
+        b = _mp3(1 + i % 14, i % 3, 3, id3_payload=payload)
+        bb = bytearray(b)
+        bb[3] = ver  # the generator writes v2.4 headers; pin ver
+        return bytes(bb)
 
-        def one(i: int) -> bytes:
-            ver = 4 if i % 2 == 0 else 3
-            fs = [
-                text_frame(ver, i, b"TIT2", "Track %d" % i),
-                text_frame(ver, i, b"TPE1", "Artist %d" % (i % 25)),
-                text_frame(ver, i, b"TALB", "Album %d" % (i % 12)),
-                frame(ver, b"PRIV", b"owner\x00" + bytes(6)),
-                text_frame(ver, i, b"TDRC" if ver == 4 else b"TYER",
-                           "%d" % (1990 + i % 35), lie=(i % 19 == 0)),
-            ]
-            payload = b"".join(fs) + bytes(8)  # trailing padding
-            b = _mp3(1 + i % 14, i % 3, 3, id3_payload=payload)
-            bb = bytearray(b)
-            bb[3] = ver  # the generator writes v2.4 headers; pin ver
-            return bytes(bb)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_ico_gen():
@@ -7158,33 +6725,20 @@ def ico_meta(df: DataFrame) -> DataFrame:
     row per directory entry with dims (0 → 256 per spec), payload
     size, and the sniffed inner format (modern favicons embed whole
     PNGs; classic ones are DIBs).  Non-ICO payloads yield a sentinel
-    row; out-of-range entries keep the catalog with valid=false.  One
-    zero-shuffle Arrow pass."""
+    row; out-of-range entries keep the catalog with valid=false."""
     walk = _make_ico_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(i: int, b: bytes):
+        r = walk(b)
+        if r is None:
+            return [(i, -1, None, None, None, None, False)]
+        return [
+            (i, j, ic["width"], ic["height"], ic["size"],
+             ic["inner"], r["valid"])
+            for j, ic in enumerate(r["icons"])
+        ]
 
-        def rows(i: int, b: bytes):
-            r = walk(b)
-            if r is None:
-                return [(i, -1, None, None, None, None, False)]
-            return [
-                (i, j, ic["width"], ic["height"], ic["size"],
-                 ic["inner"], r["valid"])
-                for j, ic in enumerate(r["icons"])
-            ]
-
-        cols = ["doc_id", "icon_idx", "width", "height", "size",
-                "inner", "valid"]
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                recs.extend(rows(
-                    int(i), bytes(b) if b is not None else b""))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=ICO_META_SCHEMA)
+    return _payload_rows(df, rows, ICO_META_SCHEMA)
 
 
 def synth_ico_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -7194,34 +6748,25 @@ def synth_ico_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     entry's offset (catalog kept, valid=false)."""
     _gen = ico_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        dims = [16, 32, 48, 256]
+        entries = [
+            (dims[(i + j) % 4], dims[(i + j) % 4],
+             "png" if (i + j) % 2 == 0 else "dib")
+            for j in range(1 + i % 4)
+        ]
+        b = _gen(entries)
+        if i % 24 == 0:
+            bb = bytearray(b)
+            n = 1 + i % 4
+            p = 6 + 16 * (n - 1) + 12
+            bb[p : p + 4] = struct.pack("<I", len(b) + 999)
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            dims = [16, 32, 48, 256]
-            entries = [
-                (dims[(i + j) % 4], dims[(i + j) % 4],
-                 "png" if (i + j) % 2 == 0 else "dib")
-                for j in range(1 + i % 4)
-            ]
-            b = _gen(entries)
-            if i % 24 == 0:
-                bb = bytearray(b)
-                n = 1 + i % 4
-                p = 6 + 16 * (n - 1) + 12
-                bb[p : p + 4] = struct.pack("<I", len(b) + 999)
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_avi_gen():
@@ -7336,31 +6881,18 @@ def avi_meta(df: DataFrame) -> DataFrame:
     """AVI census (r9; operators/media._make_avi_walker): the third
     crawl video container after MP4 and Matroska — RIFF LIST walk to
     avih geometry/timing and per-stream fccTypes.  Non-AVI payloads
-    yield NULL fields; truncation keeps what parsed (valid=false).
-    One zero-shuffle Arrow pass."""
+    yield NULL fields; truncation keeps what parsed (valid=false)."""
     walk = _make_avi_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 4 + (False, None, False)
+        return (r["width"], r["height"], r["n_frames"],
+                r["n_streams"], r["has_audio"], r["duration_ms"],
+                r["valid"])
 
-        cols = ["width", "height", "n_frames", "n_streams",
-                "has_audio", "duration_ms", "valid"]
-
-        def one(b: bytes):
-            r = walk(b)
-            if r is None:
-                return (None,) * 4 + (False, None, False)
-            return (r["width"], r["height"], r["n_frames"],
-                    r["n_streams"], r["has_audio"], r["duration_ms"],
-                    r["valid"])
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=AVI_META_SCHEMA)
+    return _per_payload(df, one, AVI_META_SCHEMA)
 
 
 def synth_avi_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -7371,21 +6903,12 @@ def synth_avi_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     valid=false)."""
     _gen = avi_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(160 + 8 * (i % 30), 120 + 6 * (i % 20),
+                 10 + i % 90, 33333 + 100 * (i % 5), i % 7 != 0)
+        return b[:60] if i % 26 == 0 else b
 
-        def one(i: int) -> bytes:
-            b = _gen(160 + 8 * (i % 30), 120 + 6 * (i % 20),
-                     10 + i % 90, 33333 + 100 * (i % 5), i % 7 != 0)
-            return b[:60] if i % 26 == 0 else b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def svg_meta(df: DataFrame, text_col: str = "svg") -> DataFrame:
@@ -8921,27 +8444,15 @@ def pdf_text(df: DataFrame) -> DataFrame:
     pass (the media-family cost shape)."""
     pcensus, pextract, _pimages = _make_pdf_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        c = pcensus(b)
+        if c is None:
+            return (None, None, None, False, None, False)
+        runs = pextract(b) or []
+        return (c["version"], c["n_pages"], c["n_objects"],
+                c["encrypted"], "\n".join(runs), c["valid"])
 
-        cols = ["version", "n_pages", "n_objects", "encrypted",
-                "text", "valid"]
-
-        def one(b: bytes):
-            c = pcensus(b)
-            if c is None:
-                return (None, None, None, False, None, False)
-            runs = pextract(b) or []
-            return (c["version"], c["n_pages"], c["n_objects"],
-                    c["encrypted"], "\n".join(runs), c["valid"])
-
-        for pdf_ in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf_["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf_["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=PDF_TEXT_SCHEMA)
+    return _per_payload(df, one, PDF_TEXT_SCHEMA)
 
 
 def synth_pdf_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -8959,30 +8470,21 @@ def synth_pdf_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     census keeps object/page counts, valid=false."""
     _gen = pdf_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        texts = ["Doc %d page %d lorem %d" % (i, p, (7 * i + p) % 100)
+                 for p in range(1 + i % 4)]
+        modern = i % 5 == 2
+        b = _gen(texts,
+                 codec="lzw" if i % 4 == 3
+                 else ("flate" if i % 2 == 1 else None),
+                 version="1.5" if modern else "1.7",
+                 modern=modern, predictor=(i % 10 == 2))
+        if i % 21 == 0:
+            return b[: b.rfind(b"startxref" if modern
+                               else b"trailer")]
+        return b
 
-        def one(i: int) -> bytes:
-            texts = ["Doc %d page %d lorem %d" % (i, p, (7 * i + p) % 100)
-                     for p in range(1 + i % 4)]
-            modern = i % 5 == 2
-            b = _gen(texts,
-                     codec="lzw" if i % 4 == 3
-                     else ("flate" if i % 2 == 1 else None),
-                     version="1.5" if modern else "1.7",
-                     modern=modern, predictor=(i % 10 == 2))
-            if i % 21 == 0:
-                return b[: b.rfind(b"startxref" if modern
-                                   else b"trailer")]
-            return b
-
-        for pdf_ in batches:
-            ids = pdf_["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 PDF_IMAGE_SCHEMA = (
@@ -9015,73 +8517,63 @@ def pdf_image_stats(df: DataFrame) -> DataFrame:
     jdec = _make_jpeg_decoder()
     g4dec, _, mhdec, _, g3mxdec, _ = _make_ccitt_g4()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import zlib
+    import zlib
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        def decode_one(filt, w, h, gray8, blob, ccitt):
-            if filt == "DCTDecode":
-                return jdec(blob)
-            if filt == "FlateDecode" and gray8 and w and h:
-                try:
-                    raw = zlib.decompress(blob)
-                except zlib.error:
-                    return None
-                if len(raw) != w * h:
-                    return None
-                return np.frombuffer(raw, np.uint8).reshape(h, w)
-            if filt == "CCITTFaxDecode" and ccitt:
-                k, cols, nr, blackis1, eolp, eba = ccitt
-                if not cols or not nr:
-                    return None
-                if k < 0:  # G4 2-D MMR
-                    bits = g4dec(blob, cols, nr)
-                elif k == 0:  # pure 1-D MH rows (r11): EOLs and
-                    # byte alignment per the dict flags
-                    bits = mhdec(blob, cols, nr, eol=eolp,
-                                 byte_align=eba)
-                else:  # mixed 2-D G3, /K > 0 (late r11): EOL+tag
-                    # rows; fill/byte-align absorbed by the EOL scan
-                    bits = g3mxdec(blob, cols, nr)
-                if bits is None:
-                    return None
-                a = np.frombuffer(bits, np.uint8).reshape(nr, cols)
-                # sample VALUES: BlackIs1 false (the default) stores
-                # black as 0, per the CCITTFaxDecode spec
-                return a if blackis1 else 1 - a
-            return None
+    def decode_one(filt, w, h, gray8, blob, ccitt):
+        if filt == "DCTDecode":
+            return jdec(blob)
+        if filt == "FlateDecode" and gray8 and w and h:
+            try:
+                raw = zlib.decompress(blob)
+            except zlib.error:
+                return None
+            if len(raw) != w * h:
+                return None
+            return np.frombuffer(raw, np.uint8).reshape(h, w)
+        if filt == "CCITTFaxDecode" and ccitt:
+            k, cols, nr, blackis1, eolp, eba = ccitt
+            if not cols or not nr:
+                return None
+            if k < 0:  # G4 2-D MMR
+                bits = g4dec(blob, cols, nr)
+            elif k == 0:  # pure 1-D MH rows (r11): EOLs and
+                # byte alignment per the dict flags
+                bits = mhdec(blob, cols, nr, eol=eolp,
+                             byte_align=eba)
+            else:  # mixed 2-D G3, /K > 0 (late r11): EOL+tag
+                # rows; fill/byte-align absorbed by the EOL scan
+                bits = g3mxdec(blob, cols, nr)
+            if bits is None:
+                return None
+            a = np.frombuffer(bits, np.uint8).reshape(nr, cols)
+            # sample VALUES: BlackIs1 false (the default) stores
+            # black as 0, per the CCITTFaxDecode spec
+            return a if blackis1 else 1 - a
+        return None
 
-        def rows(i: int, b: bytes):
-            imgs = pimages(b)
-            if not imgs:  # None (non-PDF) or [] (no image XObjects)
-                return [(i, -1, None, None, None, None, None, None,
-                         None, False)]
-            out = []
-            for j, (filt, w, h, gray8, blob, ccitt) in enumerate(imgs):
-                px = decode_one(filt, w, h, gray8, blob, ccitt)
-                if px is None:
-                    out.append((i, j, filt, None, None, None, None,
-                                None, None, False))
-                else:
-                    p = px.astype("int64")
-                    out.append((
-                        i, j, filt, int(p.shape[1]), int(p.shape[0]),
-                        int(p.size), int(p.sum()), int(p.min()),
-                        int(p.max()), True,
-                    ))
-            return out
+    def rows(i: int, b: bytes):
+        imgs = pimages(b)
+        if not imgs:  # None (non-PDF) or [] (no image XObjects)
+            return [(i, -1, None, None, None, None, None, None,
+                     None, False)]
+        out = []
+        for j, (filt, w, h, gray8, blob, ccitt) in enumerate(imgs):
+            px = decode_one(filt, w, h, gray8, blob, ccitt)
+            if px is None:
+                out.append((i, j, filt, None, None, None, None,
+                            None, None, False))
+            else:
+                p = px.astype("int64")
+                out.append((
+                    i, j, filt, int(p.shape[1]), int(p.shape[0]),
+                    int(p.size), int(p.sum()), int(p.min()),
+                    int(p.max()), True,
+                ))
+        return out
 
-        cols = ["doc_id", "img_idx", "filter", "width", "height",
-                "n_px", "sum_px", "min_px", "max_px", "decoded"]
-        for pdf_ in batches:
-            recs = []
-            for i, b in zip(pdf_["doc_id"], pdf_["payload"]):
-                recs.extend(rows(int(i), b))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=PDF_IMAGE_SCHEMA)
+    return _payload_rows(df, rows, PDF_IMAGE_SCHEMA)
 
 
 def synth_pdf_img_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -9108,59 +8600,50 @@ def synth_pdf_img_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     _mhe2 = ccitt_mh_encode
     _g3e2 = ccitt_g3mx_encode
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import zlib
+    import zlib
 
-        import pandas as pd
-
-        def one(i: int) -> bytes:
-            if i % 19 == 0:
-                return b"GIF89a not a pdf"
-            images = []
-            for k in range(1 + i % 3):
-                leg = (i + k) % 4
-                if leg == 0 and (i + k) % 8 == 4:
-                    w, h = 5 + (i + k) % 25, 5 + (i + k) % 12
-                    bits = bytes(
-                        1 if (i + 3 * r + c + 5 * k) % 23 < 11 else 0
-                        for r in range(h) for c in range(w))
-                    if (i + k) % 16 == 12:  # r11: the /K 0 pure-MH
-                        images.append(("CCITTFaxDecode", w, h,
-                                       _mhe2(bits, w), 0))  # form
-                    elif i % 3 == 1:  # late r11: /K 2 mixed 2-D G3
-                        images.append((
-                            "CCITTFaxDecode", w, h,
-                            _g3e2(bits, w, k=2,
-                                  byte_align=(i % 2 == 0)), 2))
-                    else:
-                        images.append(("CCITTFaxDecode", w, h,
-                                       _g4e2(bits, w)))
-                elif leg == 0:
-                    images.append(("JPXDecode", 8, 8, bytes(40)))
-                elif leg == 2:
-                    w, h = 6 + (i + k) % 20, 6 + (i + k) % 10
-                    raw = bytes((i + 9 * r + 23 * c) % 256
-                                for r in range(h) for c in range(w))
-                    images.append(("FlateDecode", w, h,
-                                   zlib.compress(raw)))
+    def one(i: int) -> bytes:
+        if i % 19 == 0:
+            return b"GIF89a not a pdf"
+        images = []
+        for k in range(1 + i % 3):
+            leg = (i + k) % 4
+            if leg == 0 and (i + k) % 8 == 4:
+                w, h = 5 + (i + k) % 25, 5 + (i + k) % 12
+                bits = bytes(
+                    1 if (i + 3 * r + c + 5 * k) % 23 < 11 else 0
+                    for r in range(h) for c in range(w))
+                if (i + k) % 16 == 12:  # r11: the /K 0 pure-MH
+                    images.append(("CCITTFaxDecode", w, h,
+                                   _mhe2(bits, w), 0))  # form
+                elif i % 3 == 1:  # late r11: /K 2 mixed 2-D G3
+                    images.append((
+                        "CCITTFaxDecode", w, h,
+                        _g3e2(bits, w, k=2,
+                              byte_align=(i % 2 == 0)), 2))
                 else:
-                    w, h = 8 * (1 + (i + k) % 3), 8 * (1 + (i + k) % 2)
-                    nb = (w // 8) * (h // 8)
-                    coeffs = [((i + 17 * b + 7 * k) % 112 - 56,
-                               (i + 5 * b + 3 * k) % 13)
-                              for b in range(nb)]
-                    images.append(("DCTDecode", w, h,
-                                   _jenc(w, h, coeffs)))
-            return _gen(["Doc %d caption" % i], deflate=(i % 2 == 1),
-                        images=images)
+                    images.append(("CCITTFaxDecode", w, h,
+                                   _g4e2(bits, w)))
+            elif leg == 0:
+                images.append(("JPXDecode", 8, 8, bytes(40)))
+            elif leg == 2:
+                w, h = 6 + (i + k) % 20, 6 + (i + k) % 10
+                raw = bytes((i + 9 * r + 23 * c) % 256
+                            for r in range(h) for c in range(w))
+                images.append(("FlateDecode", w, h,
+                               zlib.compress(raw)))
+            else:
+                w, h = 8 * (1 + (i + k) % 3), 8 * (1 + (i + k) % 2)
+                nb = (w // 8) * (h // 8)
+                coeffs = [((i + 17 * b + 7 * k) % 112 - 56,
+                           (i + 5 * b + 3 * k) % 13)
+                          for b in range(nb)]
+                images.append(("DCTDecode", w, h,
+                               _jenc(w, h, coeffs)))
+        return _gen(["Doc %d caption" % i], deflate=(i % 2 == 1),
+                    images=images)
 
-        for pdf_ in batches:
-            ids = pdf_["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_pdf_campaign_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -9175,28 +8658,19 @@ def synth_pdf_campaign_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFram
     drops it on valid=false)."""
     _gen = pdf_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        cls = i % 50
+        texts = ["Class %d line %d" % (cls, p)
+                 for p in range(1 + cls % 3)]
+        modern = i % 3 == 2
+        b = _gen(texts, deflate=(i % 2 == 1), modern=modern,
+                 predictor=(i % 6 == 2))
+        if i % 21 == 0:
+            return b[: b.rfind(b"startxref" if modern
+                               else b"trailer")]
+        return b
 
-        def one(i: int) -> bytes:
-            cls = i % 50
-            texts = ["Class %d line %d" % (cls, p)
-                     for p in range(1 + cls % 3)]
-            modern = i % 3 == 2
-            b = _gen(texts, deflate=(i % 2 == 1), modern=modern,
-                     predictor=(i % 6 == 2))
-            if i % 21 == 0:
-                return b[: b.rfind(b"startxref" if modern
-                                   else b"trailer")]
-            return b
-
-        for pdf_ in batches:
-            ids = pdf_["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_tiff_gen():
@@ -9554,32 +9028,20 @@ def tiff_pages(df: DataFrame) -> DataFrame:
     per page of the IFD chain — scanner/document crawls ship
     multi-page TIFFs and the admission gate needs per-page geometry.
     Non-TIFF payloads yield a single sentinel row (page_idx -1,
-    valid=false); a broken chain keeps the pages before the lie.
-    One zero-shuffle Arrow pass."""
+    valid=false); a broken chain keeps the pages before the lie."""
     walk = _make_tiff_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(i: int, b: bytes):
+        r = walk(b)
+        if r is None or not r["pages"]:
+            return [(i, -1, None, None, None, None, None, False)]
+        return [
+            (i, j, r["byte_order"], p["width"], p["height"],
+             p["bits"], p["compression"], r["valid"])
+            for j, p in enumerate(r["pages"])
+        ]
 
-        def rows(i: int, b: bytes):
-            r = walk(b)
-            if r is None or not r["pages"]:
-                return [(i, -1, None, None, None, None, None, False)]
-            return [
-                (i, j, r["byte_order"], p["width"], p["height"],
-                 p["bits"], p["compression"], r["valid"])
-                for j, p in enumerate(r["pages"])
-            ]
-
-        cols = ["doc_id", "page_idx", "byte_order", "width", "height",
-                "bits", "compression", "valid"]
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                recs.extend(rows(int(i), b))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=TIFF_PAGE_SCHEMA)
+    return _payload_rows(df, rows, TIFF_PAGE_SCHEMA)
 
 
 def synth_tiff_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -9591,36 +9053,27 @@ def synth_tiff_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     keeps the real pages, valid=false."""
     _gen = tiff_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        pages = [
+            (16 + (i + 9 * p) % 120, 16 + (i + 5 * p) % 80,
+             8 * (1 + (i + p) % 2), 1 + 4 * ((i + p) % 2))
+            for p in range(1 + i % 3)
+        ]
+        big = i % 7 == 3  # r10: BigTIFF census legs
+        b = _gen(pages, little=(i % 2 == 0), bigtiff=big)
+        if i % 25 == 0:
+            e = "<" if i % 2 == 0 else ">"
+            bb = bytearray(b)
+            if big:
+                bb[-8:] = struct.pack(e + "Q", len(b) + 1000)
+            else:
+                bb[-4:] = struct.pack(e + "I", len(b) + 1000)
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            pages = [
-                (16 + (i + 9 * p) % 120, 16 + (i + 5 * p) % 80,
-                 8 * (1 + (i + p) % 2), 1 + 4 * ((i + p) % 2))
-                for p in range(1 + i % 3)
-            ]
-            big = i % 7 == 3  # r10: BigTIFF census legs
-            b = _gen(pages, little=(i % 2 == 0), bigtiff=big)
-            if i % 25 == 0:
-                e = "<" if i % 2 == 0 else ">"
-                bb = bytearray(b)
-                if big:
-                    bb[-8:] = struct.pack(e + "Q", len(b) + 1000)
-                else:
-                    bb[-4:] = struct.pack(e + "I", len(b) + 1000)
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 TIFF_PIXEL_SCHEMA = (
@@ -9654,143 +9107,130 @@ def tiff_pixel_stats(df: DataFrame) -> DataFrame:
     pb_dec, _ = _make_packbits()
     g4_dec, _, mh_dec, _, g3mx_dec, _ = _make_ccitt_g4()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        def chunk_bytes(b: bytes, comp: int, soff: int, slen: int,
-                        n: int, g4_w: int = 0, t4: int = 0):
-            """One strip/tile's decoded bytes (exactly n), or None.
-            For comp 4 (CCITT G4) n is pixels and g4_w the row width:
-            the MMR stream decodes to one 0/1 byte per pixel."""
-            if soff + slen > len(b):
+    def chunk_bytes(b: bytes, comp: int, soff: int, slen: int,
+                    n: int, g4_w: int = 0, t4: int = 0):
+        """One strip/tile's decoded bytes (exactly n), or None.
+        For comp 4 (CCITT G4) n is pixels and g4_w the row width:
+        the MMR stream decodes to one 0/1 byte per pixel."""
+        if soff + slen > len(b):
+            return None
+        raw = b[soff : soff + slen]
+        if comp == 4:
+            return g4_dec(raw, g4_w, n // g4_w) if g4_w else None
+        if comp in (2, 3):  # 1-D fax rows (r11): MH byte-aligned
+            if not g4_w:    # (2) / EOL-prefixed G3 (3)
                 return None
-            raw = b[soff : soff + slen]
-            if comp == 4:
-                return g4_dec(raw, g4_w, n // g4_w) if g4_w else None
-            if comp in (2, 3):  # 1-D fax rows (r11): MH byte-aligned
-                if not g4_w:    # (2) / EOL-prefixed G3 (3)
-                    return None
-                if comp == 3 and t4 & 1:  # late r11: T4Options bit 0
-                    # = mixed 2-D G3 (EOL+tag rows; fill absorbed)
-                    return g3mx_dec(raw, g4_w, n // g4_w)
-                return mh_dec(raw, g4_w, n // g4_w, eol=(comp == 3),
-                              byte_align=(comp == 2))
-            if comp == 5:
-                return lzw_dec(raw, n)
-            if comp == 32773:
-                return pb_dec(raw, n)
-            return raw if slen == n else None
+            if comp == 3 and t4 & 1:  # late r11: T4Options bit 0
+                # = mixed 2-D G3 (EOL+tag rows; fill absorbed)
+                return g3mx_dec(raw, g4_w, n // g4_w)
+            return mh_dec(raw, g4_w, n // g4_w, eol=(comp == 3),
+                          byte_align=(comp == 2))
+        if comp == 5:
+            return lzw_dec(raw, n)
+        if comp == 32773:
+            return pb_dec(raw, n)
+        return raw if slen == n else None
 
-        def undo_pred2(raw: bytes, nrows: int, ncols: int) -> bytes:
-            a = np.frombuffer(raw, np.uint8).reshape(nrows, ncols)
-            a = np.cumsum(a.astype(np.int64), axis=1) & 0xFF
-            return a.astype(np.uint8).tobytes()
+    def undo_pred2(raw: bytes, nrows: int, ncols: int) -> bytes:
+        a = np.frombuffer(raw, np.uint8).reshape(nrows, ncols)
+        a = np.cumsum(a.astype(np.int64), axis=1) & 0xFF
+        return a.astype(np.uint8).tobytes()
 
-        def _form_ok(p: dict, pred: int) -> bool:
-            """Decodable (compression, depth) forms: gray-8 under
-            none/LZW/PackBits (±predictor 2), 1-bit under the CCITT
-            fax family (MH 2 / G3 3 / G4 4)."""
-            if p["compression"] in (2, 3, 4):  # the fax family
-                return p["bits"] == 1 and pred == 1
-            return (p["compression"] in (1, 5, 32773)
-                    and p["bits"] == 8 and pred in (1, 2))
+    def _form_ok(p: dict, pred: int) -> bool:
+        """Decodable (compression, depth) forms: gray-8 under
+        none/LZW/PackBits (±predictor 2), 1-bit under the CCITT
+        fax family (MH 2 / G3 3 / G4 4)."""
+        if p["compression"] in (2, 3, 4):  # the fax family
+            return p["bits"] == 1 and pred == 1
+        return (p["compression"] in (1, 5, 32773)
+                and p["bits"] == 8 and pred in (1, 2))
 
-        def tile_bytes(b: bytes, p: dict):
-            """Tiled-layout page (r10, tags 322-325): edge tiles are
-            PADDED to full tile size per the spec — decode each tile,
-            undo the per-row predictor at tile width, assemble, crop
-            the padding away."""
-            w, h = p["width"], p["height"]
-            tw, tl = p["tile_width"], p["tile_length"]
-            offs = p.get("tile_offs")
-            lens = p.get("tile_lens")
-            pred = p.get("predictor", 1)
-            if (not _form_ok(p, pred) or not w or not h
-                    or not tw or not tl or not offs or not lens
-                    or len(offs) != len(lens)):
+    def tile_bytes(b: bytes, p: dict):
+        """Tiled-layout page (r10, tags 322-325): edge tiles are
+        PADDED to full tile size per the spec — decode each tile,
+        undo the per-row predictor at tile width, assemble, crop
+        the padding away."""
+        w, h = p["width"], p["height"]
+        tw, tl = p["tile_width"], p["tile_length"]
+        offs = p.get("tile_offs")
+        lens = p.get("tile_lens")
+        pred = p.get("predictor", 1)
+        if (not _form_ok(p, pred) or not w or not h
+                or not tw or not tl or not offs or not lens
+                or len(offs) != len(lens)):
+            return None
+        ntx, nty = -(-w // tw), -(-h // tl)
+        if len(offs) != ntx * nty:
+            return None
+        img = np.zeros((h, w), np.uint8)
+        for ti, (soff, slen) in enumerate(zip(offs, lens)):
+            raw = chunk_bytes(b, p["compression"], soff, slen,
+                              tw * tl, g4_w=tw,
+                              t4=p.get("t4_options", 0))
+            if raw is None:
                 return None
-            ntx, nty = -(-w // tw), -(-h // tl)
-            if len(offs) != ntx * nty:
-                return None
-            img = np.zeros((h, w), np.uint8)
-            for ti, (soff, slen) in enumerate(zip(offs, lens)):
-                raw = chunk_bytes(b, p["compression"], soff, slen,
-                                  tw * tl, g4_w=tw,
-                                  t4=p.get("t4_options", 0))
-                if raw is None:
-                    return None
-                if pred == 2:
-                    raw = undo_pred2(raw, tl, tw)
-                arr = np.frombuffer(raw, np.uint8).reshape(tl, tw)
-                ty, tx = ti // ntx, ti % ntx
-                y0, x0 = ty * tl, tx * tw
-                ch = min(tl, h - y0)
-                cw = min(tw, w - x0)
-                img[y0 : y0 + ch, x0 : x0 + cw] = arr[:ch, :cw]
-            return img.tobytes()
+            if pred == 2:
+                raw = undo_pred2(raw, tl, tw)
+            arr = np.frombuffer(raw, np.uint8).reshape(tl, tw)
+            ty, tx = ti // ntx, ti % ntx
+            y0, x0 = ty * tl, tx * tw
+            ch = min(tl, h - y0)
+            cw = min(tw, w - x0)
+            img[y0 : y0 + ch, x0 : x0 + cw] = arr[:ch, :cw]
+        return img.tobytes()
 
-        def page_bytes(b: bytes, p: dict):
-            """Decode one page to its raw gray rows, or None."""
-            if p.get("tile_width") is not None:
-                return tile_bytes(b, p)
-            w, h = p["width"], p["height"]
-            offs = p.get("strip_offs")
-            lens = p.get("strip_lens")
-            pred = p.get("predictor", 1)
-            if (not _form_ok(p, pred)
-                    or not w or not h or not offs or not lens
-                    or len(offs) != len(lens)):
+    def page_bytes(b: bytes, p: dict):
+        """Decode one page to its raw gray rows, or None."""
+        if p.get("tile_width") is not None:
+            return tile_bytes(b, p)
+        w, h = p["width"], p["height"]
+        offs = p.get("strip_offs")
+        lens = p.get("strip_lens")
+        pred = p.get("predictor", 1)
+        if (not _form_ok(p, pred)
+                or not w or not h or not offs or not lens
+                or len(offs) != len(lens)):
+            return None
+        rps = p.get("rows_per_strip") or h
+        if rps <= 0 or len(offs) != -(-h // rps):
+            return None
+        out = bytearray()
+        row = 0
+        for soff, slen in zip(offs, lens):
+            nrows = min(rps, h - row)
+            raw = chunk_bytes(b, p["compression"], soff, slen,
+                              nrows * w, g4_w=w,
+                              t4=p.get("t4_options", 0))
+            if raw is None:
                 return None
-            rps = p.get("rows_per_strip") or h
-            if rps <= 0 or len(offs) != -(-h // rps):
-                return None
-            out = bytearray()
-            row = 0
-            for soff, slen in zip(offs, lens):
-                nrows = min(rps, h - row)
-                raw = chunk_bytes(b, p["compression"], soff, slen,
-                                  nrows * w, g4_w=w,
-                                  t4=p.get("t4_options", 0))
-                if raw is None:
-                    return None
-                out += raw
-                row += nrows
-            if pred == 2:  # undo horizontal differencing per row
-                return undo_pred2(bytes(out), h, w)
-            return bytes(out)
+            out += raw
+            row += nrows
+        if pred == 2:  # undo horizontal differencing per row
+            return undo_pred2(bytes(out), h, w)
+        return bytes(out)
 
-        def stats(b: bytes):
-            b = bytes(b) if b is not None else b""
-            r = walk(b)
-            if r is None or not r["pages"] or not r["valid"]:
-                return None
-            tot = cnt = 0
-            mn, mx = 255, 0
-            for p in r["pages"]:
-                data = page_bytes(b, p)
-                if data is None or not data:
-                    return None
-                tot += sum(data)
-                cnt += len(data)
-                mn = min(mn, min(data))
-                mx = max(mx, max(data))
-            p0 = r["pages"][0]
-            return (p0["width"], p0["height"], len(r["pages"]), cnt,
-                    tot, mn, mx)
+    def stats(b: bytes):
+        b = bytes(b) if b is not None else b""
+        r = walk(b)
+        if r is None or not r["pages"] or not r["valid"]:
+            return (None,) * 7
+        tot = cnt = 0
+        mn, mx = 255, 0
+        for p in r["pages"]:
+            data = page_bytes(b, p)
+            if data is None or not data:
+                return (None,) * 7
+            tot += sum(data)
+            cnt += len(data)
+            mn = min(mn, min(data))
+            mx = max(mx, max(data))
+        p0 = r["pages"][0]
+        return (p0["width"], p0["height"], len(r["pages"]), cnt,
+                tot, mn, mx)
 
-        cols = ["width", "height", "n_pages", "n_px", "sum_px",
-                "min_px", "max_px"]
-        for pdf in batches:
-            parsed = [stats(b) for b in pdf["payload"]]
-            out = pd.DataFrame(
-                [p if p is not None else (None,) * 7 for p in parsed],
-                columns=cols,
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=TIFF_PIXEL_SCHEMA)
+    return _per_payload(df, stats, TIFF_PIXEL_SCHEMA)
 
 
 def synth_tiff_px_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -9814,58 +9254,49 @@ def synth_tiff_px_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     next-IFD pointer (walk invalid → NULL stats)."""
     _gen = tiff_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def one(i: int) -> bytes:
+        pages = []
+        for p in range(1 + i % 3):
+            w = 8 + (i + 9 * p) % 40
+            h = 8 + (i + 5 * p) % 30
+            comp = (1, 5, 32773)[(i + p) % 3]
+            rps = (h, -(-h // 2), 3)[(i + 7 * p) % 3]
+            pred = 2 if (i + 2 * p) % 3 == 0 else 1
+            bits = 8
+            t4o = 0
+            if (i + p) % 4 == 3:  # r11: CCITT fax page — the
+                # scanned-document form; 1-bit, rotating G4 MMR /
+                # byte-aligned MH (2) / EOL G3 (3) framing; late
+                # r11: half the G3 pages ((i+5p)%2==1) carry
+                # T4Options bit 0 = MIXED 2-D rows (+ bit 2
+                # byte-align when i%4==1)
+                bits, pred = 1, 1
+                comp = (4, 2, 3)[(i + 2 * p) % 3]
+                if comp == 3 and (i + 5 * p) % 2 == 1:
+                    t4o = 1 | (4 if i % 4 == 1 else 0)
+            # tiled legs (r10): every 5th (i+3p) page stores as
+            # padded TILES (tags 322-325) instead of strips —
+            # the GIS/scan-pyramid layout; lossless, same oracle
+            tile = ((4 + i % 5, 3 + i % 4)
+                    if (i + 3 * p) % 5 == 2 else None)
+            pages.append((w, h, bits, comp, rps, pred, tile, t4o))
+        big = i % 7 == 3  # r10: BigTIFF legs (magic 43, 8-byte
+        # offsets, LONG8 strips) — lossless framing, same oracle
+        b = _gen(pages, little=(i % 2 == 0), seed=i % 256,
+                 bigtiff=big)
+        if i % 25 == 0:
+            e = "<" if i % 2 == 0 else ">"
+            bb = bytearray(b)
+            if big:  # next-IFD pointer is 8 bytes here
+                bb[-8:] = struct.pack(e + "Q", len(b) + 1000)
+            else:
+                bb[-4:] = struct.pack(e + "I", len(b) + 1000)
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            pages = []
-            for p in range(1 + i % 3):
-                w = 8 + (i + 9 * p) % 40
-                h = 8 + (i + 5 * p) % 30
-                comp = (1, 5, 32773)[(i + p) % 3]
-                rps = (h, -(-h // 2), 3)[(i + 7 * p) % 3]
-                pred = 2 if (i + 2 * p) % 3 == 0 else 1
-                bits = 8
-                t4o = 0
-                if (i + p) % 4 == 3:  # r11: CCITT fax page — the
-                    # scanned-document form; 1-bit, rotating G4 MMR /
-                    # byte-aligned MH (2) / EOL G3 (3) framing; late
-                    # r11: half the G3 pages ((i+5p)%2==1) carry
-                    # T4Options bit 0 = MIXED 2-D rows (+ bit 2
-                    # byte-align when i%4==1)
-                    bits, pred = 1, 1
-                    comp = (4, 2, 3)[(i + 2 * p) % 3]
-                    if comp == 3 and (i + 5 * p) % 2 == 1:
-                        t4o = 1 | (4 if i % 4 == 1 else 0)
-                # tiled legs (r10): every 5th (i+3p) page stores as
-                # padded TILES (tags 322-325) instead of strips —
-                # the GIS/scan-pyramid layout; lossless, same oracle
-                tile = ((4 + i % 5, 3 + i % 4)
-                        if (i + 3 * p) % 5 == 2 else None)
-                pages.append((w, h, bits, comp, rps, pred, tile, t4o))
-            big = i % 7 == 3  # r10: BigTIFF legs (magic 43, 8-byte
-            # offsets, LONG8 strips) — lossless framing, same oracle
-            b = _gen(pages, little=(i % 2 == 0), seed=i % 256,
-                     bigtiff=big)
-            if i % 25 == 0:
-                e = "<" if i % 2 == 0 else ">"
-                bb = bytearray(b)
-                if big:  # next-IFD pointer is 8 bytes here
-                    bb[-8:] = struct.pack(e + "Q", len(b) + 1000)
-                else:
-                    bb[-4:] = struct.pack(e + "I", len(b) + 1000)
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def _make_flac_gen():
@@ -10122,30 +9553,18 @@ def flac_meta(df: DataFrame) -> DataFrame:
     """FLAC census (r9; operators/media._make_flac_walker): metadata
     block walk + STREAMINFO bit unpack — the lossless-audio half of a
     crawl's audio payload.  Non-FLAC / truncated payloads yield NULL
-    fields (the x_mp4_meta rule).  One zero-shuffle Arrow pass."""
+    fields (the x_mp4_meta rule)."""
     walk = _make_flac_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 6 + (False,)
+        return (r["sample_rate"], r["channels"], r["bps"],
+                r["total_samples"], r["duration_ms"],
+                r["n_blocks"], r["valid"])
 
-        cols = ["sample_rate", "channels", "bps", "total_samples",
-                "duration_ms", "n_blocks", "valid"]
-
-        def one(b: bytes):
-            r = walk(b)
-            if r is None:
-                return (None,) * 6 + (False,)
-            return (r["sample_rate"], r["channels"], r["bps"],
-                    r["total_samples"], r["duration_ms"],
-                    r["n_blocks"], r["valid"])
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=FLAC_META_SCHEMA)
+    return _per_payload(df, one, FLAC_META_SCHEMA)
 
 
 OGG_META_SCHEMA = (
@@ -10159,30 +9578,17 @@ def ogg_meta(df: DataFrame) -> DataFrame:
     with real CRC verification (0x04C11DB7 unreflected), Opus/Vorbis
     identification, duration from the highest valid granule.  A
     corrupted page keeps the census of the pages before it
-    (valid=false); non-Ogg payloads yield NULL fields.  One
-    zero-shuffle Arrow pass."""
+    (valid=false); non-Ogg payloads yield NULL fields."""
     walk = _make_ogg_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(b: bytes):
+        r = walk(b)
+        if r is None:
+            return (None,) * 5 + (False,)
+        return (r["codec"], r["channels"], r["sample_rate"],
+                r["n_pages"], r["duration_ms"], r["valid"])
 
-        cols = ["codec", "channels", "sample_rate", "n_pages",
-                "duration_ms", "valid"]
-
-        def one(b: bytes):
-            r = walk(b)
-            if r is None:
-                return (None,) * 5 + (False,)
-            return (r["codec"], r["channels"], r["sample_rate"],
-                    r["n_pages"], r["duration_ms"], r["valid"])
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                [one(b) for b in pdf["payload"]], columns=cols)
-            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-            yield out
-
-    return df.mapInPandas(run, schema=OGG_META_SCHEMA)
+    return _per_payload(df, one, OGG_META_SCHEMA)
 
 
 def synth_flac_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -10193,21 +9599,12 @@ def synth_flac_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     census)."""
     _gen = flac_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen(8000 + 250 * (i % 32), 1 + i % 8, 8 + 4 * (i % 3),
+                 1000 + (37 * i) % 100000, 1 + i % 3, 4 + i % 10)
+        return b[:20] if i % 27 == 0 else b
 
-        def one(i: int) -> bytes:
-            b = _gen(8000 + 250 * (i % 32), 1 + i % 8, 8 + 4 * (i % 3),
-                     1000 + (37 * i) % 100000, 1 + i % 3, 4 + i % 10)
-            return b[:20] if i % 27 == 0 else b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_ogg_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -10219,26 +9616,17 @@ def synth_ogg_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     last intact granule)."""
     _gen = ogg_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        b = _gen("opus" if i % 2 == 0 else "vorbis", 1 + i % 2,
+                 8000 + 1000 * (i % 8), 1000 + (23 * i) % 50000,
+                 3 + i % 4, i % 100000)
+        if i % 27 == 0:
+            bb = bytearray(b)
+            bb[-1] ^= 0xFF  # last payload byte -> last page CRC lie
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            b = _gen("opus" if i % 2 == 0 else "vorbis", 1 + i % 2,
-                     8000 + 1000 * (i % 8), 1000 + (23 * i) % 50000,
-                     3 + i % 4, i % 100000)
-            if i % 27 == 0:
-                bb = bytearray(b)
-                bb[-1] ^= 0xFF  # last payload byte -> last page CRC lie
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_tar_gen():
@@ -10301,51 +9689,37 @@ def tar_member_index(df: DataFrame) -> DataFrame:
     so a SQL oracle recomputes them as prefix sums).  One zero-shuffle
     Arrow pass; member bytes never leave their input partitions."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        pos = 0
+        idx = 0
+        while pos + 512 <= len(b):
+            h = b[pos : pos + 512]
+            if h == bytes(512):  # terminator block
+                return
+            if h[257:263] != b"ustar\x00":
+                yield (doc_id, -1, None, None, pos, None, False)
+                return
+            stored = h[148:156]
+            try:
+                chk = int(stored.rstrip(b"\x00 ").lstrip(), 8)
+                size = int(h[124:136].rstrip(b"\x00 ") or b"0", 8)
+            except ValueError:
+                yield (doc_id, -1, None, None, pos, None, False)
+                return
+            if sum(h[:148]) + 8 * 32 + sum(h[156:]) != chk:
+                yield (doc_id, -1, None, None, pos, None, False)
+                return
+            name = h[:100].rstrip(b"\x00").decode("utf-8", "replace")
+            content = b[pos + 512 : pos + 512 + size]
+            if len(content) < size:
+                yield (doc_id, -1, None, None, pos, None, False)
+                return
+            yield (doc_id, idx, name, size, pos + 512,
+                   sum(content), True)
+            idx += 1
+            pos += 512 + ((size + 511) // 512) * 512
 
-        def rows(doc_id: int, b: bytes):
-            b = bytes(b) if b is not None else b""
-            pos = 0
-            idx = 0
-            while pos + 512 <= len(b):
-                h = b[pos : pos + 512]
-                if h == bytes(512):  # terminator block
-                    return
-                if h[257:263] != b"ustar\x00":
-                    yield (doc_id, -1, None, None, pos, None, False)
-                    return
-                stored = h[148:156]
-                try:
-                    chk = int(stored.rstrip(b"\x00 ").lstrip(), 8)
-                    size = int(h[124:136].rstrip(b"\x00 ") or b"0", 8)
-                except ValueError:
-                    yield (doc_id, -1, None, None, pos, None, False)
-                    return
-                if sum(h[:148]) + 8 * 32 + sum(h[156:]) != chk:
-                    yield (doc_id, -1, None, None, pos, None, False)
-                    return
-                name = h[:100].rstrip(b"\x00").decode("utf-8", "replace")
-                content = b[pos + 512 : pos + 512 + size]
-                if len(content) < size:
-                    yield (doc_id, -1, None, None, pos, None, False)
-                    return
-                yield (doc_id, idx, name, size, pos + 512,
-                       sum(content), True)
-                idx += 1
-                pos += 512 + ((size + 511) // 512) * 512
-
-        cols = ["doc_id", "member_idx", "name", "size", "offset",
-                "byte_sum", "valid"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id), payload)
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(run, schema=TAR_INDEX_SCHEMA)
+    return _payload_rows(df, rows, TAR_INDEX_SCHEMA)
 
 
 def tar_member_payloads(df: DataFrame) -> DataFrame:
@@ -10359,43 +9733,30 @@ def tar_member_payloads(df: DataFrame) -> DataFrame:
     member bytes stay in their input partition until the caller's own
     plan moves them."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, b: bytes):
+        pos = 0
+        while pos + 512 <= len(b):
+            h = b[pos : pos + 512]
+            if h == bytes(512):  # terminator block
+                return
+            if h[257:263] != b"ustar\x00":
+                return  # corrupt header: shard contributes nothing
+            stored = h[148:156]
+            try:
+                chk = int(stored.rstrip(b"\x00 ").lstrip(), 8)
+                size = int(h[124:136].rstrip(b"\x00 ") or b"0", 8)
+            except ValueError:
+                return
+            if sum(h[:148]) + 8 * 32 + sum(h[156:]) != chk:
+                return
+            name = h[:100].rstrip(b"\x00").decode("utf-8", "replace")
+            content = b[pos + 512 : pos + 512 + size]
+            if len(content) < size:
+                return
+            yield (doc_id, name, content)
+            pos += 512 + ((size + 511) // 512) * 512
 
-        def rows(doc_id: int, b: bytes):
-            b = bytes(b) if b is not None else b""
-            pos = 0
-            while pos + 512 <= len(b):
-                h = b[pos : pos + 512]
-                if h == bytes(512):  # terminator block
-                    return
-                if h[257:263] != b"ustar\x00":
-                    return  # corrupt header: shard contributes nothing
-                stored = h[148:156]
-                try:
-                    chk = int(stored.rstrip(b"\x00 ").lstrip(), 8)
-                    size = int(h[124:136].rstrip(b"\x00 ") or b"0", 8)
-                except ValueError:
-                    return
-                if sum(h[:148]) + 8 * 32 + sum(h[156:]) != chk:
-                    return
-                name = h[:100].rstrip(b"\x00").decode("utf-8", "replace")
-                content = b[pos + 512 : pos + 512 + size]
-                if len(content) < size:
-                    return
-                yield (doc_id, name, content)
-                pos += 512 + ((size + 511) // 512) * 512
-
-        cols = ["doc_id", "name", "payload"]
-        for pdf in batches:
-            out = [
-                r
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for r in rows(int(doc_id), payload)
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(run, schema="doc_id long, name string, payload binary")
+    return _payload_rows(df, rows, "doc_id long, name string, payload binary")
 
 
 def synth_wds_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -10409,52 +9770,43 @@ def synth_wds_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the whole shard contributes nothing."""
     _tar = tar_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    def _png(w: int, h: int) -> bytes:
+        # nested by-value copy of png_bytes (module-level defs
+        # pickle by reference and die on import-less workers)
+        def chunk(tag: bytes, data: bytes) -> bytes:
+            return (struct.pack(">I", len(data)) + tag + data
+                    + struct.pack(
+                        ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
-        def _png(w: int, h: int) -> bytes:
-            # nested by-value copy of png_bytes (module-level defs
-            # pickle by reference and die on import-less workers)
-            def chunk(tag: bytes, data: bytes) -> bytes:
-                return (struct.pack(">I", len(data)) + tag + data
-                        + struct.pack(
-                            ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", zlib.compress(raw))
+                + chunk(b"IEND", b""))
 
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(raw))
-                    + chunk(b"IEND", b""))
+    def one(i: int) -> bytes:
+        members = []
+        for k in range(2 + i % 3):
+            members.append(
+                ("%04d.png" % k,
+                 _png(4 + (i + k) % 8, 4 + (i + 2 * k) % 6))
+            )
+            members.append(
+                ("%04d.txt" % k,
+                 ("sample topic %d shard" % ((i + 7 * k) % 50))
+                 .encode()),
+            )
+        b = _tar(members)
+        if i % 19 == 0:  # corrupt leg
+            bb = bytearray(b)
+            bb[1] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            members = []
-            for k in range(2 + i % 3):
-                members.append(
-                    ("%04d.png" % k,
-                     _png(4 + (i + k) % 8, 4 + (i + 2 * k) % 6))
-                )
-                members.append(
-                    ("%04d.txt" % k,
-                     ("sample topic %d shard" % ((i + 7 * k) % 50))
-                     .encode()),
-                )
-            b = _tar(members)
-            if i % 19 == 0:  # corrupt leg
-                bb = bytearray(b)
-                bb[1] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def webdataset_samples(index: DataFrame) -> DataFrame:
@@ -10484,31 +9836,22 @@ def synth_tar_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the checksum must catch it)."""
     _tar = tar_bytes
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        members = []
+        for k in range(2 + i % 3):
+            data = bytes((i + 11 * k + 3 * j) % 256
+                         for j in range(30 + (i + 13 * k) % 50))
+            members.append(("%04d.txt" % k, data))
+            members.append(("%04d.cls" % k,
+                            bytes([(i + k) % 10 + 48])))
+        b = _tar(members)
+        if i % 19 == 0:  # corrupt leg: flip a byte in header 0's name
+            bb = bytearray(b)
+            bb[1] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            members = []
-            for k in range(2 + i % 3):
-                data = bytes((i + 11 * k + 3 * j) % 256
-                             for j in range(30 + (i + 13 * k) % 50))
-                members.append(("%04d.txt" % k, data))
-                members.append(("%04d.cls" % k,
-                                bytes([(i + k) % 10 + 48])))
-            b = _tar(members)
-            if i % 19 == 0:  # corrupt leg: flip a byte in header 0's name
-                bb = bytearray(b)
-                bb[1] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def _make_zip_gen():
@@ -10799,41 +10142,30 @@ def zip_member_contents(df: DataFrame) -> DataFrame:
     leave their input partitions (the tar/WebDataset cost shape)."""
     zidx, zext = _make_zip_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    # 93 = zstd (APPNOTE 4.4.5), DECODED since r11 via Arrow's
+    # bundled libzstd (SCALE.md r11 addendum 5)
+    meth = {0: "stored", 8: "deflate", 12: "bzip2", 14: "lzma",
+            93: "zstd"}
 
-        # 93 = zstd (APPNOTE 4.4.5), DECODED since r11 via Arrow's
-        # bundled libzstd (SCALE.md r11 addendum 5)
-        meth = {0: "stored", 8: "deflate", 12: "bzip2", 14: "lzma",
-                93: "zstd"}
+    def rows(i: int, b: bytes):
+        r = zidx(b)
+        if r is None:
+            return [(i, -1, None, None, None, None, False, False)]
+        out = []
+        for j, m in enumerate(r["members"]):
+            data = zext(b, m)
+            out.append((
+                i, j, m["name"],
+                meth.get(m["method"], "other"),
+                m["uncomp_size"],
+                sum(data) if data is not None else None,
+                data is not None, r["valid"],
+            ))
+        if not out:
+            out.append((i, -1, None, None, None, None, False, False))
+        return out
 
-        def rows(i: int, b: bytes):
-            r = zidx(b)
-            if r is None:
-                return [(i, -1, None, None, None, None, False, False)]
-            out = []
-            for j, m in enumerate(r["members"]):
-                data = zext(b, m)
-                out.append((
-                    i, j, m["name"],
-                    meth.get(m["method"], "other"),
-                    m["uncomp_size"],
-                    sum(data) if data is not None else None,
-                    data is not None, r["valid"],
-                ))
-            if not out:
-                out.append((i, -1, None, None, None, None, False, False))
-            return out
-
-        cols = ["doc_id", "member_idx", "name", "method",
-                "uncomp_size", "byte_sum", "ok", "valid"]
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                recs.extend(rows(int(i), b))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=ZIP_MEMBER_SCHEMA)
+    return _payload_rows(df, rows, ZIP_MEMBER_SCHEMA)
 
 
 EPUB_CHAPTER_SCHEMA = (
@@ -10855,48 +10187,38 @@ def epub_chapters(df: DataFrame) -> DataFrame:
     mimetype flags valid=false on every row."""
     zidx, zext = _make_zip_walker()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(i: int, b: bytes):
+        r = zidx(b)
+        if r is None:
+            return [(i, -1, None, False, False)]
+        is_epub = False
+        if r["members"]:
+            m0 = r["members"][0]
+            if m0["name"] == "mimetype" and m0["method"] == 0:
+                is_epub = zext(b, m0) == b"application/epub+zip"
+        shard_ok = r["valid"] and is_epub
+        out = []
+        for m in r["members"]:
+            name = m["name"]
+            if not (name.startswith("OEBPS/ch")
+                    and name.endswith(".xhtml")):
+                continue
+            try:
+                k = int(name[len("OEBPS/ch"):-len(".xhtml")])
+            except ValueError:
+                continue
+            data = zext(b, m)
+            if data is None:
+                out.append((i, k, None, False, shard_ok))
+            else:
+                out.append((i, k,
+                            data.decode("utf-8", "replace"),
+                            True, shard_ok))
+        if not out:
+            out = [(i, -1, None, False, False)]
+        return out
 
-        def rows(i: int, b: bytes):
-            r = zidx(b)
-            if r is None:
-                return [(i, -1, None, False, False)]
-            is_epub = False
-            if r["members"]:
-                m0 = r["members"][0]
-                if m0["name"] == "mimetype" and m0["method"] == 0:
-                    is_epub = zext(b, m0) == b"application/epub+zip"
-            shard_ok = r["valid"] and is_epub
-            out = []
-            for m in r["members"]:
-                name = m["name"]
-                if not (name.startswith("OEBPS/ch")
-                        and name.endswith(".xhtml")):
-                    continue
-                try:
-                    k = int(name[len("OEBPS/ch"):-len(".xhtml")])
-                except ValueError:
-                    continue
-                data = zext(b, m)
-                if data is None:
-                    out.append((i, k, None, False, shard_ok))
-                else:
-                    out.append((i, k,
-                                data.decode("utf-8", "replace"),
-                                True, shard_ok))
-            if not out:
-                out = [(i, -1, None, False, False)]
-            return out
-
-        cols = ["doc_id", "chapter_idx", "xhtml", "ok", "valid"]
-        for pdf in batches:
-            recs = []
-            for i, b in zip(pdf["doc_id"], pdf["payload"]):
-                recs.extend(rows(int(i), b))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(run, schema=EPUB_CHAPTER_SCHEMA)
+    return _payload_rows(df, rows, EPUB_CHAPTER_SCHEMA)
 
 
 def synth_epub_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -10908,46 +10230,37 @@ def synth_epub_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     entry (the final chapter drops, valid=false on the shard)."""
     _gen = zip_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        members = [
+            ("mimetype", b"application/epub+zip", "stored"),
+            ("META-INF/container.xml",
+             b'<?xml version="1.0"?><container/>', "deflate"),
+            ("OEBPS/content.opf",
+             b'<?xml version="1.0"?><package/>', "deflate"),
+        ]
+        for k in range(2 + i % 3):
+            xhtml = (
+                "<html><head><title>Book %d</title>"
+                "<style>p{margin:0}</style></head>"
+                "<body><h1>Chapter %d</h1>"
+                "<p>Paragraph 0 of chapter %d book %d</p>"
+                "<p>Paragraph 1 of chapter %d book %d</p>"
+                "<p>Fish &amp; chips %d</p>"
+                "</body></html>"
+                % (i, k, k, i, k, i, i + k)
+            ).encode()
+            members.append(("OEBPS/ch%d.xhtml" % k, xhtml,
+                            "deflate"))
+        b = _gen(members)
+        if i % 23 == 0:
+            bb = bytearray(b)
+            e = bb.rfind(b"PK\x05\x06")
+            c = bb.rfind(b"PK\x01\x02", 0, e)
+            bb[c + 1] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            members = [
-                ("mimetype", b"application/epub+zip", "stored"),
-                ("META-INF/container.xml",
-                 b'<?xml version="1.0"?><container/>', "deflate"),
-                ("OEBPS/content.opf",
-                 b'<?xml version="1.0"?><package/>', "deflate"),
-            ]
-            for k in range(2 + i % 3):
-                xhtml = (
-                    "<html><head><title>Book %d</title>"
-                    "<style>p{margin:0}</style></head>"
-                    "<body><h1>Chapter %d</h1>"
-                    "<p>Paragraph 0 of chapter %d book %d</p>"
-                    "<p>Paragraph 1 of chapter %d book %d</p>"
-                    "<p>Fish &amp; chips %d</p>"
-                    "</body></html>"
-                    % (i, k, k, i, k, i, i + k)
-                ).encode()
-                members.append(("OEBPS/ch%d.xhtml" % k, xhtml,
-                                "deflate"))
-            b = _gen(members)
-            if i % 23 == 0:
-                bb = bytearray(b)
-                e = bb.rfind(b"PK\x05\x06")
-                c = bb.rfind(b"PK\x01\x02", 0, e)
-                bb[c + 1] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_zip_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -10967,34 +10280,25 @@ def synth_zip_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (valid=false on the shard's rows)."""
     _gen = zip_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        members = []
+        for j in range(1 + i % 5):
+            data = bytes((i + 11 * j + 3 * k) % 256
+                         for k in range(20 + (i + 7 * j) % 40))
+            members.append((
+                "m%d.bin" % j, data,
+                ("stored", "deflate", "bzip2", "zstd")[(i + j) % 4]))
+        b = _gen(members, zip64=(i % 3 == 1))
+        if i % 23 == 0:
+            bb = bytearray(b)
+            # last central entry: search back from EOCD
+            e = bb.rfind(b"PK\x05\x06")
+            c = bb.rfind(b"PK\x01\x02", 0, e)
+            bb[c + 1] ^= 0xFF
+            return bytes(bb)
+        return b
 
-        def one(i: int) -> bytes:
-            members = []
-            for j in range(1 + i % 5):
-                data = bytes((i + 11 * j + 3 * k) % 256
-                             for k in range(20 + (i + 7 * j) % 40))
-                members.append((
-                    "m%d.bin" % j, data,
-                    ("stored", "deflate", "bzip2", "zstd")[(i + j) % 4]))
-            b = _gen(members, zip64=(i % 3 == 1))
-            if i % 23 == 0:
-                bb = bytearray(b)
-                # last central entry: search back from EOCD
-                e = bb.rfind(b"PK\x05\x06")
-                c = bb.rfind(b"PK\x01\x02", 0, e)
-                bb[c + 1] ^= 0xFF
-                return bytes(bb)
-            return b
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_color_jpeg_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -11005,23 +10309,14 @@ def synth_color_jpeg_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (integer-exact SQL oracle over the full color decode path)."""
     _enc = jpeg_baseline_bytes.color  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
+        nb = (w // 8) * (h // 8)
+        coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
+                  for b in range(nb)]
+        return _enc(w, h, coeffs)
 
-        def one(i: int) -> bytes:
-            w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-            nb = (w // 8) * (h // 8)
-            coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
-                      for b in range(nb)]
-            return _enc(w, h, coeffs)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_jpeg_prog_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -11036,23 +10331,14 @@ def synth_jpeg_prog_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     verbatim."""
     _enc = jpeg_baseline_bytes.progressive  # factory-made → by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        w, h = 16 + i % 32, 16 + i % 16
+        bxn, byn = (w + 7) // 8, (h + 7) // 8
+        coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
+                  for b in range(bxn * byn)]
+        return _enc(w, h, coeffs)
 
-        def one(i: int) -> bytes:
-            w, h = 16 + i % 32, 16 + i % 16
-            bxn, byn = (w + 7) // 8, (h + 7) // 8
-            coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
-                      for b in range(bxn * byn)]
-            return _enc(w, h, coeffs)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col, spread=False).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one, spread=False)
 
 
 def synth_jpeg_rst_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -11066,23 +10352,14 @@ def synth_jpeg_rst_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the restart machinery is bit-faithful."""
     _enc = jpeg_baseline_bytes  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        w, h = 16 + i % 32, 16 + i % 16
+        bxn, byn = (w + 7) // 8, (h + 7) // 8
+        coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
+                  for b in range(bxn * byn)]
+        return _enc(w, h, coeffs, restart_interval=1 + i % 4)
 
-        def one(i: int) -> bytes:
-            w, h = 16 + i % 32, 16 + i % 16
-            bxn, byn = (w + 7) // 8, (h + 7) // 8
-            coeffs = [((i + 17 * b) % 112 - 56, (i + 5 * b) % 13)
-                      for b in range(bxn * byn)]
-            return _enc(w, h, coeffs, restart_interval=1 + i % 4)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)
 
 
 def synth_jpeg420_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -11100,24 +10377,15 @@ def synth_jpeg420_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     nearest-neighbor chroma upsample."""
     _enc = jpeg_baseline_bytes.color420  # factory-made → ships by value
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def one(i: int) -> bytes:
+        w, h = 16 + 8 * (i % 3), 16 + 8 * (i % 2)
+        mxn, myn = (w + 15) // 16, (h + 15) // 16
+        yc = [((i + 17 * b) % 80 - 40, (i + 5 * b) % 13)
+              for b in range(4 * mxn * myn)]
+        cb = [(5 * ((i + 3 * m) % 11 - 5), 5 * ((i + m) % 3))
+              for m in range(mxn * myn)]
+        cr = [(5 * ((i + 7 * m) % 11 - 5), 5 * ((i + 2 * m) % 3))
+              for m in range(mxn * myn)]
+        return _enc(w, h, yc, cb, cr)
 
-        def one(i: int) -> bytes:
-            w, h = 16 + 8 * (i % 3), 16 + 8 * (i % 2)
-            mxn, myn = (w + 15) // 16, (h + 15) // 16
-            yc = [((i + 17 * b) % 80 - 40, (i + 5 * b) % 13)
-                  for b in range(4 * mxn * myn)]
-            cb = [(5 * ((i + 3 * m) % 11 - 5), 5 * ((i + m) % 3))
-                  for m in range(mxn * myn)]
-            cr = [(5 * ((i + 7 * m) % 11 - 5), 5 * ((i + 2 * m) % 3))
-                  for m in range(mxn * myn)]
-            return _enc(w, h, yc, cb, cr)
-
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({"doc_id": ids, "payload": ids.map(one)})
-
-    return _gen_input(docs, id_col).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synth(docs, id_col, one)

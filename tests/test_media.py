@@ -1890,29 +1890,122 @@ def test_gif_truncated_color_table_returns_none():
 def test_null_payload_never_kills_any_media_op(spark):
     """A NULL payload cell (real tables have them) must behave like an
     unparseable payload in EVERY media operator — r9 sweep: before
-    this pin, 27 of 28 ops died with TypeError('bytes(None)')."""
+    this pin, 27 of 28 ops died with TypeError('bytes(None)').  The
+    full output of every op is pinned: NULL, junk and empty payloads
+    each get the op's own sentinel row, or no row at all."""
     from lwetl_spark.operators import media as M
 
     df = spark.createDataFrame(
-        [(1, None), (2, b"GIF89a junk")], "doc_id long, payload binary")
-    ops = [
-        "media_meta", "gif_pixel_stats", "png_pixel_stats",
-        "jpeg_pixel_stats", "zip_member_contents", "flac_meta",
-        "ogg_meta", "tiff_pages", "tiff_pixel_stats", "avi_meta",
-        "pdf_text", "image_dhash", "gif_meta", "mp3_meta",
-        "epub_chapters", "warc_records", "tar_member_index",
-        "png_thumbnails", "exif_meta", "mp4_meta", "mkv_meta",
-        "video_fingerprint", "mp4_frame_index", "mkv_frame_index",
-        "gunzip_text", "warc_payloads", "tar_member_payloads",
-        "wav_pcm_stats",
+        [(1, None), (2, b"GIF89a junk"), (3, b"")],
+        "doc_id long, payload binary")
+    n = (None,)
+    # the fields after doc_id of each payload's one sentinel row
+    sentinel = {
+        "media_meta": ("unknown",) + n * 6 + (False,),
+        "gif_pixel_stats": n * 7,
+        "png_pixel_stats": n * 6,
+        "jpeg_pixel_stats": n * 6,
+        "zip_member_contents": (-1,) + n * 4 + (False, False),
+        "flac_meta": n * 6 + (False,),
+        "ogg_meta": n * 5 + (False,),
+        "tiff_pages": (-1,) + n * 5 + (False,),
+        "tiff_pixel_stats": n * 7,
+        "avi_meta": n * 4 + (False, None, False),
+        "pdf_text": n * 3 + (False, None, False),
+        "image_dhash": n * 3 + (False,),
+        "gif_meta": n * 5 + (False, False),
+        "mp3_meta": n * 7 + (False,),
+        "epub_chapters": (-1, None, False, False),
+        "warc_records": (-1,) + n * 4 + (False,),
+        "png_thumbnails": (16, 16, None, False),
+        "exif_meta": n * 7 + (False,),
+        "mp4_meta": (None, 0) + n * 8 + (False,),
+        "mkv_meta": n * 9 + (False,),
+        "gunzip_text": n * 2 + (False,),
+        "wav_pcm_stats": n * 4,
         # r10 additions join the roster
-        "pdf_image_stats", "image_captions", "id3_tags",
-    ]
-    for name in ops:
-        getattr(M, name)(df).collect()  # must not raise
-    # row-emitting ops give the NULL row its sentinel
-    meta = {r["doc_id"]: r for r in M.media_meta(df).collect()}
-    assert meta[1]["fmt"] == "unknown" and meta[1]["valid"] is False
+        "pdf_image_stats": (-1,) + n * 7 + (False,),
+        "image_captions": (-1, "none", "none", "none"),
+        "id3_tags": n * 6 + (False,),
+        # r11 and later ops
+        "aac_meta": n * 7 + (False,),
+        "heif_meta": n * 4 + (False,),
+        "ico_meta": (-1,) + n * 4 + (False,),
+        "wav_downsample": n * 3 + (False,),
+    }
+    for name, sent in sentinel.items():
+        got = sorted(tuple(r) for r in getattr(M, name)(df).collect())
+        assert got == [(i,) + sent for i in (1, 2, 3)], name
+    # frame/member/record extractors emit nothing for such payloads
+    for name in ("tar_member_index", "video_fingerprint",
+                 "mp4_frame_index", "mkv_frame_index", "warc_payloads",
+                 "tar_member_payloads"):
+        assert getattr(M, name)(df).collect() == [], name
+    # the charset sniffer decodes whatever bytes there are (NULL as "")
+    got = sorted(tuple(r) for r in M.sniff_decode_html(df).collect())
+    assert got == [(1, "", "utf-8"), (2, "GIF89a junk", "utf-8"),
+                   (3, "", "utf-8")]
+
+
+def test_media_worker_closures_pickle_by_value(spark, monkeypatch,
+                                              tmp_path):
+    """Every function a media op ships to Python workers must pickle BY
+    VALUE: the workers of a session started outside the repo cannot
+    import lwetl_spark, so a closure that refers to a module-level
+    media function dies there with ModuleNotFoundError.  Spy on
+    mapInPandas while building every op's plan, then load all shipped
+    functions in a fresh interpreter that cannot see the repo."""
+    import inspect
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from lwetl_spark.operators import media as M
+
+    cls = type(spark.range(1))
+    real = cls.mapInPandas
+    shipped = []
+
+    def spy(self, func, *args, **kwargs):
+        shipped.append(func)
+        return real(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    frame = spark.createDataFrame(
+        [], "doc_id long, payload binary, rec_idx long, text string,"
+            " dhash string, srt string, svg string, vtt string")
+    for name, fn in sorted(vars(M).items()):
+        if (name.startswith("_") or not inspect.isfunction(fn)
+                or fn.__module__ != M.__name__):
+            continue
+        params = list(inspect.signature(fn).parameters)
+        if params[:1] in (["df"], ["docs"]):
+            fn(frame)
+    assert len(shipped) >= 80
+
+    blobs = tmp_path / "closures.pkl"
+    blobs.write_bytes(pickle.dumps(
+        [(f.__qualname__, cloudpickle.dumps(f)) for f in shipped]))
+    loader = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('lwetl_spark') is None\n"
+        "bad = []\n"
+        "for name, blob in pickle.load(open(sys.argv[1], 'rb')):\n"
+        "    try:\n"
+        "        pickle.loads(blob)\n"
+        "    except Exception as e:\n"
+        "        bad.append(f'{name}: {e!r}')\n"
+        "print('\\n'.join(bad))\n"
+        "sys.exit(1 if bad else 0)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    got = subprocess.run([sys.executable, "-c", loader, str(blobs)],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True)
+    assert got.returncode == 0, got.stdout + got.stderr
 
 
 def test_thumbnails_route_all_decodable_formats(spark):

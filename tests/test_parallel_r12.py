@@ -127,23 +127,6 @@ def test_overlap_legs_runs_both_and_returns_foreground():
     assert ran["bg"] != ran["fg"]
 
 
-def test_overlap_legs_sequential_fallback_preserves_pre_r12_order():
-    from lwetl_spark.operators import _parallel
-
-    order = []
-    old = _parallel.OVERLAP_MAINTENANCE
-    _parallel.OVERLAP_MAINTENANCE = False
-    try:
-        out = _parallel.overlap_legs(
-            lambda: order.append("bg"),
-            lambda: (order.append("fg"), 7)[1],
-        )
-    finally:
-        _parallel.OVERLAP_MAINTENANCE = old
-    assert out == 7
-    assert order == ["bg", "fg"]  # background (text leg) first, as before
-
-
 def test_overlap_legs_background_exception_propagates():
     import pytest as _pytest
 
@@ -201,21 +184,15 @@ def test_overlap_all_runs_every_leg_and_joins():
     assert all(by_leg[i] != caller for i in (0, 1, 2))
 
 
-def test_overlap_all_sequential_fallback_keeps_declaration_order():
+def test_overlap_all_single_leg_runs_inline():
+    import threading
+
     from lwetl_spark.operators import _parallel
 
-    order = []
-    old = _parallel.OVERLAP_MAINTENANCE
-    _parallel.OVERLAP_MAINTENANCE = False
-    try:
-        _parallel.overlap_all(
-            lambda: order.append("a"),
-            lambda: order.append("b"),
-            lambda: order.append("c"),
-        )
-    finally:
-        _parallel.OVERLAP_MAINTENANCE = old
-    assert order == ["a", "b", "c"]
+    ran = []
+    _parallel.overlap_all(lambda: ran.append(threading.current_thread()))
+    assert ran == [threading.current_thread()]  # no helper thread
+    _parallel.overlap_all()  # no legs: nothing to run
 
 
 def test_overlap_all_first_helper_exception_propagates():

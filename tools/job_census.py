@@ -1,11 +1,14 @@
 #!/usr/bin/env python
-"""Per-job census for a bench row, r12 variant: warms the row ONCE at
-the target sf_dir first (so one-time template builds — retrieval/IVF
-probe templates, campaign bootstrap state — are excluded), then
-censuses the second run.  Job counts are load-independent evidence;
-walls are only meaningful on a quiet box.
+"""Per-job census for a bench row (without a live UI page): run the
+row with the REST API on and list every job with its wall time, stage
+count, task count and shuffle bytes — separating fixed scheduling
+overhead (many tiny jobs) from real compute.  The row is warmed at
+sf0.001 and then ONCE at the target sf_dir (so one-time template
+builds — retrieval/IVF probe templates, campaign bootstrap state — are
+excluded); the census covers the run after that.  Job counts are
+load-independent evidence; walls are only meaningful on a quiet box.
 
-Usage: python tools/job_census_r12.py <bench-row> [sf_dir]
+Usage: python tools/job_census.py <bench-row> [sf_dir]
 """
 
 from __future__ import annotations

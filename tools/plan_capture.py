@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` output for bench rows into
-plans/r12/<name>_<tag>.txt (tag = before/after — argv[1], default
-"before").  Optional argv[2:] restricts to named rows.
+plans/<dir>/<name>_<tag>.txt (dir = argv[1], e.g. r12; tag =
+before/after — argv[2], default "before").  Optional argv[3:]
+restricts to named rows.
 
 Lineage-truncated rows (eager checkpoints / writes inside the fn)
 have no meaningful static plan on the returned frame; for those the
@@ -9,8 +10,8 @@ file records the executed-job shuffle census instead (the
 plan_audit.py technique).
 
 Usage:
-    python tools/plan_capture_r12.py before
-    python tools/plan_capture_r12.py after x_tiff_pixels x_ann_pq
+    python tools/plan_capture.py r12 before
+    python tools/plan_capture.py r12 after x_tiff_pixels x_ann_pq
 """
 
 from __future__ import annotations
@@ -31,14 +32,13 @@ def main() -> None:
     from lwetl_spark.session import get_spark
     from tools.plan_audit import LINEAGE_TRUNCATED, _stage_totals
 
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-
-    out_dir = REPO / "plans" / "r12"
+    out_dir = REPO / "plans" / sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    only = set(sys.argv[3:])
     out_dir.mkdir(parents=True, exist_ok=True)
 
     spark = get_spark(
-        app_name="plan_capture_r12", extra_conf={"spark.ui.enabled": "true"}
+        app_name="plan_capture", extra_conf={"spark.ui.enabled": "true"}
     )
     spark.conf.set("spark.sql.debug.maxToStringFields", "200")
 
