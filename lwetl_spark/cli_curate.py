@@ -101,6 +101,15 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _size_estimate(df) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None when
+    it is unknown (no JVM plan to ask, as under Spark Connect)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def curate(
     spark,
     sf_dir: str,
@@ -157,16 +166,11 @@ def curate(
         # multi-row-group parquet file would be fully pinned in
         # executor memory/disk by this checkpoint.  Gate on the
         # optimizer's size estimate too (for parquet scans: the file
-        # size sum); past the bound the corpus rides its scan and only
-        # the local split-bound parallelism is forgone.
-        try:
-            _est = int(
-                docs._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()
-            )
-        except Exception:
-            _est = 0
-        if _est <= 2 * 1024**3:
+        # size sum); past the bound, or with no estimate, the corpus
+        # rides its scan and only the local split-bound parallelism is
+        # forgone.
+        _est = _size_estimate(docs)
+        if _est is not None and _est <= 2 * 1024**3:
             docs = _wide.localCheckpoint(eager=False)
     n_input = docs.count()
     stats = {"n_input": n_input}

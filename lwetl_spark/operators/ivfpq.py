@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
+from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
 from lwetl_spark.operators._parallel import spread as _spread
 
@@ -50,6 +51,7 @@ from lwetl_spark.operators.similarity import (
     _ann_filter_semi,
     _make_assign_cells,
     _pq_codebooks_from_matrix,
+    _probe_cells,
     _score_candidates,
     _spherical_kmeans_from_matrix,
     _train_sample_matrix,
@@ -512,11 +514,13 @@ def query_ivfpq_index(
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Probe a persisted IVFADC index: load the two quantizers (bounded
-    driver reads), assign ONLY the queries to their `nprobe` cells,
-    prune the codes scan to the probed cells (literal partition filter —
-    the r6 IVF pruned-scan idiom, pinned by
-    test_ivfpq_probe_prunes_cells), ADC-score cell-locally, exact
-    re-rank each query's shortlist against the stored vectors.
+    driver reads), collect the query batch (bounded) and assign it to
+    its `nprobe` cells ON THE DRIVER with the build's own assignment
+    code (`similarity._probe_cells`), prune the codes scan to the
+    probed cells (literal partition filter — the r6 IVF pruned-scan
+    idiom, pinned by test_ivfpq_probe_prunes_cells), ADC-score
+    cell-locally, exact re-rank each query's shortlist against the
+    stored vectors.
 
     At 100 TB the probe reads nprobe/num_centroids of the CODES table
     (16 B/row) — cell-pruned AND compressed, the property neither half
@@ -526,18 +530,9 @@ def query_ivfpq_index(
     b_C = spark.sparkContext.broadcast(C)
     b_books = spark.sparkContext.broadcast(books)
     b_R = spark.sparkContext.broadcast(Rot) if Rot is not None else None
-    probe_n = min(nprobe, len(C))
-    # NO spread here (r12, VERDICT r11 #1): a probe batch is small at
-    # EVERY scale — it never grows with the corpus — so a round-robin
-    # exchange + wide Arrow stage per probe batch is permanent overhead
-    # (x_ann_ivfpq +13% normalized when this was spread in r11).
-    q_base = queries_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    probe_v = q_base.mapInPandas(
-        _make_assign_cells(b_C, probe_n, carry_v=True),
-        "id long, cell int, v array<double>",
-        # eager: feeds both the probed-cell collect and the cogroup
-    ).localCheckpoint(eager=True)
-    probed = [r["cell"] for r in probe_v.select("cell").distinct().collect()]
+    probe_v, probed, rows = _probe_cells(
+        spark, C, queries_df, id_col, vec_col, min(nprobe, len(C))
+    )
     codes = (
         spark.read.schema(_IVFPQ_CODES_DDL).parquet(f"{path}/codes")
         .filter(F.col("cell").isin(probed))
@@ -555,11 +550,7 @@ def query_ivfpq_index(
     vectors = (
         spark.read.schema(_IVFPQ_VECTORS_DDL).parquet(f"{path}/vectors")
         .select("id", "vec")
-        .unionByName(
-            queries_df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            )
-        )
+        .unionByName(_probe.local_frame(spark, rows, "id long, vec array<double>"))
         .dropDuplicates(["id"])
     )
     scored = _score_candidates(vectors, shortlist, "vec", "id", "join")

@@ -31,11 +31,15 @@ LSH-planes rule).
 
 Scale design (100 TB): document text is tokenized map-side and never
 shuffles — the only wide stages carry (tok, doc_id, tf) postings and
-(tok, df) vocabulary rows.  The query set is tiny and broadcast.  Top-k
-per query is two-phase (salted partial top-k, then final top-k) because
-"per query" is a few-groups window — a single-pass window over
-query_id alone would funnel every matching posting through one task per
-query at corpus scale.
+(tok, df) vocabulary rows.  The query set is tiny: the driver collects
+it once under a bound, hashes its terms to their postings buckets
+itself, and broadcasts it as a local relation.  Top-k per query is one
+row_number window over query_id cut at rnk ≤ k.  Spark plans a partial
+WindowGroupLimit before that window's exchange, so each map task sends
+at most k rows per query and no task sees every matching posting of a
+query.  The map-side cut holds for k ≤
+spark.sql.optimizer.windowGroupLimitThreshold (1000); past it the
+top-k stays exact but ships every candidate row.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ from pyspark.sql import functions as F
 
 from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
+from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
 
 #: tokenizer shared with x_tfidf / x_corpus_pipeline (split on runs of
@@ -139,7 +144,6 @@ def bm25_topk(
     query_id_col: str = "query_id",
     term_col: str = "term",
     k: int = 10,
-    salt_buckets: int = 64,
     idf_scale: int = 1000,
 ) -> DataFrame:
     """Top-k documents per query under integer-rational BM25.
@@ -150,48 +154,25 @@ def bm25_topk(
     ordered ties broken by doc_id so the cut is deterministic.
 
     Plan shape: postings ⨝ broadcast(query terms) → per-(query,doc) sum
-    → salted partial top-k → final top-k.  The posting⨝query join drops
-    every non-query term before any wide exchange, so the per-query agg
-    is bounded by the postings of |q| terms, not the corpus.
+    → one per-query top-k window (map-side cut for k ≤ 1000, see the
+    module docstring).  The posting⨝query join drops every non-query
+    term before any wide exchange, so the per-query agg is bounded by
+    the postings of |q| terms, not the corpus.
     """
     tf, dl, stats = doc_term_stats(docs, id_col=id_col, text_col=text_col)
-    q = _compact_queries(queries.select(
+    q, _ = _term_batch(queries.sparkSession, queries, query_id_col, term_col)
+    return _bm25_from_stats(tf, dl, stats, q, k=k, idf_scale=idf_scale)
+
+
+def _term_batch(spark, queries: DataFrame, query_id_col: str, term_col: str):
+    """A (query_id, tok) probe batch as a broadcastable local frame,
+    plus its terms for driver-side bucket hashing."""
+    sel = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
         F.col(term_col).alias("tok"),
-    ))
-    return _bm25_from_stats(
-        tf, dl, stats, q, k=k, salt_buckets=salt_buckets, idf_scale=idf_scale
     )
-
-
-def _compact_queries(q: DataFrame) -> DataFrame:
-    """Land a query batch on ONE partition (r12, guide §1.1 census
-    finding): query sets are bounded by contract (every consumer
-    broadcasts them), but a tiny ``createDataFrame`` arrives on
-    defaultParallelism partitions, and every probe-side collect /
-    broadcast-build job then re-executes its plan and pays one task
-    PER PARTITION — measured 0.4-0.9 s of pure scheduling per job at
-    local[32] for 7-row query frames (the reason probe rows ran FASTER
-    at 8 cores than 32 in BENCH_r11_c8).  One bounded collect (the
-    driver-side convention phrase_topk's tokenizer established) +
-    re-parallelize onto one slice fixes every downstream job at once.
-
-    NOT ``coalesce(1)``: SQL coalesce over a parallelized local
-    collection iterates its 32 parents sequentially through the
-    Python-runner boundary — measured a near-constant ~5 s per action
-    (interleaved best-of-7: coalesce1 4.80 s, raw 0.40 s, this 0.23 s).
-    Identity when the frame is already narrow or the partition count
-    is unknowable (Connect)."""
-    try:
-        if q.rdd.getNumPartitions() <= 4:
-            return q
-    except Exception:
-        return q
-    spark = q.sparkSession
-    rows = q.collect()  # bounded: the query batch, never the corpus
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), q.schema
-    )
+    rows = _probe.collect_batch(sel)
+    return _probe.local_frame(spark, rows, sel.schema), [r[1] for r in rows]
 
 
 def _bm25_from_stats(
@@ -201,7 +182,6 @@ def _bm25_from_stats(
     q: DataFrame,
     df_table: DataFrame | None = None,
     k: int = 10,
-    salt_buckets: int = 64,
     idf_scale: int = 1000,
 ) -> DataFrame:
     """Shared scoring path for the inline and persisted-index forms.
@@ -239,19 +219,9 @@ def _bm25_from_stats(
         F.sum("term_score").alias("score_ppm"),
         F.count("*").alias("n_terms"),
     )
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    w_partial = Window.partitionBy("query_id", "_salt").orderBy(
-        F.desc("score_ppm"), F.asc("doc_id")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("score_ppm"), F.asc("doc_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score_ppm"), F.asc("doc_id"))
     return (
-        per_doc.withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(w_partial))
-        .filter(F.col("_rn") <= k)
-        .drop("_salt", "_rn")
-        .withColumn("rnk", F.row_number().over(w_final))
+        per_doc.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .withColumn("rnk", F.col("rnk").cast("long"))
     )
@@ -357,16 +327,17 @@ def query_text_index(
     query_id_col: str = "query_id",
     term_col: str = "term",
     k: int = 10,
-    salt_buckets: int = 64,
     idf_scale: int = 1000,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Probe a persisted text index: identical output contract to
     `bm25_topk` over the same corpus (pinned by
-    x_bm25_index_roundtrip).  The probe filters postings/df on the
-    query terms' hash buckets — Catalyst turns the IN-list on the
-    partition column into partition pruning, so only |q| of the 256
-    bucket directories are ever listed or read.
+    x_bm25_index_roundtrip).  The driver hashes the query terms to
+    their buckets and the probe filters postings/df on them — Catalyst
+    turns the IN-list on the partition column into partition pruning,
+    so only |q| of the 256 bucket directories are ever listed or read.
+    The query batch is collected once, bounded (``ValueError`` past
+    100,000 rows).
 
     ``filter_ids`` (r9): metadata-filter pushdown — a one-column
     DataFrame of allowed doc ids semi-joined against the postings
@@ -374,18 +345,8 @@ def query_text_index(
     top-k of the filtered set (Lucene/ES filtered-search semantics:
     IDF and length norms stay corpus-level; the filter restricts
     candidates only)."""
-    q = _compact_queries(queries.select(
-        F.col(query_id_col).cast("long").alias("query_id"),
-        F.col(term_col).alias("tok"),
-    ))
-    buckets = [
-        r["b"]
-        for r in q.select(
-            F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
+    q, toks = _term_batch(spark, queries, query_id_col, term_col)
+    buckets = _probe.tok_buckets(toks, _INDEX_BUCKETS)
     # explicit projection: a positional index carries a positions array
     # per posting — BM25 scoring must keep reading 3 columns (parquet
     # column pruning at the scan), never the offsets
@@ -407,14 +368,7 @@ def query_text_index(
     dl = spark.read.schema(_schemas["doclen"]).parquet(f"{path}/doclen")
     stats = spark.read.schema(_schemas["stats"]).parquet(f"{path}/stats")
     return _bm25_from_stats(
-        tf,
-        dl,
-        stats,
-        q,
-        df_table=df_table,
-        k=k,
-        salt_buckets=salt_buckets,
-        idf_scale=idf_scale,
+        tf, dl, stats, q, df_table=df_table, k=k, idf_scale=idf_scale
     )
 
 
@@ -425,7 +379,6 @@ def phrase_topk(
     query_id_col: str = "query_id",
     phrase_col: str = "phrase",
     k: int = 10,
-    salt_buckets: int = 64,
     with_pos: bool = False,
 ) -> DataFrame:
     """Exact-phrase search over a POSITIONAL text index (VERDICT r6 #3;
@@ -440,55 +393,46 @@ def phrase_topk(
 
     Plan shape (the bm25 probe idiom): the phrase set is tiny — it
     tokenizes DRIVER-SIDE (bounded collect) into (query_id, term_pos,
-    tok) rows that broadcast onto the postings; the postings scan
-    prunes to the |phrase terms| hash-bucket directories; per
-    (query, doc) the per-term offset arrays fold JVM-side —
+    tok, n_terms) rows that broadcast onto the postings; the postings scan
+    prunes to the |phrase terms| hash-bucket directories, hashed on
+    the driver; per (query, doc) the per-term offset arrays fold
+    JVM-side —
     ``aggregate(arrs[1:], arrs[0].positions, (acc, s) -> filter(acc,
     p -> array_contains(s.positions, p + s.term_pos)))`` — counting
     every start offset where ALL terms sit at their phrase positions
     (overlaps included, repeated terms handled: each term_pos joins
-    its own posting row).  Top-k is the salted two-phase window, so a
-    stop-wordy phrase never funnels the corpus through one task.
+    its own posting row).  Top-k is one per-query window whose
+    map-side cut (k ≤ 1000, see the module docstring) keeps a
+    stop-wordy phrase from funneling the corpus through one task.
 
     ``with_pos=True`` appends ``first_pos`` (the smallest match start
     offset, 0-based) — the anchor `phrase_snippets` slices its context
     windows around.
     """
-    rows = phrases.select(query_id_col, phrase_col).collect()  # bounded:
-    # the query set, never the corpus (the bm25 query-side convention)
-    term_rows: list[tuple[int, int, str]] = []
-    meta_rows: list[tuple[int, int]] = []
+    rows = _probe.collect_batch(phrases.select(query_id_col, phrase_col))
+    return _phrase_hits(spark, path, rows, k, with_pos)
+
+
+def _phrase_toks(phrase) -> list[str]:
+    return [t for t in str(phrase).lower().strip().split() if t]
+
+
+def _phrase_hits(spark, path: str, rows, k: int, with_pos: bool) -> DataFrame:
+    """`phrase_topk` over already-collected (query_id, phrase) rows."""
+    # one (query_id, term_pos, tok, n_terms) row per phrase slot
+    term_rows: list[tuple[int, int, str, int]] = []
     for r in rows:
-        toks = [t for t in str(r[1]).lower().strip().split() if t]
-        if not toks:
-            continue
-        meta_rows.append((int(r[0]), len(toks)))
-        term_rows.extend((int(r[0]), i, t) for i, t in enumerate(toks))
+        toks = _phrase_toks(r[1])
+        term_rows.extend((int(r[0]), i, t, len(toks)) for i, t in enumerate(toks))
     if not term_rows:
         empty_schema = "query_id long, doc_id long, n_matches long, rnk long"
         if with_pos:
             empty_schema += ", first_pos long"
         return spark.createDataFrame([], empty_schema)
-    # driver-local rows: create on ONE slice, or the createDataFrame
-    # lands on defaultParallelism partitions and every collect /
-    # broadcast-build job below pays a task per partition (r12; see
-    # _compact_queries for why coalesce(1) is NOT the way)
-    q = spark.createDataFrame(
-        spark.sparkContext.parallelize(term_rows, 1),
-        "query_id long, term_pos int, tok string",
+    q = _probe.local_frame(
+        spark, term_rows, "query_id long, term_pos int, tok string, n_terms int"
     )
-    qmeta = spark.createDataFrame(
-        spark.sparkContext.parallelize(meta_rows, 1),
-        "query_id long, n_terms int",
-    )
-    buckets = sorted(
-        {
-            r["b"]
-            for r in q.select(
-                F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).alias("b")
-            ).collect()
-        }
-    )
+    buckets = _probe.tok_buckets((r[2] for r in term_rows), _INDEX_BUCKETS)
     postings = (
         spark.read.parquet(f"{path}/postings")
         .filter(F.col("bucket").isin(buckets))
@@ -496,14 +440,13 @@ def phrase_topk(
     )
     joined = postings.join(F.broadcast(q), "tok")
     g = (
-        joined.groupBy("query_id", "doc_id")
+        joined.groupBy("query_id", "n_terms", "doc_id")
         .agg(
             F.count("*").alias("_nf"),
             F.array_sort(F.collect_list(F.struct("term_pos", "positions"))).alias(
                 "_arrs"
             ),
         )
-        .join(F.broadcast(qmeta), "query_id")
         .filter(F.col("_nf") == F.col("n_terms"))  # every phrase slot found
         .withColumn(
             "_m",  # all match START offsets; count and min derive from it
@@ -524,19 +467,9 @@ def phrase_topk(
                if with_pos else [] ),
         )
     )
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    w_partial = Window.partitionBy("query_id", "_salt").orderBy(
-        F.desc("n_matches"), F.asc("doc_id")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("n_matches"), F.asc("doc_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("n_matches"), F.asc("doc_id"))
     return (
-        g.withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(w_partial))
-        .filter(F.col("_rn") <= k)
-        .drop("_salt", "_rn")
-        .withColumn("rnk", F.row_number().over(w_final).cast("long"))
+        g.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
     )
 
@@ -567,17 +500,12 @@ def phrase_snippets(
     deterministic functions of (text, first_pos, phrase length,
     radius), so the whole output value-checks against a SQL oracle
     (x_phrase_snippets)."""
-    hits = phrase_topk(
-        spark, path, phrases,
-        query_id_col=query_id_col, phrase_col=phrase_col,
-        k=k, with_pos=True,
-    )
-    plen = [
-        (int(r[0]), len([t for t in str(r[1]).lower().strip().split() if t]))
-        for r in phrases.select(query_id_col, phrase_col).collect()
-    ]
-    qlen = spark.createDataFrame(
-        spark.sparkContext.parallelize(plen, 1), "query_id long, _plen int"
+    rows = _probe.collect_batch(phrases.select(query_id_col, phrase_col))
+    hits = _phrase_hits(spark, path, rows, k, with_pos=True)
+    qlen = _probe.local_frame(
+        spark,
+        [(int(r[0]), len(_phrase_toks(r[1]))) for r in rows],
+        "query_id long, _plen int",
     )
     toks = F.expr(_TOKENIZE.format(col=text_col))
     corpus = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
@@ -600,7 +528,6 @@ def proximity_topk(
     query_id_col: str = "query_id",
     terms_col: str = "terms",
     k: int = 10,
-    salt_buckets: int = 64,
 ) -> DataFrame:
     """Proximity (NEAR) search over a POSITIONAL text index: for each
     (query_id, terms) row — ``terms`` a space-separated string, treated
@@ -618,40 +545,26 @@ def proximity_topk(
     doc, not O(Π tf) — the naive cross-product blows up on stop-wordy
     terms), inside one Arrow batch pass; candidates reach it only via
     the bucket-pruned postings join, so the corpus never shuffles.
+    Top-k is one per-query window (map-side cut for k ≤ 1000, see the
+    module docstring).
 
     Exactly SQL-checkable (x_proximity_search pins 2- and 3-term
     queries against DuckDB join-min oracles).
     """
-    rows = queries.select(query_id_col, terms_col).collect()  # bounded
-    term_rows: list[tuple[int, str]] = []
-    meta_rows: list[tuple[int, int]] = []
+    rows = _probe.collect_batch(queries.select(query_id_col, terms_col))
+    # one (query_id, tok, n_terms) row per distinct query term
+    term_rows: list[tuple[int, str, int]] = []
     for r in rows:
         toks = sorted({t for t in str(r[1]).lower().strip().split() if t})
-        if not toks:
-            continue
-        meta_rows.append((int(r[0]), len(toks)))
-        term_rows.extend((int(r[0]), t) for t in toks)
+        term_rows.extend((int(r[0]), t, len(toks)) for t in toks)
     if not term_rows:
         return spark.createDataFrame(
             [], "query_id long, doc_id long, min_span long, rnk long"
         )
-    # driver-local rows: ONE slice (r12, see phrase_topk note)
-    q = spark.createDataFrame(
-        spark.sparkContext.parallelize(term_rows, 1),
-        "query_id long, tok string",
+    q = _probe.local_frame(
+        spark, term_rows, "query_id long, tok string, n_terms int"
     )
-    qmeta = spark.createDataFrame(
-        spark.sparkContext.parallelize(meta_rows, 1),
-        "query_id long, n_terms int",
-    )
-    buckets = sorted(
-        {
-            r["b"]
-            for r in q.select(
-                F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).alias("b")
-            ).collect()
-        }
-    )
+    buckets = _probe.tok_buckets((r[1] for r in term_rows), _INDEX_BUCKETS)
     postings = (
         spark.read.parquet(f"{path}/postings")
         .filter(F.col("bucket").isin(buckets))
@@ -659,12 +572,11 @@ def proximity_topk(
     )
     g = (
         postings.join(F.broadcast(q), "tok")
-        .groupBy("query_id", "doc_id")
+        .groupBy("query_id", "n_terms", "doc_id")
         .agg(
             F.count("*").alias("_nf"),
             F.collect_list("positions").alias("_arrs"),
         )
-        .join(F.broadcast(qmeta), "query_id")
         .filter(F.col("_nf") == F.col("n_terms"))  # all terms present
         .select("query_id", "doc_id", "_arrs")
     )
@@ -716,19 +628,9 @@ def proximity_topk(
     spans = g.mapInPandas(
         min_spans, "query_id long, doc_id long, min_span long"
     ).filter(F.col("min_span") <= window)
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    w_partial = Window.partitionBy("query_id", "_salt").orderBy(
-        F.asc("min_span"), F.asc("doc_id")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.asc("min_span"), F.asc("doc_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("min_span"), F.asc("doc_id"))
     return (
-        spans.withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(w_partial))
-        .filter(F.col("_rn") <= k)
-        .drop("_salt", "_rn")
-        .withColumn("rnk", F.row_number().over(w_final).cast("long"))
+        spans.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
     )
 

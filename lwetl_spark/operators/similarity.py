@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from lwetl_spark.functions.vectors import cosine_similarity
 from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
+from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
 from lwetl_spark.operators._parallel import spread as _spread
 
@@ -382,35 +383,82 @@ def ivf_topk(
     )
 
 
+def _make_cell_assigner():
+    """``assign(C, ids, vecs, probe_n)``: each (id, v) row's `probe_n`
+    nearest k-means cells (cosine on normalized vectors = dot with the
+    centroid matrix ``C``) as repeated ``id`` / ``cell`` / ``v``
+    columns.  ONE implementation for the build-time worker pass
+    (`_make_assign_cells`) and the driver-side probe assignment
+    (`_probe_cells`), so both assign bit-identically.  ``vecs`` is an
+    object array of vectors.  Factory-made, so worker closures that
+    capture the product ship it by value."""
+    import numpy as np
+
+    def assign(C, ids, vecs, probe_n):
+        v = np.array(list(vecs), dtype=np.float64)
+        vn = v / np.maximum(np.linalg.norm(v, axis=1), 1e-12)[:, None]
+        sims = vn @ C.T
+        top = np.argsort(-sims, axis=1, kind="stable")[:, :probe_n]
+        return {
+            "id": np.repeat(ids, probe_n),
+            "cell": top.ravel().astype("int32"),
+            "v": np.repeat(vecs, probe_n),
+        }
+
+    return assign
+
+
+_assign_cells = _make_cell_assigner()
+
+
 def _make_assign_cells(b_C, probe_n: int, carry_v: bool = False):
     """mapInPandas generator assigning each (id, v) row to its `probe_n`
-    nearest k-means cells (cosine on normalized vectors = dot with the
-    broadcast centroid matrix).  Shared by `ivf_topk`, `build_ivf_index`
-    and `query_ivf_index` so build-time and query-time assignments are
-    bit-identical.  Closure captures the centroid broadcast + ints only —
+    nearest cells of the broadcast centroid matrix (`_assign_cells`).
+    Shared by `ivf_topk`, the index builds and their maintenance passes.
+    Closure captures the centroid broadcast, ints and the assigner —
     pickled by value for driver-owned sessions."""
+    assign = _assign_cells
 
     def gen(it):
-        import numpy as np  # noqa: F811 — pickled by value for workers
         import pandas as pd
 
         cents = b_C.value
         for pdf in it:
             if not len(pdf):
                 continue
-            v = np.array(list(pdf["v"]), dtype=np.float64)
-            vn = v / np.maximum(np.linalg.norm(v, axis=1), 1e-12)[:, None]
-            sims = vn @ cents.T
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :probe_n]
-            cols = {
-                "id": np.repeat(pdf["id"].to_numpy(), probe_n),
-                "cell": top.ravel().astype("int32"),
-            }
-            if carry_v:
-                cols["v"] = np.repeat(pdf["v"].to_numpy(), probe_n)
+            cols = assign(cents, pdf["id"].to_numpy(), pdf["v"].to_numpy(), probe_n)
+            if not carry_v:
+                del cols["v"]
             yield pd.DataFrame(cols)
 
     return gen
+
+
+def _probe_cells(spark, C, queries_df: DataFrame, id_col: str, vec_col: str, probe_n: int):
+    """Assign a probe batch to its `probe_n` nearest cells on the
+    driver (the centroid matrix is already there): the batch is
+    collected once, bounded, and assigned by `_assign_cells` — the
+    same code as the build — into an (id, cell, v) local frame.
+    Returns that frame, the sorted probed cells and the collected
+    (id, v) rows."""
+    import numpy as np
+    import pandas as pd
+
+    rows = _probe.collect_batch(
+        queries_df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+    )
+    schema = "id long, cell int, v array<double>"
+    if not rows:
+        return _probe.local_frame(spark, [], schema), [], rows
+    cols = _assign_cells(
+        C,
+        np.array([r[0] for r in rows], dtype=np.int64),
+        pd.Series([r[1] for r in rows], dtype=object).to_numpy(),
+        probe_n,
+    )
+    ids, cells = cols["id"].tolist(), cols["cell"].tolist()
+    probe_v = _probe.local_frame(spark, list(zip(ids, cells, cols["v"])), schema)
+    return probe_v, sorted(set(cells)), rows
 
 
 def _make_cell_topk(kk_target: int):
@@ -1583,37 +1631,23 @@ def query_ivf_index(
 ) -> DataFrame:
     """Probe a persisted IVF index (see `build_ivf_index`) with a batch of
     query vectors: load the centroid matrix (num_centroids rows — the one
-    bounded driver read), assign ONLY the queries to their `nprobe`
-    nearest cells, then cogroup the probes with the stored cell members
-    for the same cell-local matmul top-k as the inline operator
-    (`_make_cell_topk` — bit-identical scoring).  The corpus is never
-    re-clustered or re-assigned; candidate pruning happens at the parquet
-    scan via the cell partitioning.
+    bounded driver read), collect the query batch (bounded, like every
+    probe batch) and assign it to its `nprobe` nearest cells ON THE
+    DRIVER with the build's own assignment code (`_probe_cells`), then
+    cogroup the probes with the stored cell members for the same
+    cell-local matmul top-k as the inline operator (`_make_cell_topk` —
+    bit-identical scoring).  The corpus is never re-clustered or
+    re-assigned; the cells scan prunes to the probed cell directories.
 
     Same output contract as `ivf_topk` (self-matches excluded when a
     query id also exists in the index).
     """
     C = _load_ivf_centroids(spark, path)
-    b_C = spark.sparkContext.broadcast(C)
-    probe_n = min(nprobe, len(C))
-    # NO spread here (r12, VERDICT r11 #1): a probe batch is small at
-    # EVERY scale — it never grows with the corpus — so a round-robin
-    # exchange + wide Arrow stage per probe batch is permanent overhead
-    # (hybrid_probe +24% normalized when this was spread in r11).
-    q_base = queries_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    probe_v = q_base.mapInPandas(
-        _make_assign_cells(b_C, probe_n, carry_v=True),
-        "id long, cell int, v array<double>",
-    # eager: the probe assignment feeds both the probed-cell collect
-    # below and the cogroup — assign the query batch once
-    ).localCheckpoint(eager=True)
-    # prune the index scan to the cells actually probed (bounded
-    # collect: ≤ num_centroids values).  Without this literal filter
-    # the cogroup shuffles the ENTIRE cells table — at 100 TB a
-    # 10-vector probe must read nprobe·10 cell directories, not the
-    # whole corpus (r6 fix: the docstring promised this pruning but
-    # the scan didn't have it; pinned by test_ivf_probe_prunes_cells).
-    probed = [r["cell"] for r in probe_v.select("cell").distinct().collect()]
+    probe_v, probed, _ = _probe_cells(
+        spark, C, queries_df, id_col, vec_col, min(nprobe, len(C))
+    )
+    # literal cell filter: without it the cogroup shuffles the ENTIRE
+    # cells table (pinned by test_ivf_probe_prunes_cells)
     cells = (
         spark.read.schema(_IVF_CELLS_DDL).parquet(f"{path}/cells")
         .filter(F.col("cell").isin(probed))

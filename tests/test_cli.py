@@ -464,3 +464,51 @@ def test_cli_curate_html_extract_stage(spark, tmp_path):
     assert {r["doc_id"] for r in kept.select("doc_id").collect()} == {1}
     assert kept.collect()[0]["text"] == prose  # markup gone, prose intact
     assert stats["n_kept"] == 1
+
+
+def test_cli_curate_size_gate_fails_closed(spark, tmp_path, monkeypatch):
+    """The spread corpus is checkpointed only when the optimizer's size
+    estimate is known and small: with no estimate curate skips the
+    checkpoint, and its stats match a run that took it."""
+    from lwetl_spark import cli_curate
+    from lwetl_spark.operators import _parallel
+
+    sf = str(tmp_path / "sf")
+    rows = [
+        (i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(12 + i % 5)), "en", 60, "s")
+        for i in range(40)
+    ]
+    rows += [(100 + i, rows[i][1], "en", 60, "s") for i in range(5)]  # exact dups
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, n_chars int, source string"
+    ).coalesce(1).write.parquet(sf + "/documents.parquet")
+
+    spread_out, checkpointed = [], []
+    orig_spread = _parallel.spread
+    frame_cls = type(spark.range(1))
+    orig_lc = frame_cls.localCheckpoint
+
+    def spy_spread(df):
+        spread_out.append(orig_spread(df))
+        return spread_out[-1]
+
+    def spy_lc(self, *a, **kw):
+        checkpointed.append(self)
+        return orig_lc(self, *a, **kw)
+
+    monkeypatch.setattr(_parallel, "spread", spy_spread)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy_lc)
+
+    def run(out):
+        spread_out.clear()
+        checkpointed.clear()
+        stats = cli_curate.curate(spark, sf, str(tmp_path / out), min_tokens=12)
+        wide = spread_out[0]
+        return stats, wide, any(f is wide for f in checkpointed)
+
+    known, wide, took = run("known")
+    assert wide.rdd.getNumPartitions() > 1 and took  # a known, small size
+    monkeypatch.setattr(cli_curate, "_size_estimate", lambda df: None)
+    unknown, wide, took = run("unknown")
+    assert not took
+    assert unknown == known and known["n_input"] == 45

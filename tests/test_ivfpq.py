@@ -115,6 +115,7 @@ def test_ivfpq_probe_prunes_cells(spark, tmp_path):
     m = re.search(r"PartitionFilters: \[[^\]]*cell#\d+ IN? \(", plan) or \
         re.search(r"PartitionFilters: \[[^\]]*cell#\d+", plan)
     assert m, f"codes scan not partition-pruned:\n{plan[:2000]}"
+    assert "Scan ExistingRDD" not in plan, plan  # queries assigned on the driver
     assert df.count() > 0
 
 

@@ -860,6 +860,10 @@ def test_ivf_probe_prunes_cells(spark, tmp_path):
     m = re.search(r"PartitionFilters: \[[^\]]*cell#\d+ IN? \(", plan) or \
         re.search(r"PartitionFilters: \[[^\]]*cell#\d+", plan)
     assert m, f"cells scan not partition-pruned:\n{plan[:2000]}"
+    # queries are assigned on the driver into a local relation: no
+    # checkpointed Arrow pass, and the top-k window is cut map-side
+    assert "Scan ExistingRDD" not in plan, plan
+    assert re.search(r"WindowGroupLimit .*Partial", plan), plan
     # and the probe returns the same rows as before the pruning
     assert df.count() > 0
 

@@ -10,6 +10,19 @@ from lwetl_spark.operators.retrieval import bm25_topk, doc_term_stats
 from lwetl_spark.queries import QUERIES
 
 
+def assert_driver_planned_topk(df):
+    """A probe planned on the driver: its query frames are local
+    relations (no Python-RDD ``Scan ExistingRDD``), its top-k is one
+    unsalted window, and Spark cuts that window map-side (a Partial
+    WindowGroupLimit before the exchange)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan, plan
+    assert "_salt" not in plan, plan
+    assert re.search(r"WindowGroupLimit .*Partial", plan), plan
+
+
 def _mini(spark):
     docs = spark.createDataFrame(
         [
@@ -139,6 +152,7 @@ def test_text_index_probe_prunes_partitions(spark, tmp_path):
     import re
 
     assert re.search(r"PartitionFilters: \[isnotnull\(bucket#\d+\), \(bucket#\d+ = \d+\)", plan), plan
+    assert_driver_planned_topk(query_text_index(spark, path, q, k=3))
 
 
 def test_rank_eval_metrics(spark):
@@ -1426,6 +1440,7 @@ def test_phrase_and_proximity_probes_prune_buckets(spark, tmp_path):
     )
     plan = ph._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN ?\(", plan), plan
+    assert_driver_planned_topk(ph)
 
     px = proximity_topk(
         spark, path,
@@ -1434,6 +1449,7 @@ def test_phrase_and_proximity_probes_prune_buckets(spark, tmp_path):
     )
     plan_px = px._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN ?\(", plan_px), plan_px
+    assert_driver_planned_topk(px)
 
     # column pruning: the BM25 probe over the positional index reads
     # 3 columns, never the offsets array
@@ -1700,3 +1716,109 @@ def test_text_and_hybrid_filtered_probe(spark, tmp_path):
         spark, tpath, vpath, tq, vq, k=5, nprobe=8, filter_ids=flt2
     ).collect()
     assert fused and all(r["doc_id"] in both for r in fused)
+
+
+def test_driver_xxh64_matches_spark(spark):
+    """The driver-side hash that picks a probe's postings buckets is
+    Spark's xxhash64: the same signed value, and the same
+    pmod(xxhash64(s), 256) bucket."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from lwetl_spark.operators._probe import tok_buckets, xxh64
+
+    rng = random.Random(20260601)
+    alphabet = "abcxyz0189 -_éßøñ中文字😀🚀\t"
+    strs = ["", " ", "a", "é", "😀", "中文", "naïve café", "🚀" * 9]
+    strs += ["k" * n for n in (31, 32, 33, 100)]  # byte lengths
+    strs += ["é" * 16, "é" * 17]  # 32 and 34 bytes
+    strs += [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 90)))
+        for _ in range(300)
+    ]
+    got = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(strs)], "i long, s string"
+    ).select(
+        "i",
+        F.xxhash64("s").alias("h"),
+        F.pmod(F.xxhash64("s"), F.lit(256)).alias("b"),
+    ).collect()
+    assert len(got) == len(strs)
+    for r in got:
+        s = strs[r["i"]]
+        assert xxh64(s) == r["h"], s
+        assert tok_buckets([s], 256) == [r["b"]], s
+    assert tok_buckets(["a", None, "a"], 256) == [xxh64("a") % 256]
+
+
+def test_probe_batch_bound_fails_closed(spark, tmp_path):
+    """A probe batch past the bound raises before any index read; a
+    small batch probes normally."""
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql import functions as F
+
+    from lwetl_spark.operators import _probe
+    from lwetl_spark.operators.retrieval import build_text_index, query_text_index
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta w{i % 3}") for i in range(12)], "doc_id long, text string"
+    )
+    path = str(tmp_path / "idx")
+    build_text_index(docs, path)
+    big = spark.range(_probe._MAX_PROBE_ROWS + 1).select(
+        F.col("id").alias("query_id"), F.lit("alpha").alias("term")
+    )
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return orig(self, *paths, **kw)
+
+    DataFrameReader.parquet = spy
+    try:
+        with pytest.raises(ValueError, match="100,000"):
+            query_text_index(spark, path, big, k=3)
+    finally:
+        DataFrameReader.parquet = orig
+    assert reads == []
+    small = spark.createDataFrame(
+        [(1, "alpha"), (1, "w0"), (2, "beta"), (3, "w2")], "query_id long, term string"
+    )
+    out = query_text_index(spark, path, small, k=3).collect()
+    assert {r["query_id"] for r in out} == {1, 2, 3}
+
+
+def test_phrase_topk_job_pin(spark, tmp_path):
+    """One phrase_topk probe, run under its own job group, stays within
+    7 Spark jobs: the phrase collect, the postings listing, the two
+    broadcast builds and the query stages.  Term buckets are hashed on
+    the driver, so no job collects them."""
+    from lwetl_spark.operators.retrieval import build_text_index, phrase_topk
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox w{i % 5} jumps over w{i % 3}") for i in range(60)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    build_text_index(docs, path, positions=True)
+    ph_path = str(tmp_path / "ph")
+    spark.createDataFrame(
+        [(1, "quick brown"), (2, "fox w1"), (3, "jumps over w2"), (4, "w4")],
+        "query_id long, phrase string",
+    ).coalesce(1).write.parquet(ph_path)
+    phrases = spark.read.parquet(ph_path)
+    phrase_topk(spark, path, phrases, k=10).collect()  # warm
+
+    sc = spark.sparkContext
+    group = "test_phrase_topk_job_pin"
+    sc.setJobGroup(group, "phrase_topk")
+    try:
+        rows = phrase_topk(spark, path, phrases, k=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 10 + 10 + 10 + 10
+    assert len(jobs) <= 7, sorted(jobs)
