@@ -1,8 +1,12 @@
-"""Partition-directory write helpers shared by the persisted-index
-maintenance passes (text index in ``retrieval.py``, IVF vector index in
-``similarity.py``).
+"""The partition-rewrite path shared by every persisted index's
+maintenance passes: the text index's postings/df buckets
+(``retrieval.compact_text_index``), the IVF cells, the PQ codes and
+vectors, the IVFADC codes and vectors (``ivfpq.py``) and the LSH
+buckets and vectors (``similarity.py``).
 
-Two scale-safety rules every call site follows:
+:func:`remove_keys` is the whole removal: locate the partitions holding
+a removed key, anti-join them, then :func:`rewrite_partitions`.  That
+rewrite follows two scale-safety rules:
 
 1. **Never mutate the session-global ``partitionOverwriteMode``.** A
    concurrent job on the same SparkSession could observe the wrong mode
@@ -32,6 +36,9 @@ rows).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from lwetl_spark.operators._fsutil import remove_path
 
 
 def dynamic_overwrite(
@@ -53,13 +60,8 @@ def delete_partition_dirs(spark, path: str, part_col: str, values) -> None:
     way to retire a partition a dynamic overwrite wrote no rows for,
     without rewriting the rest of the table. Works on any Hadoop
     filesystem (local, HDFS, object stores with a Hadoop connector)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     for v in values:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_col}={v}")
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
+        remove_path(spark, f"{path}/{part_col}={v}")
 
 
 def write_empty_partition(
@@ -75,6 +77,79 @@ def write_empty_partition(
         .write.mode("overwrite")
         .parquet(f"{path}/{part_col}={part_value}")
     )
+
+
+def id_set(ids: DataFrame) -> DataFrame:
+    """The distinct ids of a one-column frame as column ``id``, eagerly
+    checkpointed: every locate and anti-join of one removal reads the
+    same fixed set, however the caller's frame was derived."""
+    return (
+        ids.select(F.col(ids.columns[0]).alias("id"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def rewrite_partitions(
+    spark,
+    frame: DataFrame,
+    table: DataFrame,
+    path: str,
+    part_col: str,
+    affected,
+    repartition: bool = False,
+) -> None:
+    """Make the ``affected`` partitions of the table at ``path`` hold
+    exactly ``frame``'s rows: partitions ``frame`` has rows for are
+    dynamic-overwritten, the rest of ``affected`` have their directories
+    deleted, and a table left with no partition at all gets one zero-row
+    footer (schema ``frame`` minus ``part_col``).  ``table`` is a read of
+    the table taken before this call; ``frame`` must not depend on a
+    live scan of ``path`` (checkpoint it), or the overwrite races it."""
+    present = {r[part_col] for r in frame.select(part_col).distinct().collect()}
+    emptied = set(affected) - present
+    if emptied:
+        # collect BEFORE any write: the table's file listing is a
+        # read-time snapshot and the overwrite deletes old files
+        survivors = {
+            r[part_col] for r in table.select(part_col).distinct().collect()
+        } - emptied
+    if present:
+        dynamic_overwrite(frame, path, part_col, repartition)
+    if emptied:
+        delete_partition_dirs(spark, path, part_col, sorted(emptied))
+        if not survivors:
+            write_empty_partition(
+                spark, path, part_col, min(emptied), frame.drop(part_col).schema
+            )
+
+
+def remove_keys(
+    spark, table: DataFrame, path: str, key: str, part_col: str, ids: DataFrame
+) -> None:
+    """Remove the rows of ``table`` (a read of ``path``) whose ``key`` is
+    in ``ids`` (an :func:`id_set` frame), rewriting only the partitions
+    that held one.  Cost: one (key, part_col)-pruned locate, an eager
+    checkpoint of the affected partitions' kept rows, then
+    :func:`rewrite_partitions`."""
+    keys = ids.withColumnRenamed("id", key)
+    affected = [
+        r[part_col]
+        for r in table.select(key, part_col)
+        .join(keys, key, "left_semi")
+        .select(part_col)
+        .distinct()
+        .collect()
+    ]  # bounded: one value per partition of the table
+    if not affected:
+        return
+    kept = (
+        table.filter(F.col(part_col).isin(affected))
+        .join(keys, key, "left_anti")
+        # eager: the overwrite must not race its own scan
+        .localCheckpoint(eager=True)
+    )
+    rewrite_partitions(spark, kept, table, path, part_col, affected)
 
 
 def cluster_for_write(
@@ -107,8 +182,6 @@ def cluster_for_write(
     count (``max(1, have // distinct-part-values)`` is the caller's
     job — pass the number), so file counts stay proportional to data
     size."""
-    from pyspark.sql import functions as F
-
     try:
         have = df.rdd.getNumPartitions()
     except Exception:  # Spark Connect: no RDD surface — cluster (safe)

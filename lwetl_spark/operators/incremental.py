@@ -356,21 +356,16 @@ def ingest_increment(
         )
         _vec_marker = f"{vector_index_path}/{_VEC_MARKER[vector_index_kind]}"
 
-    def _vec_delta_for(ids_df: DataFrame) -> DataFrame:
-        # r11: lazy checkpoint — _vec_add's count() is the next action
-        # and materializes the blocks in the SAME job (an eager
-        # checkpoint runs its own count internally, so eager + count
-        # paid two jobs + two plan analyses per call)
-        return (
+    def _vec_add(ids_df: DataFrame) -> int:
+        """Append the ids' vectors into the vector index (build at
+        bootstrap); returns the number of vectors indexed."""
+        # lazy checkpoint: the count() right below materializes it in
+        # the same job (eager + count would pay two jobs per call)
+        vec_delta = (
             embeddings.select(id_col, vec_col)
             .join(ids_df.select(id_col), id_col, "left_semi")
             .localCheckpoint(eager=False)
         )
-
-    def _vec_add(ids_df: DataFrame) -> int:
-        """Append the ids' vectors into the vector index (build at
-        bootstrap); returns the number of vectors indexed."""
-        vec_delta = _vec_delta_for(ids_df)
         n = vec_delta.count()
         if not n:
             return 0
@@ -510,7 +505,6 @@ def ingest_increment(
     n_admitted = admitted.count()
 
     n_vec_indexed = 0
-    n_vec_retired = 0
     if n_admitted:
         # first increment: no index yet — build instead of update
         have_index = _path_exists(spark, f"{index_path}/stats")
@@ -654,54 +648,42 @@ def ingest_increment(
                 _compact_text_leg, _compact_state_vec_leg
             )
 
+    def _purge(ids: DataFrame) -> int:
+        """Retire the indexed ids among ``ids`` from the text index, the
+        state and the vector index; returns how many were retired."""
+        from lwetl_spark.operators.retrieval import remove_from_index
+
+        state_now = _read_state()
+        if state_now is None:
+            return 0
+        removed = ids.join(
+            state_now.select(id_col), id_col, "left_semi"
+        ).localCheckpoint(eager=False)  # materialized by count()
+        n = removed.count()
+        if n:
+            remove_from_index(spark, index_path, removed, id_col=id_col)
+            kept_state = state_now.join(
+                removed, id_col, "left_anti"
+            ).localCheckpoint(eager=True)
+            kept_state.write.mode("overwrite").parquet(state_path)
+            _state_written()
+            if embeddings is not None:
+                _vec_remove(spark, vector_index_path, removed)
+        return n
+
     n_retired = 0
     if retire_removed and have_manifest and not snapshot_is_delta:
-        from lwetl_spark.operators.retrieval import remove_from_index
-
-        state_now = _read_state()
-        if state_now is not None:
-            removed = (
-                diff.filter(F.col("status") == "removed")
-                .select(id_col)
-                .join(state_now.select(id_col), id_col, "left_semi")
-                .localCheckpoint(eager=False)  # materialized by count()
-            )
-            n_retired = removed.count()
-            if n_retired:
-                remove_from_index(spark, index_path, removed, id_col=id_col)
-                kept_state = state_now.join(
-                    removed, id_col, "left_anti"
-                ).localCheckpoint(eager=True)
-                kept_state.write.mode("overwrite").parquet(state_path)
-                _state_written()
-                if embeddings is not None:
-                    _vec_remove(spark, vector_index_path, removed)
-                    n_vec_retired = n_retired
-
+        n_retired = _purge(
+            diff.filter(F.col("status") == "removed").select(id_col)
+        )
     if tomb is not None:
-        # explicit deletion feed: same purge shape as retire_removed,
-        # but signal-driven — works in delta mode too (idempotent with
-        # retire_removed: an id both modes retire leaves the state on
-        # the first pass, so the semi-join below finds nothing)
-        from lwetl_spark.operators.retrieval import remove_from_index
-
-        state_now = _read_state()
-        if state_now is not None:
-            removed_t = tomb.join(
-                state_now.select(id_col), id_col, "left_semi"
-            ).localCheckpoint(eager=False)  # materialized by count()
-            n_tomb = removed_t.count()
-            if n_tomb:
-                remove_from_index(spark, index_path, removed_t, id_col=id_col)
-                kept_state = state_now.join(
-                    removed_t, id_col, "left_anti"
-                ).localCheckpoint(eager=True)
-                kept_state.write.mode("overwrite").parquet(state_path)
-                _state_written()
-                if embeddings is not None:
-                    _vec_remove(spark, vector_index_path, removed_t)
-                    n_vec_retired += n_tomb
-                n_retired += n_tomb
+        # explicit deletion feed: signal-driven, so it works in delta
+        # mode too (idempotent with retire_removed: an id both retire
+        # has left the state on the first pass, so the second finds
+        # nothing)
+        n_retired += _purge(tomb)
+    # every purged id leaves the vector index too
+    n_vec_retired = n_retired if embeddings is not None else 0
 
     # the manifest advances to the new snapshot (diff basis) — replaced
     # wholesale in full-snapshot mode, MERGED (untouched old ids keep

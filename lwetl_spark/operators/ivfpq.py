@@ -44,26 +44,30 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
+from lwetl_spark.operators._fsutil import remove_path as _remove_path
 from lwetl_spark.operators._parallel import spread as _spread
 
 from lwetl_spark.operators.similarity import (
-    _PQ_BUCKETS,
+    _PQ_VECTORS_DDL,
     _ann_filter_semi,
+    _load_codebooks,
+    _load_ivf_centroids,
     _make_assign_cells,
     _pq_codebooks_from_matrix,
     _probe_cells,
+    _save_centroids,
+    _save_codebooks,
     _score_candidates,
     _spherical_kmeans_from_matrix,
     _train_sample_matrix,
+    _write_vectors,
 )
 
-#: pinned on-disk schemas (r12, guide §6): fixed by this module's build
-#: declarations — reads skip the footer-inference job (see
-#: similarity.py's r12 note; partition cols parse as the pinned ints).
+#: pinned on-disk schemas of the tables only this module writes (the
+#: vectors, centroids and codebooks tables share similarity.py's) —
+#: reads skip the footer-inference job; partition cols parse as the
+#: pinned ints.
 _IVFPQ_CODES_DDL = "id long, code long, cell int"
-_IVFPQ_VECTORS_DDL = "id long, vec array<double>, bucket int"
-_IVFPQ_CENTROIDS_DDL = "cell int, centroid array<double>"
-_IVFPQ_CODEBOOKS_DDL = "subspace int, code int, centroid array<double>"
 _IVFPQ_ROTATION_DDL = "row int, basis array<double>"
 
 
@@ -388,42 +392,28 @@ def build_ivfpq_index(
         # a non-OPQ rebuild over a previously-OPQ path must retire the
         # stale rotation, or every later probe would mis-rotate
         try:
-            jvm = spark._jvm
-            hp = jvm.org.apache.hadoop.fs.Path(f"{path}/rotation")
-            fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(hp):
-                fs.delete(hp, True)
+            _remove_path(spark, f"{path}/rotation")
         except (AttributeError, Py4JError):
             pass  # non-classic session without a JVM gateway
-            # (AttributeError: no _jvm on Connect; Py4JError: gateway
+            # (AttributeError: no JVM handle on Connect; Py4JError: gateway
             # call failed) — the loud _path_exists post-check below
             # still catches a delete that silently did not take
-        # ADVICE r8: _load_quantizers uses rotation-presence as the OPQ
-        # marker, so a silently no-op'd delete (Spark Connect has no
-        # gateway) would make every later query mis-rotate residuals
-        # against non-rotated codebooks with no error.  Verify the
-        # delete actually took; if not, fail loudly now.
+        # _load_quantizers uses rotation-presence as the OPQ marker, so
+        # a silently no-op'd delete (Spark Connect has no gateway) would
+        # make every later query mis-rotate residuals against
+        # non-rotated codebooks with no error.  Verify the delete
+        # actually took; if not, fail loudly now.
         if _path_exists(spark, f"{path}/rotation"):
             raise RuntimeError(
                 f"stale OPQ rotation at {path}/rotation could not be"
                 " deleted (no JVM filesystem gateway on this session);"
                 " remove it manually or rebuild with opq=True"
             )
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(C)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (j, c, [float(x) for x in books[j, c]])
-            for j in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _save_centroids(spark, C, path)
+    _save_codebooks(spark, books, path)
     base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     # n_at_train records the corpus the QUANTIZERS saw, not the corpus
-    # indexed (ADVICE r7): a rebuild-with-train_df anchor must carry the
+    # indexed: a rebuild-with-train_df anchor must carry the
     # same growth baseline as the incrementally maintained index it is
     # contract-equal to, or growth_pm drift readings diverge
     n_at_train = (df if train_df is None else train_df).count()
@@ -435,9 +425,9 @@ def build_ivfpq_index(
         "num_centroids int, m int, ksub int, train_sample int,"
         " iters int, n_at_train long",
     ).write.mode("overwrite").parquet(f"{path}/params")
-    # r12 (guide §2.6): the codes and vectors writes are independent —
-    # both pure functions of `df`, disjoint output tables — so they run
-    # as concurrent job groups (the vectors copy hides under the encode)
+    # the codes and vectors writes are independent — both pure
+    # functions of `df`, disjoint output tables — so they run as
+    # concurrent job groups (the vectors copy hides under the encode)
     def _codes_leg():
         # repartition("cell") before the partitioned write (the
         # build_text_index idiom): without it every task writes a sliver
@@ -452,25 +442,10 @@ def build_ivfpq_index(
             "cell"
         ).parquet(f"{path}/codes")
 
-    def _vectors_leg():
-        # r11: cluster by the partition column when the input is
-        # many-split (the codes-write idiom above, made conditional) —
-        # without it a many-split corpus writes tasks × buckets sliver
-        # files, and the retrain path re-reads ALL of them; a 1-split
-        # local build skips the array<double> exchange (measured
-        # +0.4 s on x_ann_pq)
-        _pw.cluster_for_write(
-            df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ).withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-            ),
-            "bucket",
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_codes_leg, _vectors_leg)
+    _pl.overlap_all(
+        _codes_leg,
+        lambda: _write_vectors(df, path, id_col, vec_col, "overwrite"),
+    )
 
 
 def _load_quantizers(spark, path: str):
@@ -480,18 +455,8 @@ def _load_quantizers(spark, path: str):
     disk is the OPQ marker."""
     import numpy as np
 
-    cent_rows = spark.read.schema(_IVFPQ_CENTROIDS_DDL).parquet(f"{path}/centroids").collect()
-    C = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])],
-        dtype=np.float64,
-    )
-    cb = spark.read.schema(_IVFPQ_CODEBOOKS_DDL).parquet(f"{path}/codebooks").collect()
-    mm = max(r["subspace"] for r in cb) + 1
-    kk = max(r["code"] for r in cb) + 1
-    sub = len(cb[0]["centroid"])
-    books = np.empty((mm, kk, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
+    C = _load_ivf_centroids(spark, path)
+    books = _load_codebooks(spark, path)
     Rot = None
     if _path_exists(spark, f"{path}/rotation"):
         rows = spark.read.schema(_IVFPQ_ROTATION_DDL).parquet(f"{path}/rotation").collect()
@@ -548,7 +513,7 @@ def query_ivfpq_index(
     # exact re-rank vectors: stored corpus ∪ the query batch (same ids
     # carry identical vectors, so the union is conflict-free)
     vectors = (
-        spark.read.schema(_IVFPQ_VECTORS_DDL).parquet(f"{path}/vectors")
+        spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors")
         .select("id", "vec")
         .unionByName(_probe.local_frame(spark, rows, "id long, vec array<double>"))
         .dropDuplicates(["id"])
@@ -583,81 +548,31 @@ def update_ivfpq_index(
     b_R = spark.sparkContext.broadcast(Rot) if Rot is not None else None
     base = delta_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
-    # r12 (guide §2.6): independent appends to disjoint tables — run
-    # as concurrent job groups
+    # independent appends to disjoint tables — run as concurrent job
+    # groups
     def _codes_leg():
         base.mapInPandas(
             _make_ivfpq_encode(b_C, b_books, b_R),
             "id long, cell int, code long",
         ).write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
 
-    def _vectors_leg():
-        delta_df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).withColumn(
-            "bucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-        ).write.mode("append").partitionBy("bucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_codes_leg, _vectors_leg)
+    _pl.overlap_all(
+        _codes_leg,
+        lambda: _write_vectors(delta_df, path, id_col, vec_col, "append"),
+    )
 
 
 def remove_from_ivfpq_index(spark, path: str, ids: DataFrame) -> None:
-    """Purge vectors from a persisted IVFADC index.  Codes rewrite
-    prunes to the AFFECTED CELLS (located via an (id, cell)-only
-    semi-join — 16-byte rows, vectors never shuffle); vectors rewrite
-    prunes to the affected hash buckets.  Per-write dynamic overwrite +
-    dir-delete retirement + remove-everything readability — the
-    `_partwrite` contract shared with the other three index families."""
-    from lwetl_spark.operators import _partwrite as _pw
-
-    ids_n = (
-        ids.select(F.col(ids.columns[0]).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    codes_tbl = spark.read.schema(_IVFPQ_CODES_DDL).parquet(f"{path}/codes")
-    vectors_tbl = spark.read.schema(_IVFPQ_VECTORS_DDL).parquet(f"{path}/vectors")
-    for tbl, frame, part in (
-        ("codes", codes_tbl, "cell"),
-        ("vectors", vectors_tbl, "bucket"),
+    """Purge vectors from a persisted IVFADC index (``ids``: a one-column
+    frame of vector ids); bounded rewrites of the affected code cells
+    and vector buckets via `_partwrite.remove_keys`."""
+    ids_n = _pw.id_set(ids)
+    for table, ddl, part in (
+        ("codes", _IVFPQ_CODES_DDL, "cell"),
+        ("vectors", _PQ_VECTORS_DDL, "bucket"),
     ):
-        affected = [
-            r[part]
-            for r in frame.select("id", part)
-            .join(ids_n, "id", "left_semi")
-            .select(part)
-            .distinct()
-            .collect()
-        ]  # bounded: ≤ num_centroids cells / ≤ _PQ_BUCKETS buckets
-        if not affected:
-            continue
-        kept = (
-            frame.filter(F.col(part).isin(affected))
-            .join(ids_n, "id", "left_anti")
-            # eager: the overwrite below must not race its own scan
-            .localCheckpoint(eager=True)
-        )
-        present = {r[part] for r in kept.select(part).distinct().collect()}
-        emptied = set(affected) - present
-        if emptied:
-            # collect BEFORE any write: the frame's file listing is a
-            # read-time snapshot and the overwrite deletes old files
-            survivors = {
-                r[part] for r in frame.select(part).distinct().collect()
-            } - emptied
-        if present:
-            _pw.dynamic_overwrite(kept, f"{path}/{tbl}", part)
-        if emptied:
-            _pw.delete_partition_dirs(
-                spark, f"{path}/{tbl}", part, sorted(emptied)
-            )
-            if not survivors:
-                _pw.write_empty_partition(
-                    spark, f"{path}/{tbl}", part, min(emptied),
-                    kept.drop(part).schema,
-                )
+        tbl = spark.read.schema(ddl).parquet(f"{path}/{table}")
+        _pw.remove_keys(spark, tbl, f"{path}/{table}", "id", part, ids_n)
 
 
 def ivfpq_index_stats(spark, path: str) -> DataFrame:
@@ -674,7 +589,7 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )
-    n_vec = spark.read.schema(_IVFPQ_VECTORS_DDL).parquet(f"{path}/vectors").agg(
+    n_vec = spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors").agg(
         F.count("*").cast("long").alias("n_vectors")
     )
     params = spark.read.parquet(f"{path}/params").select("n_at_train")
@@ -727,7 +642,7 @@ def retrain_ivfpq_index(
         train_sample = train_sample if train_sample is not None else p["train_sample"]
         iters = iters if iters is not None else p["iters"]
     members = (
-        spark.read.schema(_IVFPQ_VECTORS_DDL).parquet(f"{path}/vectors")
+        spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors")
         .select("id", "vec")
         .localCheckpoint(eager=True)
     )

@@ -1099,7 +1099,7 @@ def compact_text_index(
       maintained by build/update/compact), so the READ prunes to the
       ≤256 buckets that actually hold a replaced doc's rows — the
       former one-full-postings-scan trade of the term-partitioned
-      layout is gone (r6; pre-sidecar indexes fall back to the full
+      layout is gone (pre-sidecar indexes fall back to the full
       read).  The WRITE is bounded as before: only buckets containing
       an old or new token of a replaced doc dynamic-overwrite;
       untouched buckets keep their files.
@@ -1119,14 +1119,14 @@ def compact_text_index(
     enter with their new content.
     """
     # ONE postings read serves the positional probe, the old-row scan,
-    # and the kept-row scan below (r11, guide §6): every
+    # the kept-row scan and the survivor census below: every
     # spark.read.parquet re-lists the 256 bucket dirs and re-infers the
-    # schema as its own driver job — all three consumers run before any
+    # schema as its own driver job — every consumer runs before any
     # write, so the snapshot is shared safely
     postings = spark.read.parquet(f"{path}/postings")
     positional = "positions" in postings.columns
     # sidecar-table schemas derive from the postings read's id type —
-    # no further footer-inference jobs this pass (r12, guide §6)
+    # no further footer-inference jobs this pass
     _schemas = _index_sidecar_schemas(postings.schema["doc_id"].dataType)
     tf_new, _, _ = doc_term_stats(
         replacement_docs, id_col=id_col, text_col=text_col,
@@ -1142,7 +1142,7 @@ def compact_text_index(
 
     bucket = F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).alias("bucket")
     # locate the replaced ids' old rows.  With the docbuckets sidecar
-    # (r6, written by build/update) the scan prunes to the ≤256 buckets
+    # (written by build/update) the scan prunes to the ≤256 buckets
     # that actually hold a replaced doc's postings — replacing the one
     # honest full postings read this pass used to pay.  A pre-sidecar
     # index falls back to the full read and stays sidecar-less (healing
@@ -1181,7 +1181,7 @@ def compact_text_index(
 
     # postings: affected buckets rewrite as (old-bucket-rows minus
     # replaced ids) + new rows; untouched buckets keep their files.
-    # r12 (guide §2.6): the four maintenance legs below derive only
+    # The four maintenance legs below derive only
     # from the tf_old/tf_new/ids checkpoints and the function-start
     # table snapshots, and each leg reads/writes its OWN table — they
     # run as concurrent job groups, joined before returning.
@@ -1197,15 +1197,15 @@ def compact_text_index(
             # eager: the dynamic-overwrite must not race its own scan
             .localCheckpoint(eager=True)
         )
-        _overwrite(merged_tf, "postings")
+        _pw.rewrite_partitions(
+            spark, merged_tf, postings, f"{path}/postings", "bucket",
+            affected, repartition=True,
+        )
 
     def _df_leg():
         # df: old − removed + added, per token within affected buckets
-        old_df = (
-            spark.read.schema(_schemas["df"]).parquet(f"{path}/df")
-            .filter(F.col("bucket").isin(affected))
-            .drop("bucket")
-        )
+        df_tbl = spark.read.schema(_schemas["df"]).parquet(f"{path}/df")
+        old_df = df_tbl.filter(F.col("bucket").isin(affected)).drop("bucket")
         rem_df = tf_old.groupBy("tok").agg(F.count("*").alias("_rem"))
         add_df = tf_new.groupBy("tok").agg(F.count("*").alias("_add"))
         merged_df = (
@@ -1225,45 +1225,10 @@ def compact_text_index(
             .withColumn("bucket", bucket)
             .localCheckpoint(eager=True)
         )
-        _overwrite(merged_df, "df")
-
-    # dynamic partition overwrite cannot DELETE a bucket whose rows all
-    # belonged to replaced docs (no rows for it in the written frame →
-    # the stale partition would survive).  Emptied buckets have their
-    # partition DIRECTORIES deleted instead (r5 ADVICE: the old full
-    # static-rewrite fallback escalated a bounded bucket rewrite to a
-    # full-table rewrite); if the compaction empties the whole table,
-    # one zero-row footer file keeps it readable.
-    def _overwrite(frame: DataFrame, table: str) -> None:
-        present = {
-            r["bucket"] for r in frame.select("bucket").distinct().collect()
-        }
-        emptied = set(affected) - present
-        if emptied:
-            # collect BEFORE the write: the overwrite deletes old files
-            survivors = {
-                r["bucket"]
-                for r in spark.read.parquet(f"{path}/{table}")
-                .select("bucket")
-                .distinct()
-                .collect()
-            } - emptied  # bounded: ≤ _INDEX_BUCKETS values
-        if present:
-            _pw.dynamic_overwrite(
-                frame, f"{path}/{table}", "bucket", repartition=True
-            )
-        if emptied:
-            _pw.delete_partition_dirs(
-                spark, f"{path}/{table}", "bucket", sorted(emptied)
-            )
-            if not survivors:
-                _pw.write_empty_partition(
-                    spark,
-                    f"{path}/{table}",
-                    "bucket",
-                    min(emptied),
-                    frame.drop("bucket").schema,
-                )
+        _pw.rewrite_partitions(
+            spark, merged_df, df_tbl, f"{path}/df", "bucket", affected,
+            repartition=True,
+        )
 
     def _doclen_stats_leg():
         # doclen: filter-out + union overwrite (one (doc_id, dl) pass)

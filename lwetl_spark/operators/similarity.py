@@ -689,14 +689,11 @@ def build_lsh_index(
     query with the SAME (num_planes, num_tables, dim).
     """
     bucketed = _lsh_bucketize(df, vec_col, id_col, num_planes, num_tables, dim)
-    # r12 (ADVICE r11): conditional cluster-for-write with a
-    # write-parallelism salt.  The r11 unconditional
-    # repartition("table_idx") fixed the tasks × tables sliver
-    # explosion but capped the corpus-sized buckets write at
-    # num_tables (12) tasks — a bottleneck at 100 TB.  Salting by
-    # hash(id) % (input splits / num_tables) keeps each table_idx
-    # directory prunable whole while writing it with many tasks; a
-    # few-split local build skips the exchange entirely.
+    # conditional cluster-for-write with a write-parallelism salt: a
+    # plain repartition("table_idx") would cap the corpus-sized buckets
+    # write at num_tables tasks.  Salting by hash(id) % (input splits /
+    # num_tables) keeps each table_idx directory prunable whole while
+    # writing it with many tasks; a few-split build skips the exchange.
     try:
         _have = bucketed.rdd.getNumPartitions()
     except Exception:  # Spark Connect: size unknowable — salt modestly
@@ -707,9 +704,9 @@ def build_lsh_index(
         "num_planes int, num_tables int, dim int",
     ).write.mode("overwrite").parquet(f"{path}/params")
 
-    # r12 (guide §2.6): the buckets and vectors writes are independent —
-    # both pure functions of `df`, disjoint output tables — so they run
-    # as concurrent job groups
+    # the buckets and vectors writes are independent — both pure
+    # functions of `df`, disjoint output tables — so they run as
+    # concurrent job groups
     def _buckets_leg():
         _pw.cluster_for_write(
             bucketed, "table_idx",
@@ -718,22 +715,10 @@ def build_lsh_index(
             f"{path}/buckets"
         )
 
-    # r11: cluster by the partition column when many-split (the
-    # buckets-write idiom above, made conditional) — one file per
-    # vbucket instead of tasks × vbuckets at scale
-    def _vectors_leg():
-        _pw.cluster_for_write(
-            df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ).withColumn(
-                "vbucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-            ),
-            "vbucket",
-        ).write.mode("overwrite").partitionBy("vbucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_buckets_leg, _vectors_leg)
+    _pl.overlap_all(
+        _buckets_leg,
+        lambda: _write_vectors(df, path, id_col, vec_col, "overwrite", "vbucket"),
+    )
 
 
 def update_lsh_index(
@@ -755,105 +740,31 @@ def update_lsh_index(
         delta_df, vec_col, id_col, p["num_planes"], p["num_tables"], p["dim"]
     )
 
-    # r12 (guide §2.6): independent appends to disjoint tables — run
-    # as concurrent job groups
+    # independent appends to disjoint tables — run as concurrent job
+    # groups
     def _buckets_leg():
         bucketed.write.mode("append").partitionBy("table_idx").parquet(
             f"{path}/buckets"
         )
 
-    def _vectors_leg():
-        delta_df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).withColumn(
-            "vbucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-        ).write.mode("append").partitionBy("vbucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_buckets_leg, _vectors_leg)
+    _pl.overlap_all(
+        _buckets_leg,
+        lambda: _write_vectors(delta_df, path, id_col, vec_col, "append", "vbucket"),
+    )
 
 
 def remove_from_lsh_index(spark, path: str, ids: DataFrame) -> None:
-    """Purge vectors from a persisted LSH index.  Every id appears once
-    per hash table, so the buckets rewrite touches all table partitions
-    — but buckets rows are (id, bucket) longs (metadata-sized, ~24
-    bytes/row/table), never vectors; the VECTOR rewrite prunes to the
-    ≤ _PQ_BUCKETS hash buckets holding a removed id.  Per-write dynamic
-    overwrite + dir-delete retirement + remove-everything readability,
-    the `_partwrite` contract shared with the IVF/PQ/text indexes."""
-    from lwetl_spark.operators import _partwrite as _pw
-
-    ids_n = (
-        ids.select(F.col(ids.columns[0]).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # vectors: prune to affected hash buckets (the PQ removal shape)
-    vectors_tbl = spark.read.schema(_LSH_VECTORS_DDL).parquet(f"{path}/vectors")
-    affected = [
-        r["vbucket"]
-        for r in vectors_tbl.select("id", "vbucket")
-        .join(ids_n, "id", "left_semi")
-        .select("vbucket")
-        .distinct()
-        .collect()
-    ]  # bounded: ≤ _PQ_BUCKETS values
-    if not affected:
-        return
-    kept_v = (
-        vectors_tbl.filter(F.col("vbucket").isin(affected))
-        .join(ids_n, "id", "left_anti")
-        .drop("vbucket")
-        .withColumn("vbucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS)))
-        .localCheckpoint(eager=True)
-    )
-    present = {r["vbucket"] for r in kept_v.select("vbucket").distinct().collect()}
-    emptied = set(affected) - present
-    if emptied:
-        survivors = {
-            r["vbucket"]
-            for r in vectors_tbl.select("vbucket").distinct().collect()
-        } - emptied
-    if present:
-        _pw.dynamic_overwrite(kept_v, f"{path}/vectors", "vbucket")
-    if emptied:
-        _pw.delete_partition_dirs(
-            spark, f"{path}/vectors", "vbucket", sorted(emptied)
-        )
-        if not survivors:
-            _pw.write_empty_partition(
-                spark, f"{path}/vectors", "vbucket", min(emptied),
-                kept_v.drop("vbucket").schema,
-            )
-
-    # buckets: metadata-sized anti-join rewrite across the table
-    # partitions (every table holds the removed ids by construction)
-    buckets_tbl = spark.read.schema(_LSH_BUCKETS_DDL).parquet(f"{path}/buckets")
-    tables = [
-        r["table_idx"]
-        for r in buckets_tbl.select("table_idx").distinct().collect()
-    ]  # bounded: num_tables values
-    kept_b = (
-        buckets_tbl.join(ids_n, "id", "left_anti")
-        .select("id", "bucket", "table_idx")
-        .localCheckpoint(eager=True)
-    )
-    present_t = {
-        r["table_idx"] for r in kept_b.select("table_idx").distinct().collect()
-    }
-    if present_t:
-        _pw.dynamic_overwrite(kept_b, f"{path}/buckets", "table_idx")
-    emptied_t = set(tables) - present_t
-    if emptied_t:
-        _pw.delete_partition_dirs(
-            spark, f"{path}/buckets", "table_idx", sorted(emptied_t)
-        )
-        if not present_t:
-            _pw.write_empty_partition(
-                spark, f"{path}/buckets", "table_idx", min(emptied_t),
-                "id long, bucket int",
-            )
+    """Purge vectors from a persisted LSH index (``ids``: a one-column
+    frame of vector ids); bounded rewrites via `_partwrite.remove_keys`.
+    Every id sits in every hash table, so the buckets rewrite touches
+    all table partitions — but of (id, bucket) longs, never vectors."""
+    ids_n = _pw.id_set(ids)
+    for table, ddl, part in (
+        ("vectors", _LSH_VECTORS_DDL, "vbucket"),
+        ("buckets", _LSH_BUCKETS_DDL, "table_idx"),
+    ):
+        tbl = spark.read.schema(ddl).parquet(f"{path}/{table}")
+        _pw.remove_keys(spark, tbl, f"{path}/{table}", "id", part, ids_n)
 
 
 def lsh_index_stats(spark, path: str) -> DataFrame:
@@ -1225,6 +1136,54 @@ def _pq_adc_shortlist(
 _PQ_BUCKETS = 64
 
 
+def _write_vectors(
+    df: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    mode: str,
+    part: str = "bucket",
+) -> None:
+    """Write ``df``'s (id, vec) pairs to `{path}/vectors` — the exact
+    re-rank table of the PQ, IVFADC and LSH indexes — hash-bucketed by
+    id into ``_PQ_BUCKETS`` partitions of column ``part``.  ``mode`` is
+    "overwrite" (build) or "append" (update).  Clustered by bucket only
+    when many-split (one file per bucket instead of tasks × buckets at
+    scale); a few-split frame skips the array<double> exchange."""
+    _pw.cluster_for_write(
+        df.select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+        ).withColumn(part, F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))),
+        part,
+    ).write.mode(mode).partitionBy(part).parquet(f"{path}/vectors")
+
+
+def _save_codebooks(spark, books, path: str) -> None:
+    """Write the m × ksub × dim/m codebook array as `{path}/codebooks`."""
+    spark.createDataFrame(
+        [
+            (j, c, [float(x) for x in books[j, c]])
+            for j in range(books.shape[0])
+            for c in range(books.shape[1])
+        ],
+        _PQ_CODEBOOKS_DDL,
+    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+
+
+def _load_codebooks(spark, path: str):
+    """The one bounded driver read of a PQ/IVFADC index's codebooks:
+    the m × ksub × dim/m array `_save_codebooks` wrote."""
+    import numpy as np
+
+    cb = spark.read.schema(_PQ_CODEBOOKS_DDL).parquet(f"{path}/codebooks").collect()
+    mm = max(r["subspace"] for r in cb) + 1
+    kk = max(r["code"] for r in cb) + 1
+    books = np.empty((mm, kk, len(cb[0]["centroid"])))
+    for r in cb:
+        books[r["subspace"], r["code"]] = r["centroid"]
+    return books
+
+
 def build_pq_index(
     df: DataFrame,
     path: str,
@@ -1262,14 +1221,7 @@ def build_pq_index(
     )
     spark = df.sparkSession
     b_books = spark.sparkContext.broadcast(books)
-    spark.createDataFrame(
-        [
-            (j, c, [float(x) for x in books[j, c]])
-            for j in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _save_codebooks(spark, books, path)
     # n_at_train records the corpus size the codebooks were trained
     # against — auto_maintain's growth drift signal (appends freeze the
     # codebooks; growth_pm = 1000·n_codes/n_at_train says how far the
@@ -1281,9 +1233,9 @@ def build_pq_index(
     base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     bucket = F.pmod(F.xxhash64("cid"), F.lit(_PQ_BUCKETS)).alias("bucket")
 
-    # r12 (guide §2.6): the codes and vectors writes are independent —
-    # both pure functions of `df`, disjoint output tables — so they run
-    # as concurrent job groups (the vectors copy hides under the encode)
+    # the codes and vectors writes are independent — both pure
+    # functions of `df`, disjoint output tables — so they run as
+    # concurrent job groups (the vectors copy hides under the encode)
     def _codes_leg():
         base.mapInPandas(
             _make_pq_encode(b_books), "cid long, code long"
@@ -1291,23 +1243,10 @@ def build_pq_index(
             "overwrite"
         ).partitionBy("bucket").parquet(f"{path}/codes")
 
-    # r11: cluster by the partition column when many-split (the
-    # codes-write idiom above, made conditional) — one file per bucket
-    # instead of tasks × buckets at scale; a 1-split local build skips
-    # the array<double> exchange
-    def _vectors_leg():
-        _pw.cluster_for_write(
-            df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ).withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-            ),
-            "bucket",
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_codes_leg, _vectors_leg)
+    _pl.overlap_all(
+        _codes_leg,
+        lambda: _write_vectors(df, path, id_col, vec_col, "overwrite"),
+    )
 
 
 def query_pq_index(
@@ -1330,18 +1269,9 @@ def query_pq_index(
 
     Same output contract as `pq_topk` (self-matches excluded when a
     query id also exists in the index)."""
-    import numpy as np
-
-    cb = spark.read.schema(_PQ_CODEBOOKS_DDL).parquet(f"{path}/codebooks").collect()
-    mm = max(r["subspace"] for r in cb) + 1
-    kk = max(r["code"] for r in cb) + 1
-    sub = len(cb[0]["centroid"])
-    books = np.empty((mm, kk, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    b_books = spark.sparkContext.broadcast(books)
+    b_books = spark.sparkContext.broadcast(_load_codebooks(spark, path))
     codes = spark.read.schema(_PQ_CODES_DDL).parquet(f"{path}/codes").select("cid", "code")
-    # metadata-filter pushdown (r9): filter the 16-byte code rows BEFORE
+    # metadata-filter pushdown: filter the 16-byte code rows BEFORE
     # the ADC shortlist, so the rerank pool is drawn from the filtered
     # set and k is guaranteed from it
     codes = _ann_filter_semi(codes, filter_ids, "cid")
@@ -1388,21 +1318,12 @@ def update_pq_index(
     what makes `== rebuild with train_df=` exact), one Arrow encode pass
     over the delta, and bucket-partition APPENDS into codes and vectors
     (existing partitions untouched)."""
-    import numpy as np
-
-    cb = spark.read.schema(_PQ_CODEBOOKS_DDL).parquet(f"{path}/codebooks").collect()
-    mm = max(r["subspace"] for r in cb) + 1
-    kk = max(r["code"] for r in cb) + 1
-    sub = len(cb[0]["centroid"])
-    books = np.empty((mm, kk, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    b_books = spark.sparkContext.broadcast(books)
+    b_books = spark.sparkContext.broadcast(_load_codebooks(spark, path))
     base = delta_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
-    # r12 (guide §2.6): the codes and vectors appends are independent —
-    # disjoint tables, both pure functions of the delta — so they run
-    # as concurrent job groups
+    # the codes and vectors appends are independent — disjoint tables,
+    # both pure functions of the delta — so they run as concurrent job
+    # groups
     def _codes_leg():
         base.mapInPandas(
             _make_pq_encode(b_books), "cid long, code long"
@@ -1410,87 +1331,26 @@ def update_pq_index(
             "bucket", F.pmod(F.xxhash64("cid"), F.lit(_PQ_BUCKETS))
         ).write.mode("append").partitionBy("bucket").parquet(f"{path}/codes")
 
-    def _vectors_leg():
-        delta_df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).withColumn(
-            "bucket", F.pmod(F.xxhash64("id"), F.lit(_PQ_BUCKETS))
-        ).write.mode("append").partitionBy("bucket").parquet(
-            f"{path}/vectors"
-        )
-
-    _pl.overlap_all(_codes_leg, _vectors_leg)
+    _pl.overlap_all(
+        _codes_leg,
+        lambda: _write_vectors(delta_df, path, id_col, vec_col, "append"),
+    )
 
 
 def remove_from_pq_index(spark, path: str, ids: DataFrame) -> None:
-    """Purge vectors from a persisted PQ index — the PQ counterpart of
-    `remove_from_ivf_index`.  ``ids`` is a one-column DataFrame of
-    vector ids.
-
-    Cost model: one bounded locate collect (affected hash buckets,
-    ≤ _PQ_BUCKETS values — codes and vectors share the id hash, so one
-    locate covers both), then per-write dynamic overwrites of ONLY the
-    affected buckets that still hold rows; emptied buckets have their
-    directories deleted; a remove-everything call leaves one zero-row
-    footer per table so the index stays readable
-    (`operators/_partwrite`)."""
-    from lwetl_spark.operators import _partwrite as _pw
-
-    ids_n = (
-        ids.select(F.col(ids.columns[0]).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    vectors_tbl = spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors")
-    codes_tbl = spark.read.schema(_PQ_CODES_DDL).parquet(f"{path}/codes")
-    for tbl, frame, key, data_schema in (
-        ("vectors", vectors_tbl, "id", None),
-        ("codes", codes_tbl, "cid", "cid long, code long"),
+    """Purge vectors from a persisted PQ index (``ids``: a one-column
+    frame of vector ids); bounded rewrites via `_partwrite.remove_keys`."""
+    ids_n = _pw.id_set(ids)
+    # locate affected buckets PER TABLE: the two tables hash their own
+    # key column, and xxhash64 is type-width-sensitive (an int id would
+    # bucket vectors differently from the long cids) — a shared affected
+    # list could silently strand rows in one table
+    for table, ddl, key in (
+        ("vectors", _PQ_VECTORS_DDL, "id"),
+        ("codes", _PQ_CODES_DDL, "cid"),
     ):
-        # locate affected buckets PER TABLE: the two tables hash their
-        # own key column, and xxhash64 is type-width-sensitive (an int
-        # id would bucket vectors differently from the long cids) — a
-        # shared affected list could silently strand rows in one table
-        affected = [
-            r["bucket"]
-            for r in frame.select(key, "bucket")
-            .join(ids_n, frame[key] == ids_n["id"], "left_semi")
-            .select("bucket")
-            .distinct()
-            .collect()
-        ]  # bounded: ≤ _PQ_BUCKETS values
-        if not affected:
-            continue
-        kept = (
-            frame.filter(F.col("bucket").isin(affected))
-            .join(ids_n, frame[key] == ids_n["id"], "left_anti")
-            .drop("bucket")
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64(key), F.lit(_PQ_BUCKETS))
-            )
-            # eager: the overwrite below must not race its own scan
-            .localCheckpoint(eager=True)
-        )
-        present = {r["bucket"] for r in kept.select("bucket").distinct().collect()}
-        emptied = set(affected) - present
-        if emptied:
-            # collect BEFORE any write: the frame's file listing is a
-            # read-time snapshot and the overwrite deletes old files
-            survivors = {
-                r["bucket"]
-                for r in frame.select("bucket").distinct().collect()
-            } - emptied
-        if present:
-            _pw.dynamic_overwrite(kept, f"{path}/{tbl}", "bucket")
-        if emptied:
-            _pw.delete_partition_dirs(
-                spark, f"{path}/{tbl}", "bucket", sorted(emptied)
-            )
-            if not survivors:
-                schema = data_schema or kept.drop("bucket").schema
-                _pw.write_empty_partition(
-                    spark, f"{path}/{tbl}", "bucket", min(emptied), schema
-                )
+        tbl = spark.read.schema(ddl).parquet(f"{path}/{table}")
+        _pw.remove_keys(spark, tbl, f"{path}/{table}", key, "bucket", ids_n)
 
 
 def pq_index_stats(spark, path: str) -> DataFrame:
@@ -1561,7 +1421,7 @@ def build_ivf_index(
     iters: int = 8,
     train_df: DataFrame | None = None,
 ) -> None:
-    """Persist an IVF index (VERDICT r2 #6, parallel to `build_lsh_index`):
+    """Persist an IVF index (parallel to `build_lsh_index`):
     train the deterministic spherical k-means quantizer once, then write
 
     - `{path}/centroids`: (cell, centroid array<double>) — num_centroids
@@ -1588,10 +1448,7 @@ def build_ivf_index(
     )
     spark = df.sparkSession
     b_C = spark.sparkContext.broadcast(C)
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(C)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _save_centroids(spark, C, path)
     # persist the quantizer family so maintenance passes (retrain) can
     # preserve the index's geometry instead of assuming defaults
     spark.createDataFrame(
@@ -1605,6 +1462,14 @@ def build_ivf_index(
     assigned.repartition("cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{path}/cells")
+
+
+def _save_centroids(spark, C, path: str) -> None:
+    """Write the coarse quantizer matrix as `{path}/centroids`."""
+    spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(C)],
+        _IVF_CENTROIDS_DDL,
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def _load_ivf_centroids(spark, path: str):
@@ -1710,71 +1575,10 @@ def update_ivf_index(
 def remove_from_ivf_index(spark, path: str, ids: DataFrame) -> None:
     """Purge vectors from a persisted IVF index — the "removed" half of
     a full-snapshot crawl diff, mirroring `retrieval.remove_from_index`.
-    ``ids`` is a one-column DataFrame of vector ids.
-
-    Cost model — delta-sized no matter how the removal set lands (r5
-    ADVICE: the old emptied-cell path escalated to a full static
-    rewrite):
-
-    - locate: one cells scan PRUNED to (id, cell) — the vectors
-      themselves never shuffle — plus two bounded collects (affected /
-      surviving cell ids, each ≤ num_centroids values);
-    - rewrite: ONLY the affected cell partitions that still hold rows,
-      via per-write dynamic partition overwrite (the session conf is
-      never mutated — `_partwrite.dynamic_overwrite`);
-    - cells emptied outright have their partition DIRECTORIES deleted
-      (`_partwrite.delete_partition_dirs`) instead of triggering a
-      full-table rewrite;
-    - if the removal empties the whole index, one zero-row footer file
-      keeps `{path}/cells` readable for query/stats/update
-      (`_partwrite.write_empty_partition`).
-    """
-    from lwetl_spark.operators import _partwrite as _pw
-
-    ids_n = (
-        ids.select(F.col(ids.columns[0]).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cells_tbl = spark.read.schema(_IVF_CELLS_DDL).parquet(f"{path}/cells")
-    located = (
-        cells_tbl.select("id", "cell")
-        .join(ids_n, "id", "left_semi")
-        .select("cell")
-        .distinct()
-    )
-    affected = [r["cell"] for r in located.collect()]
-    # bounded: at most num_centroids values
-    if not affected:
-        return
-    kept = (
-        cells_tbl.filter(F.col("cell").isin(affected))
-        .join(ids_n, "id", "left_anti")
-        .select("id", "v", "cell")
-        # eager: the overwrite below must not race its own scan
-        .localCheckpoint(eager=True)
-    )
-    present = {r["cell"] for r in kept.select("cell").distinct().collect()}
-    emptied = set(affected) - present
-    if emptied:
-        # collect BEFORE any write: cells_tbl's file listing is a
-        # read-time snapshot and the overwrite below deletes old files
-        survivors = {
-            r["cell"]
-            for r in cells_tbl.select("cell").distinct().collect()
-        } - emptied  # bounded: ≤ num_centroids partition values
-    if present:
-        _pw.dynamic_overwrite(kept, f"{path}/cells", "cell")
-    if emptied:
-        _pw.delete_partition_dirs(spark, f"{path}/cells", "cell", sorted(emptied))
-        if not survivors:
-            _pw.write_empty_partition(
-                spark,
-                f"{path}/cells",
-                "cell",
-                min(emptied),
-                "id long, v array<double>",
-            )
+    ``ids`` is a one-column DataFrame of vector ids; bounded cell
+    rewrites via `_partwrite.remove_keys`."""
+    cells = spark.read.schema(_IVF_CELLS_DDL).parquet(f"{path}/cells")
+    _pw.remove_keys(spark, cells, f"{path}/cells", "id", "cell", _pw.id_set(ids))
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:

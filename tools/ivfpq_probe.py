@@ -79,7 +79,7 @@ def main() -> None:
         build_pq_index(emb, f"{work}/pq")
 
         # probed-cell bytes for the fixed batch (file-listing pruning)
-        C, _ = _load_quantizers(spark, f"{work}/ivfpq")
+        C, _, _ = _load_quantizers(spark, f"{work}/ivfpq")
         b_C = spark.sparkContext.broadcast(C)
         pv = queries.select(
             F.col("vec_id").alias("id"), F.col("embedding").alias("v")
