@@ -136,8 +136,8 @@ def curate(
 
     ``attribution=True`` additionally records the survivor count after
     every enabled stage (``n_after_<stage>`` keys) — the "why was this
-    document removed" release-card breakdown.  Each mark eagerly
-    localCheckpoints the surviving frame and counts it, so the chain
+    document removed" release-card breakdown.  Each mark materializes
+    the surviving frame with its count (`_fsutil.materialize`), so the chain
     executes each stage ONCE (without the checkpoint, every count would
     re-run the whole upstream chain — O(stages²) passes); the cost is
     one materialization of the survivor set per enabled stage, so it is
@@ -155,12 +155,14 @@ def curate(
     # single core — and a bare repartition cannot fix it because the
     # deterministic filters push through it back to the one-split scan.
     # When spread actually widens the frame (few-split input only), a
-    # lazy checkpoint materialized by the n_input count below pins the
-    # 32-way layout; at real scale spread no-ops and the corpus rides
-    # its scan unmaterialized (checkpointing 100 TB would be absurd).
+    # checkpoint pins the 32-way layout; at real scale spread no-ops and
+    # the corpus rides its scan unmaterialized (checkpointing 100 TB
+    # would be absurd).
+    from lwetl_spark.operators import _fsutil
     from lwetl_spark.operators._parallel import spread as _spread
 
     _wide = _spread(docs)
+    n_input = None
     if _wide is not docs:
         # r12 (ADVICE r11): few-split does not imply small — one large
         # multi-row-group parquet file would be fully pinned in
@@ -171,8 +173,9 @@ def curate(
         # forgone.
         _est = _size_estimate(docs)
         if _est is not None and _est <= 2 * 1024**3:
-            docs = _wide.localCheckpoint(eager=False)
-    n_input = docs.count()
+            docs, n_input = _fsutil.materialize(_wide)
+    if n_input is None:
+        n_input = docs.count()
     stats = {"n_input": n_input}
 
     if html_extract:
@@ -189,8 +192,7 @@ def curate(
 
     def _mark(stage: str, frame):
         if attribution:
-            frame = frame.localCheckpoint(eager=True)
-            stats[f"n_after_{stage}"] = frame.count()
+            frame, stats[f"n_after_{stage}"] = _fsutil.materialize(frame)
         return frame
 
     kept = _mark("min_tokens", kept)
@@ -407,12 +409,14 @@ def curate(
         # corpus is a valid outcome of aggressive filters, not a crash.
         # Real IO errors raise other exception classes and propagate.
         curated = spark.createDataFrame([], kept.schema)
-    stats["n_kept"] = curated.count()
-    stats["n_dropped"] = n_input - stats["n_kept"]
+    # the per-language groups (a null `lang` is a group too) cover
+    # every curated row, so their sum is the kept count
     per_lang = {
         r["lang"]: r["n"]
         for r in curated.groupBy("lang").agg(F.count("*").alias("n")).collect()
     }
+    stats["n_kept"] = sum(per_lang.values())
+    stats["n_dropped"] = n_input - stats["n_kept"]
     stats["langs"] = per_lang
     return stats
 

@@ -1,15 +1,17 @@
-"""Shared filesystem helpers: the existence probe for persisted-index
-layouts and the rename commit for whole-table rewrites.
+"""Shared filesystem and materialization helpers.
 
-Every optional index artifact (params sidecar, docbuckets sidecar,
-state snapshot) used to be probed with `try: read except Exception:
-fallback` — which silently rerouted REAL failures (corrupt parquet,
-permissions) into the legacy/absent-artifact path and surfaced as a
-confusing secondary error far from the cause (VERDICT r7 "what's
-wrong" #1-2, ADVICE r7 similarity.py:812).  The fix is structural:
-probe EXISTENCE explicitly via the Hadoop FileSystem API, then read
-unguarded — a genuine read error on an existing path now propagates
-with its own stack trace.
+- `path_exists` probes an optional index artifact (params sidecar,
+  docbuckets sidecar, state snapshot) by EXISTENCE through the Hadoop
+  FileSystem API; the caller then reads it unguarded, so a genuine read
+  error on an existing path (corrupt parquet, permissions) propagates
+  with its own stack trace instead of being rerouted into the
+  absent-artifact path by a try-read-and-swallow.
+- `materialize` takes an eager `localCheckpoint` and returns the row
+  count observed inside that same job.
+- `replace_table` overwrites a table whose plan may read it: the frame is
+  written to a `<path>.new-<uuid>` sibling and committed by rename
+  (`swap_in`), so no job reads and overwrites one directory and a failed
+  write leaves the old table in place.
 """
 
 from __future__ import annotations
@@ -65,3 +67,31 @@ def swap_in(spark, new_path: str, path: str) -> None:
         fs.rename(old, dst)
         raise OSError(f"cannot rename {new_path} to {path}")
     fs.delete(old, True)
+
+
+def replace_table(spark, df, path: str) -> None:
+    """Overwrite the table at `path` with `df`, which may read `path`
+    itself: write `<path>.new-<uuid>` once, then `swap_in`.  The sibling
+    is removed whether or not the commit happened.  The name never ends
+    in `.parquet`, so table listings (db-copy) ignore a leftover one."""
+    new = f"{path.rstrip('/')}.new-{uuid.uuid4().hex}"
+    try:
+        df.write.parquet(new)
+        swap_in(spark, new, path)
+    finally:
+        remove_path(spark, new)
+
+
+def materialize(df):
+    """`(checkpoint, n)`: an eager `localCheckpoint` of `df` and its row
+    count.  The count is an `Observation` on the checkpointed plan, so
+    it comes from the checkpoint's own job; a later `count()` of the
+    checkpoint would cost another job or two."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return out, obs.get["n"]

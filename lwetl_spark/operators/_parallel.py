@@ -22,67 +22,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def overlap_legs(background, foreground):
-    """Run two INDEPENDENT maintenance legs as concurrent Spark job
-    groups (guide §2.6: actions are only sequential because driver code
-    calls them sequentially; FIFO scheduling back-fills executors freed
-    by one leg's stragglers with the other leg's tasks).
+def overlap_all(*legs):
+    """Run INDEPENDENT maintenance legs as concurrent Spark job groups
+    (guide §2.6: actions are only sequential because driver code calls
+    them sequentially; FIFO scheduling back-fills executors freed by
+    one leg's stragglers with another leg's tasks).
 
-    ``background`` runs on a helper thread, ``foreground`` on the
-    caller's thread; returns ``foreground()``'s result after BOTH legs
-    complete.  Callers must guarantee independence: the legs read only
-    frames that are already checkpoint-materialized and write disjoint
-    paths, so execution order cannot change any result.
-
-    Failure semantics: the background leg is always joined; its
-    exception propagates unless the foreground leg also raised (then
-    the foreground's wins, as in sequential execution).
+    All but the last leg run on helper threads, the last on the
+    caller's thread; every leg is joined before this returns the last
+    leg's value.  A single leg runs inline; no legs return None.
+    Callers must guarantee independence: the legs read only frames that
+    are already checkpoint-materialized (or tables no leg writes) and
+    write disjoint paths, so execution order cannot change any result.
+    The first helper-leg exception propagates unless the caller's leg
+    also raised (then the caller's wins, as in sequential execution).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(background)
-        try:
-            out = foreground()
-        except BaseException:
-            fut.exception()  # join; foreground's exception wins
-            raise
-        exc = fut.exception()
-        if exc is not None:
-            raise exc
-        return out
-
-
-def overlap_all(*legs) -> None:
-    """N-way :func:`overlap_legs`: run all but the last leg on helper
-    threads, the last on the caller's thread, and join every leg before
-    returning.  Same independence contract (legs read only
-    already-materialized frames / disjoint tables and write disjoint
-    paths, so execution order cannot change any result).  A single leg
-    runs inline.  The first helper-leg exception propagates unless the
-    caller's leg also raised (then the caller's wins, as in sequential
-    execution)."""
     if len(legs) <= 1:
-        for leg in legs:
-            leg()
-        return
+        return legs[0]() if legs else None
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(legs) - 1) as pool:
         futs = [pool.submit(leg) for leg in legs[:-1]]
         try:
-            legs[-1]()
+            out = legs[-1]()
         except BaseException:
             for f in futs:
                 f.exception()  # join; the caller leg's exception wins
             raise
-        first_exc = None
         for f in futs:
             exc = f.exception()
-            if first_exc is None and exc is not None:
-                first_exc = exc
-        if first_exc is not None:
-            raise first_exc
+            if exc is not None:
+                raise exc
+        return out
 
 
 def spread(df: DataFrame) -> DataFrame:

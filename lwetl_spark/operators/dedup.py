@@ -28,6 +28,7 @@ from lwetl_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from lwetl_spark.operators import _fsutil
 
 
 def exact_dedup(df: DataFrame, cols: list[str] | None = None, id_col: str = "doc_id") -> DataFrame:
@@ -567,11 +568,10 @@ def connected_components_two_phase(
     component minimum), same contract as `connected_components`.
     """
     wu = Window.partitionBy("u")
-    e = (
+    e, n_edges = _fsutil.materialize(
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     # pin the iteration's shuffle width to the edge count (~1M edges per
     # partition, floor 8): every round is 3 shuffles of a set that only
@@ -583,7 +583,7 @@ def connected_components_two_phase(
     # further exchange and the count sticks (AQE never coalesces an
     # explicit repartition).  The upfront checkpoint also stops the
     # round-0 union from computing the input distinct twice.
-    parts = max(8, min(65536, 1 + e.count() // 1_000_000))
+    parts = max(8, min(65536, 1 + n_edges // 1_000_000))
     prev_sig = None
     for _ in range(max_iter):
         # large star: attach strictly-larger neighbors to

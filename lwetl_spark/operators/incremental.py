@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+from lwetl_spark.operators import _fsutil
+from lwetl_spark.operators import _parallel as _pl
 # shared with similarity/retrieval/maintain (r8: one probe, no local copies)
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
-from lwetl_spark.operators._parallel import overlap_legs
 
 
 #: marker table per vector-index family — its presence at
@@ -359,14 +360,11 @@ def ingest_increment(
     def _vec_add(ids_df: DataFrame) -> int:
         """Append the ids' vectors into the vector index (build at
         bootstrap); returns the number of vectors indexed."""
-        # lazy checkpoint: the count() right below materializes it in
-        # the same job (eager + count would pay two jobs per call)
-        vec_delta = (
-            embeddings.select(id_col, vec_col)
-            .join(ids_df.select(id_col), id_col, "left_semi")
-            .localCheckpoint(eager=False)
+        vec_delta, n = _fsutil.materialize(
+            embeddings.select(id_col, vec_col).join(
+                ids_df.select(id_col), id_col, "left_semi"
+            )
         )
-        n = vec_delta.count()
         if not n:
             return 0
         if _path_exists(spark, _vec_marker):
@@ -428,13 +426,9 @@ def ingest_increment(
         snapshot = snapshot.join(tomb, id_col, "left_anti")
 
     digest = F.md5(F.lower(F.trim(F.col(text_col))))
-    # r11: the count() below is the materializing action for this and
-    # every other lazy localCheckpoint in this function — one job per
-    # checkpoint instead of eager's internal count + the visible one
-    manifest_new = snapshot.select(
-        F.col(id_col), digest.alias("dg")
-    ).localCheckpoint(eager=False)
-    n_snapshot = manifest_new.count()
+    manifest_new, n_snapshot = _fsutil.materialize(
+        snapshot.select(F.col(id_col), digest.alias("dg"))
+    )
 
     have_manifest = _path_exists(spark, manifest_path)
     if have_manifest:
@@ -454,28 +448,20 @@ def ingest_increment(
         fresh = snapshot.join(fresh_ids, id_col, "left_semi")
     else:
         fresh = snapshot
-    fresh = fresh.select(id_col, text_col, digest.alias("_fp"))
-    # eager checkpoint: `fresh` is referenced on BOTH branches of the
-    # dedup plan below (the groupBy-min side and the semi-probe side) and
+    # materialized: `fresh` is referenced on BOTH branches of the dedup
+    # plan below (the groupBy-min side and the semi-probe side) and
     # Catalyst does not share subtrees across branches — without this,
     # the whole snapshot-scan + diff subtree re-executes per reference
     # inside ONE AQE mega-plan, which measured SUPER-LINEAR on the 64×
     # campaign probe (full-snapshot increment 17 s at 16× → 46 min at
-    # 64×; flat-delta mode was unaffected because its fresh is
-    # delta-sized).  After the diff, fresh is added+changed rows only, so
-    # the materialization is delta-sized in steady state and one
-    # corpus-sized pass at bootstrap.
-    # r12: a BOOTSTRAP-ONLY spread of `fresh` before this checkpoint
-    # (VERDICT r11 #7's targeted-respread hypothesis) was tried and
-    # REVERTED on measurement: in-session interleaved best-of-6 A/B
-    # (arms alternated by monkeypatching the spread to identity for
-    # this call site only) measured campaign_bootstrap min 7.84 / med
-    # 10.98 s WITH the spread vs 6.72 / 10.68 WITHOUT — the exchange +
-    # widened downstream checkpoints cost more than the ~1.3 s 1-task
-    # checkpoint stage it parallelizes, the same loss mode as the r11
-    # entry-spread revert above.
-    fresh = fresh.localCheckpoint(eager=False)  # materialized by count()
-    n_fresh = fresh.count()
+    # 64×).  After the diff, fresh is added+changed rows only, so the
+    # materialization is delta-sized in steady state and one
+    # corpus-sized pass at bootstrap.  A bootstrap-only spread before it
+    # measured slower (campaign_bootstrap median 10.98 s with it, 10.68 s
+    # without).
+    fresh, n_fresh = _fsutil.materialize(
+        fresh.select(id_col, text_col, digest.alias("_fp"))
+    )
 
     state = _read_state()
     if state is not None:
@@ -495,14 +481,11 @@ def ingest_increment(
         novel = fresh
     # in-delta content dedup: min-id representative per fingerprint
     w_min = novel.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    admitted = (
+    # materialized before the state append below, so it cannot race
+    # the state scan feeding `novel`
+    admitted, n_admitted = _fsutil.materialize(
         novel.join(w_min.hint("shuffle_hash"), [id_col, "_fp"], "left_semi")
-        # the count() right below materializes the checkpoint BEFORE the
-        # state/manifest appends run, so they still cannot race their
-        # scans (r11: lazy + count = one job, was eager + count = two)
-        .localCheckpoint(eager=False)
     )
-    n_admitted = admitted.count()
 
     n_vec_indexed = 0
     if n_admitted:
@@ -537,8 +520,8 @@ def ingest_increment(
         # `admitted` and write disjoint paths — so the text leg runs on
         # a helper thread instead of serializing every downstream job
         # behind it.  Everything that depends on either leg (backlog,
-        # retire, manifest) runs only after overlap_legs joins both.
-        n_vec_indexed += overlap_legs(_text_leg, _state_vec_leg)
+        # retire, manifest) runs only after overlap_all joins both.
+        n_vec_indexed += _pl.overlap_all(_text_leg, _state_vec_leg)
     n_compacted = 0
     n_deferred = 0
     compacted_ids = None
@@ -562,7 +545,12 @@ def ingest_increment(
         if state_full is None:
             stale_ids = None
         else:
-            stale_ids = (
+            # the backlog POLICY (VERDICT r6 #5's "deferred-change
+            # backlog" threshold — the scheduling knob compact_changed's
+            # docstring promised): ids whose applied content is stale
+            # this snapshot.  id-only joins — the postings-read price is
+            # paid ONLY when the threshold actually trips.
+            stale_ids, n_deferred = _fsutil.materialize(
                 manifest_new.join(
                     state_full.select(id_col), id_col, "left_semi"
                 )
@@ -572,16 +560,7 @@ def ingest_increment(
                     "left_anti",
                 )
                 .select(id_col)
-                # the backlog count right below materializes it; the
-                # cand semi-probe then reads the cached blocks
-                .localCheckpoint(eager=False)
             )
-            # the backlog POLICY (VERDICT r6 #5's "deferred-change
-            # backlog" threshold — the scheduling knob compact_changed's
-            # docstring promised): ids whose applied content is stale
-            # this snapshot.  id-only joins — the postings-read price is
-            # paid ONLY when the threshold actually trips.
-            n_deferred = stale_ids.count()
             if not compact_changed and n_deferred < compact_deferred_threshold:
                 stale_ids = None  # below threshold: stay deferred, no read
     if want_backlog and have_manifest and stale_ids is not None:
@@ -603,10 +582,9 @@ def ingest_increment(
         cand = cand.join(other_fps, cand["_fp"] == other_fps["fp"], "left_anti")
         # in-batch content dedup among the compact set itself
         wc = cand.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-        cand = cand.join(
-            wc.hint("shuffle_hash"), [id_col, "_fp"], "left_semi"
-        ).localCheckpoint(eager=False)  # materialized by count()
-        n_compacted = cand.count()
+        cand, n_compacted = _fsutil.materialize(
+            cand.join(wc.hint("shuffle_hash"), [id_col, "_fp"], "left_semi")
+        )
         compacted_ids = cand.select(id_col)
         if n_compacted:
 
@@ -622,12 +600,12 @@ def ingest_increment(
             def _compact_state_vec_leg() -> int:
                 # state fingerprints follow the content: drop the
                 # compacted ids' old rows, append their new (fp, id) rows
-                new_state = (
+                _fsutil.replace_table(
+                    spark,
                     state_full.join(cand.select(id_col), id_col, "left_anti")
-                    .unionByName(cand.select(F.col("_fp").alias("fp"), id_col))
-                    .localCheckpoint(eager=True)
+                    .unionByName(cand.select(F.col("_fp").alias("fp"), id_col)),
+                    state_path,
                 )
-                new_state.write.mode("overwrite").parquet(state_path)
                 _state_written()
                 if embeddings is not None:
                     # vector-side compaction: remove-then-re-add, so the
@@ -644,7 +622,7 @@ def ingest_increment(
             # paths (index_path vs state_path + vector_index_path); the
             # retire/manifest sections below touch the text index and
             # re-read the state, so they run only after both legs join.
-            n_vec_indexed += overlap_legs(
+            n_vec_indexed += _pl.overlap_all(
                 _compact_text_leg, _compact_state_vec_leg
             )
 
@@ -656,16 +634,14 @@ def ingest_increment(
         state_now = _read_state()
         if state_now is None:
             return 0
-        removed = ids.join(
-            state_now.select(id_col), id_col, "left_semi"
-        ).localCheckpoint(eager=False)  # materialized by count()
-        n = removed.count()
+        removed, n = _fsutil.materialize(
+            ids.join(state_now.select(id_col), id_col, "left_semi")
+        )
         if n:
             remove_from_index(spark, index_path, removed, id_col=id_col)
-            kept_state = state_now.join(
-                removed, id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            kept_state.write.mode("overwrite").parquet(state_path)
+            _fsutil.replace_table(
+                spark, state_now.join(removed, id_col, "left_anti"), state_path
+            )
             _state_written()
             if embeddings is not None:
                 _vec_remove(spark, vector_index_path, removed)
@@ -733,10 +709,7 @@ def ingest_increment(
             manifest_out = manifest_out.join(
                 deferred, id_col, "left_anti"
             ).unionByName(manifest_old.join(deferred, id_col, "left_semi"))
-        # eager: the overwrite below must not race the manifest_old
-        # scan feeding the merge/deferral unions above
-        manifest_out = manifest_out.localCheckpoint(eager=True)
-    manifest_out.write.mode("overwrite").parquet(manifest_path)
+    _fsutil.replace_table(spark, manifest_out, manifest_path)
     vec_action = ""
     if (
         vector_auto_maintain

@@ -51,6 +51,7 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
+from lwetl_spark.operators._fsutil import replace_table
 
 #: tokenizer shared with x_tfidf / x_corpus_pipeline (split on runs of
 #: whitespace, drop empties) — keep in lockstep with the DuckDB oracle.
@@ -88,6 +89,14 @@ def _index_sidecar_schemas(id_type):
             T.StructField("bucket", T.LongType()),
         ]),
     }
+
+
+def _write_stats(spark, path: str, doclen_schema) -> None:
+    """(n, adl_m) of the persisted `doclen` table, written to `stats`."""
+    spark.read.schema(doclen_schema).parquet(f"{path}/doclen").agg(
+        F.count("*").alias("n"),
+        F.expr("1000 * sum(dl) div count(*)").alias("adl_m"),
+    ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def doc_term_stats(
@@ -295,14 +304,10 @@ def build_text_index(
     def _doclen_stats_leg():
         dl = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
         dl.write.mode("overwrite").parquet(f"{path}/doclen")
-        dl_read = spark.read.schema(
-            _index_sidecar_schemas(post_schema["doc_id"].dataType)["doclen"]
-        ).parquet(f"{path}/doclen")
-        stats = dl_read.agg(
-            F.count("*").alias("n"),
-            F.expr("1000 * sum(dl) div count(*)").alias("adl_m"),
+        _write_stats(
+            spark, path,
+            _index_sidecar_schemas(post_schema["doc_id"].dataType)["doclen"],
         )
-        stats.write.mode("overwrite").parquet(f"{path}/stats")
 
     # doc→bucket sidecar (r6): which hash buckets hold each document's
     # postings — lets compaction/removal LOCATE a doc's old rows by
@@ -721,7 +726,7 @@ def hybrid_topk(
     # actions (affected-bucket collects, broadcast builds, probe
     # checkpoints) that used to serialize one leg behind the other.
     # The text leg runs on a helper thread while the vector leg runs
-    # here; overlap_legs joins both before the fusion plan is built.
+    # here; overlap_all joins both before the fusion plan is built.
     _lex_out: list = [None]
 
     def _lex_leg():
@@ -765,7 +770,7 @@ def hybrid_topk(
             )
         raise ValueError(f"unknown vector index kind {kind_resolved!r}")
 
-    dense = _pl.overlap_legs(_lex_leg, _dense_leg)
+    dense = _pl.overlap_all(_lex_leg, _dense_leg)
     lex = _lex_out[0]
     return rrf_fuse(
         [
@@ -1060,15 +1065,7 @@ def update_text_index(
 
     def _doclen_stats_leg():
         dl_new.write.mode("append").parquet(f"{path}/doclen")
-        stats = (
-            spark.read.schema(_schemas["doclen"]).parquet(f"{path}/doclen")
-            .agg(
-                F.count("*").alias("n"),
-                F.expr("1000 * sum(dl) div count(*)").alias("adl_m"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        stats.write.mode("overwrite").parquet(f"{path}/stats")
+        _write_stats(spark, path, _schemas["doclen"])
 
     _pl.overlap_all(_postings_leg, _db_leg, _df_leg, _doclen_stats_leg)
 
@@ -1105,8 +1102,9 @@ def compact_text_index(
       untouched buckets keep their files.
     - df: recomputed as old − removed-contribution + added-contribution
       per token; only affected buckets rewrite.
-    - doclen: one filter-out + append-union overwrite pass ((doc_id,
-      dl) longs — corpus-COUNT-sized, not corpus-TEXT-sized).
+    - doclen: one filter-out + append-union pass ((doc_id, dl) longs —
+      corpus-COUNT-sized, not corpus-TEXT-sized), committed by
+      `replace_table`.
     - stats: one bounded agg, as in build/update.
 
     ``remove_ids`` (a one-column DataFrame of ids) additionally PURGES
@@ -1231,42 +1229,32 @@ def compact_text_index(
         )
 
     def _doclen_stats_leg():
-        # doclen: filter-out + union overwrite (one (doc_id, dl) pass)
+        # doclen: filter-out + union replace (one (doc_id, dl) pass)
         dl_new = tf_new.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        dl_merged = (
+        replace_table(
+            spark,
             spark.read.schema(_schemas["doclen"]).parquet(f"{path}/doclen")
             .join(ids, "doc_id", "left_anti")
-            .unionByName(dl_new)
-            .localCheckpoint(eager=True)
+            .unionByName(dl_new),
+            f"{path}/doclen",
         )
-        dl_merged.write.mode("overwrite").parquet(f"{path}/doclen")
-        # stats from the just-checkpointed dl_merged — row-identical to
-        # the doclen table the overwrite above wrote, w/o re-reading it
-        stats = (
-            dl_merged
-            .agg(
-                F.count("*").alias("n"),
-                F.expr("1000 * sum(dl) div count(*)").alias("adl_m"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        stats.write.mode("overwrite").parquet(f"{path}/stats")
+        _write_stats(spark, path, _schemas["doclen"])
 
     def _db_leg():
         if not have_db:
             return
         # sidecar follows the content: replaced/removed ids' rows drop,
         # the replacements' new (doc_id, bucket) rows enter — the same
-        # metadata-sized filter-out + union overwrite as doclen.
+        # metadata-sized filter-out + union replace as doclen.
         # db_tbl reuses the affected_old read (docbuckets was not
         # written in between), saving its re-list + re-infer job
-        db_merged = (
-            db_tbl
-            .join(ids, "doc_id", "left_anti")
-            .unionByName(tf_new.select("doc_id", bucket).distinct())
-            .localCheckpoint(eager=True)
+        replace_table(
+            spark,
+            db_tbl.join(ids, "doc_id", "left_anti").unionByName(
+                tf_new.select("doc_id", bucket).distinct()
+            ),
+            f"{path}/docbuckets",
         )
-        db_merged.write.mode("overwrite").parquet(f"{path}/docbuckets")
 
     _pl.overlap_all(_postings_leg, _df_leg, _db_leg, _doclen_stats_leg)
 

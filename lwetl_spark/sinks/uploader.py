@@ -23,9 +23,9 @@ each ONE Spark plan written ONCE:
 - the affected-row counts come from `Observation`s on that frame, so
   the write job itself reports them — no separate `count()` job;
 - under COMMIT the frame is written to a sibling `<table>.new-<uuid>`
-  directory and swapped in by rename (`_fsutil.swap_in`): the live table
-  is never read and written by the same job, and a failed write leaves
-  it untouched.
+  directory and swapped in by rename (`_fsutil.replace_table`): the live
+  table is never read and written by the same job, and a failed write
+  leaves it untouched.
 On a real deployment the same calls map 1:1 onto Delta MERGE/DELETE;
 the import is gated so the engine runs without the Delta jars.
 """
@@ -34,13 +34,12 @@ from __future__ import annotations
 
 import enum
 import os
-import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lwetl_spark.operators._fsutil import remove_path, swap_in
+from lwetl_spark.operators._fsutil import replace_table
 
 #: marker column of `_tag_keys`; true on rows whose key the other side has
 _HIT = "__lwetl_key_hit"
@@ -292,16 +291,9 @@ class Uploader:
             df.write.mode("overwrite").parquet(self.staging_path)
             return self.spark.read.parquet(self.staging_path).count()
         if mode == "overwrite":
-            # write once into a sibling, then commit by rename; the name
-            # must not end in .parquet or db-copy would list it as a table
-            new = f"{self.table_path.rstrip('/')}.new-{uuid.uuid4().hex}"
-            try:
-                df.write.parquet(new)
-                swap_in(self.spark, new, self.table_path)
-            finally:
-                remove_path(self.spark, new)
-            return 0
-        df.write.mode(mode).parquet(self.table_path)
+            replace_table(self.spark, df, self.table_path)
+        else:
+            df.write.mode(mode).parquet(self.table_path)
         return 0
 
     def sql_script(self) -> Iterable[str]:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
+from lwetl_spark.operators._fsutil import replace_table
 
 
 def stream_events_tumbling(
@@ -776,10 +777,8 @@ def stream_markov(
             last = last.unionByName(
                 carried.select("user_id", "last_type", "last_ts", "event_id")
             )
-        # eager materialization: the overwrite below must not race the
-        # state scan that fed the boundary join (same directory)
-        last = last.localCheckpoint(eager=True)
-        last.write.mode("overwrite").parquet(state_path)
+        # the new state reads the old one (same directory)
+        replace_table(sess, last, state_path)
 
     return stream.writeStream.foreachBatch(sink).start(), totals
 
@@ -857,8 +856,7 @@ def stream_ab_test(
             )
         else:  # first batch: no state yet
             merged = b
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(state_path)
+        replace_table(sess, merged, state_path)
 
     q = stream.writeStream.foreachBatch(sink).start()
 
@@ -1139,8 +1137,7 @@ def stream_event_pattern(
                 "user_id", "event_id", "ts", "event_type"
             )
             tail = tail.unionByName(carried)
-        tail = tail.localCheckpoint(eager=True)  # don't race the state scan
-        tail.write.mode("overwrite").parquet(state_path)
+        replace_table(sess, tail, state_path)
 
     return stream.writeStream.foreachBatch(sink).start(), totals
 

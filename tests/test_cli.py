@@ -471,7 +471,7 @@ def test_cli_curate_size_gate_fails_closed(spark, tmp_path, monkeypatch):
     estimate is known and small: with no estimate curate skips the
     checkpoint, and its stats match a run that took it."""
     from lwetl_spark import cli_curate
-    from lwetl_spark.operators import _parallel
+    from lwetl_spark.operators import _fsutil, _parallel
 
     sf = str(tmp_path / "sf")
     rows = [
@@ -485,19 +485,18 @@ def test_cli_curate_size_gate_fails_closed(spark, tmp_path, monkeypatch):
 
     spread_out, checkpointed = [], []
     orig_spread = _parallel.spread
-    frame_cls = type(spark.range(1))
-    orig_lc = frame_cls.localCheckpoint
+    orig_mat = _fsutil.materialize
 
     def spy_spread(df):
         spread_out.append(orig_spread(df))
         return spread_out[-1]
 
-    def spy_lc(self, *a, **kw):
-        checkpointed.append(self)
-        return orig_lc(self, *a, **kw)
+    def spy_mat(df):
+        checkpointed.append(df)
+        return orig_mat(df)
 
     monkeypatch.setattr(_parallel, "spread", spy_spread)
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy_lc)
+    monkeypatch.setattr(_fsutil, "materialize", spy_mat)
 
     def run(out):
         spread_out.clear()

@@ -1,17 +1,16 @@
-"""r11 optimization pins for operators/incremental.py.
+"""Checkpoint pins for operators/incremental.py and the package.
 
-The ingest_increment checkpoints were switched from eager to lazy where —
-and ONLY where — a ``.count()`` is the very next action on the frame: the
-count materializes the checkpoint blocks in ONE job (eager ran its own
-internal count and then ours, i.e. two jobs + two plan analyses per
-site).  The race-avoidance contract (state/manifest appends must never
-race their own scans) survives because the count always runs BEFORE the
-dependent write.  This test pins the pairing so a future edit cannot
-leave a lazy checkpoint whose first action is a write.
+A checkpoint whose row count is needed goes through
+`_fsutil.materialize`, which reads the count from the checkpoint's own
+job.  A lazy checkpoint followed by ``count()`` costs one more job, and
+an eager one followed by ``count()`` two more, so neither shape may
+come back.
 """
 import inspect
 import re
+from pathlib import Path
 
+import lwetl_spark
 from lwetl_spark.operators import incremental
 
 
@@ -29,64 +28,32 @@ def _assignment_target(lines, i):
     return None
 
 
-def test_every_lazy_checkpoint_is_materialized_by_an_adjacent_count():
-    """r12 (ADVICE r11): match the materializing ``.count()`` to the
-    CHECKPOINTED NAME, not to any count inside a fixed line window —
-    the old 7-line window could be satisfied by an unrelated frame's
-    count (or broken by a reformat)."""
-    src = inspect.getsource(incremental)
-    lines = src.splitlines()
-    lazy_sites = [i for i, ln in enumerate(lines)
-                  if "localCheckpoint(eager=False)" in ln]
-    assert lazy_sites, "expected the r11 lazy-checkpoint sites to exist"
-    for i in lazy_sites:
-        name = _assignment_target(lines, i)
-        if name is None:
-            # return-expression site (_vec_delta_for): every caller
-            # must count the returned frame before any other action
-            fn = None
-            for j in range(i, -1, -1):
-                m = re.match(r"\s*def (\w+)", lines[j])
-                if m:
-                    fn = m.group(1)
-                    break
-            assert fn, f"no enclosing def for checkpoint at line {i + 1}"
-            callers = [
-                (k, re.match(rf"^\s*(\w+)\s*=\s*{fn}\(", ln))
-                for k, ln in enumerate(lines)
-            ]
-            callers = [(k, m) for k, m in callers if m]
-            assert callers, f"return-site checkpoint in {fn} never called"
-            for k, m in callers:
-                var = m.group(1)
-                window = "\n".join(lines[k + 1:k + 6])
-                assert re.search(rf"\b{var}\.count\(\)", window), (
-                    f"{fn}() result '{var}' at line {k + 1} is not "
-                    f"counted right after — the lazy checkpoint inside "
-                    f"{fn} would go unmaterialized"
-                )
-            continue
-        # named site: the NEXT action on that name must be .count()
-        window = "\n".join(lines[i + 1:i + 16])
-        mc = re.search(rf"\b(?:\w+\s*=\s*)?{name}\.count\(\)", window)
-        assert mc, (
-            f"lazy localCheckpoint assigned to '{name}' at "
-            f"incremental.py:{i + 1} has no adjacent {name}.count() "
-            f"materializer — either make it eager or restore the count"
-        )
-        before = window[: mc.start()]
-        assert not re.search(rf"\b{name}\.(write|save|parquet)\b", before), (
-            f"lazy checkpoint '{name}' at line {i + 1}: a write on it "
-            f"runs before the materializing count"
-        )
+def test_no_checkpoint_is_counted_by_a_separate_action():
+    """No lazy checkpoint is left in the package, and no checkpointed
+    name is counted by its next statements: such a count belongs in the
+    checkpoint's own job (`_fsutil.materialize`)."""
+    for path in sorted(Path(lwetl_spark.__file__).parent.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for i, ln in enumerate(lines):
+            assert "eager=False" not in ln, f"{path}:{i + 1}"
+            if ".localCheckpoint(" not in ln:
+                continue
+            name = _assignment_target(lines, i)
+            if name is None:
+                continue
+            window = "\n".join(lines[i + 1:i + 16])
+            assert not re.search(rf"\b{name}\.count\(\)", window), (
+                f"{path}:{i + 1}: '{name}' is checkpointed, then counted "
+                f"by another job; use _fsutil.materialize"
+            )
 
 
 def test_eager_checkpoints_remain_where_no_count_follows():
-    # the overwrite-vs-scan guards (merged-frame writes) must stay eager:
-    # their first consumer is a WRITE, not a count
+    # the checkpoints shared by several plan branches (tombstones, the
+    # compaction candidates) must stay eager: no count follows them
     src = inspect.getsource(incremental)
     assert "localCheckpoint(eager=True)" in src, (
-        "the write-guard eager checkpoints must not be converted to lazy"
+        "the multi-branch eager checkpoints must not be converted to lazy"
     )
 
 
@@ -117,3 +84,45 @@ def test_cluster_for_write_is_conditional(spark):
         partitions_per_value.setdefault(b, set()).add(i)
     assert all(len(ps) == 1 for ps in partitions_per_value.values())
     assert sorted(r["id"] for r in out.collect()) == list(range(100))
+
+
+#: jobs one small delta increment runs (bootstrapped text + IVF index,
+#: embeddings, ``snapshot_is_delta``): every checkpoint that needs its
+#: row count takes it in its own job, and the state/manifest rewrites
+#: write once through `replace_table`
+DELTA_INCREMENT_JOBS = 48
+
+
+def test_delta_increment_work_pin(spark, tmp_path):
+    """Jobs are counted by job-id window, not job group: the overlap legs
+    run on helper threads outside the caller's group."""
+    from lwetl_spark.operators.incremental import ingest_increment
+
+    def docs(ids):
+        return spark.createDataFrame(
+            [(i, f"doc w{i % 7} v{i % 5} token{i} shared words") for i in ids],
+            "doc_id long, text string",
+        )
+
+    def emb(ids):
+        return spark.createDataFrame(
+            [(i, [float(i % 3), float(i % 5), 1.0, float(i)]) for i in ids],
+            "doc_id long, embedding array<double>",
+        )
+
+    p = {k: str(tmp_path / k) for k in ("m", "s", "x", "v")}
+    kw = dict(vector_index_path=p["v"], vector_num_centroids=2)
+    ingest_increment(
+        spark, docs(range(24)), p["m"], p["s"], p["x"], embeddings=emb(range(24)), **kw
+    )
+    new = range(24, 28)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    st = ingest_increment(
+        spark, docs(new), p["m"], p["s"], p["x"], embeddings=emb(new),
+        snapshot_is_delta=True, **kw,
+    )
+    jobs = dag.numTotalJobs() - first
+    assert st["n_admitted"] == 4 and st["n_vec_indexed"] == 4
+    assert spark.read.parquet(p["m"]).count() == 28
+    assert jobs <= DELTA_INCREMENT_JOBS, jobs

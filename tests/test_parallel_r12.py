@@ -104,10 +104,10 @@ def test_lsh_buckets_write_salted_and_prunable(spark, tmp_path):
     assert sum(r["count"] for r in got) == 200 * 4
 
 
-# --- r12: overlap_legs (guide §2.6 maintenance-leg overlap) ------------
+# --- r12: overlap_all (guide §2.6 maintenance-leg overlap) -------------
 
 
-def test_overlap_legs_runs_both_and_returns_foreground():
+def test_overlap_all_runs_both_and_returns_caller_leg():
     import threading
 
     from lwetl_spark.operators import _parallel
@@ -121,13 +121,13 @@ def test_overlap_legs_runs_both_and_returns_foreground():
         ran["fg"] = threading.current_thread().name
         return 41
 
-    assert _parallel.overlap_legs(bg, fg) == 41
+    assert _parallel.overlap_all(bg, fg) == 41
     assert ran["bg"] is not None and ran["fg"] is not None
     # the background leg really left the caller's thread
     assert ran["bg"] != ran["fg"]
 
 
-def test_overlap_legs_background_exception_propagates():
+def test_overlap_all_background_exception_propagates():
     import pytest as _pytest
 
     from lwetl_spark.operators import _parallel
@@ -136,10 +136,10 @@ def test_overlap_legs_background_exception_propagates():
         raise RuntimeError("bg boom")
 
     with _pytest.raises(RuntimeError, match="bg boom"):
-        _parallel.overlap_legs(bg, lambda: 1)
+        _parallel.overlap_all(bg, lambda: 1)
 
 
-def test_overlap_legs_foreground_exception_wins_and_joins_background():
+def test_overlap_all_caller_exception_wins_and_joins_background():
     import time
 
     import pytest as _pytest
@@ -157,7 +157,7 @@ def test_overlap_legs_foreground_exception_wins_and_joins_background():
         raise ValueError("fg boom")
 
     with _pytest.raises(ValueError, match="fg boom"):
-        _parallel.overlap_legs(bg, fg)
+        _parallel.overlap_all(bg, fg)
     assert done["bg"]  # the background leg was joined, not abandoned
 
 
