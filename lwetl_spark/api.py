@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lwetl_spark.catalog import register_tables
 from lwetl_spark.session import get_spark
+from lwetl_spark.sinks.formatter import _rows
 from lwetl_spark.types import drop_empty_values
 
 
@@ -54,14 +55,13 @@ class SparkEtl:
         """Row-iterator surface (lwetl/jdbc.py:624-673): lazily yields
         rows as tuple/list/dict/OrderedDict; dict rows drop empty values
         unless include_none (reference jdbc.py:356-361); max_rows
-        truncates like the reference's client-side cap (jdbc.py:668-673).
+        truncates like the reference's client-side cap (jdbc.py:668-673)
+        — a cap is one bounded collect, 0 (no cap) streams.
         `array_size` is accepted for signature parity (batching is
         Spark's concern now)."""
         df = self.query_df(sql, parameters)
         cols = df.columns
-        for i, row in enumerate(df.toLocalIterator()):
-            if max_rows and i >= max_rows:
-                break
+        for row in _rows(df, max_rows or None):
             if return_type in (dict, OrderedDict):
                 d = return_type(zip(cols, row))
                 yield d if include_none else return_type(drop_empty_values(dict(d)))

@@ -118,18 +118,21 @@ def register_tables(
 def schema_info(spark: SparkSession, tables: dict[str, DataFrame]) -> DataFrame:
     """Schema-introspection source (SURVEY S8): one row per column, the
     engine-side equivalent of the reference's catalog queries
-    (lwetl/queries.py:4-204).  PK/FK metadata does not exist in parquet;
+    (lwetl/queries.py:4-204), as a one-partition local relation so
+    rendering it is one job.  PK/FK metadata does not exist in parquet;
     the db-copy planner accepts it as explicit engine metadata instead
     (lwetl_spark/plans/db_copy.py).
     """
+    from lwetl_spark.operators._probe import local_frame
+
     rows = []
     for tname, df in tables.items():
         for f in df.schema.fields:
             rows.append(
                 (tname.upper(), f.name.upper(), f.dataType.simpleString(), bool(f.nullable))
             )
-    return spark.createDataFrame(
-        rows, "TABLE_NAME string, COLUMN_NAME string, DATA_TYPE string, NULLABLE boolean"
+    return local_frame(
+        spark, rows, "TABLE_NAME string, COLUMN_NAME string, DATA_TYPE string, NULLABLE boolean"
     )
 
 
@@ -138,6 +141,8 @@ def engine_info(spark: SparkSession) -> DataFrame:
     `JdbcInfo` dumps driver version and property info
     (lwetl/jdbc_info.py:7-99); here the engine IS Spark, so the analog is
     the session's version, master, and the confs that shape execution."""
+    from lwetl_spark.operators._probe import local_frame
+
     keys = (
         "spark.master",
         "spark.sql.shuffle.partitions",
@@ -152,4 +157,4 @@ def engine_info(spark: SparkSession) -> DataFrame:
             rows.append((k, str(spark.conf.get(k))))
         except (SparkNoSuchElementException, Py4JError):
             rows.append((k, None))  # conf unset on this session
-    return spark.createDataFrame(rows, "PROPERTY string, VALUE string")
+    return local_frame(spark, rows, "PROPERTY string, VALUE string")

@@ -35,7 +35,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from lwetl_spark.catalog import DEFAULT_SF_DIR, register_tables
     from lwetl_spark.session import get_spark
-    from lwetl_spark.sinks.formatter import format_text_table, to_sql_inserts, to_xml_string
+    from lwetl_spark.sinks.formatter import _rows, format_text_table, to_sql_inserts, to_xml_string
     from lwetl_spark.sources.sqlscript import split_statements
 
     spark = get_spark(app_name="lwetl_spark_cli")
@@ -67,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
     if cmd in tables:  # bare-table-name shorthand → full scan probe
         cmd = f"SELECT * FROM {cmd}"
 
-    stmts = split_statements(cmd)
+    stmts = list(split_statements(cmd))
     # multi-result routing (K6, reference sql_query/main.py:169-174):
     # xlsx/xml get one sheet per result set; text/csv/sql concatenate
     if args.format == "xlsx":
@@ -101,9 +101,7 @@ def main(argv: list[str] | None = None) -> int:
 
             w = _csv.writer(sys.stdout, delimiter=args.sep)
             w.writerow(df.columns)
-            for i, row in enumerate(df.toLocalIterator()):
-                if i >= args.max_rows:
-                    break
+            for row in _rows(df, args.max_rows):
                 w.writerow(list(row))
         elif args.format in ("xml", "xmlp"):
             print(

@@ -48,6 +48,7 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from lwetl_spark.catalog import DEFAULT_SF_DIR, register_tables
+    from lwetl_spark.operators._probe import local_frame
     from lwetl_spark.operators.validate import validate
     from lwetl_spark.session import get_spark
     from lwetl_spark.sinks.formatter import format_text_table
@@ -84,9 +85,9 @@ def main(argv: list[str] | None = None) -> int:
         # get the same friendly exit-1 path as unknown tables/parents
         print(f"invalid rule file {args.rules!r}: {e}")
         return 1
-    # format from the collected rows (a local re-wrap) so the validation
+    # format from the collected rows (a local relation) so the validation
     # scan runs exactly once — the scan IS the cost at scale
-    print(format_text_table(spark.createDataFrame(rows, result.schema)), end="")
+    print(format_text_table(local_frame(spark, rows, result.schema)), end="")
     n_bad = sum(r["n_violations"] for r in rows)
     if n_bad:
         print(f"{n_bad} violation(s) across {len(rows)} rule(s)")

@@ -7,8 +7,9 @@ pipe mode).
 
 Spark mapping: CSV is a native distributed writer; text/XML/XLSX/SQL are
 presentation formats — bounded by construction in the reference (reports,
-pipe output) — produced from `toLocalIterator()` so nothing materializes
-more than a partition at a time on the driver.
+pipe output).  Every one takes its rows from `_rows`: capped output is
+one bounded collect, so the driver holds at most `max_rows` rows;
+uncapped output streams over `toLocalIterator()`, a partition at a time.
 """
 
 from __future__ import annotations
@@ -28,6 +29,18 @@ def _present(v: object) -> str:
     if isinstance(v, (bytes, bytearray)):
         return BINARY_PLACEHOLDER
     return str(v)
+
+
+def _rows(df: DataFrame, max_rows: int | None):
+    """The rows a presentation sink renders.  With a cap: one collect
+    bounded by ``limit`` — a sorted result plans as a single top-k job,
+    where a stream pays a range-sampling job plus one job per
+    partition; a negative cap renders no rows.  Without a cap
+    (``None``): a stream over ``toLocalIterator``, never more than a
+    partition on the driver."""
+    if max_rows is None:
+        return df.toLocalIterator()
+    return df.limit(max(max_rows, 0)).collect()
 
 
 def write_csv(df: DataFrame, path: str, sep: str = ";", header: bool = True, mode: str = "overwrite") -> None:
@@ -51,10 +64,7 @@ def format_text_table(df: DataFrame, column_width: int = 20, max_rows: int | Non
 
     # headers align with their column (numbers right-justify, K1 semantics)
     out.write(" ".join(cell(c, n) for c, n in zip(df.columns, is_num)).rstrip() + "\n")
-    it = df.toLocalIterator()
-    for i, row in enumerate(it):
-        if max_rows is not None and i >= max_rows:
-            break
+    for row in _rows(df, max_rows):
         out.write(" ".join(cell(v, n) for v, n in zip(row, is_num)).rstrip() + "\n")
     return out.getvalue()
 
@@ -71,9 +81,7 @@ def _xml_excel_worksheet(out: io.StringIO, name: str, df: DataFrame, max_rows: i
     cols = df.columns
     out.write(f' <Worksheet ss:Name="{escape(name)}">\n  <Table>\n')
     out.write("   <Row>" + "".join(f'<Cell><Data ss:Type="String">{escape(c)}</Data></Cell>' for c in cols) + "</Row>\n")
-    for i, row in enumerate(df.toLocalIterator()):
-        if max_rows is not None and i >= max_rows:
-            break
+    for row in _rows(df, max_rows):
         cells = []
         for v in row:
             typ = "Number" if isinstance(v, (int, float)) and not isinstance(v, bool) else "String"
@@ -84,9 +92,7 @@ def _xml_excel_worksheet(out: io.StringIO, name: str, df: DataFrame, max_rows: i
 
 def _xml_plain_rows(out: io.StringIO, df: DataFrame, dialect: str, row_tag: str, max_rows: int | None) -> None:
     cols = df.columns
-    for i, row in enumerate(df.toLocalIterator()):
-        if max_rows is not None and i >= max_rows:
-            break
+    for row in _rows(df, max_rows):
         out.write(f"  <{row_tag}>")
         for c, v in zip(cols, row):
             if dialect == "value":
@@ -219,11 +225,10 @@ def _sql_literal(v: object) -> str:
 
 def to_sql_inserts(df: DataFrame, table: str, max_rows: int | None = None):
     """SQL-script sink (K5; lwetl/formatter.py:529-594): yields one
-    `INSERT INTO t (...) VALUES (...);` line per row, for piping —
-    streaming over toLocalIterator, never materializing the DataFrame."""
+    `INSERT INTO t (...) VALUES (...);` line per row, for piping.  With
+    ``max_rows`` the rows come from one bounded collect; without it they
+    stream over toLocalIterator, never materializing the DataFrame."""
     cols = ", ".join(df.columns)
-    for i, row in enumerate(df.toLocalIterator()):
-        if max_rows is not None and i >= max_rows:
-            break
+    for row in _rows(df, max_rows):
         vals = ", ".join(_sql_literal(v) for v in row)
         yield f"INSERT INTO {table} ({cols}) VALUES ({vals});"

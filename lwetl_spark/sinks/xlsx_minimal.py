@@ -219,9 +219,9 @@ def read_workbook(path: str) -> dict[str, list[list[object]]]:
 
 
 def iter_df_rows(df, max_rows: int | None) -> Iterator[tuple]:
-    """Stream a DataFrame's rows driver-side without materializing more
-    than a partition (same envelope as formatter.format_text_table)."""
-    for i, row in enumerate(df.toLocalIterator()):
-        if max_rows is not None and i >= max_rows:
-            break
+    """A DataFrame's rows, driver-side: one bounded collect with a cap,
+    a stream without (same envelope as formatter.format_text_table)."""
+    from lwetl_spark.sinks.formatter import _rows
+
+    for row in _rows(df, max_rows):
         yield tuple(row)
