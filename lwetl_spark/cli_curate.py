@@ -150,27 +150,17 @@ def curate(
     from lwetl_spark.functions.text import token_count
 
     docs = load_table(spark, sf_dir, "documents")
-    # r11 (guide §2.5): a local sf-dir corpus is ONE parquet split, so
-    # the whole HOF battery (gopher rules, minhash signatures) ran on a
-    # single core — and a bare repartition cannot fix it because the
-    # deterministic filters push through it back to the one-split scan.
-    # When spread actually widens the frame (few-split input only), a
-    # checkpoint pins the 32-way layout; at real scale spread no-ops and
-    # the corpus rides its scan unmaterialized (checkpointing 100 TB
-    # would be absurd).
+    # a one-split corpus would run every rule on one core, and filters
+    # push through a bare repartition: a widened frame is checkpointed
+    # (OPTIMIZATION_r11.md); at real scale spread no-ops.
     from lwetl_spark.operators import _fsutil
     from lwetl_spark.operators._parallel import spread as _spread
 
     _wide = _spread(docs)
     n_input = None
     if _wide is not docs:
-        # r12 (ADVICE r11): few-split does not imply small — one large
-        # multi-row-group parquet file would be fully pinned in
-        # executor memory/disk by this checkpoint.  Gate on the
-        # optimizer's size estimate too (for parquet scans: the file
-        # size sum); past the bound, or with no estimate, the corpus
-        # rides its scan and only the local split-bound parallelism is
-        # forgone.
+        # few splits need not mean small: checkpoint only under a known
+        # size estimate of at most 2 GiB (fails closed when unknown)
         _est = _size_estimate(docs)
         if _est is not None and _est <= 2 * 1024**3:
             docs, n_input = _fsutil.materialize(_wide)
@@ -179,11 +169,8 @@ def curate(
     stats = {"n_input": n_input}
 
     if html_extract:
-        # stage 0 (r8): the crawl front door — the text column arrives
-        # as raw HTML; strip boilerplate BEFORE any token/quality gate
-        # so every downstream rule sees prose, not markup.  Pure JVM
-        # expression chain (functions/text.html_text): zero UDF, zero
-        # shuffle, rides the same scan as the first filter.
+        # strip HTML before any token/quality gate so every rule sees
+        # prose; a pure JVM expression chain on the same scan
         from lwetl_spark.functions.text import html_text
 
         docs = docs.withColumn("text", html_text("text"))
@@ -199,13 +186,11 @@ def curate(
 
     if gopher:
         # row-local rule battery: stays inside the same scan/plan
-        from lwetl_spark.functions.text import gopher_rules
+        from lwetl_spark.functions.text import gopher_rules, tokens
 
         staged = kept.withColumns(
             {
-                "_toks": F.expr(
-                    r"filter(split(lower(trim(text)), '\\s+'), x -> x <> '')"
-                ),
+                "_toks": tokens("text"),
                 "_lines": F.split("text", "\n"),
             }
         )
@@ -220,23 +205,10 @@ def curate(
         kept = _mark("gopher", kept)
 
     if quality_model:
-        # VERDICT r4 #4: model-based quality scoring closes the curate
-        # loop — train the IRLS logistic regression ON the heuristic
-        # labels (Gopher pass/fail over the min-token-gated corpus),
-        # score every surviving doc with the row-local sigmoid, and
-        # drop the low-score tail.  This is the reference-free version
-        # of what the classifier exists for: the model generalizes the
-        # hand rules into a smooth ranking, catching docs that
-        # technically pass each rule but look like the fail class.
-        #
-        # Scale shape: the feature/label frame localCheckpoints to a
-        # compact columnar cache (5 doubles + 1 long per doc) so the 8
-        # IRLS passes never re-read text; training emits d² driver
-        # floats per pass; β returns as plan LITERALS so scoring adds
-        # ZERO shuffle to the chain (rehearsal-measured, SCALE.md); the
-        # tail threshold is ONE percentile_disc agg collecting a single
-        # float.
-        from lwetl_spark.functions.text import gopher_rules, quality_features
+        # a logistic regression trained on the Gopher labels ranks the
+        # survivors and drops the low-score tail; the checkpointed
+        # feature frame keeps the IRLS passes off the text (SCALE.md)
+        from lwetl_spark.functions.text import gopher_rules, quality_features, tokens
         from lwetl_spark.operators.classifier import logreg_score, logreg_train
 
         q = quality_features("text")
@@ -250,9 +222,7 @@ def curate(
         feat_cols = list(feat_exprs)
         base = docs.filter(token_count("text") >= min_tokens).withColumns(
             {
-                "_toks": F.expr(
-                    r"filter(split(lower(trim(text)), '\\s+'), x -> x <> '')"
-                ),
+                "_toks": tokens("text"),
                 "_lines": F.split("text", "\n"),
             }
         )
@@ -312,21 +282,10 @@ def curate(
         kept = _mark("fluency_tail", kept)
 
     if ppl_filter:
-        # VERDICT r7 #4: the CCNet-style perplexity gate — score every
-        # surviving doc's bigram surprisal under the corpus's OWN LM
-        # (doc_perplexity: ln-free integer ppm, hash-stable) and drop
-        # the high-surprisal tail.  The threshold is ONE percentile_disc
-        # agg collecting a single long (an actual data value, so the
-        # <= filter keeps ties together and drops AT MOST the tail
-        # fraction — deterministic, never splits a surprisal band; the
-        # --quality-model precedent); the HIGH-surprisal set applies as
-        # an id-keyed ANTI-join, and the ppl table is corpus-sized —
-        # shuffle_hash, never broadcast.  ADVICE r8: docs with <2
-        # tokens have no bigram evidence and hence no ppl row — the
-        # old semi-join silently removed them even when a user-supplied
-        # min_tokens of 0/1 let them reach this stage; the anti-join
-        # keeps no-evidence docs (this gate only judges docs it can
-        # actually score).
+        # CCNet-style gate: drop the high-surprisal tail under the
+        # corpus's own bigram LM; the threshold is a data value (ties
+        # stay together), and the anti-join keeps docs with < 2 tokens,
+        # which have no score
         from lwetl_spark.operators.sampling import doc_perplexity
 
         ppl = doc_perplexity(kept).localCheckpoint(eager=True)

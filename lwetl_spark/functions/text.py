@@ -30,7 +30,10 @@ def _col(c: Column | str) -> Column:
 
 
 def tokens(text: Column | str) -> Column:
-    """Lower-cased whitespace tokens, empties removed."""
+    """Lower-cased whitespace tokens, empties removed: the one tokenizer
+    of the text index, curate, dedup, sampling, decontamination and BPE
+    ops (split on runs of whitespace) — keep it in lockstep with the
+    DuckDB oracles."""
     t = _col(text)
     return F.filter(F.split(F.lower(F.trim(t)), r"\s+"), lambda x: x != F.lit(""))
 

@@ -39,17 +39,15 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lwetl_spark.functions.text import tokens
+
 
 def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus -> (word, wc) vocabulary: lowercase whitespace tokens with
     frequencies.  The one corpus-sized aggregation in the BPE pipeline."""
     return (
         docs.select(
-            F.explode(
-                F.expr(
-                    rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')"
-                ).alias("word")
-            ).alias("word")
+            F.explode(tokens(text_col)).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("wc"))

@@ -858,9 +858,7 @@ def portable_minhash_signatures(
     """
     d = df.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')").alias(
-            "_t"
-        ),
+        tokens(text_col).alias("_t"),
     ).filter(F.size("_t") >= shingle_len)
     sh = d.select(
         "doc_id",
@@ -952,14 +950,13 @@ def winnow_fingerprints(
     overlap detection groups by fp: linear output, the dup_spans
     pattern.
     """
-    toks = rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')"
     grams = (
         f"case when size(_toks) >= {gram_n} then "
         f"transform(sequence(1, size(_toks) - {gram_n - 1}), "
         f"i -> concat_ws(' ', slice(_toks, i, {gram_n}))) end"
     )
     g = (
-        df.select(F.col(id_col), F.expr(toks).alias("_toks"))
+        df.select(F.col(id_col), tokens(text_col).alias("_toks"))
         .select(F.col(id_col), F.posexplode(F.expr(grams)).alias("pos", "gram"))
         .select(
             id_col,

@@ -1,23 +1,20 @@
 """Real media-container operators over binary columns — every
-container family of a multimodal crawl parses from REAL bytes, and the
-decode honesty ledger closed in r8:
+container family of a multimodal crawl parses from REAL bytes:
 
 - PNG: full pixel decode (zlib IDAT + all five scanline filters);
-- JPEG: full pixel decode (r8 baseline, r9 everything Huffman-coded —
-  grayscale + YCbCr 4:4:4/4:2:0/4:2:2, restart markers, AND
-  progressive SOF2 with spectral selection + successive
-  approximation; only arithmetic-coded/hierarchical → NULL);
-- WAV: full 16-bit PCM sample decode (RIFF chunk walk);
-- MP4 (ISO-BMFF, r8): full box-tree census (brand, tracks, codecs,
-  dims, duration) PLUS exact frame extraction from real sample tables
+- JPEG: full pixel decode — baseline and progressive Huffman-coded
+  streams, grayscale + YCbCr 4:4:4/4:2:0/4:2:2, restart markers;
+  only arithmetic-coded/hierarchical → NULL;
+- WAV: PCM sample decode at 8/16/24/32 bits (RIFF chunk walk);
+- MP4 (ISO-BMFF): full box-tree census (brand, tracks, codecs, dims,
+  duration) PLUS exact frame extraction from real sample tables
   (stts/stss/stsc/stsz/stco) — structural + byte-range level; no codec
-  bitstream decode (an av1/h264 entropy decoder is out of scope,
-  stated honestly);
-- WebP (r8): RIFF chunk walk, dims from all three bitstream variants;
-- MP3 (r8): ID3v2 skip + CBR frame-header census;
-- gzip (r8): real zlib inflate with trailer integrity;
-- ustar/WebDataset shards (r8): checksum-verified member index +
-  sample grouping;
+  bitstream decode (an av1/h264 entropy decoder is out of scope);
+- WebP: RIFF chunk walk, dims from all three bitstream variants;
+- MP3: ID3v2 skip + CBR frame-header census;
+- gzip: real zlib inflate with trailer integrity;
+- ustar/WebDataset shards: checksum-verified member index + sample
+  grouping;
 - learned feature EXTRACTION (embeddings) remains the documented
   portable stub in streaming/multimodal — no model libs in this
   environment.
@@ -59,13 +56,27 @@ The few ops whose pass carries extra columns keep their own loop
 (`sniff_decode_html`, `http_response_parts`, `png_thumbnails`, and the
 text-driven or rec_idx-carrying fixtures).
 
+Each container decision lives in one factory-made closure, captured
+inside its users' factories (so it ships by value with them):
+
+- `_make_png_writer` — the PNG writer (signature, CRC'd chunks, IHDR,
+  extra chunks, zlib IDAT, IEND) and the forward scanline filter
+  (None/Sub/Up/Average/Paeth at a byte offset); every PNG encoder
+  writes through it;
+- `_make_wav_container` — the PCM WAV writer (8/16/24/32-bit) and the
+  RIFF/WAVE chunk walk that `wav_pcm_stats`, `media_meta` and the WAV
+  codec read through, each with its own acceptance rule;
+- `_make_pixel_decoder` — ``decode_pixels(b)``: PNG, JPEG, the first
+  GIF frame or an uncompressed 8-bit TIFF strip as an array, the one
+  dispatch of `image_dhash` and `png_thumbnails`.
+
 The module also ships deterministic generators (stdlib struct/zlib
 only) that build REAL containers: decodable PNGs (valid zlib IDAT,
-correct CRCs), ENTROPY-CODED baseline JPEGs (r8 — in-file Huffman
-tables, decodable pixels), complete PCM WAVs, and spec-shaped minimal
-MP4s.  The x_media_* oracle keys synthesize payloads from doc_id
-arithmetic and value-check every parsed field — including every
-decoded JPEG pixel — against the same arithmetic in DuckDB.
+correct CRCs), ENTROPY-CODED baseline JPEGs (in-file Huffman tables,
+decodable pixels), complete PCM WAVs, and spec-shaped minimal MP4s.
+The x_media_* oracle keys synthesize payloads from doc_id arithmetic
+and value-check every parsed field — including every decoded JPEG
+pixel — against the same arithmetic in DuckDB.
 """
 
 from __future__ import annotations
@@ -173,26 +184,93 @@ def _payload_rows(df: DataFrame, rows, schema: str) -> DataFrame:
 # deterministic container generators (stdlib only, workers-safe)    #
 # ---------------------------------------------------------------- #
 
-def png_bytes(w: int, h: int) -> bytes:
-    """A real, decodable grayscale PNG of zeros: signature + IHDR +
-    zlib IDAT + IEND, all CRCs correct."""
+def _make_png_writer():
+    """Factory returning (write, scanlines), the one PNG container
+    writer and the one forward scanline filter every PNG encoder in
+    this module uses (captured by value in each user's factory).
+
+    ``write(w, h, depth, colortype, idat, extra=(), interlace=0)``
+    emits the signature, IHDR, the ``extra`` (tag, data) chunks
+    (PLTE, tEXt/zTXt/iTXt ...), one zlib IDAT and IEND, every chunk
+    length-prefixed and CRC'd.  ``scanlines(rows, bpp, period=1)``
+    forward-filters raw byte rows into an IDAT body: row r gets filter
+    r % period (0 None, 1 Sub, 2 Up, 3 Average, 4 Paeth) with the left
+    neighbour ``bpp`` bytes back and the row above starting at zeros
+    (one call per Adam7 pass: filters reset per pass)."""
     import struct
     import zlib
 
     def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
+        return (struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
+    def write(w: int, h: int, depth: int, colortype: int, idat: bytes,
+              extra=(), interlace: int = 0) -> bytes:
+        ihdr = struct.pack(">IIBBBBB", w, h, depth, colortype, 0, 0,
+                           interlace)
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + b"".join(chunk(tag, data) for tag, data in extra)
+                + chunk(b"IDAT", zlib.compress(idat))
+                + chunk(b"IEND", b""))
+
+    def scanlines(rows, bpp: int, period: int = 1) -> bytes:
+        lines = []
+        prev = None
+        for r, raw in enumerate(rows):
+            f = r % period
+            if prev is None:
+                prev = [0] * len(raw)
+            filt = raw
+            if f:
+                filt = []
+                for i, x in enumerate(raw):
+                    a = raw[i - bpp] if i >= bpp else 0
+                    b = prev[i]
+                    if f == 1:
+                        pred = a
+                    elif f == 2:
+                        pred = b
+                    elif f == 3:
+                        pred = (a + b) // 2
+                    else:
+                        c = prev[i - bpp] if i >= bpp else 0
+                        p = a + b - c
+                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                        pred = a if (pa <= pb and pa <= pc) else (
+                            b if pb <= pc else c)
+                    filt.append((x - pred) & 0xFF)
+            lines.append(bytes([f]) + bytes(filt))
+            prev = raw
+        return b"".join(lines)
+
+    return write, scanlines
+
+
+def _make_png_gray_gen():
+    """Factory returning (png_bytes, png_bytes_pattern), the two
+    8-bit grayscale fixture PNGs (by-value pickling, see
+    _make_mp4_gen)."""
+    write, scanlines = _make_png_writer()
+
+    def png_bytes(w: int, h: int) -> bytes:
+        """A real, decodable grayscale PNG of zeros: signature + IHDR +
+        zlib IDAT + IEND, all CRCs correct."""
+        return write(w, h, 8, 0, scanlines([bytes(w)] * h, 1))
+
+    def png_bytes_pattern(w: int, h: int, seed: int) -> bytes:
+        """A real grayscale PNG whose pixel (r, c) = (seed + 7r + 13c)
+        % 256, scanlines alternating filter 0 (None) on even rows and
+        filter 1 (Sub) on odd rows — so a decoder must run the actual
+        PNG reconstruction algorithm, not just strip filter bytes."""
+        rows = [bytes((seed + 7 * r + 13 * c) % 256 for c in range(w))
+                for r in range(h)]
+        return write(w, h, 8, 0, scanlines(rows, 1, 2))
+
+    return png_bytes, png_bytes_pattern
+
+
+#: the grayscale PNG generators (factory-made; importable for tests)
+png_bytes, png_bytes_pattern = _make_png_gray_gen()
 
 
 def jpeg_bytes(w: int, h: int) -> bytes:
@@ -213,73 +291,68 @@ def jpeg_bytes(w: int, h: int) -> bytes:
     return soi + app0 + sof0 + b"\xff\xd9"
 
 
-def wav_bytes(sample_rate: int, channels: int, n_samples: int) -> bytes:
-    """A complete 16-bit PCM WAV of silence: RIFF + fmt + data."""
+def _make_wav_container():
+    """Factory returning (write, walk), the one PCM WAV writer and the
+    one RIFF/WAVE chunk walk (by-value pickling, see _make_mp4_gen).
+
+    ``write(rate, ch, bits, data)`` emits RIFF + a 16-byte PCM ``fmt ``
+    chunk + a ``data`` chunk carrying ``data`` as given (no pad byte).
+    ``walk(b)`` returns (channels, rate, bits, data_size, data) from
+    the last ``fmt `` and ``data`` chunks (None where absent; chunks
+    advance by size plus the RIFF pad byte of odd sizes), or None for a
+    payload that is not RIFF/WAVE.  Each reader keeps its own
+    acceptance rule on those fields."""
     import struct
 
-    bits = 16
-    data = bytes(n_samples * channels * (bits // 8))
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * bits // 8, channels * bits // 8, bits,
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    def write(rate: int, ch: int, bits: int, data: bytes) -> bytes:
+        fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * bits // 8,
+                          ch * bits // 8, bits)
+        body = (b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
+                + b"data" + struct.pack("<I", len(data)) + data)
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+
+    def walk(b: bytes):
+        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            return None
+        ch = rate = bits = data_size = data = None
+        pos = 12
+        while pos + 8 <= len(b):
+            tag = b[pos : pos + 4]
+            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
+            if tag == b"fmt " and pos + 24 <= len(b):
+                _, ch, rate, _, _, bits = struct.unpack(
+                    "<HHIIHH", b[pos + 8 : pos + 24])
+            elif tag == b"data":
+                data_size, data = size, b[pos + 8 : pos + 8 + size]
+            pos += 8 + size + (size & 1)
+        return ch, rate, bits, data_size, data
+
+    return write, walk
 
 
-def png_bytes_pattern(w: int, h: int, seed: int) -> bytes:
-    """A real grayscale PNG whose pixel (r, c) = (seed + 7r + 13c) % 256,
-    scanlines alternating filter 0 (None) on even rows and filter 1
-    (Sub) on odd rows — so a decoder must run the actual PNG
-    reconstruction algorithm, not just strip filter bytes."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    lines = []
-    for r in range(h):
-        raw = bytes((seed + 7 * r + 13 * c) % 256 for c in range(w))
-        if r % 2 == 0:
-            lines.append(b"\x00" + raw)
-        else:  # Sub filter: filt[c] = raw[c] - raw[c-1] (mod 256)
-            prev = 0
-            filt = bytearray()
-            for b in raw:
-                filt.append((b - prev) & 0xFF)
-                prev = b
-            lines.append(b"\x01" + bytes(filt))
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def wav_pcm_bytes(sample_rate: int, samples: list[int], channels: int = 1) -> bytes:
-    """A complete 16-bit PCM WAV carrying the given signed samples."""
+def _make_wav_gens():
+    """Factory returning (wav_bytes, wav_pcm_bytes), the 16-bit PCM
+    fixture WAVs (by-value pickling, see _make_mp4_gen)."""
     import struct
 
-    bits = 16
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * bits // 8, channels * bits // 8, bits,
-    )
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    write, _ = _make_wav_container()
+
+    def wav_bytes(sample_rate: int, channels: int, n_samples: int) -> bytes:
+        """A complete 16-bit PCM WAV of silence: RIFF + fmt + data."""
+        return write(sample_rate, channels, 16,
+                     bytes(n_samples * channels * 2))
+
+    def wav_pcm_bytes(sample_rate: int, samples: list[int],
+                      channels: int = 1) -> bytes:
+        """A complete 16-bit PCM WAV carrying the given signed samples."""
+        return write(sample_rate, channels, 16,
+                     struct.pack(f"<{len(samples)}h", *samples))
+
+    return wav_bytes, wav_pcm_bytes
+
+
+#: the 16-bit PCM WAV generators (factory-made; importable for tests)
+wav_bytes, wav_pcm_bytes = _make_wav_gens()
 
 
 def _make_jpeg_gen():
@@ -1679,10 +1752,8 @@ PNG_PIXEL_SCHEMA = (
 
 def _make_png_codec():
     """Factory returning (decode, encode) for PNG — grayscale,
-    gray+alpha, truecolor RGB, and RGBA (color types 0/4/2/6; r9 —
-    real-crawl PNGs are mostly truecolor, the r8 codec was
-    grayscale-only) at 8-bit AND 16-bit sample depth (r9: the last PNG
-    form; scientific/scanner imagery in crawls is 16-bit).  decode
+    gray+alpha, truecolor RGB, RGBA and palette (color types
+    0/4/2/6/3) at every legal sample depth.  decode
     runs the full spec reconstruction (zlib IDAT + all five scanline
     filters AT THE CORRECT bpp OFFSET — the Sub/Average/Paeth 'left'
     neighbor is the byte one PIXEL back, not one byte; at depth 16
@@ -1690,16 +1761,18 @@ def _make_png_codec():
     big-endian pair combine, per spec — AND Adam7 interlacing: seven
     independently-filtered passes scattered onto their grids) and
     returns an (h, w) or (h, w, ch) uint8 (depth 8) or uint16
-    (depth 16) array, or None.  encode writes filter-0 scanlines with
-    a zlib IDAT and correct CRCs for 2-D gray or 3-D 2/3/4-channel
+    (depth 16) array, or None.  encode writes filter-0 scanlines
+    through the shared PNG writer for 2-D gray or 3-D 2/3/4-channel
     arrays — uint16 input emits a real 16-bit big-endian PNG.  Shared
-    by png_pixel_stats, png_thumbnails, and image_dhash so every
-    chain is one implementation."""
+    by png_pixel_stats, the pixel dispatch (png_thumbnails,
+    image_dhash) and the PNG fixtures so every chain is one
+    implementation."""
     import struct
     import zlib
 
     import numpy as np
 
+    write, scanlines = _make_png_writer()
     CH = {0: 1, 4: 2, 2: 3, 6: 4}
     CT = {1: 0, 2: 4, 3: 2, 4: 6}
 
@@ -1759,12 +1832,10 @@ def _make_png_codec():
             return None
         w, h = struct.unpack(">II", b[16:24])
         if w == 0 or h == 0:
-            return None  # spec: IHDR width/height MUST be nonzero;
-            # a 0-dim image would hand zero-size arrays to stats
-            # min()/max() downstream (ADVICE r9)
+            return None  # spec: IHDR width/height MUST be nonzero
         bitdepth, colortype = b[24], b[25]
         interlace = b[28]
-        # palette (type 3, r9): indices reconstruct as a 1-channel
+        # palette (type 3): indices reconstruct as a 1-channel
         # plane, then map through PLTE to RGB
         ch = 1 if colortype == 3 else CH.get(colortype)
         if bitdepth not in (1, 2, 4, 8, 16) or ch is None \
@@ -1868,7 +1939,7 @@ def _make_png_codec():
             if colortype == 3:
                 return _palettize(out)
             return out if ch == 1 else out.reshape(h, w, ch)
-        # Adam7 (r9): seven independently-filtered passes, each a
+        # Adam7: seven independently-filtered passes, each a
         # sub-image scattered onto its (y0::ys, x0::xs) grid
         full = np.zeros(
             (h, w, ch), dtype=np.uint16 if nb == 2 else np.uint8
@@ -1899,27 +1970,11 @@ def _make_png_codec():
             ch = 1
         else:
             h, w, ch = px.shape
-        colortype = CT[ch]
-
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-            )
-
         depth = 16 if px.dtype == np.uint16 else 8
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, colortype, 0, 0, 0)
-        rows = px.reshape(h, w * ch)
-        raw = b"".join(
-            b"\x00" + rows[r].astype(
-                ">u2" if depth == 16 else np.uint8
-            ).tobytes()
-            for r in range(h)
-        )
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-        )
+        rows = px.reshape(h, w * ch).astype(
+            ">u2" if depth == 16 else np.uint8)
+        return write(w, h, depth, CT[ch],
+                     scanlines([row.tobytes() for row in rows], 1))
 
     return decode, encode
 
@@ -3400,105 +3455,18 @@ def _make_png_color_gen():
     ALL FIVE spec filters by row (r % 5) at the 3-byte pixel offset —
     so a decoder must run the full color reconstruction, left
     neighbors one PIXEL (not one byte) back."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+    write, scanlines = _make_png_writer()
 
     def png_color(w: int, h: int, seed: int) -> bytes:
-        bpp = 3
-        wb = w * bpp
-        lines = []
-        prev = [0] * wb
-        for r in range(h):
-            raw = [(seed + 7 * r + 13 * (i // bpp) + 89 * (i % bpp))
-                   % 256 for i in range(wb)]
-            f = r % 5
-            if f == 0:
-                filt = list(raw)
-            elif f == 1:  # Sub
-                filt = [(raw[i] - (raw[i - bpp] if i >= bpp else 0))
-                        & 0xFF for i in range(wb)]
-            elif f == 2:  # Up
-                filt = [(raw[i] - prev[i]) & 0xFF for i in range(wb)]
-            elif f == 3:  # Average
-                filt = [
-                    (raw[i] - (((raw[i - bpp] if i >= bpp else 0)
-                                + prev[i]) // 2)) & 0xFF
-                    for i in range(wb)
-                ]
-            else:  # Paeth
-                filt = []
-                for i in range(wb):
-                    a = raw[i - bpp] if i >= bpp else 0
-                    b2 = prev[i]
-                    c2 = prev[i - bpp] if i >= bpp else 0
-                    p = a + b2 - c2
-                    pa, pb, pc = abs(p - a), abs(p - b2), abs(p - c2)
-                    pred = a if (pa <= pb and pa <= pc) else (
-                        b2 if pb <= pc else c2)
-                    filt.append((raw[i] - pred) & 0xFF)
-            lines.append(bytes([f]) + bytes(filt))
-            prev = raw
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
+        rows = [[(seed + 7 * r + 13 * (i // 3) + 89 * (i % 3)) % 256
+                 for i in range(3 * w)] for r in range(h)]
+        return write(w, h, 8, 2, scanlines(rows, 3, 5))
 
     return png_color
 
 
 #: the truecolor PNG generator (factory-made; importable for tests)
 png_color_bytes = _make_png_color_gen()
-
-
-def _make_png_palette_gen():
-    """Factory returning the INDEXED (palette) PNG generator (by-value
-    pickling): PLTE entry p = ((3p+11)%256, (5p+29)%256, (7p+47)%256),
-    index(r, c) = (seed + 7r + 13c) % n_pal, the index plane filtered
-    with rotating None/Sub/Up filters at bpp=1.  Icons/logos in real
-    crawls are type-3 PNGs; a decoder reproduces the RGB values only
-    if reconstruction AND palette mapping are both right."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    def png_pal(w: int, h: int, seed: int, n_pal: int) -> bytes:
-        plte = b"".join(
-            bytes(((3 * p + 11) % 256, (5 * p + 29) % 256,
-                   (7 * p + 47) % 256))
-            for p in range(n_pal)
-        )
-        lines = []
-        prev = [0] * w
-        for r in range(h):
-            raw = [(seed + 7 * r + 13 * c) % n_pal for c in range(w)]
-            f = r % 3
-            if f == 0:
-                filt = list(raw)
-            elif f == 1:  # Sub
-                filt = [(raw[c] - (raw[c - 1] if c else 0)) & 0xFF
-                        for c in range(w)]
-            else:  # Up
-                filt = [(raw[c] - prev[c]) & 0xFF for c in range(w)]
-            lines.append(bytes([f]) + bytes(filt))
-            prev = raw
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"PLTE", plte)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
-
-    return png_pal
-
-
-#: the palette PNG generator (factory-made; importable for tests)
-png_palette_bytes = _make_png_palette_gen()
 
 
 def synth_png_palette_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3527,44 +3495,23 @@ def _make_png_adam7_gen():
     with rotating None/Sub/Up filters.  A decoder reproduces the
     png_color_bytes pixels only if its pass geometry, per-pass filter
     resets, and scatter grid are all spec-faithful."""
-    import struct
-    import zlib
+    write, scanlines = _make_png_writer()
 
     ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
 
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
     def png_adam7(w: int, h: int, seed: int) -> bytes:
-        bpp = 3
-        lines = []
+        idat = b""
         for x0, y0, xs, ys in ADAM7:
             pw = (w - x0 + xs - 1) // xs
             ph = (h - y0 + ys - 1) // ys
             if pw <= 0 or ph <= 0:
                 continue
-            wb = pw * bpp
-            prev = [0] * wb
-            for pr in range(ph):
-                r = y0 + pr * ys
-                raw = [(seed + 7 * r + 13 * (x0 + (i // bpp) * xs)
-                        + 89 * (i % bpp)) % 256 for i in range(wb)]
-                f = pr % 3
-                if f == 0:
-                    filt = list(raw)
-                elif f == 1:  # Sub
-                    filt = [(raw[i] - (raw[i - bpp] if i >= bpp else 0))
-                            & 0xFF for i in range(wb)]
-                else:  # Up (resets per pass: prev starts at zeros)
-                    filt = [(raw[i] - prev[i]) & 0xFF for i in range(wb)]
-                lines.append(bytes([f]) + bytes(filt))
-                prev = raw
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)  # interlace
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
+            rows = [[(seed + 7 * (y0 + pr * ys)
+                      + 13 * (x0 + (i // 3) * xs) + 89 * (i % 3)) % 256
+                     for i in range(3 * pw)] for pr in range(ph)]
+            idat += scanlines(rows, 3, 3)
+        return write(w, h, 8, 2, idat, interlace=1)
 
     return png_adam7
 
@@ -3619,58 +3566,18 @@ def _make_png16_gen():
     pixel offset — so a decoder must filter on BYTES (not samples)
     with the left neighbor one full 16-bit pixel back, then combine
     pairs.  Gray (ch=1) and RGB (ch=3) variants."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+    write, scanlines = _make_png_writer()
 
     def png16(w: int, h: int, seed: int, ch: int = 3) -> bytes:
         bpp = ch * 2
-        wb = w * bpp
-        colortype = {1: 0, 3: 2}[ch]
 
         def byte_at(r: int, i: int) -> int:
             v = (seed * 257 + 131 * r + 241 * (i // bpp)
                  + 7919 * ((i % bpp) // 2)) % 65536
             return (v >> 8) & 0xFF if i % 2 == 0 else v & 0xFF
 
-        lines = []
-        prev = [0] * wb
-        for r in range(h):
-            raw = [byte_at(r, i) for i in range(wb)]
-            f = r % 5
-            if f == 0:
-                filt = list(raw)
-            elif f == 1:  # Sub
-                filt = [(raw[i] - (raw[i - bpp] if i >= bpp else 0))
-                        & 0xFF for i in range(wb)]
-            elif f == 2:  # Up
-                filt = [(raw[i] - prev[i]) & 0xFF for i in range(wb)]
-            elif f == 3:  # Average
-                filt = [
-                    (raw[i] - (((raw[i - bpp] if i >= bpp else 0)
-                                + prev[i]) // 2)) & 0xFF
-                    for i in range(wb)
-                ]
-            else:  # Paeth
-                filt = []
-                for i in range(wb):
-                    a = raw[i - bpp] if i >= bpp else 0
-                    b2 = prev[i]
-                    c2 = prev[i - bpp] if i >= bpp else 0
-                    p = a + b2 - c2
-                    pa, pb, pc = abs(p - a), abs(p - b2), abs(p - c2)
-                    pred = a if (pa <= pb and pa <= pc) else (
-                        b2 if pb <= pc else c2)
-                    filt.append((raw[i] - pred) & 0xFF)
-            lines.append(bytes([f]) + bytes(filt))
-            prev = raw
-        ihdr = struct.pack(">IIBBBBB", w, h, 16, colortype, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
+        rows = [[byte_at(r, i) for i in range(w * bpp)] for r in range(h)]
+        return write(w, h, 16, {1: 0, 3: 2}[ch], scanlines(rows, bpp, 5))
 
     return png16
 
@@ -3700,18 +3607,16 @@ def synth_png16_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def _make_png_sub_gen():
-    """Factory returning the SUB-BYTE PNG generator (by-value
-    pickling): depth-1/2/4 grayscale or palette — sample (r, c) =
-    (seed + 7r + 13c) % n_vals packed MSB-first into
-    ceil(w·d/8)-byte scanlines, filters rotating None/Sub/Up at the
-    1-byte offset the spec mandates for sub-byte pixels.  Icons and
-    fax-style scans in crawls use these forms."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+    """Factory returning (png_sub, png_pal), the SUB-BYTE and INDEXED
+    PNG generators (by-value pickling): depth-1/2/4/8 grayscale or
+    palette — sample (r, c) = (seed + 7r + 13c) % n_vals packed
+    MSB-first into ceil(w·d/8)-byte scanlines, filters rotating
+    None/Sub/Up at the 1-byte offset the spec mandates for sub-byte
+    pixels; PLTE entry p = ((3p+11)%256, (5p+29)%256, (7p+47)%256).
+    ``png_pal(w, h, seed, n_pal)`` is the 8-bit palette form: icons
+    and logos in real crawls are type-3 PNGs, and fax-style scans use
+    the sub-byte forms."""
+    write, scanlines = _make_png_writer()
 
     def png_sub(w: int, h: int, seed: int, depth: int,
                 n_pal: int = 0) -> bytes:
@@ -3720,8 +3625,7 @@ def _make_png_sub_gen():
         n_vals = n_pal if n_pal else (1 << depth)
         per = 8 // depth
         wb = (w * depth + 7) // 8
-        lines = []
-        prev = [0] * wb
+        rows = []
         for r in range(h):
             samples = [(seed + 7 * r + 13 * c) % n_vals
                        for c in range(w)]
@@ -3733,33 +3637,24 @@ def _make_png_sub_gen():
                     v = samples[c] if c < w else 0
                     byte |= v << (8 - depth * (j + 1))
                 raw.append(byte)
-            f = r % 3
-            if f == 0:
-                filt = list(raw)
-            elif f == 1:  # Sub at the 1-byte offset
-                filt = [(raw[i] - (raw[i - 1] if i else 0)) & 0xFF
-                        for i in range(wb)]
-            else:  # Up
-                filt = [(raw[i] - prev[i]) & 0xFF for i in range(wb)]
-            lines.append(bytes([f]) + bytes(filt))
-            prev = raw
-        colortype = 3 if n_pal else 0
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, colortype, 0, 0, 0)
-        out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            rows.append(raw)
+        extra = []
         if n_pal:
-            plte = b"".join(
+            extra.append((b"PLTE", b"".join(
                 bytes(((3 * p + 11) % 256, (5 * p + 29) % 256,
                        (7 * p + 47) % 256))
-                for p in range(n_pal))
-            out += chunk(b"PLTE", plte)
-        return (out + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
+                for p in range(n_pal))))
+        return write(w, h, depth, 3 if n_pal else 0,
+                     scanlines(rows, 1, 3), extra)
 
-    return png_sub
+    def png_pal(w: int, h: int, seed: int, n_pal: int) -> bytes:
+        return png_sub(w, h, seed, 8, n_pal)
+
+    return png_sub, png_pal
 
 
-#: the sub-byte PNG generator (factory-made; importable for tests)
-png_sub_bytes = _make_png_sub_gen()
+#: the sub-byte and palette PNG generators (factory-made; importable)
+png_sub_bytes, png_palette_bytes = _make_png_sub_gen()
 
 
 def synth_png_sub_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3849,8 +3744,7 @@ def wav_pcm_stats(df: DataFrame, clip_at: int = 32767) -> DataFrame:
     """REAL PCM sample decode: walk the RIFF chunks, decode the data
     chunk at its DECLARED bit depth — 8-bit unsigned (offset-128, per
     the WAV spec), 16/32-bit signed LE, and 24-bit signed LE packed
-    3-byte samples (r10: real-world WAVs span all four; a 16-bit-only
-    reader mis-sizes everything else) — and emit exact integer signal
+    3-byte samples — and emit exact integer signal
     stats: peak |amplitude|, total |amplitude| (the integer stand-in
     for RMS: hash-stable where sqrt is not), and the clipped-sample
     count.  ``clip_at`` is expressed in 16-bit full-scale units and
@@ -3860,25 +3754,15 @@ def wav_pcm_stats(df: DataFrame, clip_at: int = 32767) -> DataFrame:
     samples is an honest NULL.  Non-WAV payloads yield NULLs; one
     Arrow pass."""
 
-    import struct
-
     import numpy as np
 
+    _, walk = _make_wav_container()
+
     def stats(b: bytes):
-        b = bytes(b) if b is not None else b""
-        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        got = walk(bytes(b) if b is not None else b"")
+        if got is None:
             return (None,) * 4
-        bits = None
-        pos = 12
-        data = None
-        while pos + 8 <= len(b):
-            tag = b[pos : pos + 4]
-            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-            if tag == b"fmt " and pos + 24 <= len(b):
-                bits = struct.unpack("<H", b[pos + 22 : pos + 24])[0]
-            elif tag == b"data":
-                data = b[pos + 8 : pos + 8 + size]
-            pos += 8 + size + (size & 1)
+        _, _, bits, _, data = got
         if bits not in (8, 16, 24, 32) or data is None \
                 or len(data) % (bits // 8):
             return (None,) * 4
@@ -3907,7 +3791,7 @@ def wav_pcm_stats(df: DataFrame, clip_at: int = 32767) -> DataFrame:
 
 def synth_wav_depth_demo(docs: DataFrame,
                          id_col: str = "doc_id") -> DataFrame:
-    """Fixture for x_wav_pcm (r10 — depth legs): REAL RIFF/WAVE files
+    """Fixture for x_wav_pcm (depth legs): REAL RIFF/WAVE files
     at bit depth (8, 16, 24, 32)[id%4] with 40+(id%20) mono samples;
     sample j's 16-bit-scale value v16 = (id·31 + j·17) % 65536 − 32768
     stores at native depth (8-bit: (v16>>8)+128 unsigned offset per
@@ -3918,6 +3802,8 @@ def synth_wav_depth_demo(docs: DataFrame,
     that leg only exists where it can lie)."""
 
     import struct
+
+    write, _ = _make_wav_container()
 
     def one(i: int) -> bytes:
         bits = (8, 16, 24, 32)[i % 4]
@@ -3935,12 +3821,7 @@ def synth_wav_depth_demo(docs: DataFrame,
             data = b"".join(struct.pack("<i", v << 16) for v in v16)
         if i % 29 == 0 and bits != 8:
             data += b"\x00"  # stray byte: sample count lies
-        fmt = struct.pack("<HHIIHH", 1, 1, 16000,
-                          16000 * bits // 8, bits // 8, bits)
-        body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data)
-        return (b"RIFF" + struct.pack("<I", 4 + len(body))
-                + b"WAVE" + body)
+        return write(16000, 1, bits, data)
 
     return _synth(docs, id_col, one, spread=False)
 
@@ -3959,52 +3840,17 @@ def synth_pixel_media_demo(
     - odd ids → 16-bit PCM WAV: n = 40+(id%20) samples,
       sample(j) = ((id·31 + j·17) % 65536) − 32768, mono 8 kHz.
 
-    One Arrow pass; generators nested (pickled by value)."""
-
-    import struct
-    import zlib
-
-    def _png_pat(w: int, h: int, seed: int) -> bytes:
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-            )
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        lines = []
-        for r in range(h):
-            raw = bytes((seed + 7 * r + 13 * c) % 256 for c in range(w))
-            if r % 2 == 0:
-                lines.append(b"\x00" + raw)
-            else:
-                prev = 0
-                filt = bytearray()
-                for x in raw:
-                    filt.append((x - prev) & 0xFF)
-                    prev = x
-                lines.append(b"\x01" + bytes(filt))
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-            + chunk(b"IEND", b"")
-        )
-
-    def _wav_pcm(samples: list[int]) -> bytes:
-        data = struct.pack(f"<{len(samples)}h", *samples)
-        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+    One Arrow pass; the generators are factory products (pickled by
+    value)."""
+    _png_pat = png_bytes_pattern  # factory-made → ships by value
+    _wav_pcm = wav_pcm_bytes
 
     def one(i: int) -> bytes:
         if i % 2 == 0:
             return _png_pat(2 + i % 16, 1 + i % 8, i % 256)
         n = 40 + i % 20
         return _wav_pcm(
-            [((i * 31 + j * 17) % 65536) - 32768 for j in range(n)]
+            8000, [((i * 31 + j * 17) % 65536) - 32768 for j in range(n)]
         )
 
     return _synth(docs, id_col, one)
@@ -4015,8 +3861,7 @@ def synth_media_demo(
 ) -> DataFrame:
     """Deterministic mixed-media payload per document — the fixture the
     x_media_* oracle keys (and any pipeline demo) share.  doc_id % 5
-    picks the format (r8: the MP4 leg joins — a real multimodal crawl
-    is mostly video bytes); every parsed field is pure id arithmetic so
+    picks the format; every parsed field is pure id arithmetic so
     a SQL oracle can recompute it without touching bytes:
 
     - 0 → PNG,  width 1+(id%64), height 1+(id%32)
@@ -4028,63 +3873,31 @@ def synth_media_demo(
               isom/mp42/iso5 by id%3; an audio trak (rate
               8000+1000·(id%8), channels 1+(id%2), n_samples
               400+(id%600)) except when id%7=0 (video-only files exist
-              in every crawl); r8: a REAL video sample table — 8+(id%9)
+              in every crawl); a REAL video sample table — 8+(id%9)
               frames in the mdat, frame j sized 50+(id+13j)%40 with
               byte k = (id+31j+7k)%256, keyframes every 4th
     - 4 → 16 bytes of 0x00 (no known magic — the corrupt/unknown leg)
 
-    One Arrow pass; generators are stdlib-only and pickled by value
-    (the MP4 generator via its factory qualname — _make_mp4_gen)."""
-    _mp4 = mp4_bytes  # closure cellvars → cloudpickle ships them by value
-    _jpegfx = jpeg_fixture_bytes  # (factory qualnames force by-value)
-
-    import struct
-    import zlib
-
-    # nested copies of the module-level generators: a closure
-    # referencing module-level functions pickles BY REFERENCE and
-    # dies on workers that cannot import lwetl_spark (a session
-    # started outside the repo); nested fns ship by value
-    def _png(w: int, h: int) -> bytes:
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-            )
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-        )
-
-    def _wav(rate: int, ch: int, n: int) -> bytes:
-        bits = 16
-        data = bytes(n * ch * (bits // 8))
-        fmt = struct.pack(
-            "<HHIIHH", 1, ch, rate, rate * ch * bits // 8,
-            ch * bits // 8, bits,
-        )
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+    One Arrow pass; the generators are stdlib-only factory products,
+    pickled by value (see _make_mp4_gen)."""
+    _mp4 = mp4_bytes  # factory products ship by value
+    _jpegfx = jpeg_fixture_bytes
+    _png = png_bytes
+    _wav = wav_bytes
 
     def one(i: int) -> bytes:
         m = i % 5
         if m == 0:
             return _png(1 + i % 64, 1 + i % 32)
         if m == 1:
-            # r8: REAL entropy-coded baseline JPEG (decodable
+            # REAL entropy-coded baseline JPEG (decodable
             # pixels: block b has dc (i+17b)%112-56, ac (i+5b)%13)
             return _jpegfx(16 + i % 32, 16 + i % 16, i)
         if m == 2:
             return _wav(8000 + 1000 * (i % 8), 1 + i % 2, 64 + i % 50)
         if m == 3:
             audio = i % 7 != 0
-            # r8: a REAL sample table + mdat frames (frame j has
+            # a REAL sample table + mdat frames (frame j has
             # 50+(i+13j)%40 bytes, byte k = (i+31j+7k)%256,
             # keyframe every 4th) — x_mp4_frames value-checks the
             # recovered byte ranges against this arithmetic
@@ -4357,8 +4170,7 @@ def media_meta(df: DataFrame) -> DataFrame:
     sample-entry), PCM audio geometry (WAV RIFF chunk walk;
     duration_ms = 1000·n_samples div rate, exact integer), MP4
     (ISO-BMFF) box-tree census (mvhd duration, video dims, audio
-    geometry — r8, VERDICT r7 #1: video was the last container family
-    with no walk), and structural validity (PNG signature+IEND
+    geometry), and structural validity (PNG signature+IEND
     trailer; JPEG SOI…EOI; WAV RIFF size consistency; MP4 box sizes
     consuming their scopes exactly).  Unknown or corrupt payloads come
     back (fmt='unknown', valid=false, NULL fields) instead of failing
@@ -4375,6 +4187,7 @@ def media_meta(df: DataFrame) -> DataFrame:
     ogg_walk = _make_ogg_walker()
     tiff_walk = _make_tiff_walker()
     avi_walk = _make_avi_walker()
+    _, wav_walk = _make_wav_container()
 
     import struct
 
@@ -4401,38 +4214,24 @@ def media_meta(df: DataFrame) -> DataFrame:
             if marker in (0xC0, 0xC1, 0xC2, 0xC3) and pos + 9 <= len(b):
                 h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
             if marker == 0xDA:  # SOS: entropy-coded data follows —
-                break  # not segment-structured; stop the walk (r8)
+                break  # not segment-structured; stop the walk
             pos += 2 + seg_len
         valid = b.endswith(b"\xff\xd9") and w is not None
         return ("jpeg", w, h, None, None, None, None, valid)
 
     def wav(b: bytes):
-        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        got = wav_walk(b)
+        if got is None:
             return None
-        riff_size = struct.unpack("<I", b[4:8])[0]
-        ch = rate = bits = data_size = None
-        pos = 12
-        while pos + 8 <= len(b):
-            tag = b[pos : pos + 4]
-            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-            if tag == b"fmt " and pos + 24 <= len(b):
-                _, ch, rate, _, _, bits = struct.unpack(
-                    "<HHIIHH", b[pos + 8 : pos + 24]
-                )
-            elif tag == b"data":
-                data_size = size
-            pos += 8 + size + (size & 1)
+        ch, rate, bits, data_size, _ = got
         if not (ch and rate and bits and data_size is not None):
             return None
         if bits < 8 or bits % 8:
-            # sub-byte sample widths (IMA/ADPCM-style) exist in real
-            # crawls; bits//8 == 0 would ZeroDivisionError inside the
-            # Arrow batch (ADVICE r7) — report the container as wav
-            # but geometry unknown/invalid, mirroring wav_pcm_stats'
-            # bits != 16 early-out: one bad file never kills a task
+            # sub-byte (ADPCM-style) widths: bits//8 == 0 would divide
+            # by zero, so report the container with unknown geometry
             return ("wav", None, None, ch, rate, None, None, False)
         n = data_size // (ch * (bits // 8))
-        valid = riff_size == len(b) - 8
+        valid = struct.unpack("<I", b[4:8])[0] == len(b) - 8
         return ("wav", None, None, ch, rate, n, 1000 * n // rate, valid)
 
     def mp4(b: bytes):
@@ -4446,7 +4245,7 @@ def media_meta(df: DataFrame) -> DataFrame:
         )
 
     def mkv(b: bytes):
-        """Matroska/WebM EBML census (r9) — fmt follows DocType."""
+        """Matroska/WebM EBML census — fmt follows DocType."""
         got = mkv_walk(b)
         if got is None:
             return None
@@ -4458,7 +4257,7 @@ def media_meta(df: DataFrame) -> DataFrame:
         )
 
     def gif(b: bytes):
-        """GIF census (r9) — frames ride the n_samples slot."""
+        """GIF census — frames ride the n_samples slot."""
         got = gif_walk(b)
         if got is None:
             return None
@@ -4468,7 +4267,7 @@ def media_meta(df: DataFrame) -> DataFrame:
         )
 
     def bmp(b: bytes):
-        """BMP census (r9): fixed-offset BITMAPINFOHEADER; height
+        """BMP census: fixed-offset BITMAPINFOHEADER; height
         is signed (negative = top-down), dims reported absolute."""
         if len(b) < 54 or b[:2] != b"BM":
             return None
@@ -4479,7 +4278,7 @@ def media_meta(df: DataFrame) -> DataFrame:
                 declared == len(b) and wv > 0 and hv != 0)
 
     def webp(b: bytes):
-        """RIFF/WEBP chunk walk (r8): dims from whichever bitstream
+        """RIFF/WEBP chunk walk: dims from whichever bitstream
         variant leads — 'VP8 ' lossy keyframe header (start code
         0x9D012A, 14-bit LE dims), 'VP8L' lossless (0x2F + packed
         14+14-bit dims-1), 'VP8X' extended (24-bit canvas dims-1)."""
@@ -4510,7 +4309,7 @@ def media_meta(df: DataFrame) -> DataFrame:
         return ("webp", w, h, None, None, None, None, valid)
 
     def flac(b: bytes):
-        """FLAC census route (r9): STREAMINFO geometry."""
+        """FLAC census route: STREAMINFO geometry."""
         if b[:4] != b"fLaC":
             return None
         r = flac_walk(b)
@@ -4522,7 +4321,7 @@ def media_meta(df: DataFrame) -> DataFrame:
                 r["duration_ms"], r["valid"])
 
     def ogg(b: bytes):
-        """Ogg census route (r9): page walk + codec id header."""
+        """Ogg census route: page walk + codec id header."""
         if b[:4] != b"OggS":
             return None
         r = ogg_walk(b)
@@ -4534,7 +4333,7 @@ def media_meta(df: DataFrame) -> DataFrame:
                 r["valid"])
 
     def tif(b: bytes):
-        """TIFF census route (r9): first-page geometry from the
+        """TIFF census route: first-page geometry from the
         IFD chain (II and MM byte orders both occur)."""
         if b[:4] not in (b"II\x2a\x00", b"MM\x00\x2a"):
             return None
@@ -4547,7 +4346,7 @@ def media_meta(df: DataFrame) -> DataFrame:
                 None, None, r["valid"])
 
     def avi(b: bytes):
-        """AVI census route (r9): avih geometry + duration."""
+        """AVI census route: avih geometry + duration."""
         if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
             return None
         r = avi_walk(b)
@@ -5566,7 +5365,7 @@ def image_captions(df: DataFrame) -> DataFrame:
 
 def synth_image_caption_demo(docs: DataFrame,
                              id_col: str = "doc_id") -> DataFrame:
-    """Fixture for x_img_captions (r10): even ids are REAL PNGs with a
+    """Fixture for x_img_captions: even ids are REAL PNGs with a
     tEXt Title 'Img title {i}', a zTXt Description
     'Compressed desc {i}' (genuine zlib stream), and an iTXt Comment
     carrying UTF-8 'Unicode caption {i} é' — zlib-compressed when
@@ -5579,19 +5378,7 @@ def synth_image_caption_demo(docs: DataFrame,
     import struct
     import zlib
 
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I",
-                              zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    def _pngbase(w: int, h: int) -> bytes:
-        # nested by-value copy of png_bytes (module-level defs
-        # pickle by reference and die on import-less workers)
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b""))
+    write, scanlines = _make_png_writer()
 
     def one(i: int) -> bytes:
         if i % 2 == 1:
@@ -5600,7 +5387,6 @@ def synth_image_caption_demo(docs: DataFrame,
             seg = (b"\xff\xfe" + struct.pack(">H", len(com) + 2)
                    + com)
             return base[:2] + seg + base[2:]
-        base = _pngbase(8, 8)
         zdata = ("Compressed desc %d" % i).encode("latin-1")
         z = zlib.compress(zdata)
         if i % 23 == 0:
@@ -5611,24 +5397,64 @@ def synth_image_caption_demo(docs: DataFrame,
                 + zlib.compress(itxt)
         else:
             body = b"Comment\x00\x00\x00en\x00\x00" + itxt
-        chunks = (
-            chunk(b"tEXt", b"Title\x00"
-                  + ("Img title %d" % i).encode("latin-1"))
-            + chunk(b"zTXt", b"Description\x00\x00" + z)
-            + chunk(b"iTXt", body)
-        )
-        ihdr_end = 33  # signature(8) + IHDR chunk(25)
-        return base[:ihdr_end] + chunks + base[ihdr_end:]
+        return write(8, 8, 8, 0, scanlines([bytes(8)] * 8, 1), [
+            (b"tEXt",
+             b"Title\x00" + ("Img title %d" % i).encode("latin-1")),
+            (b"zTXt", b"Description\x00\x00" + z),
+            (b"iTXt", body),
+        ])
 
     return _synth(docs, id_col, one, spread=False)
 
 
+def _make_pixel_decoder():
+    """Factory returning decode_pixels(b): the decoded pixel array of
+    a PNG (the shared codec), a JPEG, the first GIF frame, or the first
+    page of an uncompressed 8-bit TIFF strip — (h, w) or (h, w, ch) —
+    or None for anything else or undecodable.  The one pixel-decode
+    dispatch of `image_dhash` and `png_thumbnails`."""
+    png_decode, _ = _make_png_codec()
+    jdec = _make_jpeg_decoder()
+    gdec = _make_gif_pixel_decoder()
+    twalk = _make_tiff_walker()
+
+    import numpy as np
+
+    def decode_pixels(b: bytes):
+        b = bytes(b) if b is not None else b""
+        if b[:8] == b"\x89PNG\r\n\x1a\n":
+            return png_decode(b)
+        if b[:3] == b"\xff\xd8\xff":
+            return jdec(b)
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            g = gdec(b)
+            return g["frames"][0] if g else None
+        if b[:4] not in (b"II\x2a\x00", b"MM\x00\x2a"):
+            return None
+        t = twalk(b)
+        if not (t and t["pages"] and t["valid"]):
+            return None
+        p0 = t["pages"][0]
+        soff, slen = p0.get("strip_off"), p0.get("strip_len")
+        w0, h0 = p0["width"], p0["height"]
+        if (p0["compression"] != 1 or p0["bits"] != 8 or soff is None
+                or slen is None or slen != (w0 or 0) * (h0 or 0)
+                or soff + slen > len(b)):
+            return None
+        return np.frombuffer(b[soff : soff + slen],
+                             dtype=np.uint8).reshape(h0, w0)
+
+    return decode_pixels
+
+
 def image_dhash(df: DataFrame) -> DataFrame:
-    """Perceptual difference-hash for image payloads (r9) — the
+    """Perceptual difference-hash for image payloads — the
     image-side near-dup fingerprint every multimodal dedup pipeline
-    runs before any learned embedding: decode (PNG via the shared
-    five-filter codec; JPEG via the baseline decoder, RGB reduced to
-    integer Rec.601 luma (299R+587G+114B)//1000), nearest-neighbor
+    runs before any learned embedding: decode through the shared
+    pixel dispatch (PNG, JPEG, the first GIF frame, an uncompressed
+    TIFF strip — so a logo re-exported gif→png→jpeg lands in one
+    near-dup bucket), reduce color to integer Rec.601 luma
+    (299R+587G+114B)//1000, nearest-neighbor
     resample to the canonical 8×9 grid (src index = (dst·src_dim) div
     dst_dim — exact integer math), then 64 horizontal gradient bits
     (p[r][c] > p[r][c+1]) packed row-major and emitted as a 16-hex
@@ -5637,43 +5463,13 @@ def image_dhash(df: DataFrame) -> DataFrame:
     gradient-based, so global brightness shifts preserve it.
     Undecodable payloads yield (NULL, ok=false) — one bad file never
     kills a batch.  One zero-shuffle Arrow pass; downstream grouping /
-    hamming banding exchanges (doc_id, 16-char string) rows only.
-
-    r9: GIF (first frame via the LZW decoder) and uncompressed-strip
-    TIFF (first page) route too, so perceptual dedup covers every
-    format the engine decodes — a logo re-exported gif→png→jpeg lands
-    in one near-dup bucket."""
-    png_decode, _ = _make_png_codec()
-    jdec = _make_jpeg_decoder()
-    gdec = _make_gif_pixel_decoder()
-    twalk = _make_tiff_walker()
+    hamming banding exchanges (doc_id, 16-char string) rows only."""
+    decode_pixels = _make_pixel_decoder()
 
     import numpy as np
 
     def one(b: bytes):
-        b = bytes(b) if b is not None else b""
-        px = None
-        if b[:8] == b"\x89PNG\r\n\x1a\n":
-            px = png_decode(b)
-        elif b[:3] == b"\xff\xd8\xff":
-            px = jdec(b)
-        elif b[:6] in (b"GIF87a", b"GIF89a"):
-            g = gdec(b)
-            px = g["frames"][0] if g else None
-        elif b[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-            t = twalk(b)
-            px = None
-            if t and t["pages"] and t["valid"]:
-                p0 = t["pages"][0]
-                soff, slen = p0.get("strip_off"), p0.get("strip_len")
-                w0, h0 = p0["width"], p0["height"]
-                if (p0["compression"] == 1 and p0["bits"] == 8
-                        and soff is not None and slen is not None
-                        and slen == (w0 or 0) * (h0 or 0)
-                        and soff + slen <= len(b)):
-                    px = np.frombuffer(
-                        b[soff : soff + slen], dtype=np.uint8
-                    ).reshape(h0, w0)
+        px = decode_pixels(b)
         if px is not None and px.ndim == 3:
             # any color/alpha decode reduces to integer Rec.601
             # luma (cast first: PNG arrays are uint8)
@@ -5831,7 +5627,7 @@ def synth_dhash_neardup_demo(docs: DataFrame,
 
 
 def synth_image_dup_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture for x_image_dhash (r9): PNG content depends only on
+    """Fixture for x_image_dhash: PNG content depends only on
     seed s = id % 32 (dims 8+4·(s%5) × 8+4·(s%3), pixel (r,c) =
     (s + 7r + 13c) % 256 with alternating None/Sub filters), so ids
     congruent mod 32 are image-duplicates the dhash must collide on.
@@ -5840,34 +5636,7 @@ def synth_image_dup_demo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     TOLERATED by the chunk walk, so it wouldn't corrupt) →
     ok=false."""
 
-    import struct
-    import zlib
-
-    def _png_pat(w: int, h: int, seed: int) -> bytes:
-        # nested by-value copy of png_bytes_pattern (module-level
-        # defs pickle by reference and die on import-less workers)
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(
-                        ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        lines = []
-        for r in range(h):
-            raw = bytes((seed + 7 * r + 13 * c) % 256
-                        for c in range(w))
-            if r % 2 == 0:
-                lines.append(b"\x00" + raw)
-            else:
-                prev = 0
-                filt = bytearray()
-                for v in raw:
-                    filt.append((v - prev) & 0xFF)
-                    prev = v
-                lines.append(b"\x01" + bytes(filt))
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-                + chunk(b"IEND", b""))
+    _png_pat = png_bytes_pattern  # factory-made → ships by value
 
     def one(i: int) -> bytes:
         s = i % 32
@@ -5944,25 +5713,20 @@ THUMB_SCHEMA = "doc_id long, width int, height int, thumb binary, ok boolean"
 
 
 def png_thumbnails(df: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
-    """REAL image resize for PNG payloads (r8 — retires the byte-sample
-    `resize_images` stub for the format the codec decodes): full PNG
-    decode (five-filter reconstruction), nearest-neighbor resample
+    """REAL image resize for image payloads: decode through the
+    shared pixel dispatch (PNG, JPEG, the first GIF frame, an
+    uncompressed TIFF strip), nearest-neighbor resample
     (src index = floor(dst·src_dim / dst_dim) — exact integer math a
     SQL oracle replays), and re-encode as a REAL any-viewer-decodable
     PNG.  Output thumbnails are constant-dimension, so downstream
     stages (thumb-digest dedup, embedding extraction) plan for fixed
     row width regardless of source size.  Undecodable payloads yield
-    (thumb NULL, ok=false); one zero-shuffle Arrow pass.
-
-    r9: JPEG (baseline+progressive), GIF (first frame), and
-    uncompressed-strip TIFF route through the same resample —
-    thumbnails re-encode as PNG whatever the source, so downstream
-    stages see ONE format.  Other formats keep the generic
-    byte-sample fallback (`streaming/multimodal.resize_images`)."""
-    png_decode, png_encode = _make_png_codec()
-    jdec = _make_jpeg_decoder()
-    gdec = _make_gif_pixel_decoder()
-    twalk = _make_tiff_walker()
+    (thumb NULL, ok=false); one zero-shuffle Arrow pass.  Thumbnails
+    are PNG whatever the source, so downstream stages see ONE format;
+    other formats keep the generic byte-sample fallback
+    (`streaming/multimodal.resize_images`)."""
+    decode_pixels = _make_pixel_decoder()
+    _, png_encode = _make_png_codec()
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -5970,37 +5734,11 @@ def png_thumbnails(df: DataFrame, width: int = 16, height: int = 16) -> DataFram
 
         wt, ht = width, height
 
-        def _decode(b: bytes):
-            b = bytes(b) if b is not None else b""
-            if b[:8] == b"\x89PNG\r\n\x1a\n":
-                return png_decode(b)
-            if b[:3] == b"\xff\xd8\xff":
-                return jdec(b)
-            if b[:6] in (b"GIF87a", b"GIF89a"):
-                g = gdec(b)
-                return g["frames"][0] if g else None
-            if b[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-                t = twalk(b)
-                if t and t["pages"] and t["valid"]:
-                    p0 = t["pages"][0]
-                    soff = p0.get("strip_off")
-                    slen = p0.get("strip_len")
-                    w0, h0 = p0["width"], p0["height"]
-                    if (p0["compression"] == 1 and p0["bits"] == 8
-                            and soff is not None and slen is not None
-                            and slen == (w0 or 0) * (h0 or 0)
-                            and soff + slen <= len(b)):
-                        return np.frombuffer(
-                            b[soff : soff + slen], dtype=np.uint8
-                        ).reshape(h0, w0)
-                return None
-            return None
-
         def thumb(b: bytes):
-            px = _decode(b)
+            px = decode_pixels(b)
             if px is None or px.shape[0] < 1 or px.shape[1] < 1:
                 return (None, False)
-            hs, ws = px.shape[:2]  # color arrays carry channels (r9)
+            hs, ws = px.shape[:2]  # color arrays carry channels
             rows = (np.arange(ht) * hs) // ht
             cols = (np.arange(wt) * ws) // wt
             return (png_encode(px[np.ix_(rows, cols)]), True)
@@ -6019,46 +5757,27 @@ def png_thumbnails(df: DataFrame, width: int = 16, height: int = 16) -> DataFram
 
 def _make_wav_codec():
     """Factory returning (decode, encode) for 16-bit PCM WAV (by-value
-    pickling, see _make_mp4_gen): decode walks the RIFF chunks and
-    returns (sample_rate, channels, int16 sample array) or None; encode
-    writes a complete spec-valid RIFF/fmt/data file.  Shared by
-    wav_pcm_stats-style consumers and `wav_downsample` so the
-    decode→decimate→re-encode chain is one implementation."""
-    import struct
-
+    pickling, see _make_mp4_gen), the pair `wav_downsample` chains:
+    decode returns (sample_rate, channels, int16 sample array) from
+    the shared RIFF walk, or None unless the stream is 16-bit; encode
+    writes a complete file through the shared WAV writer."""
     import numpy as np
 
+    write, walk = _make_wav_container()
+
     def decode(b: bytes):
-        b = bytes(b) if b is not None else b""
-        if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        got = walk(bytes(b) if b is not None else b"")
+        if got is None:
             return None
-        bits = ch = rate = None
-        data = None
-        pos = 12
-        while pos + 8 <= len(b):
-            tag = b[pos : pos + 4]
-            size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-            if tag == b"fmt " and pos + 24 <= len(b):
-                _, ch, rate, _, _, bits = struct.unpack(
-                    "<HHIIHH", b[pos + 8 : pos + 24]
-                )
-            elif tag == b"data":
-                data = b[pos + 8 : pos + 8 + size]
-            pos += 8 + size + (size & 1)
-        if bits != 16 or not ch or not rate or data is None or len(data) % 2:
+        ch, rate, bits, _, data = got
+        if (bits != 16 or not ch or not rate or data is None
+                or len(data) % 2):
             return None
         return rate, ch, np.frombuffer(data, dtype="<i2")
 
     def encode(rate: int, ch: int, samples) -> bytes:
-        data = np.asarray(samples, dtype="<i2").tobytes()
-        fmt = struct.pack(
-            "<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16
-        )
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        return write(rate, ch, 16,
+                     np.asarray(samples, dtype="<i2").tobytes())
 
     return decode, encode
 
@@ -6623,21 +6342,8 @@ def _make_ico_gen():
     size + offset) + the per-icon payloads — PNG-embedded (how modern
     favicons ship 256px icons) or DIB (BITMAPINFOHEADER)."""
     import struct
-    import zlib
 
-    def _png(w: int, h: int) -> bytes:
-        # nested by-value copy of png_bytes (module-level defs pickle
-        # by reference and die on import-less workers)
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(
-                        ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b""))
+    _png = png_bytes  # factory-made → ships by value
 
     def ico(entries) -> bytes:
         """entries: [(w, h, inner)] with inner in ('png', 'dib');
@@ -9760,7 +9466,7 @@ def tar_member_payloads(df: DataFrame) -> DataFrame:
 
 
 def synth_wds_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture for x_webdataset_campaign (r9): each document becomes a
+    """Fixture for x_webdataset_campaign: each document becomes a
     multimodal WebDataset shard of 2+(id%3) SAMPLES — '{k:04d}.png' a
     REAL PNG of 4+(id+k)%8 × 4+(id+2k)%6 pixels (the w<6 legs exist to
     be dropped by the min-resolution admission gate) and '{k:04d}.txt'
@@ -9769,23 +9475,7 @@ def synth_wds_shards(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     19th shard has a flipped header byte — the checksum catches it and
     the whole shard contributes nothing."""
     _tar = tar_bytes  # factory-made → ships by value
-
-    import struct
-    import zlib
-
-    def _png(w: int, h: int) -> bytes:
-        # nested by-value copy of png_bytes (module-level defs
-        # pickle by reference and die on import-less workers)
-        def chunk(tag: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(
-                        ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b""))
+    _png = png_bytes
 
     def one(i: int) -> bytes:
         members = []

@@ -47,16 +47,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lwetl_spark.functions.text import tokens
 from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
 from lwetl_spark.operators._fsutil import replace_table
-
-#: tokenizer shared with x_tfidf / x_corpus_pipeline (split on runs of
-#: whitespace, drop empties) — keep in lockstep with the DuckDB oracle.
-_TOKENIZE = r"filter(split(lower(trim({col})), '\\s+'), x -> x <> '')"
-
 
 def _index_sidecar_schemas(id_type):
     """Pinned schemas for the text-index sidecar tables (r12, guide §6 /
@@ -109,8 +105,7 @@ def doc_term_stats(
 
     - `tf`: (doc_id, tok, tf) term frequencies — plus a sorted
       `positions array<int>` column (0-based token offsets) when
-      ``positions=True`` (the phrase-query posting shape, VERDICT r6
-      #3);
+      ``positions=True`` (the phrase-query posting shape);
     - `dl`: (doc_id, dl) document lengths in tokens,
     - `stats`: single row (n BIGINT, adl_m BIGINT) — corpus size and
       per-mille average document length.
@@ -123,7 +118,7 @@ def doc_term_stats(
     if positions:
         tok = docs.select(
             F.col(id_col).alias("doc_id"),
-            F.posexplode(F.expr(_TOKENIZE.format(col=text_col))).alias(
+            F.posexplode(tokens(text_col)).alias(
                 "pos", "tok"
             ),
         )
@@ -134,7 +129,7 @@ def doc_term_stats(
     else:
         tok = docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.expr(_TOKENIZE.format(col=text_col))).alias("tok"),
+            F.explode(tokens(text_col)).alias("tok"),
         )
         tf = tok.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
@@ -512,8 +507,8 @@ def phrase_snippets(
         [(int(r[0]), len(_phrase_toks(r[1]))) for r in rows],
         "query_id long, _plen int",
     )
-    toks = F.expr(_TOKENIZE.format(col=text_col))
-    corpus = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+    corpus = docs.select(F.col(id_col).alias("doc_id"),
+                         tokens(text_col).alias("_toks"))
     joined = corpus.join(
         F.broadcast(hits.join(F.broadcast(qlen), "query_id")), "doc_id"
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lwetl_spark.functions.text import tokens
+
 _BUCKETS = 65536  # 4 hex chars
 
 
@@ -224,9 +226,7 @@ def dsir_weights(
     grams = df.select(
         F.col(id_col).alias("doc_id"),
         F.when(target_cond, F.lit(1)).otherwise(F.lit(0)).alias("is_t"),
-        F.explode(
-            F.expr(rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')")
-        ).alias("tok"),
+        F.explode(tokens(text_col)).alias("tok"),
     )
     stats = grams.groupBy("tok").agg(
         F.count("*").alias("cs"), F.sum("is_t").alias("ct")
@@ -335,9 +335,7 @@ def fluency_buckets(
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(lang_col).alias("lang"),
-        F.explode(
-            F.expr(rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')")
-        ).alias("tok"),
+        F.explode(tokens(text_col)).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("cs"))
     totals = vocab.agg(F.sum("cs").alias("n"))
@@ -597,8 +595,8 @@ def doc_perplexity(
     lm: DataFrame | None = None,
     smooth_k: int = 4,
 ) -> DataFrame:
-    """Per-document bigram-LM surprisal (r8, VERDICT r7 #4 — composes
-    the x_bigram_lm estimator into a document score): every adjacent
+    """Per-document bigram-LM surprisal (composes the x_bigram_lm
+    estimator into a document score): every adjacent
     token pair scores its smoothed conditional probability P(w2|w1) in
     exact integer ppm (`c2·scale DIV (c1 + k)`), and a document's
     surprisal is `scale − mean(cond_ppm)` — the ln-free integer
@@ -641,9 +639,7 @@ def doc_perplexity(
     """
     d = df.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(
-            rf"filter(split(lower(trim({text_col})), '\\s+'), x -> x <> '')"
-        ).alias("t"),
+        tokens(text_col).alias("t"),
     ).filter(F.size("t") >= 2)
     pairs = d.select(
         "doc_id",

@@ -162,9 +162,8 @@ def to_xml_string_sheets(
 
 def write_xlsx(df: DataFrame, path: str, sheet: str = "Sheet1", max_rows: int = 100_000) -> None:
     """XLSX sink (K4; lwetl/formatter.py:442-525) — driver-side by nature;
-    bounded like the reference's report outputs.  Uses pandas+openpyxl
-    when installed, else the dependency-free SpreadsheetML engine
-    (sinks/xlsx_minimal.py)."""
+    bounded like the reference's report outputs.  Written by the
+    dependency-free SpreadsheetML engine (sinks/xlsx_minimal.py)."""
     write_xlsx_sheets([(sheet, df)], path, max_rows=max_rows)
 
 
@@ -173,8 +172,11 @@ def write_xlsx_sheets(
 ) -> None:
     """Multi-sheet XLSX (K4 `next_sheet` parity, lwetl/formatter.py:442-525
     + sql_query/main.py:169-174): one worksheet per result set, sheet
-    names deduplicated and truncated to Excel's 31-char limit.  Prefers
-    pandas+openpyxl; falls back to the built-in minimal writer."""
+    names deduplicated and truncated to Excel's 31-char limit, written
+    by the built-in minimal writer whatever is installed, so the cell
+    types never depend on the environment."""
+    from lwetl_spark.sinks.xlsx_minimal import iter_df_rows, write_workbook
+
     seen: dict[str, int] = {}
     named: list[tuple[str, DataFrame]] = []
     for name, df in sheets:
@@ -182,25 +184,13 @@ def write_xlsx_sheets(
         n = seen.get(base, 0)
         seen[base] = n + 1
         named.append((base if n == 0 else f"{base[:28]}_{n+1}", df))
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-
-        with pd.ExcelWriter(path) as xw:
-            for sheet_name, df in named:
-                df.limit(max_rows).toPandas().to_excel(
-                    xw, sheet_name=sheet_name, index=False
-                )
-    except ImportError:
-        from lwetl_spark.sinks.xlsx_minimal import iter_df_rows, write_workbook
-
-        write_workbook(
-            [
-                (sheet_name, list(df.columns), iter_df_rows(df, max_rows))
-                for sheet_name, df in named
-            ],
-            path,
-        )
+    write_workbook(
+        [
+            (sheet_name, list(df.columns), iter_df_rows(df, max_rows))
+            for sheet_name, df in named
+        ],
+        path,
+    )
 
 
 def _sql_literal(v: object) -> str:

@@ -111,6 +111,7 @@ class Uploader:
         self.table_name = table_name or os.path.basename(table_path.rstrip("/")).split(".")[0]
         self._buffer: list[dict] = []
         self._scripts: list[str] = []
+        self._schema = None
         self.rowcount = 0
 
     # -- reading ----------------------------------------------------------
@@ -118,7 +119,11 @@ class Uploader:
         return self.spark.read.parquet(self.table_path)
 
     def _target_schema(self):
-        return self.target().schema
+        """The table's schema, read (one inference job) on first use and
+        kept: no Uploader operation changes its table's columns."""
+        if self._schema is None:
+            self._schema = self.target().schema
+        return self._schema
 
     # -- U1/U3: insert ----------------------------------------------------
     def insert(self, row: dict) -> None:

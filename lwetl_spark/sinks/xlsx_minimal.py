@@ -3,10 +3,10 @@
 The reference's XlsxFormatter (lwetl/formatter.py:442-525) and XlsxImport
 (lwetl/table_import.py:378-480) require openpyxl.  This engine ships a
 minimal, public-spec implementation — an .xlsx file is a zip container of
-well-known XML parts — so the K4 sink and S5 source work even where no
-excel library is installed.  `formatter.write_xlsx*` and
-`sources.xlsx.xlsx_source` use pandas+openpyxl when available and fall
-back here.
+well-known XML parts — so the K4 sink and S5 source need no excel
+library.  `formatter.write_xlsx*` and `sources.xlsx.xlsx_source` always
+write and read through this module, so cell types never depend on which
+packages are installed.
 
 Scope (same envelope as the reference's report outputs):
 - one or many worksheets, header row + data rows

@@ -4,9 +4,10 @@ Reference: `XlsxImport` (lwetl/table_import.py:378-480) — first or named
 sheet, header row, dict-per-row, openpyxl read-only mode.
 
 XLSX is a driver-side format by design (single zip container, no record
-splitting) — the reference treats it the same way.  We parse with
-openpyxl/pandas if available and distribute via `createDataFrame`;
-bounded inputs only (same envelope as the reference).
+splitting) — the reference treats it the same way.  We parse with the
+dependency-free SpreadsheetML reader (sinks/xlsx_minimal.py) and
+distribute via `createDataFrame`; bounded inputs only (same envelope as
+the reference).
 """
 
 from __future__ import annotations
@@ -23,29 +24,21 @@ def xlsx_source(
     header: bool = True,
     upper_names: bool = True,
 ) -> DataFrame:
-    """Read one worksheet into a DataFrame.  Parses with pandas+openpyxl
-    when installed, else the dependency-free SpreadsheetML reader
-    (sinks/xlsx_minimal.py — handles inline, shared-string and numeric
-    cells, so it reads openpyxl-produced workbooks too)."""
+    """Read one worksheet into a DataFrame with the dependency-free
+    SpreadsheetML reader (sinks/xlsx_minimal.py — handles inline,
+    shared-string and numeric cells, so it reads openpyxl-produced
+    workbooks too)."""
     import pandas as pd
 
-    try:
-        import openpyxl  # noqa: F401
+    from lwetl_spark.sinks.xlsx_minimal import read_workbook
 
-        pdf = pd.read_excel(path, sheet_name=sheet, header=0 if header else None)
-    except ImportError:
-        from lwetl_spark.sinks.xlsx_minimal import read_workbook
-
-        book = read_workbook(path)
-        if isinstance(sheet, int):
-            rows = list(book.values())[sheet]
-        else:
-            rows = book[sheet]
-        if header:
-            cols = [str(c) for c in rows[0]]
-            pdf = pd.DataFrame(rows[1:], columns=cols)
-        else:
-            pdf = pd.DataFrame(rows)
+    book = read_workbook(path)
+    rows = (list(book.values())[sheet] if isinstance(sheet, int)
+            else book[sheet])
+    if header:
+        pdf = pd.DataFrame(rows[1:], columns=[str(c) for c in rows[0]])
+    else:
+        pdf = pd.DataFrame(rows)
     if not header:
         pdf.columns = [f"C{i}" for i in range(len(pdf.columns))]
     else:

@@ -93,6 +93,27 @@ def test_uploader_insert_commit(spark, table_dir):
     assert row["n_name"] is None  # empty-string → skipped → NULL
 
 
+def test_uploader_inserts_read_the_schema_once(spark, table_dir):
+    """20 buffered inserts run at most one Spark job (the schema read),
+    counted by job-id window; the committed rows are the same."""
+    from lwetl_spark.sinks.uploader import Uploader, WritePolicy
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    up = Uploader(spark, table_dir, policy=WritePolicy.COMMIT)
+    first = dag.numTotalJobs()
+    for k in range(20):
+        up.insert({"n_nationkey": 100 + k, "n_name": " " if k % 2 else f"N{k}",
+                   "n_regionkey": k % 5, "bogus": k})
+    assert dag.numTotalJobs() - first <= 1
+    assert up.commit() == 20
+    got = sorted(
+        tuple(r) for r in up.target().filter("n_nationkey >= 100")
+        .select("n_nationkey", "n_name", "n_regionkey").collect()
+    )
+    assert got == [(100 + k, None if k % 2 else f"N{k}", k % 5)
+                   for k in range(20)]
+
+
 def test_uploader_rollback_default(spark, table_dir):
     """The reference's rollback-by-default (uploader.py:22-25): STAGE
     policy writes a staging dir, target untouched."""
