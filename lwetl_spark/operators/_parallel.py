@@ -36,13 +36,32 @@ def overlap_all(*legs):
     write disjoint paths, so execution order cannot change any result.
     The first helper-leg exception propagates unless the caller's leg
     also raised (then the caller's wins, as in sequential execution).
+    Helper legs run with a copy of the caller's Spark local properties,
+    as ``pyspark.InheritableThread`` starts them: job group,
+    description, scheduler pool and job tags, so ``cancelJobGroup``
+    reaches every leg.
     """
     if len(legs) <= 1:
         return legs[0]() if legs else None
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context  # None under Spark Connect
+
+    def inherit(leg):
+        if sc is None:
+            return leg
+        props = sc._jsc.sc().getLocalProperties().clone()
+
+        def run():
+            sc._jsc.sc().setLocalProperties(props)
+            return leg()
+
+        return run
+
     with ThreadPoolExecutor(max_workers=len(legs) - 1) as pool:
-        futs = [pool.submit(leg) for leg in legs[:-1]]
+        futs = [pool.submit(inherit(leg)) for leg in legs[:-1]]
         try:
             out = legs[-1]()
         except BaseException:

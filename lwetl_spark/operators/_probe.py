@@ -23,8 +23,9 @@ _MAX_PROBE_ROWS = 100_000
 def collect_batch(df: DataFrame) -> list:
     """The rows of a probe's query batch: one collect bounded by
     ``limit(_MAX_PROBE_ROWS + 1)``; raises ``ValueError`` past the
-    bound."""
-    rows = df.limit(_MAX_PROBE_ROWS + 1).collect()
+    bound.  The batch is coalesced to one partition first: a limit over
+    several partitions scans them in scale-up rounds, one job each."""
+    rows = df.coalesce(1).limit(_MAX_PROBE_ROWS + 1).collect()
     if len(rows) > _MAX_PROBE_ROWS:
         raise ValueError(
             f"probe batch has more than {_MAX_PROBE_ROWS:,} rows; "

@@ -2561,13 +2561,15 @@ def synth_warc_html_demo(docs: DataFrame, id_col: str = "doc_id",
                 "<title>page</title></head><body><p>%s%s</p>"
                 "<!-- crawl --></body></html>" % (meta, i, pre, text)
             )
+            # text outside the page codec becomes an HTML character
+            # reference (as a browser submits it), not a failed task
+            body = html.encode(codec, errors="xmlcharrefreplace")
             return _gen([
                 ("warcinfo", None, b"software: lwetl_spark"),
                 ("request", "http://site%d.example/p" % (i % 50),
                  b"GET /p HTTP/1.1"),
                 ("response", "http://site%d.example/p" % (i % 50),
-                 _http_wrap(html.encode(codec), codec)
-                 if i % 2 == 0 else html.encode(codec)),
+                 _http_wrap(body, codec) if i % 2 == 0 else body),
             ], gz=(i % 3 == 0))  # r10: .warc.gz legs, same oracle
 
         for pdf in batches:
@@ -2938,7 +2940,7 @@ def synth_warc_imgtext_demo(docs: DataFrame,
                 "</body></html>" % (meta, "".join(tags)))
         recs.insert(1, ("response",
                         "http://site%d.example/p%d" % (i % 50, i),
-                        html.encode(codec)))
+                        html.encode(codec, errors="xmlcharrefreplace")))
         # r10: alternating shards ship gzipped (.warc.gz)
         return _warc(recs, gz=((i // 4) % 2 == 0))
 

@@ -14,6 +14,12 @@ Tuning rationale (100 TB design, local[32] test):
 - UTC session timezone so timestamp semantics line up with
   parquet/DuckDB (both UTC-naive).
 - Arrow enabled for every pandas interchange (toPandas, pandas UDFs).
+- Python workers start from ``_worker/lwetl_worker_daemon.py`` whenever
+  this factory picks a ``local`` master itself: every task otherwise
+  re-reads pyspark.zip's central directory (~0.13 s of CPU before any
+  user code).  A master chosen by the environment (``SPARK_MASTER``,
+  ``SPARK_GRAFT_NO_MASTER``, a non-local ``SPARK_GRAFT_MASTER``) keeps
+  pyspark's daemon: its executors may not see the driver's filesystem.
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+# holds only the daemon module, so lwetl_spark stays unimportable on workers
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def get_spark(
@@ -60,9 +68,17 @@ def get_spark(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
         )
     )
+    extra_conf = dict(extra_conf or {})
     if not os.environ.get("SPARK_MASTER") and "SPARK_GRAFT_NO_MASTER" not in os.environ:
-        builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-    for k, v in (extra_conf or {}).items():
+        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+        builder = builder.master(master)
+        if master.startswith("local"):
+            builder = builder.config("spark.python.daemon.module", "lwetl_worker_daemon")
+            key = "spark.executorEnv.PYTHONPATH"
+            extra_conf[key] = os.pathsep.join(
+                p for p in (extra_conf.get(key), _DAEMON_DIR) if p
+            )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

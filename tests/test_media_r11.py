@@ -478,6 +478,35 @@ def test_http_response_parts(spark):
     assert bytes(out[4]["body"]).startswith(b"HTTP/1.1")
 
 
+def test_warc_html_fixture_encodes_text_outside_the_page_codec(spark):
+    """Text with '€' (not in gbk) and '页' (not in cp1252) yields one
+    response per id on every codec leg; the character falls back to an
+    HTML character reference that decodes to the original text."""
+    import html
+
+    from pyspark.sql import functions as F
+
+    from lwetl_spark.operators.media import (
+        http_response_parts,
+        sniff_decode_html,
+        synth_warc_html_demo,
+        warc_payloads,
+    )
+
+    text = "price 5€ 页面"
+    docs = spark.createDataFrame(
+        [(i, text) for i in range(6)], "doc_id long, text string")
+    resp = warc_payloads(synth_warc_html_demo(docs)).filter(
+        F.col("rec_type") == "response")
+    parts = http_response_parts(resp.select("doc_id", "rec_idx", "payload"))
+    got = sniff_decode_html(
+        parts.select("doc_id", "body", "content_type"),
+        payload_col="body", content_type_col="content_type").collect()
+    assert sorted(r["doc_id"] for r in got) == list(range(6))
+    for r in got:
+        assert text in html.unescape(r["html"]), (r["doc_id"], r["charset"])
+
+
 def test_r11_decoder_fuzz_sweep(spark):
     """Seeded mutation fuzz over every r11 decode path (modern PDF,
     CCITT G4/MH/G3, ADTS, HTTP split + charset sniff, fax TIFF):

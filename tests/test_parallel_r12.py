@@ -205,3 +205,35 @@ def test_overlap_all_first_helper_exception_propagates():
 
     with _pytest.raises(RuntimeError, match="leg boom"):
         _parallel.overlap_all(boom, lambda: None, lambda: None)
+
+
+def test_overlap_all_helper_legs_keep_the_caller_job_group(spark):
+    """A helper leg's job runs in the caller's job group, so
+    ``cancelJobGroup`` on that group cancels it mid-run."""
+    import time
+
+    import pytest as _pytest
+
+    from lwetl_spark.operators import _parallel
+
+    sc = spark.sparkContext
+    group = "test_overlap_all_cancel"
+
+    def blocked():  # a one-task job that runs until it is cancelled
+        sc.parallelize([0], 1).map(lambda x: time.sleep(60) or x).collect()
+
+    def cancel_once_running():
+        deadline = time.monotonic() + 60
+        while not sc.statusTracker().getJobIdsForGroup(group):
+            assert time.monotonic() < deadline, "no job ran in the caller's group"
+            time.sleep(0.05)
+        sc.cancelJobGroup(group)
+
+    sc.setJobGroup(group, "overlap_all cancel", interruptOnCancel=True)
+    try:
+        with _pytest.raises(Exception, match="cancel"):
+            _parallel.overlap_all(blocked, cancel_once_running)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)

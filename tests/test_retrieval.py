@@ -1790,6 +1790,24 @@ def test_probe_batch_bound_fails_closed(spark, tmp_path):
     assert {r["query_id"] for r in out} == {1, 2, 3}
 
 
+def test_probe_batch_collects_multi_partition_batch_in_one_job(spark):
+    """A small batch spread over 4 partitions is collected by one job
+    (a bare limit scans the partitions in scale-up rounds), with the
+    same rows in the same order."""
+    from lwetl_spark.operators import _probe
+
+    rows = [(i, f"q{i}") for i in range(4)]
+    batch = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "query_id long, q string"
+    )
+    assert batch.rdd.getNumPartitions() == 4
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    got = _probe.collect_batch(batch)
+    assert dag.numTotalJobs() - first == 1
+    assert [tuple(r) for r in got] == rows
+
+
 def test_phrase_topk_job_pin(spark, tmp_path):
     """One phrase_topk probe, run under its own job group, stays within
     7 Spark jobs: the phrase collect, the postings listing, the two

@@ -1,11 +1,15 @@
 #!/usr/bin/env python
-"""Per-job census for a bench row (without a live UI page): run the
-row with the REST API on and list every job with its wall time, stage
-count, task count and shuffle bytes — separating fixed scheduling
-overhead (many tiny jobs) from real compute.  The row is warmed at
-sf0.001 and then ONCE at the target sf_dir (so one-time template
-builds — retrieval/IVF probe templates, campaign bootstrap state — are
-excluded); the census covers the run after that.  Job counts are
+"""Per-job census for a bench row, read in-process from Spark's status
+store (live with ``spark.ui.enabled=false``; no UI, no REST calls).
+
+The row is warmed at sf0.001 and then run ONCE at the target sf_dir (so
+one-time template builds — retrieval/IVF probe templates, campaign
+bootstrap state — are excluded); the census covers the run after that.
+Each job is listed with its wall time, task count, stage count, summed
+task run time and shuffle bytes, labelled with the description and the
+root plan node of the SQL execution that ran it (a job outside any SQL
+execution shows its call site).  Many short jobs mean fixed scheduling
+cost; task time near the wall means real compute.  Job counts are
 load-independent evidence; walls are only meaningful on a quiet box.
 
 Usage: python tools/job_census.py <bench-row> [sf_dir]
@@ -13,14 +17,77 @@ Usage: python tools/job_census.py <bench-row> [sf_dir]
 
 from __future__ import annotations
 
-import json
+import re
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+#: plan lines that wrap the operator a job actually ran
+_WRAPPERS = ("AdaptiveSparkPlan", "ResultQueryStage")
+
+
+def root_node(plan: str) -> str:
+    """The first operator of a physical plan description, past the
+    header and the AQE wrappers."""
+    for line in plan.splitlines():
+        name = re.sub(r"\s*\(\d+\)$", "", line.lstrip(" +-:*|")).strip()
+        if name and not name.startswith("==") and not name.startswith(_WRAPPERS):
+            return name
+    return ""
+
+
+def census(spark, run):
+    """(run(), wall seconds, one dict per job ``run`` submitted)."""
+    sc = spark.sparkContext._jsc.sc()
+    dag, bus, store = sc.dagScheduler(), sc.listenerBus(), sc.statusStore()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    first, t0 = dag.numTotalJobs(), time.time()
+    out = run()
+    wall = time.time() - t0
+    last = dag.numTotalJobs()
+    bus.waitUntilEmpty(10_000)
+
+    labels = {}  # job id -> (description, root node) of its SQL execution
+    execs = sql.executionsList()  # oldest first
+    for i in range(execs.size() - 1, -1, -1):
+        ex = execs.apply(i)
+        if ex.submissionTime() < int(t0 * 1000):
+            break
+        ids = ex.jobs().keys().toSeq()
+        for k in range(ids.size()):
+            labels[ids.apply(k)] = (ex.description(), root_node(ex.physicalPlanDescription()))
+
+    rows = []
+    jobs = store.jobsList(None)  # newest first
+    for i in range(jobs.size()):
+        jd = jobs.apply(i)
+        jid = jd.jobId()
+        if jid < first:
+            break
+        if jid >= last:
+            continue
+        sub, done = jd.submissionTime(), jd.completionTime()
+        wall_s = (done.get().getTime() - sub.get().getTime()) / 1000 \
+            if sub.isDefined() and done.isDefined() else -1.0
+        row = {"job": jid, "wall_s": wall_s, "tasks": jd.numCompletedTasks(),
+               "stages": 0, "task_s": 0.0, "shuffle_r": 0, "shuffle_w": 0}
+        sids = jd.stageIds()
+        for k in range(sids.size()):
+            st = store.lastStageAttempt(sids.apply(k))
+            if st.status().toString() == "SKIPPED":
+                continue
+            row["stages"] += 1
+            row["task_s"] += st.executorRunTime() / 1000
+            row["shuffle_r"] += st.shuffleReadBytes()
+            row["shuffle_w"] += st.shuffleWriteBytes()
+        desc = jd.description()
+        row["label"] = labels.get(jid) or (desc.get() if desc.isDefined() else jd.name(), "")
+        rows.append(row)
+    rows.sort(key=lambda r: r["job"])
+    return out, wall, rows
 
 
 def main():
@@ -31,8 +98,7 @@ def main():
 
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name="job_census",
-                      extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="job_census")
     fn = BENCH_OVERRIDES.get(name) or QUERIES[name]
 
     # warm at sf0.001 (JVM/codegen), then ONCE at the target sf_dir so
@@ -45,52 +111,17 @@ def main():
     fn(spark, sf_dir).count()
     spark.catalog.clearCache()
 
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-
-    def jobs():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/jobs?status=succeeded"
-        ) as r:
-            return json.load(r)
-
-    def stages():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        ) as r:
-            return json.load(r)
-
-    seen = {j["jobId"] for j in jobs()}
-    t0 = time.time()
-    n = fn(spark, sf_dir).count()
-    wall = time.time() - t0
-
-    st_by_id = {s["stageId"]: s for s in stages()}
-    new = [j for j in jobs() if j["jobId"] not in seen]
-    new.sort(key=lambda j: j["jobId"])
-    print(f"# {name}: {wall:.2f}s wall, {n} rows, {len(new)} jobs")
-    total_job = 0.0
-    for j in new:
-        sub = j.get("submissionTime")
-        comp = j.get("completionTime")
-        from datetime import datetime
-
-        def p(ts):
-            return datetime.strptime(ts, "%Y-%m-%dT%H:%M:%S.%f%Z")
-
-        dur = (p(comp) - p(sub)).total_seconds() if sub and comp else -1
-        total_job += max(dur, 0)
-        sids = j.get("stageIds", [])
-        srd = sum(st_by_id.get(s, {}).get("shuffleReadBytes", 0)
-                  for s in sids)
-        swr = sum(st_by_id.get(s, {}).get("shuffleWriteBytes", 0)
-                  for s in sids)
-        ntask = j.get("numCompletedTasks", 0)
-        desc = (j.get("description") or j.get("name") or "")[:72]
-        print(f"job {j['jobId']:4d} {dur:6.2f}s tasks={ntask:4d} "
-              f"stages={len(sids)} shufR={srd >> 10}K shufW={swr >> 10}K  {desc}")
-    print(f"# sum(job walls) = {total_job:.2f}s vs row wall {wall:.2f}s "
-          f"(gap = driver-side/planning time)")
+    n, wall, rows = census(spark, lambda: fn(spark, sf_dir).count())
+    print(f"# {name}: {wall:.2f}s wall, {n} rows, {len(rows)} jobs")
+    for r in rows:
+        desc, node = r["label"]
+        print(f"job {r['job']:4d} {r['wall_s']:6.2f}s tasks={r['tasks']:4d} "
+              f"stages={r['stages']} task={r['task_s']:6.2f}s "
+              f"shufR={r['shuffle_r'] >> 10}K shufW={r['shuffle_w'] >> 10}K  "
+              f"{node[:40]} | {(desc or '')[:60]}")
+    print(f"# sum(job walls) = {sum(max(r['wall_s'], 0) for r in rows):.2f}s, "
+          f"sum(task run) = {sum(r['task_s'] for r in rows):.2f}s vs row wall "
+          f"{wall:.2f}s (gap = driver-side/planning time)")
 
 
 if __name__ == "__main__":
