@@ -36,9 +36,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one parquet table (SURVEY S1).  Pure `spark.read.parquet`:
-    column pruning + predicate pushdown come free from the data source V2
-    scan — the reference's 1000-row `fetchmany` batching
+    """Scan one parquet table (SURVEY S1).  A plain parquet scan whose
+    schema comes from one driver-side footer read (`_fsutil.read_parquet`,
+    no inference job): column pruning + predicate pushdown come free from
+    the data source V2 scan — the reference's 1000-row `fetchmany` batching
     (lwetl/jdbc.py:624-673) has no analog because the scan is columnar.
 
     The `events` table may carry TIMESTAMP(NANOS) which Spark's vectorized
@@ -59,9 +60,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from lwetl_spark.operators._fsutil import read_parquet
+
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except Exception as e:
         # the fallback below is ONLY for the nanos schema-conversion
         # rejection; any other read failure (corrupt file, permissions)

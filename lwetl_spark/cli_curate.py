@@ -343,7 +343,7 @@ def curate(
     if decontaminate_path:
         from lwetl_spark.operators.decontaminate import decontaminate
 
-        bench = spark.read.parquet(decontaminate_path)
+        bench = _fsutil.read_parquet(spark, decontaminate_path)
         if "doc_id" not in bench.columns:  # gram extraction needs an id
             bench = bench.withColumn("doc_id", F.monotonically_increasing_id())
         kept = decontaminate(kept, bench, n=3)
@@ -361,7 +361,7 @@ def curate(
     else:
         kept.write.mode("overwrite").parquet(out_dir)
     try:
-        curated = spark.read.parquet(out_dir)
+        curated = _fsutil.read_parquet(spark, out_dir)
     except AnalysisException:
         # a fully-filtered run writes only _SUCCESS (no part files to
         # infer a schema from -> UNABLE_TO_INFER_SCHEMA) — an empty
@@ -421,9 +421,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.report:
         from pyspark.sql import functions as F
 
+        from lwetl_spark.operators._fsutil import read_parquet
         from lwetl_spark.sinks.formatter import write_xlsx_sheets
 
-        curated = spark.read.parquet(args.output)
+        curated = read_parquet(spark, args.output)
         summary = curated.groupBy("lang").agg(
             F.count("*").alias("n_docs"),
             F.round(F.avg(F.length("text")), 1).alias("avg_chars"),

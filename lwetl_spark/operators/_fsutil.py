@@ -12,11 +12,19 @@
   written to a `<path>.new-<uuid>` sibling and committed by rename
   (`swap_in`), so no job reads and overwrites one directory and a failed
   write leaves the old table in place.
+- `parquet_schema` computes on the driver, from one footer, the schema
+  Spark's inference job would infer for a parquet path; `read_parquet`
+  reads the path with that schema pinned, so opening a table runs no
+  job.  Both fall back to Spark's own inference when they cannot.
 """
 
 from __future__ import annotations
 
+import json
 import uuid
+
+#: summary files Spark's inference prefers to any data file
+_SUMMARIES = ("_metadata", "_common_metadata")
 
 
 def _hadoop(spark, path: str):
@@ -95,3 +103,109 @@ def materialize(df):
         eager=True
     )
     return out, obs.get["n"]
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (`HadoopFSUtils.shouldFilterOutPathName`,
+    less the summary files, which the caller handles)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _names(spark, statuses) -> list[str]:
+    """The names of a listing, in its order, from one gateway reply: the
+    JVM joins the paths and strips their directories.  (One call per
+    entry costs more than the inference job on a 256-bucket root, and a
+    py4j reply over 8 KiB stalls ~40 ms, so full paths are not sent.)"""
+    jvm = spark._jvm
+    paths = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    )
+    joined = paths.addString(jvm.scala.collection.mutable.StringBuilder(), "\n")
+    return (
+        jvm.java.util.regex.Pattern.compile("(?m)^.*/")
+        .matcher(joined)
+        .replaceAll("")
+        .split("\n")
+    )
+
+
+def _first_data_file(spark, path: str):
+    """The FileStatus of the file Spark's schema inference reads for
+    `path` — the first data file in path order — or None when there is
+    none, when a summary file would take precedence, or when `path` is a
+    glob.  Only the path-first entry of each level is descended into;
+    a directory sorts as `name + "/"`, as its files' paths do."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    fs, cur = _hadoop(spark, path)
+    while True:
+        children = fs.listStatus(cur)
+        n = len(children)
+        names = _names(spark, children) if n else []
+        if len(names) != n:
+            return None
+        best = None  # (sort key, status, is a directory)
+        for i in sorted(range(n), key=names.__getitem__):
+            name = names[i]
+            if best is not None and best[0] <= name:
+                break  # a later name's key is >= the name itself
+            if name.startswith(_SUMMARIES):
+                return None
+            if _hidden(name):
+                continue
+            st = children[i]
+            is_dir = st.isDirectory()
+            key = name + "/" if is_dir else name
+            if best is None or key < best[0]:
+                best = (key, st, is_dir)
+        if best is None:
+            return None
+        if not best[2]:
+            return best[1]
+        cur = best[1].getPath()
+
+
+def parquet_schema(spark, path: str):
+    """The data schema Spark's parquet inference returns for `path`
+    (the file columns; the read adds partition columns and makes every
+    field nullable), computed on the driver with no Spark job: the footer
+    of the file the inference job would read goes through
+    `ParquetFileFormat.readSchemaFromFooter` with a converter built from
+    the session's SQL conf — the function that job runs.  None when there
+    is no data file, no JVM gateway or any failure on the way; the
+    caller then lets Spark infer."""
+    from pyspark.sql import types as T
+
+    try:
+        status = _first_data_file(spark, path)
+        if status is None:
+            return None
+        jvm = spark._jvm
+        pq = jvm.org.apache.parquet
+        meta = pq.hadoop.ParquetFileReader.readFooter(
+            spark._jsc.hadoopConfiguration(),
+            status,
+            pq.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = fmt.ParquetFileFormat.readSchemaFromFooter(
+            pq.hadoop.Footer(status.getPath(), meta),
+            fmt.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf()),
+        )
+        return T.StructType.fromJson(json.loads(schema.json()))
+    except Exception:
+        return None
+
+
+def read_parquet(spark, path: str):
+    """`spark.read.parquet(path)` with the schema pinned from
+    `parquet_schema`, so no inference job runs; the bare read when no
+    schema could be computed, so errors (a missing path, a directory
+    with no data file) are Spark's own."""
+    schema = parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)

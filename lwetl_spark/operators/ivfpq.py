@@ -44,6 +44,7 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
+from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.operators._fsutil import remove_path as _remove_path
 from lwetl_spark.operators._parallel import spread as _spread
 
@@ -592,7 +593,7 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
     n_vec = spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors").agg(
         F.count("*").cast("long").alias("n_vectors")
     )
-    params = spark.read.parquet(f"{path}/params").select("n_at_train")
+    params = read_parquet(spark, f"{path}/params").select("n_at_train")
     return (
         per_cell.agg(
             F.count("*").alias("n_cells"),
@@ -635,7 +636,7 @@ def retrain_ivfpq_index(
     need = (num_centroids is None or m is None or ksub is None
             or train_sample is None or iters is None)
     if need:
-        p = spark.read.parquet(f"{path}/params").collect()[0]
+        p = read_parquet(spark, f"{path}/params").collect()[0]
         num_centroids = num_centroids if num_centroids is not None else p["num_centroids"]
         m = m if m is not None else p["m"]
         ksub = ksub if ksub is not None else p["ksub"]

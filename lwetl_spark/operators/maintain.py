@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.operators.incremental import _path_exists
 
 
@@ -108,7 +109,7 @@ def auto_maintain(
         )
 
         st = pq_index_stats(spark, path).collect()[0]
-        p = spark.read.parquet(f"{path}/params").collect()[0]
+        p = read_parquet(spark, f"{path}/params").collect()[0]
         n_at_train = (
             int(p["n_at_train"]) if "n_at_train" in p.asDict() else 0
         )  # pre-upgrade index: no growth baseline → never fires on growth
@@ -150,7 +151,7 @@ def auto_maintain(
         )
 
         st = lsh_index_stats(spark, path).collect()[0]
-        p = spark.read.parquet(f"{path}/params").collect()[0]
+        p = read_parquet(spark, f"{path}/params").collect()[0]
         n_vec = int(st["n_vectors"])
         expected = max(n_vec // (1 << int(p["num_planes"])), 1)
         metric = "overload_pm"
@@ -164,7 +165,7 @@ def auto_maintain(
                 int(math.ceil(math.log2(max(n_vec / lsh_target_bucket, 2)))),
             )
             members = (
-                spark.read.parquet(f"{path}/vectors")
+                read_parquet(spark, f"{path}/vectors")
                 .select("id", "vec")
                 .localCheckpoint(eager=True)
             )

@@ -52,16 +52,17 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
-from lwetl_spark.operators._fsutil import replace_table
+from lwetl_spark.operators._fsutil import read_parquet, replace_table
 
 def _index_sidecar_schemas(id_type):
     """Pinned schemas for the text-index sidecar tables (r12, guide §6 /
     VERDICT r11 #4+#6): every ``spark.read.parquet`` without a schema
     pays a footer-inference job, and the probe/maintenance passes read
     up to four index tables per call.  All sidecar schemas are fully
-    determined by the corpus id type, which the caller takes from ONE
-    inference read of the postings table (that read also discovers the
-    sticky positional flag) or from its own input frame.  ``bucket``
+    determined by the corpus id type, which the caller takes from the
+    postings read (its schema comes from one driver-side footer read,
+    `_fsutil.read_parquet`, which also gives the sticky positional flag)
+    or from its own input frame.  ``bucket``
     on the df table is the hive partition column (directory-encoded,
     parsed per the pinned int — matching what inference yields)."""
     from pyspark.sql import types as T
@@ -350,7 +351,7 @@ def query_text_index(
     # explicit projection: a positional index carries a positions array
     # per posting — BM25 scoring must keep reading 3 columns (parquet
     # column pruning at the scan), never the offsets
-    postings = spark.read.parquet(f"{path}/postings")
+    postings = read_parquet(spark, f"{path}/postings")
     tf = postings.filter(
         F.col("bucket").isin(buckets)
     ).select("tok", "doc_id", "tf")
@@ -434,7 +435,7 @@ def _phrase_hits(spark, path: str, rows, k: int, with_pos: bool) -> DataFrame:
     )
     buckets = _probe.tok_buckets((r[2] for r in term_rows), _INDEX_BUCKETS)
     postings = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .filter(F.col("bucket").isin(buckets))
         .select("tok", "doc_id", "positions")
     )
@@ -566,7 +567,7 @@ def proximity_topk(
     )
     buckets = _probe.tok_buckets((r[1] for r in term_rows), _INDEX_BUCKETS)
     postings = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .filter(F.col("bucket").isin(buckets))
         .select("tok", "doc_id", "positions")
     )
@@ -644,7 +645,7 @@ def text_index_stats(spark, path: str) -> DataFrame:
     index wants a blocklist pass).  All exact integers derived from the
     persisted tables with bounded aggs, so a SQL oracle recomputing them
     from the raw corpus must match bit-for-bit (x_text_index_stats)."""
-    postings = spark.read.parquet(f"{path}/postings")  # one inference read
+    postings = read_parquet(spark, f"{path}/postings")
     _schemas = _index_sidecar_schemas(postings.schema["doc_id"].dataType)
     dl = spark.read.schema(_schemas["doclen"]).parquet(f"{path}/doclen")
     df_t = spark.read.schema(_schemas["df"]).parquet(f"{path}/df")
@@ -985,10 +986,10 @@ def update_text_index(
     postings schema makes the delta tokenize positionally too, so
     phrase parity survives maintenance.
     """
-    # ONE inference read (footer job) discovers the sticky positional
-    # flag; every other index-table read below pins its schema from the
-    # input's id type (r12, guide §6 — the r11 campaign-state idiom)
-    positional = "positions" in spark.read.parquet(f"{path}/postings").columns
+    # the postings footer (read on the driver, no job) gives the sticky
+    # positional flag; every other index-table read below pins its
+    # schema from the input's id type
+    positional = "positions" in read_parquet(spark, f"{path}/postings").columns
     _schemas = _index_sidecar_schemas(new_docs.schema[id_col].dataType)
     tf_new, _, _ = doc_term_stats(
         new_docs, id_col=id_col, text_col=text_col, positions=positional
@@ -1112,14 +1113,13 @@ def compact_text_index(
     enter with their new content.
     """
     # ONE postings read serves the positional probe, the old-row scan,
-    # the kept-row scan and the survivor census below: every
-    # spark.read.parquet re-lists the 256 bucket dirs and re-infers the
-    # schema as its own driver job — every consumer runs before any
+    # the kept-row scan and the survivor census below: every read
+    # re-lists the 256 bucket dirs — every consumer runs before any
     # write, so the snapshot is shared safely
-    postings = spark.read.parquet(f"{path}/postings")
+    postings = read_parquet(spark, f"{path}/postings")
     positional = "positions" in postings.columns
     # sidecar-table schemas derive from the postings read's id type —
-    # no further footer-inference jobs this pass
+    # no further footer reads this pass
     _schemas = _index_sidecar_schemas(postings.schema["doc_id"].dataType)
     tf_new, _, _ = doc_term_stats(
         replacement_docs, id_col=id_col, text_col=text_col,

@@ -27,6 +27,7 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
+from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.operators._parallel import spread as _spread
 
 #: pinned on-disk schemas (r12, guide §6 / VERDICT r11 #4+#6): every
@@ -735,7 +736,7 @@ def update_lsh_index(
     from `{path}/params` (persisted by `build_lsh_index`), so the delta
     bucketizes with the index's own family by construction.  Cost:
     one Arrow bucketize pass over the delta + partition appends."""
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = read_parquet(spark, f"{path}/params").collect()[0]
     bucketed = _lsh_bucketize(
         delta_df, vec_col, id_col, p["num_planes"], p["num_tables"], p["dim"]
     )
@@ -854,7 +855,7 @@ def query_lsh_index(
         # table on an EXISTING path now propagates instead of silently
         # falling back to the caller's (possibly wrong) default family
         # and returning wrong/empty neighbors (ADVICE r7)
-        p = spark.read.parquet(f"{path}/params").collect()[0]
+        p = read_parquet(spark, f"{path}/params").collect()[0]
         num_planes, num_tables, dim = (
             int(p["num_planes"]), int(p["num_tables"]), int(p["dim"]),
         )
@@ -1393,7 +1394,7 @@ def retrain_pq_index(
     maintenance pass must not silently change the quantizer family);
     explicit args override."""
     if m is None or ksub is None or train_sample is None or iters is None:
-        p = spark.read.parquet(f"{path}/params").collect()[0]
+        p = read_parquet(spark, f"{path}/params").collect()[0]
         m = m if m is not None else p["m"]
         ksub = ksub if ksub is not None else p["ksub"]
         train_sample = (
@@ -1627,7 +1628,7 @@ def retrain_ivf_index(
     if num_centroids is None or train_sample is None or iters is None:
         stored_n = stored_s = stored_i = None
         if _path_exists(spark, f"{path}/params"):
-            p = spark.read.parquet(f"{path}/params").collect()[0]
+            p = read_parquet(spark, f"{path}/params").collect()[0]
             stored_n, stored_s, stored_i = (
                 p["num_centroids"], p["train_sample"], p["iters"],
             )

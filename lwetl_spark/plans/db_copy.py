@@ -25,8 +25,9 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.sinks.uploader import Uploader, WritePolicy
 
 
@@ -56,6 +57,10 @@ class DbCopyPlan:
     empty_source: list[str] = field(default_factory=list)
     order: list[str] = field(default_factory=list)
     counts: dict[str, tuple[int, int]] = field(default_factory=dict)
+    #: the frames the counts were taken over, by table; the copy reuses
+    #: them instead of opening each table again
+    sources: dict[str, DataFrame] = field(default_factory=dict)
+    targets: dict[str, DataFrame] = field(default_factory=dict)
 
 
 def _tables_in(path: str) -> list[str]:
@@ -90,16 +95,12 @@ def plan_copy(
     plan.missing_in_source = [t for t in trg_tables if t not in src_tables]
     parts = []
     for t in src_tables:
-        parts.append(
-            spark.read.parquet(os.path.join(src_dir, f"{t}.parquet")).select(
-                F.lit(t).alias("tbl"), F.lit("src").alias("side")
-            )
-        )
+        plan.sources[t] = read_parquet(spark, os.path.join(src_dir, f"{t}.parquet"))
+        parts.append(plan.sources[t].select(F.lit(t).alias("tbl"), F.lit("src").alias("side")))
         if t in plan.common:
+            plan.targets[t] = read_parquet(spark, os.path.join(trg_dir, f"{t}.parquet"))
             parts.append(
-                spark.read.parquet(os.path.join(trg_dir, f"{t}.parquet")).select(
-                    F.lit(t).alias("tbl"), F.lit("trg").alias("side")
-                )
+                plan.targets[t].select(F.lit(t).alias("tbl"), F.lit("trg").alias("side"))
             )
     counted: dict[tuple[str, str], int] = {}
     if parts:
@@ -141,7 +142,7 @@ def db_copy(
     stats: dict[str, dict[str, int]] = {}
     for t in plan.order:
         pk = pks.get(t)
-        src = spark.read.parquet(os.path.join(src_dir, f"{t}.parquet"))
+        src = plan.sources[t]
         trg_path = os.path.join(trg_dir, f"{t}.parquet")
         st = {"inserted": 0, "updated": 0, "deleted": 0, "skipped": 0}
         if t in plan.missing_in_target:
@@ -158,13 +159,14 @@ def db_copy(
             st["skipped"] = plan.counts[t][0]
             stats[t] = st
             continue
-        up = Uploader(spark, trg_path, policy=policy, table_name=t)
         if pk is None:
             st["skipped"] = plan.counts[t][0]
             stats[t] = st
             continue
+        trg = plan.targets[t]
+        up = Uploader(spark, trg_path, policy=policy, table_name=t, schema=trg.schema)
         if mode in ("empty", "new"):
-            fresh = src.join(up.target().select(pk).distinct(), on=pk, how="left_anti")
+            fresh = src.join(trg.select(pk).distinct(), on=pk, how="left_anti")
             st["inserted"] = fresh.count()
             if st["inserted"]:
                 up.insert_df(fresh)

@@ -20,6 +20,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.queries import _t, register
 
 
@@ -223,7 +224,7 @@ def u1_insert_commit(spark, sf_dir):
         up.insert({"r_regionkey": 100 + i, "r_name": f"NEW REGION {i}"})
     up.insert({"r_regionkey": 103, "r_name": "   "})  # empty → dropped key
     up.commit()
-    return spark.read.parquet(trg).select(
+    return read_parquet(spark, trg).select(
         "r_regionkey", F.coalesce("r_name", F.lit("(null)")).alias("r_name")
     )
 
@@ -252,7 +253,7 @@ def u4_update_where(spark, sf_dir):
     _t(spark, sf_dir, "nation").write.parquet(trg)
     up = Uploader(spark, trg, policy=WritePolicy.COMMIT)
     up.update({"n_name": "REDACTED"}, {"n_regionkey": 0})
-    return spark.read.parquet(trg).select("n_nationkey", "n_name", "n_regionkey")
+    return read_parquet(spark, trg).select("n_nationkey", "n_name", "n_regionkey")
 
 
 # ----------------------------------------------------------------------------
@@ -284,7 +285,7 @@ def u5_delete_keys(spark, sf_dir):
     )
     up = Uploader(spark, trg, policy=WritePolicy.COMMIT)
     up.delete(keys_df=keys, key="s_nationkey")
-    return spark.read.parquet(trg).select("s_suppkey", "s_name", "s_nationkey")
+    return read_parquet(spark, trg).select("s_suppkey", "s_name", "s_nationkey")
 
 
 # ----------------------------------------------------------------------------
@@ -360,7 +361,7 @@ def c2_db_copy_new(spark, sf_dir):
         fks={"nation": {"region"}},
         activate=True,
     )
-    return spark.read.parquet(os.path.join(trg_dir, "nation.parquet")).select(
+    return read_parquet(spark, os.path.join(trg_dir, "nation.parquet")).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
 
@@ -383,7 +384,7 @@ def f10_binary_roundtrip(spark, sf_dir):
     _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     ).write.parquet(trg)
-    return spark.read.parquet(trg).select("doc_id", F.md5("payload").alias("payload_md5"))
+    return read_parquet(spark, trg).select("doc_id", F.md5("payload").alias("payload_md5"))
 
 
 # ----------------------------------------------------------------------------
@@ -415,7 +416,7 @@ def u8_sql_expression(spark, sf_dir):
     up.update(
         {"p_size": SqlExpression("p_size + 100")}, where={"p_brand": "Brand#11"}
     )
-    return spark.read.parquet(trg).select("p_partkey", "p_brand", "p_size")
+    return read_parquet(spark, trg).select("p_partkey", "p_brand", "p_size")
 
 
 # ----------------------------------------------------------------------------
@@ -521,7 +522,7 @@ def k9_compaction(spark, sf_dir):
     stats = compact_files(spark, trg, target_file_bytes=64 * 1024 * 1024)
     assert stats["files_after"] <= stats["files_before"]
     return (
-        spark.read.parquet(trg)
+        read_parquet(spark, trg)
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1135,7 +1136,7 @@ def x_campaign_vectors(spark, sf_dir):
     # the quantizer froze on the day-0 ADMITTED vectors (content-deduped
     # winners, not the whole even half — at sf0.1 the corpus has real
     # duplicate texts; the r6 parity run caught the even_emb assumption)
-    boot_ids = spark.read.parquet(st).select("doc_id").localCheckpoint(
+    boot_ids = read_parquet(spark, st).select("doc_id").localCheckpoint(
         eager=True
     )
     dupes = (
@@ -1156,7 +1157,7 @@ def x_campaign_vectors(spark, sf_dir):
     # == rebuild over exactly the currently ADMITTED docs' embeddings,
     # quantizer trained on the bootstrap admissions — the equivalence
     # contract as stated, self-consistent at any scale
-    admitted_ids = spark.read.parquet(st).select("doc_id").localCheckpoint(
+    admitted_ids = read_parquet(spark, st).select("doc_id").localCheckpoint(
         eager=True
     )
     boot_emb = emb.join(boot_ids, "doc_id", "left_semi")
@@ -1236,7 +1237,7 @@ def x_auto_maintain(spark, sf_dir):
 
     n_total = emb.count()
     retrain_ok = (
-        spark.read.parquet(f"{path}/params").collect()[0]["n_at_train"]
+        read_parquet(spark, f"{path}/params").collect()[0]["n_at_train"]
         == n_total
     )
     build_ivfpq_index(emb, ref)  # fresh quantizers over the full corpus,
@@ -1307,7 +1308,7 @@ def x_campaign_pq(spark, sf_dir):
     # codebooks froze on the day-0 ADMITTED vectors (content-deduped
     # winners — the x_campaign_vectors lesson: the corpus has real
     # duplicate texts at sf0.1)
-    boot_ids = spark.read.parquet(st).select("doc_id").localCheckpoint(
+    boot_ids = read_parquet(spark, st).select("doc_id").localCheckpoint(
         eager=True
     )
     ingest_increment(
@@ -1321,7 +1322,7 @@ def x_campaign_pq(spark, sf_dir):
         retire_removed=True,
     )
 
-    admitted_ids = spark.read.parquet(st).select("doc_id").localCheckpoint(
+    admitted_ids = read_parquet(spark, st).select("doc_id").localCheckpoint(
         eager=True
     )
     boot_emb = emb.join(boot_ids, "doc_id", "left_semi")
@@ -2509,7 +2510,7 @@ def x_warc_ingest(spark, sf_dir):
         _os.path.join(work, p) for p in ("manifest", "state", "index")
     )
     r1 = ingest_increment(spark, cleaned, man, state, idx)
-    admitted = spark.read.parquet(state).select("doc_id")
+    admitted = read_parquet(spark, state).select("doc_id")
     fresh_path = _os.path.join(work, "fresh")
     build_text_index(
         cleaned.join(admitted, "doc_id", "left_semi"), fresh_path
@@ -3088,7 +3089,7 @@ def x_pdf_ingest(spark, sf_dir):
         _os.path.join(work, p) for p in ("manifest", "state", "index")
     )
     r1 = ingest_increment(spark, cleaned, man, state, idx)
-    admitted = spark.read.parquet(state).select("doc_id")
+    admitted = read_parquet(spark, state).select("doc_id")
     fresh_path = _os.path.join(work, "fresh")
     build_text_index(
         cleaned.join(admitted, "doc_id", "left_semi"), fresh_path
@@ -4858,7 +4859,7 @@ def x_webdataset_campaign(spark, sf_dir):
     )
     r1 = ingest_increment(spark, samples, man, state, idx)
     # fresh rebuild over exactly the admitted samples
-    admitted = spark.read.parquet(state).select("doc_id")
+    admitted = read_parquet(spark, state).select("doc_id")
     fresh_path = _os.path.join(work, "fresh")
     build_text_index(
         samples.join(admitted, "doc_id", "left_semi"), fresh_path
@@ -5465,7 +5466,7 @@ def x_hll_sketch_store(spark, sf_dir):
     )
     path = os.path.join(_tmpdir("hllstore"), "sketches")
     per_src.write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     per_ok = back.select(
         F.count("*").alias("n_sources"),
         F.sum("exact_src").alias("sum_per_source"),

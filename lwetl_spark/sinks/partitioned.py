@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lwetl_spark.operators._fsutil import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -41,7 +43,7 @@ def write_partitioned(
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read back a partitioned table (partition columns reconstructed
     from directory names)."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_bucketed(
@@ -118,7 +120,7 @@ def compact_files(
         }
     n_out = max(1, -(-total // target_file_bytes))  # ceil
     tmp = path.rstrip("/") + "._compact_tmp"
-    spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
+    read_parquet(spark, path).coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
     old = path.rstrip("/") + "._compact_old"
     os.rename(path, old)
     os.rename(tmp, path)

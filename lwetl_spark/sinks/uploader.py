@@ -38,8 +38,9 @@ from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from lwetl_spark.operators._fsutil import replace_table
+from lwetl_spark.operators._fsutil import read_parquet, replace_table
 
 #: marker column of `_tag_keys`; true on rows whose key the other side has
 _HIT = "__lwetl_key_hit"
@@ -104,25 +105,28 @@ class Uploader:
         table_path: str,
         policy: WritePolicy = WritePolicy.STAGE,
         table_name: str | None = None,
+        schema: StructType | None = None,
     ):
+        """`schema` is the table's schema when the caller already has the
+        table open; without it the first read takes it from the footer."""
         self.spark = spark
         self.table_path = table_path
         self.policy = policy
         self.table_name = table_name or os.path.basename(table_path.rstrip("/")).split(".")[0]
         self._buffer: list[dict] = []
         self._scripts: list[str] = []
-        self._schema = None
+        self._schema = schema
         self.rowcount = 0
 
     # -- reading ----------------------------------------------------------
     def target(self) -> DataFrame:
-        return self.spark.read.parquet(self.table_path)
+        return self.spark.read.schema(self._target_schema()).parquet(self.table_path)
 
-    def _target_schema(self):
-        """The table's schema, read (one inference job) on first use and
-        kept: no Uploader operation changes its table's columns."""
+    def _target_schema(self) -> StructType:
+        """The table's schema, taken from the footer on first use (no job)
+        and kept: no Uploader operation changes its table's columns."""
         if self._schema is None:
-            self._schema = self.target().schema
+            self._schema = read_parquet(self.spark, self.table_path).schema
         return self._schema
 
     # -- U1/U3: insert ----------------------------------------------------
@@ -293,8 +297,11 @@ class Uploader:
             self._scripts.extend(to_sql_inserts(df, self.table_name))
             return len(self._scripts)
         if self.policy is WritePolicy.STAGE:
-            df.write.mode("overwrite").parquet(self.staging_path)
-            return self.spark.read.parquet(self.staging_path).count()
+            staged = Observation()
+            df.observe(staged, _count(F.lit(True))).write.mode("overwrite").parquet(
+                self.staging_path
+            )
+            return staged.get["n"]
         if mode == "overwrite":
             replace_table(self.spark, df, self.table_path)
         else:

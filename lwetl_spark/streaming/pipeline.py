@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
-from lwetl_spark.operators._fsutil import replace_table
+from lwetl_spark.operators._fsutil import read_parquet, replace_table
 
 
 def stream_events_tumbling(
@@ -27,7 +27,7 @@ def stream_events_tumbling(
     parquet directory.  `F.window` here (not epoch arithmetic) because
     streaming state management requires the native window column.
     """
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
     return (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -61,7 +61,7 @@ def stream_dedup_exact(
     lateness window only.
     """
     keys = keys or ["user_id", "event_type", "ts"]
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
     return (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -89,7 +89,7 @@ def stream_sessionize(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -177,7 +177,7 @@ def stream_multi_rollup(
     per-operator state is bounded by windows in the lateness horizon —
     not by event volume.  Append mode is required: a coarse bucket emits
     once, when the watermark passes its end."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
     fine_agg = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -223,7 +223,7 @@ def stream_stream_join(
     streams on user_id once per micro-batch; the state store is
     partitioned the same way, so matching is local thereafter.
     """
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
 
     def _side(tag: str, typ: str) -> DataFrame:
         s = spark.readStream.schema(schema).parquet(events_path)
@@ -280,7 +280,7 @@ def stream_enrich(
     state accumulates, unlike stream-stream joins) and is re-resolved
     each batch, so a slowly-changing dimension refreshes without a query
     restart.  This is the streaming face of the J1/J2 dimension joins."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
     return stream.join(F.broadcast(dim), on, how)
 
@@ -299,7 +299,7 @@ def stream_upload(
     per batch.  Returns the started StreamingQuery (caller stops it);
     exactly-once per batch comes from the checkpoint + idempotent
     append-by-batchId discipline of foreachBatch sinks."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
     if transform is not None:
         stream = transform(stream)
@@ -335,7 +335,7 @@ def stream_cms(
     from lwetl_spark.functions.text import tokens
     from lwetl_spark.operators.sketch import cms_build
 
-    schema = spark.read.parquet(docs_path).schema
+    schema = read_parquet(spark, docs_path).schema
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger
     ).parquet(docs_path)
@@ -373,7 +373,7 @@ def stream_paragraph_dedup(
     paragraphs, one anti-join against state keyed on the 16-byte
     fingerprint (paragraph text never joins against state), one
     reassembly agg.  State grows by exactly the novel paragraphs."""
-    schema = spark.read.parquet(docs_path).schema
+    schema = read_parquet(spark, docs_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -389,7 +389,7 @@ def stream_paragraph_dedup(
         ).withColumn("fp", F.md5("para")).localCheckpoint(eager=True)
         # existence probe + unguarded read (the r9 state-read rule)
         if _path_exists(sess, state_path):
-            seen = sess.read.parquet(state_path).select("fp")
+            seen = read_parquet(sess, state_path).select("fp")
             fresh = parts.join(seen.hint("shuffle_hash"), "fp",
                                "left_anti")
         else:
@@ -464,7 +464,7 @@ def stream_dedup_against_corpus(
     state lives at `state_path` as (fp, doc_id) parquet.
     """
 
-    schema = spark.read.parquet(docs_path).schema
+    schema = read_parquet(spark, docs_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -485,7 +485,7 @@ def stream_dedup_against_corpus(
         # genuinely corrupt state parquet must surface, not silently
         # restart dedup state as if this were the first batch
         if _path_exists(sess, state_path):
-            state = sess.read.parquet(state_path).select("fp")
+            state = read_parquet(sess, state_path).select("fp")
             novel = firsts.join(state, "fp", "left_anti")
         else:  # first batch: no state yet
             novel = firsts
@@ -530,7 +530,7 @@ def stream_validate(
                 f"rule {r['rule']!r}: {r['kind']} needs cross-batch state — "
                 "run it as a batch pass over the published table instead"
             )
-    schema = spark.read.parquet(src_path).schema
+    schema = read_parquet(spark, src_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -573,7 +573,7 @@ def stream_hll_distinct(
     Returns the started query; read the estimate with
     `hll_store_estimate(spark, state_path)`.
     """
-    schema = spark.read.parquet(src_path).schema
+    schema = read_parquet(spark, src_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -593,7 +593,7 @@ def hll_store_estimate(spark: SparkSession, state_path: str) -> int:
     """Merged distinct estimate over a sketch store written by
     `stream_hll_distinct` (or any per-slice `hll_sketch_agg` writer)."""
     return int(
-        spark.read.parquet(state_path)
+        read_parquet(spark, state_path)
         .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("e"))
         .collect()[0]["e"]
     )
@@ -626,7 +626,7 @@ def stream_pit_enrich(
     Enriched batches append to `out_path`; equality with the batch PIT
     join over the union of batches is pinned by test_streaming.
     """
-    schema = spark.read.parquet(src_path).schema
+    schema = read_parquet(spark, src_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -635,7 +635,7 @@ def stream_pit_enrich(
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        dim = sess.read.parquet(dim_path)
+        dim = read_parquet(sess, dim_path)
         e = batch_df.alias("e")
         d = dim.alias("d")
         enriched = e.join(
@@ -678,7 +678,7 @@ def stream_quarantine(
                 f"rule {r['rule']!r}: {r['kind']} needs cross-batch state — "
                 "validate the published table instead"
             )
-    schema = spark.read.parquet(src_path).schema
+    schema = read_parquet(spark, src_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -724,7 +724,7 @@ def stream_markov(
 
     Returns (query, totals) — totals is {(prev, cur): n}, live-updated.
     """
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -740,7 +740,7 @@ def stream_markov(
         w = W.partitionBy("user_id").orderBy("ts", "event_id")
         with_prev = b.withColumn("prev", F.lag("event_type").over(w))
         # existence probe + unguarded read — corrupt state must surface
-        state = (sess.read.parquet(state_path)
+        state = (read_parquet(sess, state_path)
                  if _path_exists(sess, state_path) else None)
         within = with_prev.filter(F.col("prev").isNotNull()).select(
             "prev", F.col("event_type").alias("cur")
@@ -806,7 +806,7 @@ def stream_ab_test(
     """
     from lwetl_spark.operators.grouped import two_proportion_z2
 
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -833,7 +833,7 @@ def stream_ab_test(
         )
         # existence probe + unguarded read — corrupt state must surface
         if _path_exists(sess, state_path):
-            state = sess.read.parquet(state_path)
+            state = read_parquet(sess, state_path)
             merged = (
                 b.select(
                     "user_id", "variant", F.col("conv").alias("_new")
@@ -862,7 +862,7 @@ def stream_ab_test(
 
     def stats():
         return two_proportion_z2(
-            spark.read.parquet(state_path).select("variant", "conv")
+            read_parquet(spark, state_path).select("variant", "conv")
         )
 
     return q, stats
@@ -910,7 +910,7 @@ def stream_ingest_increment(
     """
     from lwetl_spark.operators.incremental import ingest_increment
 
-    schema = spark.read.parquet(docs_path).schema
+    schema = read_parquet(spark, docs_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -995,7 +995,7 @@ def stream_ingest_cdc(
     """
     from lwetl_spark.operators.incremental import ingest_increment
 
-    schema = spark.read.parquet(changes_path).schema
+    schema = read_parquet(spark, changes_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -1075,7 +1075,7 @@ def stream_event_pattern(
     a keyed MERGE, identical shape.  Returns (query, totals) — totals
     is {user_id: n_matches}, live-updated.
     """
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -1092,7 +1092,7 @@ def stream_event_pattern(
             "from_state", F.lit(False)
         )
         # existence probe + unguarded read — corrupt state must surface
-        state = (sess.read.parquet(state_path)
+        state = (read_parquet(sess, state_path)
                  if _path_exists(sess, state_path) else None)
         stitched = b
         if state is not None:
@@ -1159,7 +1159,7 @@ def stream_media_meta(
     caller to sink."""
     from lwetl_spark.operators.media import media_meta
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1182,7 +1182,7 @@ def stream_mp4_frames(
     micro-batch."""
     from lwetl_spark.operators.media import mp4_frame_index
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1201,7 +1201,7 @@ def stream_mkv_frames(
     rows, corrupt clusters never fail a micro-batch."""
     from lwetl_spark.operators.media import mkv_frame_index
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1222,7 +1222,7 @@ def stream_image_dhash(
     rows, never a failed micro-batch."""
     from lwetl_spark.operators.media import image_dhash
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1244,7 +1244,7 @@ def stream_pdf_text(
     rows, never a failed micro-batch."""
     from lwetl_spark.operators.media import pdf_text
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1264,7 +1264,7 @@ def stream_zip_members(
     archives yield partial catalogs, never a failed micro-batch."""
     from lwetl_spark.operators.media import zip_member_contents
 
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1287,7 +1287,7 @@ def stream_media_apply(
     the named twins above remain for the operators that predate
     this).  Corrupt payloads follow each operator's own NULL/partial
     contract — never a failed micro-batch."""
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1331,7 +1331,7 @@ def stream_dhash_neardup(
 
     if not 0 <= max_hamming <= 3:
         raise ValueError("4-band LSH recall is exact only to radius 3")
-    schema = spark.read.parquet(media_path).schema
+    schema = read_parquet(spark, media_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option(
@@ -1351,7 +1351,7 @@ def stream_dhash_neardup(
         rejects = in_batch.select(F.col("id_r").alias("doc_id"))
         # (2) neighbor among the admitted state's band rows
         if _path_exists(sess, state_path):
-            state = sess.read.parquet(state_path)
+            state = read_parquet(sess, state_path)
             bands = dhash_bands(hx)
             ham = (
                 F.bit_count(bands["__hi"].bitwiseXOR(state["__hi"]))
@@ -1376,7 +1376,7 @@ def stream_dhash_neardup(
             # write and the source-progress commit — or a restart under
             # a fresh checkpoint — replays the batch; anti-joining on
             # __id keeps the 4-rows-per-admitted-id state invariant.
-            seen = sess.read.parquet(state_path).select("__id").distinct()
+            seen = read_parquet(sess, state_path).select("__id").distinct()
             # Materialize BEFORE the append so the state scan never
             # races the files this very write adds.
             new_bands = new_bands.join(seen, "__id", "left_anti") \
@@ -1425,7 +1425,7 @@ def stream_crawl_frontier(
         surt_key,
     )
 
-    schema = spark.read.parquet(pages_path).schema
+    schema = read_parquet(spark, pages_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option(
@@ -1448,7 +1448,7 @@ def stream_crawl_frontier(
         first = (cand.withColumn("_rn", F.row_number().over(wk))
                  .filter(F.col("_rn") == 1).drop("_rn"))
         if _path_exists(sess, state_path):
-            seen = sess.read.parquet(state_path).select("urlkey")
+            seen = read_parquet(sess, state_path).select("urlkey")
             first = first.join(
                 seen.hint("shuffle_hash"), "urlkey", "left_anti")
         # materialize BEFORE the append so the state scan never races

@@ -234,10 +234,11 @@ def test_plan_copy_ignores_rewrite_siblings(spark, tmp_path):
     assert plan.counts == {"t": (1, 1)}
 
 
-#: Spark jobs of the src_trg sync, as measured: plan_copy's reads and
-#: count, the region copy, and the nation merge (its reads, key and
-#: broadcast stages, and the one write)
-JOBS_PIN = 14
+#: Spark jobs of the src_trg sync, as measured: plan_copy's count, the
+#: region copy, and the nation merge (its key and broadcast stages, and
+#: the one write); every table read takes its schema from the footer
+#: with no job
+JOBS_PIN = 8
 
 
 def test_db_copy_sync_work_pin(spark, src_trg):
@@ -272,3 +273,34 @@ def test_db_copy_sync_work_pin(spark, src_trg):
     nation_writes = [p for p in written if p.startswith(nation)]
     assert len(nation_writes) == 1 and ".new-" in nation_writes[0], written
     assert len(jobs) <= JOBS_PIN, sorted(jobs)
+
+
+def test_db_copy_opens_each_table_once(spark, src_trg, monkeypatch):
+    """plan_copy opens each source table and each common target table
+    once, with the schema from its footer; the copy loop and the
+    Uploader reuse those frames instead of opening the tables again."""
+    import importlib
+
+    from lwetl_spark.operators import _fsutil
+    from lwetl_spark.sinks import uploader
+
+    dc = importlib.import_module("lwetl_spark.plans.db_copy")
+
+    opened = []
+
+    def spy(spark, path):
+        opened.append(os.path.relpath(path, os.path.dirname(os.path.dirname(path))))
+        return _fsutil.read_parquet(spark, path)
+
+    monkeypatch.setattr(dc, "read_parquet", spy)
+    monkeypatch.setattr(uploader, "read_parquet", spy)
+    src, trg = src_trg
+    pks = {"region": "r_regionkey", "nation": "n_nationkey"}
+    dc.db_copy(spark, src, trg, pks, mode="new", activate=True)
+    assert sorted(opened) == ["src/nation.parquet", "src/region.parquet", "trg/nation.parquet"]
+    opened.clear()
+    stats = dc.db_copy(spark, src, trg, pks, mode="sync", activate=True)
+    assert sorted(opened) == [
+        "src/nation.parquet", "src/region.parquet", "trg/nation.parquet", "trg/region.parquet"
+    ]
+    assert stats["nation"] == {"inserted": 0, "updated": 25, "deleted": 0, "skipped": 0}

@@ -126,6 +126,22 @@ def test_uploader_rollback_default(spark, table_dir):
     assert os.path.isdir(up.staging_path)
 
 
+def test_uploader_stage_counts_on_the_write(spark, table_dir):
+    """A staged write takes its row count from an Observation on the
+    write itself: the write is the only job (no staging re-read, no
+    count job), and an empty frame counts 0."""
+    from lwetl_spark.sinks.uploader import Uploader
+
+    up = Uploader(spark, table_dir)  # default STAGE
+    region1 = up.target().filter("n_regionkey = 1")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.numTotalJobs()
+    assert up.insert_df(region1) == 5
+    assert dag.numTotalJobs() - first == 1
+    assert spark.read.schema(up.target().schema).parquet(up.staging_path).count() == 5
+    assert up.insert_df(region1.limit(0)) == 0
+
+
 def test_uploader_plan_policy(spark, table_dir):
     from lwetl_spark.sinks.uploader import Uploader, WritePolicy
 

@@ -8,7 +8,9 @@ bootstrap state — are excluded); the census covers the run after that.
 Each job is listed with its wall time, task count, stage count, summed
 task run time and shuffle bytes, labelled with the description and the
 root plan node of the SQL execution that ran it (a job outside any SQL
-execution shows its call site).  Many short jobs mean fixed scheduling
+execution shows its description or call site; one named ``parquet
+at …`` with no description is labelled ``schema-inference`` and
+counted, since it means a parquet path was read without a schema).  Many short jobs mean fixed scheduling
 cost; task time near the wall means real compute.  Job counts are
 load-independent evidence; walls are only meaningful on a quiet box.
 
@@ -27,6 +29,13 @@ sys.path.insert(0, str(REPO))
 
 #: plan lines that wrap the operator a job actually ran
 _WRAPPERS = ("AdaptiveSparkPlan", "ResultQueryStage")
+
+
+#: label of a job outside any SQL execution, with no description, named
+#: ``parquet at <call site>``: the footer job of a schema-less parquet
+#: read (the parallel listing job of a root with many directories has
+#: the same name, but describes itself as ``Listing leaf files …``)
+INFERENCE = "schema-inference"
 
 
 def root_node(plan: str) -> str:
@@ -84,7 +93,11 @@ def census(spark, run):
             row["shuffle_r"] += st.shuffleReadBytes()
             row["shuffle_w"] += st.shuffleWriteBytes()
         desc = jd.description()
-        row["label"] = labels.get(jid) or (desc.get() if desc.isDefined() else jd.name(), "")
+        row["label"] = labels.get(jid) or (
+            (desc.get(), "") if desc.isDefined()
+            else (INFERENCE, jd.name()) if jd.name().startswith("parquet at ")
+            else (jd.name(), "")
+        )
         rows.append(row)
     rows.sort(key=lambda r: r["job"])
     return out, wall, rows
@@ -119,6 +132,8 @@ def main():
               f"stages={r['stages']} task={r['task_s']:6.2f}s "
               f"shufR={r['shuffle_r'] >> 10}K shufW={r['shuffle_w'] >> 10}K  "
               f"{node[:40]} | {(desc or '')[:60]}")
+    n_inf = sum(r["label"][0] == INFERENCE for r in rows)
+    print(f"# {n_inf} {INFERENCE} job(s) (a parquet read without a schema)")
     print(f"# sum(job walls) = {sum(max(r['wall_s'], 0) for r in rows):.2f}s, "
           f"sum(task run) = {sum(r['task_s'] for r in rows):.2f}s vs row wall "
           f"{wall:.2f}s (gap = driver-side/planning time)")
