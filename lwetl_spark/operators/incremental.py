@@ -29,55 +29,7 @@ from lwetl_spark.operators import _fsutil
 from lwetl_spark.operators import _parallel as _pl
 # shared with similarity/retrieval/maintain (r8: one probe, no local copies)
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
-
-
-#: marker table per vector-index family — its presence at
-#: `{vector_index_path}/<marker>` means the index is bootstrapped
-_VEC_MARKER = {
-    "ivf": "centroids",
-    "pq": "codebooks",
-    "lsh": "params",
-    "ivfpq": "centroids",
-}
-
-
-def _vector_family(kind: str):
-    """(build, update, remove) lifecycle triple for a vector-index
-    family (VERDICT r6 #2: the campaign's vector leg dispatches to ANY
-    persisted ANN family, not just IVF).  All four share the same
-    calling conventions — build(df, path, vec_col=, id_col=, **geom),
-    update(spark, path, delta, vec_col=, id_col=),
-    remove(spark, path, ids) — so the campaign stays family-agnostic.
-    The == rebuild equivalence holds per family: IVF/PQ/IVFADC freeze
-    their quantizers at bootstrap (rebuild anchors with ``train_df=``),
-    LSH's plane family is data-independent (plain rebuild)."""
-    if kind == "ivf":
-        from lwetl_spark.operators.similarity import (
-            build_ivf_index, remove_from_ivf_index, update_ivf_index,
-        )
-
-        return build_ivf_index, update_ivf_index, remove_from_ivf_index
-    if kind == "pq":
-        from lwetl_spark.operators.similarity import (
-            build_pq_index, remove_from_pq_index, update_pq_index,
-        )
-
-        return build_pq_index, update_pq_index, remove_from_pq_index
-    if kind == "lsh":
-        from lwetl_spark.operators.similarity import (
-            build_lsh_index, remove_from_lsh_index, update_lsh_index,
-        )
-
-        return build_lsh_index, update_lsh_index, remove_from_lsh_index
-    if kind == "ivfpq":
-        from lwetl_spark.operators.ivfpq import (
-            build_ivfpq_index, remove_from_ivfpq_index, update_ivfpq_index,
-        )
-
-        return build_ivfpq_index, update_ivfpq_index, remove_from_ivfpq_index
-    raise ValueError(
-        f"unknown vector_index_kind {kind!r} (ivf|pq|lsh|ivfpq)"
-    )
+from lwetl_spark.operators.maintain import auto_maintain, index_family
 
 
 def merge_partial_aggs(
@@ -350,12 +302,11 @@ def ingest_increment(
     # would no-op anyway; the index build's tokenize parallelism comes
     # from the admission joins' shuffle partitioning, not from the
     # input's split count.
-    _vec_build = _vec_update = _vec_remove = None
     if vector_index_path is not None:
-        _vec_build, _vec_update, _vec_remove = _vector_family(
-            vector_index_kind
-        )
-        _vec_marker = f"{vector_index_path}/{_VEC_MARKER[vector_index_kind]}"
+        # the campaign's vector leg dispatches to any persisted ANN
+        # family (VERDICT r6 #2); the first marker means bootstrapped
+        vec = index_family(vector_index_kind)
+        _vec_marker = f"{vector_index_path}/{vec.markers[0]}"
 
     def _vec_add(ids_df: DataFrame) -> int:
         """Append the ids' vectors into the vector index (build at
@@ -368,19 +319,14 @@ def ingest_increment(
         if not n:
             return 0
         if _path_exists(spark, _vec_marker):
-            _vec_update(
+            vec.update(
                 spark, vector_index_path, vec_delta,
                 vec_col=vec_col, id_col=id_col,
             )
         else:  # bootstrap: quantizer trains on this batch (frozen after)
-            geom = (
-                {"num_centroids": vector_num_centroids}
-                if vector_index_kind in ("ivf", "ivfpq")
-                else {}
-            )
-            _vec_build(
-                vec_delta, vector_index_path,
-                vec_col=vec_col, id_col=id_col, **geom,
+            vec.build(
+                vec_delta, vector_index_path, vec_col=vec_col, id_col=id_col,
+                **vec.build_kwargs(num_centroids=vector_num_centroids),
             )
         return n
 
@@ -612,7 +558,7 @@ def ingest_increment(
                     # NEW content's embedding replaces the old one under
                     # the frozen quantizer (assign-only — == rebuild
                     # holds)
-                    _vec_remove(spark, vector_index_path, cand.select(id_col))
+                    vec.remove(spark, vector_index_path, cand.select(id_col))
                     return _vec_add(cand)
                 return 0
 
@@ -644,7 +590,7 @@ def ingest_increment(
             )
             _state_written()
             if embeddings is not None:
-                _vec_remove(spark, vector_index_path, removed)
+                vec.remove(spark, vector_index_path, removed)
         return n
 
     n_retired = 0
@@ -716,8 +662,6 @@ def ingest_increment(
         and vector_index_path is not None
         and _path_exists(spark, _vec_marker)
     ):
-        from lwetl_spark.operators.maintain import auto_maintain
-
         vec_action = auto_maintain(
             spark, vector_index_path, kind=vector_index_kind
         ).collect()[0]["action"]

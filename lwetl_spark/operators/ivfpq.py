@@ -44,7 +44,6 @@ from lwetl_spark.operators import _parallel as _pl
 from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
-from lwetl_spark.operators._fsutil import read_parquet
 from lwetl_spark.operators._fsutil import remove_path as _remove_path
 from lwetl_spark.operators._parallel import spread as _spread
 
@@ -56,8 +55,11 @@ from lwetl_spark.operators.similarity import (
     _make_assign_cells,
     _pq_codebooks_from_matrix,
     _probe_cells,
+    _rank_topk,
+    _read_params,
     _save_centroids,
     _save_codebooks,
+    _save_params,
     _score_candidates,
     _spherical_kmeans_from_matrix,
     _train_sample_matrix,
@@ -329,12 +331,7 @@ def ivfpq_topk(
         probe_v, codes, b_C, b_books, max(rerank, k), b_R
     )
     scored = _score_candidates(df, shortlist, vec_col, id_col, "join")
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def build_ivfpq_index(
@@ -413,19 +410,11 @@ def build_ivfpq_index(
     _save_centroids(spark, C, path)
     _save_codebooks(spark, books, path)
     base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
-    # n_at_train records the corpus the QUANTIZERS saw, not the corpus
-    # indexed: a rebuild-with-train_df anchor must carry the
-    # same growth baseline as the incrementally maintained index it is
-    # contract-equal to, or growth_pm drift readings diverge
-    n_at_train = (df if train_df is None else train_df).count()
-    spark.createDataFrame(
-        [(
-            int(num_centroids), int(m), int(ksub), int(train_sample),
-            int(iters), int(n_at_train),
-        )],
-        "num_centroids int, m int, ksub int, train_sample int,"
-        " iters int, n_at_train long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    _save_params(
+        spark, path, df if train_df is None else train_df,
+        num_centroids=num_centroids, m=m, ksub=ksub,
+        train_sample=train_sample, iters=iters,
+    )
     # the codes and vectors writes are independent — both pure
     # functions of `df`, disjoint output tables — so they run as
     # concurrent job groups (the vectors copy hides under the encode)
@@ -520,12 +509,7 @@ def query_ivfpq_index(
         .dropDuplicates(["id"])
     )
     scored = _score_candidates(vectors, shortlist, "vec", "id", "join")
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def update_ivfpq_index(
@@ -583,8 +567,9 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
     1000·max·cells/total), code/vector row-count consistency, and
     `growth_pm` = 1000·n_codes/n_at_train (the PQ-side drift signal:
     codebooks trained against a corpus the index has since outgrown).
-    One (cell)-keyed count + one vectors count + the 1-row params read
-    → a single bounded output row; exact integers only."""
+    One (cell)-keyed count + one vectors count → a single bounded
+    output row, plus the 1-row params read on the driver; exact integers
+    only."""
     per_cell = (
         spark.read.schema(_IVFPQ_CODES_DDL).parquet(f"{path}/codes")
         .groupBy("cell")
@@ -593,7 +578,7 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
     n_vec = spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors").agg(
         F.count("*").cast("long").alias("n_vectors")
     )
-    params = read_parquet(spark, f"{path}/params").select("n_at_train")
+    n_at_train = int(_read_params(spark, path)["n_at_train"])
     return (
         per_cell.agg(
             F.count("*").alias("n_cells"),
@@ -607,11 +592,10 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
             ).alias("imbalance_pm"),
         )
         .crossJoin(n_vec)
-        .crossJoin(params)
         .select(
             "n_cells", "n_codes", "n_vectors", "max_cell", "min_cell",
             "imbalance_pm",
-            F.expr("1000 * n_codes div greatest(n_at_train, 1)")
+            F.expr(f"1000 * n_codes div {max(n_at_train, 1)}")
             .cast("long").alias("growth_pm"),
             (F.col("n_codes") == F.col("n_vectors")).alias("consistent"),
         )
@@ -633,24 +617,17 @@ def retrain_ivfpq_index(
     family from `{path}/params` (the retrain_ivf/pq_index contract: a
     maintenance pass must not silently change the quantizer family);
     explicit args override."""
-    need = (num_centroids is None or m is None or ksub is None
-            or train_sample is None or iters is None)
-    if need:
-        p = read_parquet(spark, f"{path}/params").collect()[0]
-        num_centroids = num_centroids if num_centroids is not None else p["num_centroids"]
-        m = m if m is not None else p["m"]
-        ksub = ksub if ksub is not None else p["ksub"]
-        train_sample = train_sample if train_sample is not None else p["train_sample"]
-        iters = iters if iters is not None else p["iters"]
+    geometry = _read_params(
+        spark, path, num_centroids=num_centroids, m=m, ksub=ksub,
+        train_sample=train_sample, iters=iters,
+    )
     members = (
         spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors")
         .select("id", "vec")
         .localCheckpoint(eager=True)
     )
     build_ivfpq_index(
-        members, path, vec_col="vec", id_col="id",
-        num_centroids=num_centroids, m=m, ksub=ksub,
-        train_sample=train_sample, iters=iters,
+        members, path, vec_col="vec", id_col="id", **geometry,
         # OPQ-ness is part of the index family (the rotation marker on
         # disk), and a maintenance pass must never silently change the
         # family — re-derive a fresh rotation from the current residuals

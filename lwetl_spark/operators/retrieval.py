@@ -53,6 +53,7 @@ from lwetl_spark.operators import _partwrite as _pw
 from lwetl_spark.operators import _probe
 from lwetl_spark.operators._fsutil import path_exists as _path_exists
 from lwetl_spark.operators._fsutil import read_parquet, replace_table
+from lwetl_spark.operators.maintain import detect_index_kind, index_family
 
 def _index_sidecar_schemas(id_type):
     """Pinned schemas for the text-index sidecar tables (r12, guide §6 /
@@ -710,11 +711,7 @@ def hybrid_topk(
     query time, and fusing two post-hoc-filtered lists would under-fill
     k and mis-rank.
     """
-    kind_resolved = kind
-    if kind_resolved is None:
-        from lwetl_spark.operators.maintain import detect_index_kind
-
-        kind_resolved = detect_index_kind(spark, vector_index_path)
+    vec = index_family(kind or detect_index_kind(spark, vector_index_path))
 
     # r12 (guide §2.6): the lexical and dense probe legs are
     # independent — they read disjoint index paths and only share the
@@ -737,34 +734,10 @@ def hybrid_topk(
     )
 
     def _dense_leg():
-        if kind_resolved == "ivf":
-            from lwetl_spark.operators.similarity import query_ivf_index
-
-            return query_ivf_index(
-                spark, vector_index_path, qv, k=k, nprobe=nprobe,
-                filter_ids=filter_ids,
-            )
-        if kind_resolved == "pq":
-            from lwetl_spark.operators.similarity import query_pq_index
-
-            return query_pq_index(
-                spark, vector_index_path, qv, k=k, rerank=rerank,
-                filter_ids=filter_ids,
-            )
-        if kind_resolved == "lsh":
-            from lwetl_spark.operators.similarity import query_lsh_index
-
-            return query_lsh_index(
-                spark, vector_index_path, qv, k=k, filter_ids=filter_ids
-            )
-        if kind_resolved == "ivfpq":
-            from lwetl_spark.operators.ivfpq import query_ivfpq_index
-
-            return query_ivfpq_index(
-                spark, vector_index_path, qv, k=k, nprobe=nprobe,
-                rerank=rerank, filter_ids=filter_ids,
-            )
-        raise ValueError(f"unknown vector index kind {kind_resolved!r}")
+        return vec.query(
+            spark, vector_index_path, qv, k=k, filter_ids=filter_ids,
+            **vec.probe_kwargs(nprobe=nprobe, rerank=rerank),
+        )
 
     dense = _pl.overlap_all(_lex_leg, _dense_leg)
     lex = _lex_out[0]

@@ -15,6 +15,15 @@
   (deterministic seeded planes), candidates only within bucket, then
   exact re-rank.  Recall < 1 by construction; `num_tables` trades
   recall for fan-out.
+
+Four ANN families also persist as indexes under a path: IVF
+(`build_ivf_index`), PQ (`build_pq_index`), LSH (`build_lsh_index`)
+and IVFADC (`ivfpq.build_ivfpq_index`).  Each has build, update,
+remove, query, stats and retrain functions; `maintain.INDEX_FAMILIES`
+is the one table of them, with each family's layout tables, and every
+kind dispatch (`ingest_increment`, `auto_maintain`, `hybrid_topk`)
+goes through it.  Every family writes its geometry to `{path}/params`
+with `_save_params` and reads it back with `_read_params`.
 """
 
 from __future__ import annotations
@@ -43,6 +52,55 @@ _PQ_CODES_DDL = "cid long, code long, bucket int"
 _PQ_VECTORS_DDL = "id long, vec array<double>, bucket int"
 _LSH_BUCKETS_DDL = "id long, bucket int, table_idx int"
 _LSH_VECTORS_DDL = "id long, vec array<double>, vbucket int"
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail of every ANN path, inline and persisted: each
+    query id's ``k`` best (id, neighbor_id, cos) rows ranked 1..k, ties
+    broken by neighbor id ascending."""
+    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("id", "neighbor_id", "cos", "rank")
+    )
+
+
+def _save_params(
+    spark, path: str, trained_on: DataFrame | None = None, **geometry
+) -> None:
+    """Write `{path}/params`, a persisted index's one-row geometry: one
+    int column per keyword, in keyword order, then — for the codebook
+    families — ``n_at_train``, the row count of ``trained_on``, the
+    frame the quantizers were trained on (`auto_maintain`'s growth
+    baseline: a ``train_df=`` rebuild records the same count as the
+    incrementally maintained index it equals)."""
+    row = {name: int(v) for name, v in geometry.items()}
+    ddl = [f"{name} int" for name in row]
+    if trained_on is not None:
+        row["n_at_train"] = trained_on.count()
+        ddl.append("n_at_train long")
+    spark.createDataFrame([tuple(row.values())], ", ".join(ddl)).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/params")
+
+
+def _read_params(spark, path: str, fallback: dict | None = None, **given) -> dict:
+    """A persisted index's geometry, `{path}/params`, as a dict.
+
+    Each keyword names a field: a non-None value overrides the stored
+    one, and only the named fields come back (every stored field when
+    none is named).  Nothing is read when every named field is given.
+    ``fallback`` serves indexes built before params existed: its values
+    stand in for a missing table and yield to a stored one."""
+    if given and None not in given.values():
+        return given
+    stored = dict(fallback or {})
+    if fallback is None or _path_exists(spark, f"{path}/params"):
+        stored.update(read_parquet(spark, f"{path}/params").collect()[0].asDict())
+    if not given:
+        return stored
+    return {name: stored.get(name) if v is None else v for name, v in given.items()}
 
 
 def cosine_topk(
@@ -79,12 +137,7 @@ def cosine_topk(
         q.join(F.broadcast(c), F.col("id") != F.col("neighbor_id"))
         .withColumn("cos", F.round(cosine_similarity("qv", "cv"), 6))
     )
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_topk_pandas(
@@ -239,12 +292,7 @@ def cosine_topk_blocked(
         .cogroup(c.groupBy("qblk", "cblk"))
         .applyInPandas(local_topk, "id long, neighbor_id long, cos double")
     )
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(local, k)
 
 
 def _train_sample_matrix(
@@ -376,12 +424,7 @@ def ivf_topk(
             .dropDuplicates(["id", "neighbor_id"])
         )
         scored = _score_candidates(df, cand, vec_col, id_col, score)
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _make_cell_assigner():
@@ -699,11 +742,10 @@ def build_lsh_index(
         _have = bucketed.rdd.getNumPartitions()
     except Exception:  # Spark Connect: size unknowable — salt modestly
         _have = 32 * num_tables
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(int(num_planes), int(num_tables), int(dim))],
-        "num_planes int, num_tables int, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    _save_params(
+        df.sparkSession, path,
+        num_planes=num_planes, num_tables=num_tables, dim=dim,
+    )
 
     # the buckets and vectors writes are independent — both pure
     # functions of `df`, disjoint output tables — so they run as
@@ -736,10 +778,7 @@ def update_lsh_index(
     from `{path}/params` (persisted by `build_lsh_index`), so the delta
     bucketizes with the index's own family by construction.  Cost:
     one Arrow bucketize pass over the delta + partition appends."""
-    p = read_parquet(spark, f"{path}/params").collect()[0]
-    bucketed = _lsh_bucketize(
-        delta_df, vec_col, id_col, p["num_planes"], p["num_tables"], p["dim"]
-    )
+    bucketed = _lsh_bucketize(delta_df, vec_col, id_col, **_read_params(spark, path))
 
     # independent appends to disjoint tables — run as concurrent job
     # groups
@@ -849,18 +888,16 @@ def query_lsh_index(
     resizes num_planes to the corpus); the explicit arguments are the
     fallback for pre-params indexes only.
     """
-    if _path_exists(spark, f"{path}/params"):
-        # persisted family wins: probes must keep working after
-        # auto_maintain resizes num_planes; a corrupt/unreadable params
-        # table on an EXISTING path now propagates instead of silently
-        # falling back to the caller's (possibly wrong) default family
-        # and returning wrong/empty neighbors (ADVICE r7)
-        p = read_parquet(spark, f"{path}/params").collect()[0]
-        num_planes, num_tables, dim = (
-            int(p["num_planes"]), int(p["num_tables"]), int(p["dim"]),
-        )
-    # else: pre-params index — trust the caller's family
-    q_buckets = _lsh_bucketize(queries_df, vec_col, id_col, num_planes, num_tables, dim)
+    # persisted family wins: probes must keep working after
+    # auto_maintain resizes num_planes; a corrupt/unreadable params
+    # table on an EXISTING path propagates instead of silently falling
+    # back to the caller's (possibly wrong) default family and
+    # returning wrong/empty neighbors (ADVICE r7)
+    planes = _read_params(
+        spark, path,
+        fallback={"num_planes": num_planes, "num_tables": num_tables, "dim": dim},
+    )
+    q_buckets = _lsh_bucketize(queries_df, vec_col, id_col, **planes)
     c_buckets = spark.read.schema(_LSH_BUCKETS_DDL).parquet(f"{path}/buckets").select(
         F.col("id").alias("neighbor_id"), "table_idx", "bucket"
     )
@@ -902,12 +939,7 @@ def query_lsh_index(
             yield pdf[["id", "neighbor_id"]].assign(cos=cos)
 
     scored = paired.mapInPandas(cos_batches, "id long, neighbor_id long, cos double")
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _pq_codebooks_from_matrix(Xn, m: int, ksub: int, iters: int):
@@ -1016,12 +1048,7 @@ def pq_topk(
         base, codes, b_books, max(rerank, k), q_blocks, c_blocks
     )
     scored = _score_candidates(df, shortlist, vec_col, id_col, "join")
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _make_pq_encode(b_books):
@@ -1223,14 +1250,10 @@ def build_pq_index(
     spark = df.sparkSession
     b_books = spark.sparkContext.broadcast(books)
     _save_codebooks(spark, books, path)
-    # n_at_train records the corpus size the codebooks were trained
-    # against — auto_maintain's growth drift signal (appends freeze the
-    # codebooks; growth_pm = 1000·n_codes/n_at_train says how far the
-    # index has outgrown them)
-    spark.createDataFrame(
-        [(int(m), int(ksub), int(train_sample), int(iters), int(df.count()))],
-        "m int, ksub int, train_sample int, iters int, n_at_train long",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    _save_params(
+        spark, path, df if train_df is None else train_df,
+        m=m, ksub=ksub, train_sample=train_sample, iters=iters,
+    )
     base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     bucket = F.pmod(F.xxhash64("cid"), F.lit(_PQ_BUCKETS)).alias("bucket")
 
@@ -1293,12 +1316,7 @@ def query_pq_index(
         .dropDuplicates(["id"])
     )
     scored = _score_candidates(vectors, shortlist, "vec", "id", "join")
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def update_pq_index(
@@ -1393,23 +1411,15 @@ def retrain_pq_index(
     OWN family from `{path}/params` (the retrain_ivf_index contract: a
     maintenance pass must not silently change the quantizer family);
     explicit args override."""
-    if m is None or ksub is None or train_sample is None or iters is None:
-        p = read_parquet(spark, f"{path}/params").collect()[0]
-        m = m if m is not None else p["m"]
-        ksub = ksub if ksub is not None else p["ksub"]
-        train_sample = (
-            train_sample if train_sample is not None else p["train_sample"]
-        )
-        iters = iters if iters is not None else p["iters"]
+    geometry = _read_params(
+        spark, path, m=m, ksub=ksub, train_sample=train_sample, iters=iters
+    )
     members = (
         spark.read.schema(_PQ_VECTORS_DDL).parquet(f"{path}/vectors")
         .select("id", "vec")
         .localCheckpoint(eager=True)
     )
-    build_pq_index(
-        members, path, vec_col="vec", id_col="id",
-        m=m, ksub=ksub, train_sample=train_sample, iters=iters,
-    )
+    build_pq_index(members, path, vec_col="vec", id_col="id", **geometry)
 
 
 def build_ivf_index(
@@ -1452,10 +1462,10 @@ def build_ivf_index(
     _save_centroids(spark, C, path)
     # persist the quantizer family so maintenance passes (retrain) can
     # preserve the index's geometry instead of assuming defaults
-    spark.createDataFrame(
-        [(int(num_centroids), int(train_sample), int(iters))],
-        "num_centroids int, train_sample int, iters int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
+    _save_params(
+        spark, path,
+        num_centroids=num_centroids, train_sample=train_sample, iters=iters,
+    )
     base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     assigned = base.mapInPandas(
         _make_assign_cells(b_C, 1, carry_v=True), "id long, cell int, v array<double>"
@@ -1527,12 +1537,7 @@ def query_ivf_index(
         .cogroup(cells.groupBy("cell"))
         .applyInPandas(_make_cell_topk(k), "id long, neighbor_id long, cos double")
     )
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def update_ivf_index(
@@ -1625,35 +1630,41 @@ def retrain_ivf_index(
     persisted by `build_ivf_index` at `{path}/params`, falling back to
     the stored centroid count for indexes built before params existed.
     Pass explicit values only to deliberately change the family."""
-    if num_centroids is None or train_sample is None or iters is None:
-        stored_n = stored_s = stored_i = None
-        if _path_exists(spark, f"{path}/params"):
-            p = read_parquet(spark, f"{path}/params").collect()[0]
-            stored_n, stored_s, stored_i = (
-                p["num_centroids"], p["train_sample"], p["iters"],
-            )
-        else:  # pre-params index: geometry from the centroids
-            stored_n = len(_load_ivf_centroids(spark, path))
-        num_centroids = num_centroids if num_centroids is not None else stored_n
-        train_sample = (
-            train_sample if train_sample is not None
-            else (stored_s if stored_s is not None else 10_000)
-        )
-        iters = iters if iters is not None else (stored_i if stored_i is not None else 8)
+    geometry = _read_params(
+        spark, path, fallback={"train_sample": 10_000, "iters": 8},
+        num_centroids=num_centroids, train_sample=train_sample, iters=iters,
+    )
+    if geometry["num_centroids"] is None:  # pre-params index
+        geometry["num_centroids"] = len(_load_ivf_centroids(spark, path))
     members = (
         spark.read.schema(_IVF_CELLS_DDL).parquet(f"{path}/cells")
         .select("id", "v")
         .localCheckpoint(eager=True)
     )
-    build_ivf_index(
-        members,
-        path,
-        vec_col="v",
-        id_col="id",
-        num_centroids=num_centroids,
-        train_sample=train_sample,
-        iters=iters,
+    build_ivf_index(members, path, vec_col="v", id_col="id", **geometry)
+
+
+def retrain_lsh_index(
+    spark,
+    path: str,
+    num_planes: int | None = None,
+    num_tables: int | None = None,
+    dim: int | None = None,
+) -> None:
+    """Rebuild a persisted LSH index over its CURRENT vectors — the LSH
+    maintenance pass: planes are data-independent, so the only repair
+    is a new plane budget (`auto_maintain` passes a larger
+    ``num_planes`` when buckets overload).  Geometry defaults to the
+    index's own `{path}/params`; explicit args override."""
+    geometry = _read_params(
+        spark, path, num_planes=num_planes, num_tables=num_tables, dim=dim
     )
+    members = (
+        spark.read.schema(_LSH_VECTORS_DDL).parquet(f"{path}/vectors")
+        .select("id", "vec")
+        .localCheckpoint(eager=True)
+    )
+    build_lsh_index(members, path, vec_col="vec", id_col="id", **geometry)
 
 
 def _lsh_bucketize(
@@ -1833,12 +1844,7 @@ def lsh_ann_topk(
             .dropDuplicates(["id", "neighbor_id"])
         )
         scored = _score_candidates(df, cand, vec_col, id_col, score)
-    w = Window.partitionBy("id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _lsh_bucket_scored(

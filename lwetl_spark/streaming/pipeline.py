@@ -17,6 +17,49 @@ from lwetl_spark.operators._fsutil import path_exists as _path_exists
 from lwetl_spark.operators._fsutil import read_parquet, replace_table
 
 
+def _file_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """A file stream over the parquet directory ``path``, its schema read
+    once from the directory's footer; ``max_files_per_trigger`` (when
+    given) caps each micro-batch's files."""
+    reader = spark.readStream.schema(read_parquet(spark, path).schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
+
+
+def _reject_cross_batch_rules(rules: list[dict]) -> None:
+    """Per-batch validation sees one micro-batch at a time, so a rule
+    that needs cross-batch state (an FD broken across batches folds to
+    0 violations) is refused up front."""
+    for r in rules:
+        if r["kind"] in ("unique", "foreign_key", "functional_dependency"):
+            raise ValueError(
+                f"rule {r['rule']!r}: {r['kind']} needs cross-batch state — "
+                "validate the published table with a batch pass instead"
+            )
+
+
+def _vector_kwargs(
+    batch: DataFrame,
+    vector_index_path: str | None,
+    id_col: str,
+    vec_col: str,
+    vector_index_kind: str,
+) -> dict:
+    """`ingest_increment`'s dual-index keywords for one micro-batch: the
+    batch's (id, vector) rows and the vector index, or none without one."""
+    if vector_index_path is None:
+        return {}
+    return {
+        "embeddings": batch.select(id_col, vec_col),
+        "vector_index_path": vector_index_path,
+        "vec_col": vec_col,
+        "vector_index_kind": vector_index_kind,
+    }
+
+
 def stream_events_tumbling(
     spark: SparkSession,
     events_path: str,
@@ -27,8 +70,7 @@ def stream_events_tumbling(
     parquet directory.  `F.window` here (not epoch arithmetic) because
     streaming state management requires the native window column.
     """
-    schema = read_parquet(spark, events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
+    stream = _file_stream(spark, events_path)
     return (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
@@ -61,8 +103,7 @@ def stream_dedup_exact(
     lateness window only.
     """
     keys = keys or ["user_id", "event_type", "ts"]
-    schema = read_parquet(spark, events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
+    stream = _file_stream(spark, events_path)
     return (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
@@ -89,12 +130,8 @@ def stream_sessionize(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = read_parquet(spark, events_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = (
-        reader.parquet(events_path)
+        _file_stream(spark, events_path, max_files_per_trigger)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
     )
@@ -177,8 +214,7 @@ def stream_multi_rollup(
     per-operator state is bounded by windows in the lateness horizon —
     not by event volume.  Append mode is required: a coarse bucket emits
     once, when the watermark passes its end."""
-    schema = read_parquet(spark, events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
+    stream = _file_stream(spark, events_path)
     fine_agg = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
@@ -223,12 +259,10 @@ def stream_stream_join(
     streams on user_id once per micro-batch; the state store is
     partitioned the same way, so matching is local thereafter.
     """
-    schema = read_parquet(spark, events_path).schema
 
     def _side(tag: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(events_path)
         return (
-            s.filter(F.col("event_type") == typ)
+            _file_stream(spark, events_path).filter(F.col("event_type") == typ)
             .select(
                 F.col("user_id").alias(f"{tag}_user"),
                 F.col("ts").cast("timestamp").alias(f"{tag}_ts"),
@@ -280,8 +314,7 @@ def stream_enrich(
     state accumulates, unlike stream-stream joins) and is re-resolved
     each batch, so a slowly-changing dimension refreshes without a query
     restart.  This is the streaming face of the J1/J2 dimension joins."""
-    schema = read_parquet(spark, events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
+    stream = _file_stream(spark, events_path)
     return stream.join(F.broadcast(dim), on, how)
 
 
@@ -299,8 +332,7 @@ def stream_upload(
     per batch.  Returns the started StreamingQuery (caller stops it);
     exactly-once per batch comes from the checkpoint + idempotent
     append-by-batchId discipline of foreachBatch sinks."""
-    schema = read_parquet(spark, events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
+    stream = _file_stream(spark, events_path)
     if transform is not None:
         stream = transform(stream)
 
@@ -335,10 +367,7 @@ def stream_cms(
     from lwetl_spark.functions.text import tokens
     from lwetl_spark.operators.sketch import cms_build
 
-    schema = read_parquet(spark, docs_path).schema
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    ).parquet(docs_path)
+    stream = _file_stream(spark, docs_path, max_files_per_trigger)
     counters: dict[tuple[int, int], int] = {}
 
     def sink(batch_df, batch_id: int) -> None:
@@ -373,12 +402,7 @@ def stream_paragraph_dedup(
     paragraphs, one anti-join against state keyed on the 16-byte
     fingerprint (paragraph text never joins against state), one
     reassembly agg.  State grows by exactly the novel paragraphs."""
-    schema = read_parquet(spark, docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
+    stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -464,12 +488,7 @@ def stream_dedup_against_corpus(
     state lives at `state_path` as (fp, doc_id) parquet.
     """
 
-    schema = read_parquet(spark, docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
+    stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         firsts = (
@@ -524,18 +543,8 @@ def stream_validate(
     """
     from lwetl_spark.operators.validate import validate
 
-    for r in rules:
-        if r["kind"] in ("unique", "foreign_key", "functional_dependency"):
-            raise ValueError(
-                f"rule {r['rule']!r}: {r['kind']} needs cross-batch state — "
-                "run it as a batch pass over the published table instead"
-            )
-    schema = read_parquet(spark, src_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_path)
-    )
+    _reject_cross_batch_rules(rules)
+    stream = _file_stream(spark, src_path, max_files_per_trigger)
     totals: dict[str, dict[str, int]] = {}
 
     def sink(batch_df, batch_id: int) -> None:
@@ -573,12 +582,7 @@ def stream_hll_distinct(
     Returns the started query; read the estimate with
     `hll_store_estimate(spark, state_path)`.
     """
-    schema = read_parquet(spark, src_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_path)
-    )
+    stream = _file_stream(spark, src_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sk = batch_df.agg(
@@ -626,12 +630,7 @@ def stream_pit_enrich(
     Enriched batches append to `out_path`; equality with the batch PIT
     join over the union of batches is pinned by test_streaming.
     """
-    schema = read_parquet(spark, src_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_path)
-    )
+    stream = _file_stream(spark, src_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -672,18 +671,8 @@ def stream_quarantine(
     """
     from lwetl_spark.operators.validate import quarantine
 
-    for r in rules:
-        if r["kind"] in ("unique", "foreign_key", "functional_dependency"):
-            raise ValueError(
-                f"rule {r['rule']!r}: {r['kind']} needs cross-batch state — "
-                "validate the published table instead"
-            )
-    schema = read_parquet(spark, src_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_path)
-    )
+    _reject_cross_batch_rules(rules)
+    stream = _file_stream(spark, src_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         clean, bad = quarantine(batch_df, rules)
@@ -724,12 +713,7 @@ def stream_markov(
 
     Returns (query, totals) — totals is {(prev, cur): n}, live-updated.
     """
-    schema = read_parquet(spark, events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
-    )
+    stream = _file_stream(spark, events_path, max_files_per_trigger)
     totals: dict[tuple[str, str], int] = {}
 
     def sink(batch_df, batch_id: int) -> None:
@@ -806,12 +790,7 @@ def stream_ab_test(
     """
     from lwetl_spark.operators.grouped import two_proportion_z2
 
-    schema = read_parquet(spark, events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
-    )
+    stream = _file_stream(spark, events_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -910,26 +889,11 @@ def stream_ingest_increment(
     """
     from lwetl_spark.operators.incremental import ingest_increment
 
-    schema = read_parquet(spark, docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
+    stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        vec_kwargs = (
-            {
-                "embeddings": batch_df.select(id_col, vec_col),
-                "vector_index_path": vector_index_path,
-                "vec_col": vec_col,
-                "vector_index_kind": vector_index_kind,
-            }
-            if vector_index_path is not None
-            else {}
-        )
         ingest_increment(
             batch_df.sparkSession,
             batch_df.select(id_col, text_col),
@@ -940,7 +904,9 @@ def stream_ingest_increment(
             text_col=text_col,
             snapshot_is_delta=True,
             index_positions=index_positions,
-            **vec_kwargs,
+            **_vector_kwargs(
+                batch_df, vector_index_path, id_col, vec_col, vector_index_kind
+            ),
         )
 
     return stream.writeStream.foreachBatch(sink).start()
@@ -995,12 +961,7 @@ def stream_ingest_cdc(
     """
     from lwetl_spark.operators.incremental import ingest_increment
 
-    schema = read_parquet(spark, changes_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changes_path)
-    )
+    stream = _file_stream(spark, changes_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1017,16 +978,6 @@ def stream_ingest_cdc(
             )
         upserts = batch_df.filter(F2.col(op_col) != delete_op)
         deletes = batch_df.filter(F2.col(op_col) == delete_op).select(id_col)
-        vec_kwargs = (
-            {
-                "embeddings": upserts.select(id_col, vec_col),
-                "vector_index_path": vector_index_path,
-                "vec_col": vec_col,
-                "vector_index_kind": vector_index_kind,
-            }
-            if vector_index_path is not None
-            else {}
-        )
         ingest_increment(
             batch_df.sparkSession,
             upserts.select(id_col, text_col),
@@ -1039,7 +990,9 @@ def stream_ingest_cdc(
             compact_changed=compact_changed,
             compact_deferred_threshold=compact_deferred_threshold,
             tombstones=deletes,
-            **vec_kwargs,
+            **_vector_kwargs(
+                upserts, vector_index_path, id_col, vec_col, vector_index_kind
+            ),
         )
 
     return stream.writeStream.foreachBatch(sink).start()
@@ -1075,12 +1028,7 @@ def stream_event_pattern(
     a keyed MERGE, identical shape.  Returns (query, totals) — totals
     is {user_id: n_matches}, live-updated.
     """
-    schema = read_parquet(spark, events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
-    )
+    stream = _file_stream(spark, events_path, max_files_per_trigger)
     totals: dict[int, int] = {}
     p1, p2, p3 = pattern
 
@@ -1159,11 +1107,7 @@ def stream_media_meta(
     caller to sink."""
     from lwetl_spark.operators.media import media_meta
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return media_meta(reader.parquet(media_path))
+    return media_meta(_file_stream(spark, media_path, max_files_per_trigger))
 
 
 def stream_mp4_frames(
@@ -1182,11 +1126,9 @@ def stream_mp4_frames(
     micro-batch."""
     from lwetl_spark.operators.media import mp4_frame_index
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return mp4_frame_index(reader.parquet(media_path))
+    return mp4_frame_index(
+        _file_stream(spark, media_path, max_files_per_trigger)
+    )
 
 
 def stream_mkv_frames(
@@ -1201,11 +1143,7 @@ def stream_mkv_frames(
     rows, corrupt clusters never fail a micro-batch."""
     from lwetl_spark.operators.media import mkv_frame_index
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return mkv_frame_index(reader.parquet(media_path))
+    return mkv_frame_index(_file_stream(spark, media_path, max_files_per_trigger))
 
 
 def stream_image_dhash(
@@ -1222,11 +1160,7 @@ def stream_image_dhash(
     rows, never a failed micro-batch."""
     from lwetl_spark.operators.media import image_dhash
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return image_dhash(reader.parquet(media_path))
+    return image_dhash(_file_stream(spark, media_path, max_files_per_trigger))
 
 
 def stream_pdf_text(
@@ -1244,11 +1178,7 @@ def stream_pdf_text(
     rows, never a failed micro-batch."""
     from lwetl_spark.operators.media import pdf_text
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return pdf_text(reader.parquet(media_path))
+    return pdf_text(_file_stream(spark, media_path, max_files_per_trigger))
 
 
 def stream_zip_members(
@@ -1264,11 +1194,9 @@ def stream_zip_members(
     archives yield partial catalogs, never a failed micro-batch."""
     from lwetl_spark.operators.media import zip_member_contents
 
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return zip_member_contents(reader.parquet(media_path))
+    return zip_member_contents(
+        _file_stream(spark, media_path, max_files_per_trigger)
+    )
 
 
 def stream_media_apply(
@@ -1287,11 +1215,7 @@ def stream_media_apply(
     the named twins above remain for the operators that predate
     this).  Corrupt payloads follow each operator's own NULL/partial
     contract — never a failed micro-batch."""
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return op(reader.parquet(media_path))
+    return op(_file_stream(spark, media_path, max_files_per_trigger))
 
 
 def stream_dhash_neardup(
@@ -1331,12 +1255,7 @@ def stream_dhash_neardup(
 
     if not 0 <= max_hamming <= 3:
         raise ValueError("4-band LSH recall is exact only to radius 3")
-    schema = read_parquet(spark, media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(media_path)
+    stream = _file_stream(spark, media_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1425,12 +1344,7 @@ def stream_crawl_frontier(
         surt_key,
     )
 
-    schema = read_parquet(spark, pages_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(pages_path)
+    stream = _file_stream(spark, pages_path, max_files_per_trigger)
 
     def sink(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession

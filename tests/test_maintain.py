@@ -4,9 +4,15 @@ kind detection, per-family drift signals, dry-run, trigger → retrain
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+
+PKG = Path(__file__).resolve().parent.parent / "lwetl_spark"
 
 
 def _emb(spark):
@@ -22,6 +28,8 @@ def test_detect_index_kind(spark, tmp_path):
         build_pq_index,
     )
 
+    from lwetl_spark.operators.maintain import INDEX_FAMILIES
+
     emb = _emb(spark)
     for kind, build in (
         ("ivf", build_ivf_index),
@@ -29,10 +37,12 @@ def test_detect_index_kind(spark, tmp_path):
         ("lsh", build_lsh_index),
         ("ivfpq", build_ivfpq_index),
     ):
-        p = str(tmp_path / kind)
-        build(emb, p)
-        assert detect_index_kind(spark, p) == kind
-    import pytest
+        p = tmp_path / kind
+        build(emb, str(p))
+        assert detect_index_kind(spark, str(p)) == kind
+        # the family table lists every table a build writes
+        written = {d.name for d in p.iterdir() if not d.name.startswith((".", "_"))}
+        assert written <= set(INDEX_FAMILIES[kind].tables), (kind, written)
 
     with pytest.raises(ValueError):
         detect_index_kind(spark, str(tmp_path / "nothing"))
@@ -170,3 +180,96 @@ def test_auto_maintain_preserves_opq_family(spark, tmp_path):
     assert rot is not None
     assert np.allclose(rot @ rot.T, np.eye(rot.shape[0]), atol=1e-10)
     assert query_ivfpq_index(spark, path, emb.limit(3), k=3).count() > 0
+
+
+def test_family_kinds_are_compared_only_in_the_family_table():
+    """The ANN family decision lives in `maintain.INDEX_FAMILIES`: no
+    other module compares a family-kind string, and the top-k rank
+    window of the ANN paths is written once (`similarity._rank_topk`)."""
+    kind_test = re.compile(
+        r"""(==|!=|\bin)\s*[(\[{]?\s*["'](ivf|pq|lsh|ivfpq)["']"""
+    )
+    rank_window = 'orderBy(F.desc("cos"), F.asc("neighbor_id"))'
+    kind_hits, windows = [], []
+    for p in sorted(PKG.rglob("*.py")):
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            code = line.split("#")[0]
+            if kind_test.search(code) and p.name != "maintain.py":
+                kind_hits.append(f"{p.relative_to(PKG)}:{i}")
+            if rank_window in code:
+                windows.append(f"{p.relative_to(PKG)}:{i}")
+    assert kind_hits == []
+    assert len(windows) == 1 and windows[0].startswith("operators/similarity.py")
+
+
+def test_family_table_shape():
+    from lwetl_spark.operators.maintain import INDEX_FAMILIES
+
+    assert set(INDEX_FAMILIES) == {"ivf", "pq", "lsh", "ivfpq"}
+    kinds = list(INDEX_FAMILIES)
+    for kind, fam in INDEX_FAMILIES.items():
+        assert set(fam.markers) <= set(fam.tables)
+        # a family whose markers hold another's is detected before it
+        for other in kinds[kinds.index(kind) + 1:]:
+            assert not set(fam.markers) < set(INDEX_FAMILIES[other].markers)
+    assert INDEX_FAMILIES["ivf"].build_kwargs(num_centroids=8) == {"num_centroids": 8}
+    assert INDEX_FAMILIES["pq"].build_kwargs(num_centroids=8) == {}
+    assert INDEX_FAMILIES["ivfpq"].probe_kwargs(nprobe=2, rerank=9) == {
+        "nprobe": 2, "rerank": 9,
+    }
+    assert INDEX_FAMILIES["lsh"].probe_kwargs(nprobe=2, rerank=9) == {}
+
+
+def test_unknown_kind_raises_one_error(spark, tmp_path):
+    """Every kind dispatch raises `index_family`'s one ValueError for an
+    unknown kind, before it reads or writes anything."""
+    from lwetl_spark.operators.incremental import ingest_increment
+    from lwetl_spark.operators.maintain import auto_maintain
+    from lwetl_spark.operators.retrieval import hybrid_topk
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    vecs = spark.createDataFrame([(1, [1.0])], "doc_id long, embedding array<double>")
+    msg = r"unknown ANN index kind 'hnsw' \(ivfpq\|ivf\|pq\|lsh\)"
+    calls = [
+        lambda: auto_maintain(spark, str(tmp_path / "v"), kind="hnsw"),
+        lambda: hybrid_topk(
+            spark, str(tmp_path / "x"), str(tmp_path / "v"), docs, vecs, kind="hnsw"
+        ),
+        lambda: ingest_increment(
+            spark, docs, str(tmp_path / "m"), str(tmp_path / "s"),
+            str(tmp_path / "x"), embeddings=vecs,
+            vector_index_path=str(tmp_path / "v"), vector_index_kind="hnsw",
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match=msg):
+            call()
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_params_writer_and_reader(spark, tmp_path):
+    """One params table per index: int geometry columns in keyword order,
+    then n_at_train counted from the training frame; the reader merges
+    explicit overrides over the stored row and reads nothing when every
+    named field is given."""
+    from lwetl_spark.operators.similarity import _read_params, _save_params
+
+    path = str(tmp_path / "idx")
+    _save_params(spark, path, spark.range(7), m=8, ksub=16)
+    assert spark.read.parquet(f"{path}/params").dtypes == [
+        ("m", "int"), ("ksub", "int"), ("n_at_train", "bigint"),
+    ]
+    assert _read_params(spark, path) == {"m": 8, "ksub": 16, "n_at_train": 7}
+    assert _read_params(spark, path, m=None, ksub=4) == {"m": 8, "ksub": 4}
+    assert _read_params(spark, path, fallback={"m": 2, "iters": 3}) == {
+        "m": 8, "ksub": 16, "n_at_train": 7, "iters": 3,
+    }
+    missing = str(tmp_path / "pre_params")
+    assert _read_params(spark, missing, m=1, ksub=2) == {"m": 1, "ksub": 2}
+    assert _read_params(spark, missing, fallback={"m": 2}, m=None, ksub=5) == {
+        "m": 2, "ksub": 5,
+    }
+    _save_params(spark, path, num_planes=4, num_tables=12, dim=64)
+    assert spark.read.parquet(f"{path}/params").dtypes == [
+        ("num_planes", "int"), ("num_tables", "int"), ("dim", "int"),
+    ]

@@ -768,6 +768,12 @@ def test_pq_incremental_lifecycle_matches_rebuild(spark, tmp_path):
     got = sorted(map(tuple, query_pq_index(spark, inc, probes, k=5).collect()))
     want = sorted(map(tuple, query_pq_index(spark, ref, probes, k=5).collect()))
     assert got == want and got
+    # the train_df= anchor records the training frame's size, so its
+    # growth baseline (n_at_train) equals the maintained index's
+    assert (
+        spark.read.parquet(f"{inc}/params").collect()
+        == spark.read.parquet(f"{ref}/params").collect()
+    )
 
     st = pq_index_stats(spark, inc).collect()[0]
     n_kept = emb.join(removed, "vec_id", "left_anti").count()
